@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -30,25 +31,28 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet scan → column pruning and predicate
-    pushdown are free once downstream ops are declarative.
+def events_ts(df: DataFrame) -> DataFrame:
+    """Normalize an events frame's ``ts`` to ``timestamp``.
 
     ``events.ts`` may be written as either a plain parquet timestamp
     (current fixtures: TIMESTAMP(MICROS)) or as raw int64 nanoseconds
     (older fixtures wrote TIMESTAMP(NANOS), which surfaces as ``bigint``
-    under ``spark.sql.legacy.parquet.nanosAsLong``). We read plain and
-    only convert when the column actually arrived as int64 — both
-    encodings yield ``ts: timestamp`` with microsecond precision,
-    JVM-side, no Python data pass.
+    under ``spark.sql.legacy.parquet.nanosAsLong``). Only a column that
+    actually arrived as int64 is converted — both encodings yield
+    ``ts: timestamp`` with microsecond precision, JVM-side, no Python
+    data pass.  Works on batch and streaming frames alike.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
-
+    if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table (``events`` through :func:`events_ts`).
+    Parquet scan → column pruning and predicate pushdown are free once
+    downstream ops are declarative."""
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return events_ts(df) if name == "events" else df
 
 
 def register_tables(

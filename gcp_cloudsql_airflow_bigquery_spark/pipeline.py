@@ -106,6 +106,14 @@ def _hadoop_path(spark: SparkSession, path: str):
     return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its filesystem.  First-run bootstraps
+    test this instead of catching a failed read, so an existing target
+    that cannot be read raises rather than being overwritten."""
+    p, fs = _hadoop_path(spark, path)
+    return bool(fs.exists(p))
+
+
 def merge_parquet(
     spark: SparkSession,
     incoming: DataFrame,
@@ -125,11 +133,10 @@ def merge_parquet(
     untenable when the table is the 100 TB side.)  On a store without
     native rename (S3) the same structure maps to a catalog/view
     pointer swap or a Delta/Iceberg ``MERGE``."""
-    try:
-        existing = spark.read.parquet(target_path)
-    except Exception:  # first run: nothing to merge  # noqa: BLE001
+    if not _exists(spark, target_path):  # first run: nothing to merge
         incoming.write.mode("overwrite").parquet(target_path)
         return
+    existing = spark.read.parquet(target_path)
     keys = list(merge_keys)
     survivors = existing.join(
         incoming.select(*keys).distinct(), on=keys, how="left_anti"

@@ -10,6 +10,14 @@ Custom stateful operator (SURVEY.md §2 "custom operators" path (b)):
 :func:`running_user_totals` uses ``applyInPandasWithState`` — per-user
 running aggregates with explicit GroupState, the pattern for operators
 Spark's built-in windows can't express.
+
+Driver contract: every sink here (:func:`run_to_memory`,
+:func:`run_to_files`, the ``foreachBatch`` sinks and the registered
+``events_*`` queries) runs its query through one driver — start with
+the ``availableNow`` trigger (process everything available, then
+stop), wait up to the sink's ``timeout_s``; if the query is still
+running then, stop it and raise ``TimeoutError``.  A query failure
+surfaces as the ``StreamingQueryException`` from the wait.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -34,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..catalog import events_ts
 
 EVENT_SCHEMA = StructType(
     [
@@ -62,13 +73,18 @@ _STATE_TARGET_DEFAULT = 128 * 1024 * 1024
 
 
 def _source_bytes(path: str) -> int:
-    """Bytes under ``path`` (file or directory), 0 if unreadable."""
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-        )
+    """Bytes under ``path`` (file or directory); an entry that cannot
+    be sized (broken symlink, deleted mid-walk) counts as 0."""
+    if not os.path.isdir(path):
+        return _file_bytes(path)
+    return sum(
+        _file_bytes(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _file_bytes(path: str) -> int:
     try:
         return os.path.getsize(path)
     except OSError:
@@ -215,25 +231,30 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _drive(writer: DataStreamWriter, what: str, timeout_s: float) -> None:
+    """The module's one stream driver (contract in the module docstring)."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"stream {what} did not finish in {timeout_s}s")
+
+
 def run_to_memory(
     stream: DataFrame,
     query_name: str,
     output_mode: str = "update",
     timeout_s: float = 120.0,
 ) -> None:
-    """Drive a stream with availableNow (process-everything-then-stop)
-    into an in-memory table named ``query_name`` — the test/bench sink."""
-    q = (
+    """Drive a stream into an in-memory table named ``query_name`` —
+    the test/bench sink."""
+    _drive(
         stream.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        query_name,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
 
 
 def run_to_files(
@@ -245,9 +266,9 @@ def run_to_files(
     timeout_s: float = 120.0,
     partition_by: list[str] | None = None,
 ) -> None:
-    """Drive a stream with availableNow into a file sink with a
-    checkpoint — the production shape of the reference's GCS landing
-    zone (NDJSON chunks per run, ``copy_cloudsql_to_bigquery_v2.py:88``).
+    """Drive a stream into a file sink with a checkpoint — the
+    production shape of the reference's GCS landing zone (NDJSON
+    chunks per run, ``copy_cloudsql_to_bigquery_v2.py:88``).
 
     The checkpoint is the exactly-once contract: a restarted query
     resumes from the last committed offsets, so a crash between
@@ -261,15 +282,10 @@ def run_to_files(
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    q = writer.start()
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"file-sink stream did not finish in {timeout_s}s")
+    _drive(writer, f"file sink {path}", timeout_s)
 
 
 def attribution_join_stream(
@@ -348,18 +364,14 @@ def foreach_batch_merge(
     def _merge(batch: DataFrame, _batch_id: int) -> None:
         merge_parquet(batch.sparkSession, batch, target_path, list(merge_keys))
 
-    q = (
+    _drive(
         stream.writeStream.foreachBatch(_merge)
         .queryName(query_name)
         .outputMode("update")
-        .option("checkpointLocation", target_path + "__checkpoint")
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", target_path + "__checkpoint"),
+        query_name,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
 
 
 DOC_SCHEMA = StructType(
@@ -390,17 +402,17 @@ def dedup_ingest_stream(
     restart replays idempotently because duplicate suppression is
     content-driven."""
     from ..operators import dedup
+    from ..pipeline import _exists
 
     def _ingest(batch: DataFrame, _batch_id: int) -> None:
         from ..operators.textstats import normalize_text
 
         spark = batch.sparkSession
         batch = dedup.exact_dedup(batch)  # within-batch exact dedup
-        try:
-            existing = spark.read.parquet(target_path)
-        except Exception:  # first batch bootstraps the corpus  # noqa: BLE001
+        if not _exists(spark, target_path):  # first batch bootstraps the corpus
             batch.write.mode("overwrite").parquet(target_path)
             return
+        existing = spark.read.parquet(target_path)
         # exact content-hash anti-join FIRST: docs shorter than the
         # shingle width produce no index entries, so a replayed batch
         # would re-append them if only the near-dup check ran — this
@@ -420,16 +432,13 @@ def dedup_ingest_stream(
         novel = batch.join(dups, "doc_id", "left_anti")
         novel.select(*existing.columns).write.mode("append").parquet(target_path)
 
-    q = (
+    _drive(
         docs_stream.writeStream.foreachBatch(_ingest)
         .queryName(query_name)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", target_path + "__dedup_ingest_chk"
-        )
-        .start()
+        .option("checkpointLocation", target_path + "__dedup_ingest_chk"),
+        query_name,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
 
 
 CAPPED_SESSION_SCHEMA = StructType(
@@ -513,7 +522,7 @@ def quarantined_ingest(
     clean_path: str,
     dlq_path: str,
     checkpoint: str,
-):
+) -> None:
     """Contract-gated continuous ingest: every micro-batch is split by
     the declarative checks (``operators/validate.quarantine_split``) —
     clean rows append to the table, violations append to a dead-letter
@@ -521,9 +530,7 @@ def quarantined_ingest(
     for the two writes (a stream batch is not re-readable), and both
     sides land in the SAME ``foreachBatch`` transaction scope, so a
     replayed batch re-splits identically (the split is deterministic
-    row-local logic) rather than leaking bad rows on retry.
-
-    Returns the started StreamingQuery (caller owns the lifecycle)."""
+    row-local logic) rather than leaking bad rows on retry."""
     from ..operators.validate import quarantine_split
 
     def _gate(batch: DataFrame, batch_id: int) -> None:
@@ -535,11 +542,12 @@ def quarantined_ingest(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _drive(
+        stream.writeStream.foreachBatch(_gate).option(
+            "checkpointLocation", checkpoint
+        ),
+        f"quarantine {clean_path}",
+        120.0,
     )
 
 
@@ -758,39 +766,56 @@ def misra_gries_stream(events: DataFrame, k: int = 8) -> DataFrame:
 _MEMSINK_SEQ = count()
 
 
-def events_weekly_counts_streamed(
-    spark: SparkSession, sf_dir: str
+def _memory_table(
+    spark: SparkSession,
+    stream: DataFrame,
+    prefix: str,
+    output_mode: str,
+    path: str,
 ) -> DataFrame:
-    """REGISTERED end-to-end streaming query (VERDICT r7 #7): a real
-    micro-batch Structured Streaming run — parquet file source →
-    epoch-aligned 7-day tumbling-window aggregation → memory sink,
-    driven to completion with ``availableNow`` — whose final COMPLETE
-    table is returned as the result.  ``availableNow`` + complete mode
-    over a static fixture is deterministic and equals the batch
-    aggregation, so the driver can hash-check the streaming ENGINE
-    itself (every other streaming op is verified through batch twins).
+    """Drive ``stream`` into a fresh memory table (state sized from
+    ``path``) and return the table."""
+    name = f"{prefix}_{next(_MEMSINK_SEQ)}"
+    with scaled_state_partitions(spark, path):
+        run_to_memory(stream, name, output_mode=output_mode)
+    return spark.table(name)
 
-    Scale shape: source-agnostic after ``load()`` (swap in Kafka at
-    cluster scale); the windowed agg is a standard partial-agg shuffle
-    on (window, event_type); state is one row per open window×type.
-    The decimal cast before SUM is the cross-engine FP-parity pattern
-    from plans/relational.py."""
+
+def _event_feed(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame, DataFrame]:
+    """``(path, batch, stream)`` over the fixture's ``events.parquet``,
+    both frames with :func:`catalog.events_ts` applied."""
     path = os.path.join(sf_dir, "events.parquet")
     raw = spark.read.parquet(path)
     # the fixture is a single parquet FILE; FileStreamSource derives
     # basePath from the source path and requires a directory, so force
     # glob handling with a char class that matches exactly this file
     # (basePath then resolves to the non-glob parent, sf_dir)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
+    stream = spark.readStream.schema(raw.schema).parquet(
+        os.path.join(sf_dir, "[e]vents.parquet")
     )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        # same dtype guard as catalog.load_table (TIMESTAMP(NANOS)
-        # fixtures surface ts as int64 nanoseconds)
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    return path, events_ts(raw), events_ts(stream)
+
+
+def events_weekly_counts_streamed(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """REGISTERED end-to-end streaming query (VERDICT r7 #7): a real
+    micro-batch Structured Streaming run — parquet file source →
+    epoch-aligned 7-day tumbling-window aggregation → memory sink —
+    whose final COMPLETE table is returned as the result.
+    ``availableNow`` + complete mode over a static fixture is
+    deterministic and equals the batch aggregation, so the driver can
+    hash-check the streaming ENGINE itself (every other streaming op is
+    verified through batch twins).
+
+    Scale shape: source-agnostic after ``load()`` (swap in Kafka at
+    cluster scale); the windowed agg is a standard partial-agg shuffle
+    on (window, event_type); state is one row per open window×type.
+    The decimal cast before SUM is the cross-engine FP-parity pattern
+    from plans/relational.py."""
+    path, _, stream = _event_feed(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "7 days").alias("w"), "event_type")
         .agg(
@@ -806,10 +831,7 @@ def events_weekly_counts_streamed(
             "total_value",
         )
     )
-    name = f"events_weekly_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return _memory_table(spark, agg, "events_weekly_streamed", "complete", path)
 
 
 def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,18 +859,7 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard partial-agg shuffle on event_type.  Swap the file source
     for Kafka at cluster scale; the dedup/rollup pipeline is unchanged.
     """
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    # same single-file glob trick as events_weekly_counts_streamed:
-    # FileStreamSource needs a directory-resolvable basePath
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     cols = ["event_id", "user_id", "event_type", "value", "ts"]
     # fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (UTC
     # session TZ makes the cast a no-op on the instant)
@@ -858,11 +869,8 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         at_least_once.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(cols)
     )
-    name = f"events_dedup_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(deduped, name, output_mode="append")
     return (
-        spark.table(name)
+        _memory_table(spark, deduped, "events_dedup_streamed", "append", path)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -877,9 +885,9 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third REGISTERED end-to-end streaming query (r9): the
     STREAM-STREAM JOIN shape — click→purchase attribution via
-    :func:`attribution_join_stream` driven with ``availableNow`` into a
-    memory sink, completing the driver-checked streaming family
-    (tumbling agg → stateful dedup → time-bounded two-sided join).
+    :func:`attribution_join_stream` into a memory sink, completing the
+    driver-checked streaming family (tumbling agg → stateful dedup →
+    time-bounded two-sided join).
     Inner-join matches are emitted as found, so the append-mode result
     over a static fixture equals the batch time-bounded join the
     oracle runs — set-semantics output, order-insensitive hash.
@@ -888,22 +896,12 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FILTERED event types (clicks/purchases), not the full stream; the
     interval bound is what lets Spark expire buffered rows.  Swap the
     file source for Kafka; the join is unchanged."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     joined = attribution_join_stream(stream, within="30 minutes")
-    name = f"events_attribution_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
+    return _memory_table(
+        spark, joined, "events_attribution_streamed", "append", path
+    )
 
 
 def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,10 +910,10 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's GCS landing zone (NDJSON chunks per run,
     ``copy_cloudsql_to_bigquery_v2.py:88``), modernized to
     day-partitioned parquet: file source → filter/projection →
-    checkpointed partitioned file sink driven with ``availableNow`` →
-    the landed table read back and rolled up.  Completes the
-    driver-checked streaming family: windowed agg, stateful dedup,
-    stream-stream join, and now the transactional sink.
+    checkpointed partitioned file sink → the landed table read back
+    and rolled up.  Completes the driver-checked streaming family:
+    windowed agg, stateful dedup, stream-stream join, and now the
+    transactional sink.
 
     The checkpoint is the exactly-once contract (a restarted query
     neither loses nor re-emits rows — unit-proved in
@@ -929,16 +927,7 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage unchanged."""
     import tempfile
 
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     landed = (
         stream.filter(F.col("value") >= 10.0)
         .select(
@@ -975,11 +964,11 @@ def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fifth REGISTERED end-to-end streaming query (r9): the CUSTOM
     STATEFUL OPERATOR shape — gap+max-duration sessionization in
     GroupState (:func:`capped_sessions_stream`,
-    ``applyInPandasWithState``) driven with ``availableNow`` into a
-    memory sink.  The stream emits sessions as they CLOSE; each user's
-    final session stays open in state, so the deterministic result is
-    exactly the batch capped sessionization MINUS each user's last
-    session — which is what the oracle's recursive-CTE replay computes.
+    ``applyInPandasWithState``) into a memory sink.  The stream emits
+    sessions as they CLOSE; each user's final session stays open in
+    state, so the deterministic result is exactly the batch capped
+    sessionization MINUS each user's last session — which is what the
+    oracle's recursive-CTE replay computes.
     Completes the driver-checked streaming family across all five
     stateful shapes: windowed agg, watermark dedup, stream-stream
     join, transactional sink, and custom GroupState.
@@ -989,25 +978,15 @@ def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions only.  Same gap/cap as the batch twin
     (``events_session_capped``: 12 h gap, 48 h cap — both rules fire
     on the fixture)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     ev = stream.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
     sessions = capped_sessions_stream(ev, gap_s=43_200, max_duration_s=172_800)
-    name = f"events_sessions_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(sessions, name, output_mode="append")
-    return spark.table(name)
+    return _memory_table(
+        spark, sessions, "events_sessions_streamed", "append", path
+    )
 
 
 def foreach_batch_merge_lww(
@@ -1037,7 +1016,7 @@ def foreach_batch_merge_lww(
     write of the merged table)."""
     from pyspark.sql import Window
 
-    from ..pipeline import merge_parquet
+    from ..pipeline import _exists, merge_parquet
 
     keys = list(merge_keys)
     ords = [F.col(c) for c in order_cols]
@@ -1050,13 +1029,10 @@ def foreach_batch_merge_lww(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        try:
+        if _exists(spark, target_path):  # else first batch: empty snapshot
             cur = spark.read.parquet(target_path).select(
                 *keys, F.struct(*ords).alias("__cur_ord")
             )
-        except Exception:  # first batch: empty snapshot  # noqa: BLE001
-            cur = None
-        if cur is not None:
             best = (
                 best.join(cur, on=keys, how="left")
                 .filter(
@@ -1067,18 +1043,14 @@ def foreach_batch_merge_lww(
             )
         merge_parquet(spark, best, target_path, keys)
 
-    q = (
+    _drive(
         stream.writeStream.foreachBatch(_merge)
         .queryName(query_name)
         .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        query_name,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
 
 
 def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,11 +1072,7 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seed window ∪ Jan-16 feed)."""
     import tempfile
 
-    path = os.path.join(sf_dir, "events.parquet")
-    raw0 = spark.read.parquet(path)
-    raw = raw0
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    path, raw, stream = _event_feed(spark, sf_dir)
     cut_lo = "2024-01-16"
     cut_hi = "2024-01-17"
     snap_cols = [
@@ -1130,13 +1098,6 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = os.path.join(base, "snapshot")
     seed.write.mode("overwrite").parquet(target)
 
-    stream = spark.readStream.schema(raw0.schema).parquet(
-        os.path.join(sf_dir, "[e]vents.parquet")
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
     feed = stream.filter(
         (F.col("ts") >= F.lit(cut_lo).cast("timestamp"))
         & (F.col("ts") < F.lit(cut_hi).cast("timestamp"))
@@ -1182,11 +1143,7 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale feed it from the warehouse and let AQE strategy-pick, or key
     both sides for a shuffle join — the stream pipeline is unchanged);
     the agg state is one row per cohort-week×type."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    batch = raw
-    if dict(batch.dtypes).get("ts") == "bigint":
-        batch = batch.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    path, batch, stream = _event_feed(spark, sf_dir)
     week_us = 7 * 24 * 3600 * 1_000_000
     dim = (
         batch.filter(F.col("ts").isNotNull())
@@ -1199,14 +1156,6 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cohort_wk"),
         )
     )
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
     agg = (
         enriched_stream(stream, dim, on="user_id")
         .groupBy("cohort_wk", "event_type")
@@ -1217,10 +1166,9 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
     )
-    name = f"events_enriched_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return _memory_table(
+        spark, agg, "events_enriched_streamed", "complete", path
+    )
 
 
 def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,16 +1188,7 @@ def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     stateful operator, no shuffle beyond the groupBy key.
     ``availableNow`` over the static fixture is a single micro-batch,
     so the one emitted snapshot per key is the final summary."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     feed = stream.select(
         "event_type",
         F.unix_micros(F.date_trunc("millisecond", F.col("ts"))).alias(
@@ -1257,13 +1196,14 @@ def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         (F.col("user_id") % 8).alias("item"),
     )
-    name = f"events_heavy_hitters_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(
-            misra_gries_stream(feed, k=8), name, output_mode="update"
-        )
     return (
-        spark.table(name)
+        _memory_table(
+            spark,
+            misra_gries_stream(feed, k=8),
+            "events_heavy_hitters_streamed",
+            "update",
+            path,
+        )
         .select(
             "event_type",
             F.col("item").cast("bigint").alias("item"),
@@ -1288,27 +1228,17 @@ def events_distinct_users_streamed(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: standard partial-agg shuffle on (window, user);
     swap the file source for Kafka at cluster scale unchanged."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     agg = (
         stream.filter(F.col("ts").isNotNull())
         .groupBy(F.window("ts", "7 days").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("wk_start"), "user_id", "n")
     )
-    name = f"events_distinct_users_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
     return (
-        spark.table(name)
+        _memory_table(
+            spark, agg, "events_distinct_users_streamed", "complete", path
+        )
         .groupBy("wk_start")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
@@ -1339,16 +1269,7 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import validate as V
 
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    path, _, stream = _event_feed(spark, sf_dir)
     checks = [
         V.not_null("ts"),
         # the ingest contract caps value at 250 — the fixture's upper
@@ -1363,17 +1284,9 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean_path = os.path.join(base, "clean")
     dlq_path = os.path.join(base, "dlq")
     with scaled_state_partitions(spark, path):
-        q = quarantined_ingest(
-            stream,
-            checks,
-            clean_path,
-            dlq_path,
-            os.path.join(base, "ckpt"),
+        quarantined_ingest(
+            stream, checks, clean_path, dlq_path, os.path.join(base, "ckpt")
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("quarantine stream did not finish")
     clean = spark.read.parquet(clean_path).select(
         F.lit("clean").alias("bucket")
     )

@@ -130,6 +130,21 @@ def test_merge_single_data_write(spark, sf_dir, warehouse, monkeypatch):
     assert leftovers == []
 
 
+def test_merge_into_unreadable_target_raises_and_keeps_it(spark, tmp_path):
+    """An existing target without readable parquet is an error, not a
+    first run: the merge raises and leaves the directory untouched."""
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import merge_parquet
+
+    target = tmp_path / "target"
+    target.mkdir()
+    (target / "part-00000.parquet").write_bytes(b"not a parquet file")
+    before = {p.name: p.read_bytes() for p in target.iterdir()}
+    incoming = spark.createDataFrame([(1, "a")], "k long, v string")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        merge_parquet(spark, incoming, str(target), ["k"])
+    assert {p.name: p.read_bytes() for p in target.iterdir()} == before
+
+
 def test_finalize_runs_stage_final_query(spark, sf_dir, warehouse):
     spec = _parquet_spec(
         sf_dir,

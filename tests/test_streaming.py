@@ -4,6 +4,10 @@ memory sinks (SURVEY.md §7 M3)."""
 
 from __future__ import annotations
 
+import json
+import os
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -342,10 +346,9 @@ def test_quarantined_ingest_routes_streams(spark, tmp_path):
     clean_p = str(tmp_path / "clean")
     dlq_p = str(tmp_path / "dlq")
     checks = [not_null("event_type"), in_range("value", 0.0, 1e9)]
-    q = streams.quarantined_ingest(
+    streams.quarantined_ingest(
         stream, checks, clean_p, dlq_p, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(120)
 
     clean = spark.read.parquet(clean_p)
     dlq = spark.read.parquet(dlq_p)
@@ -636,3 +639,134 @@ def test_stream_foreach_batch_merge_lww(spark, event_dir, tmp_path):
         for r in spark.read.parquet(target).collect()
     }
     assert got2 == want
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        "run_to_memory",
+        "run_to_files",
+        "foreach_batch_merge",
+        "foreach_batch_merge_lww",
+        "dedup_ingest_stream",
+    ],
+)
+def test_stream_timeout_stops_query_and_raises(spark, event_dir, tmp_path, sink):
+    """A query still running at ``timeout_s`` is stopped and the sink
+    raises TimeoutError — no timed-out query returns as success or is
+    left running."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    events = streams.read_event_stream(spark, event_dir, max_files_per_trigger=1)
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    for i in range(3):
+        (docs_dir / f"d{i}.json").write_text(
+            json.dumps({"doc_id": i, "text": f"document number {i} text"})
+        )
+    docs = (
+        spark.readStream.schema(streams.DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(docs_dir))
+    )
+    run = {
+        "run_to_memory": lambda t: streams.run_to_memory(
+            events, "t_timeout", timeout_s=t
+        ),
+        "run_to_files": lambda t: streams.run_to_files(
+            events, out, ckpt, timeout_s=t
+        ),
+        "foreach_batch_merge": lambda t: streams.foreach_batch_merge(
+            events, out, ["event_id"], timeout_s=t
+        ),
+        "foreach_batch_merge_lww": lambda t: streams.foreach_batch_merge_lww(
+            events, out, ["user_id"], ["ts", "event_id"], checkpoint=ckpt,
+            timeout_s=t,
+        ),
+        "dedup_ingest_stream": lambda t: streams.dedup_ingest_stream(
+            docs, out, timeout_s=t
+        ),
+    }[sink]
+    with pytest.raises(TimeoutError):
+        run(0.001)
+    assert spark.streams.active == []
+
+
+def test_source_bytes_counts_broken_symlink_as_zero(tmp_path):
+    (tmp_path / "a.parquet").write_bytes(b"x" * 10)
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "sub" / "b.parquet").write_bytes(b"y" * 5)
+    os.symlink(tmp_path / "missing", tmp_path / "dangling")
+    assert streams._source_bytes(str(tmp_path)) == 15
+
+
+def test_heavy_hitters_stream_exact_below_capacity(spark, sf_dir):
+    """k=8 covers all 8 user_id%8 slots, so the registered stream's MG
+    summary must equal the exact batch GROUP BY."""
+    from gcp_cloudsql_airflow_bigquery_spark.streaming import streams
+
+    got = {
+        (r.event_type, r.item): (r.est_count, r.n_processed)
+        for r in streams.events_heavy_hitters_streamed(spark, sf_dir).collect()
+    }
+    counts: dict[tuple, int] = defaultdict(int)
+    totals: dict[str, int] = defaultdict(int)
+    for r in load_table(spark, sf_dir, "events").collect():
+        counts[(r.event_type, r.user_id % 8)] += 1
+        totals[r.event_type] += 1
+    expect = {
+        k: (v, totals[k[0]]) for k, v in counts.items()
+    }
+    assert got == expect
+
+
+def test_distinct_users_streamed_matches_batch(spark, sf_dir):
+    from gcp_cloudsql_airflow_bigquery_spark.streaming import streams
+
+    got = {
+        r.wk_start: (r.n_users, r.n_events)
+        for r in streams.events_distinct_users_streamed(
+            spark, sf_dir
+        ).collect()
+    }
+    per: dict[int, set] = defaultdict(set)
+    cnt: dict[int, int] = defaultdict(int)
+    for r in load_table(spark, sf_dir, "events").collect():
+        if r.ts is None:
+            continue
+        wk = int(r.ts.timestamp() * 1_000_000) // 604_800_000_000
+        per[wk].add(r.user_id)
+        cnt[wk] += 1
+    assert len(got) == len(per)
+    got_by_epoch = {
+        int(k.timestamp()) // 604_800: v for k, v in got.items()
+    }
+    for wk, users in per.items():
+        assert got_by_epoch[wk] == (len(users), cnt[wk]), wk
+
+
+def test_quarantine_stream_matches_batch_split(spark, sf_dir):
+    from gcp_cloudsql_airflow_bigquery_spark.streaming import streams
+
+    got = {
+        r.bucket: r.n_rows
+        for r in streams.events_quarantine_streamed(spark, sf_dir).collect()
+    }
+    expect: dict[str, int] = defaultdict(int)
+    for r in load_table(spark, sf_dir, "events").collect():
+        fails = []
+        if r.ts is None:
+            fails.append("ts_not_null")
+        if r.value is not None and (r.value < 0.0 or r.value > 250.0):
+            fails.append("value_range")
+        if r.event_type is not None and r.event_type not in (
+            "click",
+            "view",
+            "purchase",
+            "signup",
+            "error",
+        ):
+            fails.append("event_type_domain")
+        expect[",".join(fails) if fails else "clean"] += 1
+    assert got == dict(expect)
+    assert "clean" in got and any(b != "clean" for b in got)  # DLQ fired

@@ -1,4 +1,4 @@
-"""Round-10 wave-15 differentials: stream #9, dup-quality report,
+"""Round-10 wave-15 differentials: dup-quality report,
 label-source alignment, part substitutes — python replays on sf0.001.
 """
 
@@ -10,31 +10,6 @@ import re
 from collections import defaultdict
 
 from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-
-
-def test_distinct_users_streamed_matches_batch(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.streaming import streams
-
-    got = {
-        r.wk_start: (r.n_users, r.n_events)
-        for r in streams.events_distinct_users_streamed(
-            spark, sf_dir
-        ).collect()
-    }
-    per: dict[int, set] = defaultdict(set)
-    cnt: dict[int, int] = defaultdict(int)
-    for r in load_table(spark, sf_dir, "events").collect():
-        if r.ts is None:
-            continue
-        wk = int(r.ts.timestamp() * 1_000_000) // 604_800_000_000
-        per[wk].add(r.user_id)
-        cnt[wk] += 1
-    assert len(got) == len(per)
-    got_by_epoch = {
-        int(k.timestamp()) // 604_800: v for k, v in got.items()
-    }
-    for wk, users in per.items():
-        assert got_by_epoch[wk] == (len(users), cnt[wk]), wk
 
 
 def test_dup_quality_report_matches_python_replay(spark, sf_dir):
