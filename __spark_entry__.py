@@ -77,7 +77,7 @@ _MODULES = (
 # never driver-re-recorded) — (b) the new r7 query
 # embedding_knn_label_eval_ivf (persisted-IVF-index label eval, VERDICT
 # r6 #2/#7), (c) re-confirmation of the four queries whose shared
-# prefix-sum helper changed this round (curation._offset_frame:
+# prefix-sum helper changed this round (per-partition offsets:
 # create_map literal → broadcast-joined offsets frame, ADVICE r6) plus
 # hybrid_search_rrf whose candidate-depth asymmetry fix changed its
 # results, (d) the six never-driver-green rows-only residue slots, and

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from .textstats import token_count, word_ngram_hashes
 
@@ -441,24 +442,65 @@ def decontaminate_fuzzy(
     )
 
 
-def _offset_frame(part: DataFrame, offsets: dict) -> DataFrame:
-    """Driver-computed per-partition prefix offsets as a tiny
-    ``(_pid, _off)`` frame to broadcast-join back onto the data.  A
-    ``create_map`` literal of the same content costs two expression
-    nodes per shuffle partition (ADVICE r6) — at large configured
-    partition counts that bloats every plan that embeds it — while
-    this frame is partition-count ROWS, kilobytes at any sane count
-    (the shape ``fuzzy.sorted_neighborhood_pairs`` originally used).
-    Integer offsets stay exact long arithmetic; float costs promote
-    to double."""
-    spark = part.sparkSession
-    if offsets and any(not isinstance(v, int) for v in offsets.values()):
-        rows = [(int(p), float(v)) for p, v in offsets.items()]
-        typ = "double"
-    else:
-        rows = [(int(p), int(v)) for p, v in offsets.items()]
-        typ = "bigint"
-    return spark.createDataFrame(rows, f"_pid int, _off {typ}")
+def _prefix_scan(
+    df: DataFrame,
+    key: list,
+    fold,
+    value,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, WindowSpec]:
+    """The range-partitioned two-phase prefix scan behind every
+    global-order operator here and in :mod:`.stats` (running
+    ``ROW_NUMBER``/``SUM``/``MAX`` over a total order, ``NTILE``,
+    skylines).  A bare ``Window.orderBy`` would drag the whole frame
+    onto one task (``WindowExec: No Partition Defined``); this shape
+    never lets a task see more than its own partition.
+
+    1. ``repartitionByRange`` + ``sortWithinPartitions`` on ``key``
+       give a globally range-ordered layout; each row is tagged with
+       its partition id ``_pid``.
+    2. One lazy ``localCheckpoint`` pins that layout.
+       ``repartitionByRange`` samples its boundaries and is not
+       guaranteed consistent across evaluations, and the frame is read
+       twice below; the checkpoint builds its RDD (sampling the
+       boundaries once) at call time, so both reads see the same
+       ``_pid`` assignment.  Construction runs only the sampling job and
+       the map side of the shuffles below the checkpoint; the first
+       action on the result materializes the blocks.
+    3. ``fold(value)`` per ``_pid`` (partition-count rows), folded again
+       over all STRICTLY lower partition ids by a self-join in the plan
+       (partition-count² pairs, no driver action, and no unpartitioned
+       window for the plan guard to flag), gives ``_off``: the fold of
+       everything in earlier partitions — NULL for the first partition.
+       ``fold`` must be associative (``F.sum``, ``F.max``; a count is
+       ``F.sum`` of ``F.lit(1)``).
+    4. ``_off`` is broadcast-joined back (partition-count rows; the
+       checkpointed frame has no size statistics, hence the hint).
+
+    Returns the joined frame (input columns + ``_pid``, ``_off``) and
+    the partition-local window ``partitionBy(_pid).orderBy(key)``; the
+    caller combines its own window over that with ``_off`` and drops
+    ``_pid``/``_off``."""
+    ranged = (
+        df.repartitionByRange(num_partitions, *key)
+        if num_partitions
+        else df.repartitionByRange(*key)
+    ).sortWithinPartitions(*key)
+    part = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=False
+    )
+    tot = part.groupBy("_pid").agg(fold(value).alias("_t"))
+    lower = tot.select(F.col("_pid").alias("_lo"), "_t")
+    off = (
+        tot.select("_pid")
+        .join(lower, F.col("_lo") < F.col("_pid"), "left")
+        .groupBy("_pid")
+        .agg(fold("_t").alias("_off"))
+    )
+    return (
+        part.join(F.broadcast(off), "_pid"),
+        Window.partitionBy("_pid").orderBy(*key),
+    )
 
 
 def budget_select(
@@ -472,50 +514,11 @@ def budget_select(
     ``(order_col DESC, id_col ASC)`` order while the running sum of
     ``cost_col`` stays within ``budget`` — "highest-quality documents
     until the token budget is spent", the standard pretraining
-    data-selection primitive.
-
-    Scale shape: a single global-order window would drag the whole
-    corpus onto one task, so the running sum is a two-phase prefix sum
-    instead — ``repartitionByRange`` + ``sortWithinPartitions`` give a
-    globally range-ordered layout, per-partition cost totals (one tiny
-    aggregation, partition-count rows) become driver-side prefix
-    offsets broadcast-joined back as a tiny (pid, offset) frame
-    (:func:`_offset_frame`), and the window runs
-    per-partition.  No task ever sees more than its own partition.
-    Appends ``cum_cost`` (exact for integer costs)."""
+    data-selection primitive.  The running sum is :func:`global_cumsum`;
+    appends ``cum_cost`` (exact for integer costs)."""
     key = [F.col(order_col).desc(), F.col(id_col).asc()]
-    d = df.repartitionByRange(*key).sortWithinPartitions(*key)
-    # localCheckpoint pins the range boundaries: repartitionByRange
-    # samples them and is documented as not necessarily consistent
-    # across evaluations, and this frame is evaluated twice (the
-    # totals collect and the final cum-sum job) — without the
-    # materialization the two jobs can disagree on pid assignment and
-    # silently corrupt cum_cost (same failure sorted_neighborhood_pairs
-    # documents in fuzzy.py).  Lazy checkpoint: the totals collect is
-    # the first action, so one job materializes-and-pins the blocks
-    # (see global_rank for the mechanism).
-    part = d.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    totals = {
-        r["_pid"]: r["t"]
-        for r in part.groupBy("_pid").agg(F.sum(cost_col).alias("t")).collect()
-    }
-    offsets, run = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = run
-        run += totals[pid]
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*key)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(cost_col).over(w) + F.col("_off")
-    return (
-        part.join(F.broadcast(_offset_frame(part, offsets)), "_pid")
-        .withColumn("cum_cost", cum)
-        .filter(F.col("cum_cost") <= budget)
-        .drop("_pid", "_off")
+    return global_cumsum(df, key, cost_col, out_col="cum_cost").filter(
+        F.col("cum_cost") <= budget
     )
 
 
@@ -524,92 +527,15 @@ def global_rank(
     key: list,
     rank_col: str = "global_rank",
     num_partitions: int | None = None,
-    need_total: bool = True,
-) -> tuple[DataFrame, int]:
-    """Exact global ``row_number`` over the total order ``key`` without
-    a single-partition sort (the plan a bare ``Window.orderBy`` emits —
-    Spark's ``WindowExec: No Partition Defined`` scale-killer).
-
-    Same two-phase prefix-sum machinery as :func:`budget_select`:
-    ``repartitionByRange`` + ``sortWithinPartitions`` give a globally
-    range-ordered layout, per-partition row counts (one tiny
-    aggregation, partition-count rows) become driver-side cumulative
-    offsets broadcast-joined back as a tiny (pid, offset) frame
-    (:func:`_offset_frame`), and the ``row_number``
-    window runs per-partition.  The ``localCheckpoint`` pins the
-    sampled range boundaries so the size collect and the rank job see
-    the same partition assignment (the budget_select/fuzzy.py failure
-    mode).  The checkpoint is LAZY (``eager=False``): the size collect
-    below is the FIRST action on the frame, so one job materializes
-    the checkpoint and returns the counts — halving the constructor's
-    driver actions (the cold-process construction cost the r9 driver
-    flagged on ``customer_sorted_neighborhood``); boundary pinning is
-    unchanged because the rank job reads the checkpointed blocks the
-    collect produced.  Returns ``(ranked_df, total_rows)``; the total
-    is free — it is the sum of the partition counts already
-    collected.
-
-    With ``need_total=False`` the returned total is ``-1`` and the
-    offsets never touch the driver at all: the per-pid counts become a
-    cumulative-offset frame IN-PLAN (a window over the
-    partition-count-sized aggregate) broadcast-joined back, so
-    constructing the rank is fully lazy — no collect, no job.  This is
-    sound because ``localCheckpoint`` wraps the shuffle in a single
-    shared RDD at call time (range boundaries are sampled once when
-    the RDD DAG is built), so the counts branch and the rank branch of
-    the one final job read the same partition assignment."""
-    d = (
-        df.repartitionByRange(num_partitions, *key)
-        if num_partitions
-        else df.repartitionByRange(*key)
-    ).sortWithinPartitions(*key)
-    part = d.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    if not need_total:
-        counts = part.groupBy("_pid").agg(F.count("*").alias("_c"))
-        # cumulative offsets via a strict-lower-pid self-join aggregate
-        # over the partition-count-sized counts frame — NOT a bare
-        # Window.orderBy, so the registry-wide no-unpartitioned-Window
-        # plan guard holds with zero allowlist entries even for this
-        # deliberately tiny frame (it plans as a broadcast NLJ over
-        # n_partitions² pairs, i.e. nothing)
-        lower = counts.select(
-            F.col("_pid").alias("_pid2"), F.col("_c").alias("_c2")
-        )
-        off = (
-            counts.join(lower, F.col("_pid2") < F.col("_pid"), "left")
-            .groupBy("_pid")
-            .agg(F.coalesce(F.sum("_c2"), F.lit(0)).alias("_off"))
-        )
-        w = Window.partitionBy("_pid").orderBy(*key)
-        ranked = (
-            part.join(F.broadcast(off), "_pid")
-            .withColumn(
-                rank_col,
-                F.row_number().over(w).cast("long") + F.col("_off"),
-            )
-            .drop("_pid", "_off")
-        )
-        return ranked, -1
-    sizes = {
-        r["_pid"]: r["c"]
-        for r in part.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
-    offsets, run = {}, 0
-    for pid in sorted(sizes):
-        offsets[pid] = run
-        run += sizes[pid]
-    w = Window.partitionBy("_pid").orderBy(*key)
-    ranked = (
-        part.join(F.broadcast(_offset_frame(part, offsets)), "_pid")
-        .withColumn(
-            rank_col,
-            F.row_number().over(w).cast("long") + F.col("_off"),
-        )
-        .drop("_pid", "_off")
-    )
-    return ranked, run
+) -> DataFrame:
+    """Exact global ``row_number`` over the total order ``key`` via
+    :func:`_prefix_scan` (per-partition row counts as offsets), with no
+    single-partition sort."""
+    scan, w = _prefix_scan(df, key, F.sum, F.lit(1), num_partitions)
+    return scan.withColumn(
+        rank_col,
+        F.row_number().over(w).cast("long") + F.coalesce("_off", F.lit(0)),
+    ).drop("_pid", "_off")
 
 
 def global_cumsum(
@@ -620,51 +546,14 @@ def global_cumsum(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact running ``SUM(value_col) OVER (ORDER BY key ROWS UNBOUNDED
-    PRECEDING)`` without a single-partition sort — the generic twin of
-    :func:`budget_select`'s prefix sum with no budget filter.
-
-    Same two-phase machinery as :func:`global_rank`:
-    ``repartitionByRange`` + ``sortWithinPartitions`` give a globally
-    range-ordered layout, per-partition value totals (one tiny
-    aggregation, partition-count rows) become driver-side prefix
-    offsets broadcast-joined back as a tiny ``(pid, offset)`` frame
-    (:func:`_offset_frame`), and the running-sum window runs
-    per-partition.  No task ever sees more than its own partition, at
-    any span — unlike a bare ``Window.orderBy`` this shape has no
-    calendar/grain caveat.  Integer values keep exact long arithmetic
-    (float totals promote the offset frame to double)."""
-    d = (
-        df.repartitionByRange(num_partitions, *key)
-        if num_partitions
-        else df.repartitionByRange(*key)
-    ).sortWithinPartitions(*key)
-    # localCheckpoint pins the sampled range boundaries — the frame is
-    # evaluated twice (totals collect + cum-sum job) and
-    # repartitionByRange is not documented as consistent across
-    # evaluations (the budget_select/fuzzy.py failure mode).  Lazy
-    # checkpoint: the totals collect is the first action, so one job
-    # materializes-and-pins the blocks (see global_rank).
-    part = d.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    totals = {
-        r["_pid"]: r["t"]
-        for r in part.groupBy("_pid").agg(F.sum(value_col).alias("t")).collect()
-    }
-    offsets, run = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = run
-        run += totals[pid] or 0
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*key)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        part.join(F.broadcast(_offset_frame(part, offsets)), "_pid")
-        .withColumn(out_col, F.sum(value_col).over(w) + F.col("_off"))
-        .drop("_pid", "_off")
-    )
+    PRECEDING)`` via :func:`_prefix_scan` (per-partition value totals as
+    offsets), with no single-partition sort.  Integer and decimal
+    values keep exact arithmetic."""
+    scan, w = _prefix_scan(df, key, F.sum, value_col, num_partitions)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return scan.withColumn(
+        out_col, F.sum(value_col).over(run) + F.coalesce("_off", F.lit(0))
+    ).drop("_pid", "_off")
 
 
 def exact_ntile(
@@ -675,25 +564,22 @@ def exact_ntile(
     ``ntile(n).over(Window.orderBy(...))`` (the first ``total mod n``
     buckets get ``ceil(total/n)`` rows, the rest ``floor(total/n)``)
     but with no unpartitioned WindowExec dragging the corpus onto one
-    task.  Differential-tested against ``F.ntile`` in
-    tests/test_curation.py."""
-    ranked, total = global_rank(df, key, rank_col="_grank")
-    if total == 0:
-        return ranked.withColumn(bucket_col, F.lit(None).cast("int")).drop(
-            "_grank"
-        )
-    q, rem = divmod(total, n_buckets)
-    big = rem * (q + 1)  # ranks 1..big land in the first rem buckets
-    r = F.col("_grank")
-    if q == 0:
-        bucket = r.cast("int")  # fewer rows than buckets: bucket = rank
-    else:
-        # integer div on longs (ranks are exact well past any corpus
-        # size a driver can rank; floor(double) would drift at 2^53)
-        bucket = (
-            F.when(r <= big, F.expr(f"(_grank - 1) div {q + 1}"))
-            .otherwise(F.expr(f"{rem} + (_grank - {big} - 1) div {q}"))
-            .cast("int")
-            + F.lit(1)
-        )
-    return ranked.withColumn(bucket_col, bucket).drop("_grank")
+    task.  The total is a 1-row count joined in the plan.
+    Differential-tested against ``F.ntile`` in tests/test_curation.py."""
+    ranked = global_rank(df, key, rank_col="_grank")
+    total = ranked.agg(F.count(F.lit(1)).alias("_n"))
+    q, rem = f"(_n div {n_buckets})", f"(_n % {n_buckets})"
+    big = f"({rem} * ({q} + 1))"  # ranks 1..big land in the first rem buckets
+    # integer div on longs (ranks are exact well past any corpus size;
+    # floor(double) would drift at 2^53); with fewer rows than buckets
+    # (q = 0) every rank is <= big, so bucket = rank and the ELSE
+    # branch's division by q is never evaluated
+    bucket = F.expr(
+        f"CASE WHEN _grank <= {big} THEN (_grank - 1) div ({q} + 1)"
+        f" ELSE {rem} + (_grank - {big} - 1) div {q} END + 1"
+    ).cast("int")
+    return (
+        ranked.crossJoin(total)
+        .withColumn(bucket_col, bucket)
+        .drop("_grank", "_n")
+    )

@@ -235,22 +235,6 @@ def minhash_signatures_from_index(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands of
-    ``num_hashes//bands`` rows; docs sharing any band bucket become a
-    candidate pair.  The shuffle key is (band_idx, band_hash) — uniform
-    by construction."""
-    inv = shingle_index(df, text_col, id_col, shingle_n)
-    return minhash_lsh_candidates_from_index(inv, num_hashes, bands)
-
-
 def minhash_lsh_candidates_from_index(
     inv: DataFrame, num_hashes: int = 32, bands: int = 8, portable: bool = False
 ) -> DataFrame:

@@ -89,14 +89,9 @@ def sorted_neighborhood_pairs(
     (exactly ``window`` comparisons per record, any distance cutoff).
 
     Distributed global rank without a single-partition sort via
-    :func:`.curation.global_rank` (the shared two-phase prefix-sum
-    machinery: ``repartitionByRange`` + per-partition ``row_number`` +
-    broadcast cumulative offsets, boundary-pinned by an eager
-    ``localCheckpoint`` — the rank is a property of the total order
-    ``(name, key)``, so partition boundary placement cannot change
-    it).  The +400-phantom-pairs failure this module originally
-    documented (range boundaries resampled between the size collect
-    and the rank job) is now guarded inside ``global_rank`` itself.
+    :func:`.curation.global_rank` — the rank is a property of the
+    total order ``(name, key)``, so partition boundary placement
+    cannot change it.
     Pairing is an equi-join on rank (the predecessor side explodes
     deltas ``1..window``), so the shuffle is uniform; no theta join,
     no window over one partition.
@@ -104,15 +99,11 @@ def sorted_neighborhood_pairs(
     from .curation import global_rank
 
     base = df.select(F.col(key_col).alias("k"), F.col(name_col).alias("n"))
-    ranked, _ = global_rank(
+    ranked = global_rank(
         base,
         [F.col("n").asc(), F.col("k").asc()],
         rank_col="r",
         num_partitions=num_partitions,
-        # the pairing join needs only the rank column, so keep the
-        # offsets in-plan: constructing this frame runs NO driver
-        # action (the cold-construction cost the r9 driver flagged)
-        need_total=False,
     )
     a = ranked.select(
         F.col("k").alias("key_a"),

@@ -78,12 +78,8 @@ def skyline_2d(
 
     1. one aggregation to the COST-GRAIN frame (max gain per distinct
        cost);
-    2. a range-partitioned prefix-max over that frame: per-partition
-       running max (``Window.partitionBy(_pid)``), plus each
-       partition's max broadcast back as "all earlier partitions" via
-       the strict-lower-pid self-join aggregate (the lazy
-       ``global_rank`` offsets idiom — partition-count² pairs, i.e.
-       nothing);
+    2. an exclusive prefix-max of that best gain in cost order
+       (:func:`.curation._prefix_scan` with ``F.max``);
     3. a survivor test joined back to the data: keep a row iff its
        gain exceeds every STRICTLY-cheaper cost's best gain and ties
        the best gain AT its own cost (equal cost+gain rows are
@@ -94,42 +90,16 @@ def skyline_2d(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .curation import _prefix_scan
+
     best = df.groupBy(F.col(cost_col).alias("_cost")).agg(
         F.max(F.col(gain_col)).alias("_best")
     )
-    ranged = (
-        best.repartitionByRange(num_partitions, "_cost")
-        if num_partitions
-        else best.repartitionByRange("_cost")
-    ).sortWithinPartitions("_cost")
-    # EAGER: pmax, the prefix-max window, and the survivor join all
-    # consume this frame concurrently — a lazy cut lets 32 tasks race
-    # into recomputing unmaterialized partitions (the r10 ALS lesson)
-    part = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
-    pmax = part.groupBy("_pid").agg(F.max("_best").alias("_pmax"))
-    lower = pmax.select(
-        F.col("_pid").alias("_pid2"), F.col("_pmax").alias("_pmax2")
-    )
-    off = (
-        pmax.join(lower, F.col("_pid2") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.max("_pmax2").alias("_off"))
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_cost")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    scan, w = _prefix_scan(best, ["_cost"], F.max, "_best", num_partitions)
+    earlier = w.rowsBetween(Window.unboundedPreceding, -1)
     frontier = (
-        part.join(F.broadcast(off), "_pid")
-        .withColumn(
-            "_prev",
-            F.greatest(
-                F.coalesce(F.max("_best").over(w), F.col("_off")),
-                F.col("_off"),
-            ),
+        scan.withColumn(
+            "_prev", F.greatest(F.max("_best").over(earlier), F.col("_off"))
         )
         .filter(F.col("_prev").isNull() | (F.col("_best") > F.col("_prev")))
         .select("_cost", "_best")
@@ -236,14 +206,10 @@ def running_prefix_max(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """EXCLUSIVE running maximum of ``value_col`` in ``order_col``
-    order, at scale: range-partition on the order key, take the
-    per-partition exclusive prefix max with a partition-LOCAL window,
-    and add each partition's "everything earlier" maximum via the
-    partition-count² offsets self-join — the prefix-MAX twin of
-    ``global_cumsum``'s prefix-SUM (and the machinery inside
-    :func:`skyline_2d`), exposed as its own operator because watermark
-    audits and high-water-mark features need it on SF-scaling frames
-    where a bare ``Window.orderBy`` would serialize onto one task.
+    order via :func:`.curation._prefix_scan` with ``F.max`` — the
+    prefix-MAX twin of ``global_cumsum``, for watermark audits and
+    high-water-mark features on SF-scaling frames where a bare
+    ``Window.orderBy`` would serialize onto one task.
 
     Rows with the first order value get NULL (no earlier row).  Ties
     in ``order_col`` see the max of strictly-EARLIER partitions plus
@@ -253,38 +219,10 @@ def running_prefix_max(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ranged = (
-        df.repartitionByRange(num_partitions, order_col)
-        if num_partitions
-        else df.repartitionByRange(order_col)
-    ).sortWithinPartitions(order_col)
-    # EAGER: three consumers (offsets agg, window, output) — a lazy cut
-    # would race concurrent tasks into duplicate recompute (r10 lesson)
-    part = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
-    pmax = part.groupBy("_pid").agg(F.max(value_col).alias("_pmax"))
-    lower = pmax.select(
-        F.col("_pid").alias("_pid2"), F.col("_pmax").alias("_pmax2")
-    )
-    off = (
-        pmax.join(lower, F.col("_pid2") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.max("_pmax2").alias("_off"))
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        part.join(F.broadcast(off), "_pid")
-        .withColumn(
-            out_col,
-            F.greatest(
-                F.coalesce(F.max(value_col).over(w), F.col("_off")),
-                F.col("_off"),
-            ),
-        )
-        .drop("_pid", "_off")
-    )
+    from .curation import _prefix_scan
+
+    scan, w = _prefix_scan(df, [order_col], F.max, value_col, num_partitions)
+    earlier = w.rowsBetween(Window.unboundedPreceding, -1)
+    return scan.withColumn(
+        out_col, F.greatest(F.max(value_col).over(earlier), F.col("_off"))
+    ).drop("_pid", "_off")

@@ -137,22 +137,6 @@ def rolling_fingerprints(
     return F.element_at(F.transform(F.array(toks), fps), 1)
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass per-document stats frame."""
-    t = F.col(text_col)
-    return df.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_pieces"),
-        F.length(t).alias("n_chars"),
-        F.round(stopword_ratio(t), 6).alias("stop_ratio"),
-        F.round(punct_ratio(t), 6).alias("punct_ratio"),
-        quality_score(t).alias("quality"),
-        detect_lang(t).alias("lang_pred"),
-        fingerprint_md5(t).alias("fingerprint"),
-    )
-
-
 def word_ngrams(text: Column, n: int) -> Column:
     """Word n-gram shingles of the normalized text as an array of
     space-joined strings (empty array when the doc has < n words).

@@ -142,10 +142,17 @@ def merge_parquet(
         incoming.select(*keys).distinct(), on=keys, how="left_anti"
     )
     merged = survivors.unionByName(incoming.select(*existing.columns))
+    _write_versioned(spark, merged, target_path)  # the ONE data write
+
+
+def _write_versioned(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Write ``df`` to the versioned sibling ``<path>__v<version>`` and
+    swap it over ``path`` — the one rewrite path of merge, compaction
+    and purge (finalize skips ``__v``/``__old`` leftovers)."""
     version = time.strftime("%Y%m%d%H%M%S")
-    vdir = f"{target_path}__v{version}"
-    merged.write.mode("overwrite").parquet(vdir)  # the ONE data write
-    _swap_into_place(spark, target_path, vdir, version)
+    vdir = f"{path}__v{version}"
+    df.write.mode("overwrite").parquet(vdir)
+    _swap_into_place(spark, path, vdir, version)
 
 
 def _swap_into_place(
@@ -205,10 +212,7 @@ def compact_parquet(
         return n_before  # already compact: don't rewrite the table
     df = spark.read.parquet(path)
     df = df.repartition(n_files) if balance else df.coalesce(n_files)
-    version = time.strftime("%Y%m%d%H%M%S")
-    vdir = f"{path}__v{version}"
-    df.write.mode("overwrite").parquet(vdir)
-    _swap_into_place(spark, path, vdir, version)
+    _write_versioned(spark, df, path)
     p, fs = _hadoop_path(spark, path)
     return sum(
         1
@@ -625,10 +629,7 @@ def purge_keys(
         kept = df.join(
             F.broadcast(fk), df[col] == F.col("__forget_key"), "left_anti"
         )
-        version = time.strftime("%Y%m%d%H%M%S")
-        vdir = f"{path}__purge{version}"
-        kept.write.mode("overwrite").parquet(vdir)
-        _swap_into_place(spark, path, vdir, version)
+        _write_versioned(spark, kept, path)
         deleted[path] = before - spark.read.parquet(path).count()
     return deleted
 

@@ -2397,13 +2397,14 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev")
         )
     )
-    ranked, n = global_rank(rev, ["rev", "o_custkey"], rank_col="rk")
+    ranked = global_rank(rev, ["rev", "o_custkey"], rank_col="rk")
+    n = F.count("*")
     return ranked.agg(
-        F.lit(n).cast("bigint").alias("n_customers"),
+        n.alias("n_customers"),
         F.round(F.sum("rev"), 2).alias("total_revenue"),
         F.round(
-            2.0 * F.sum(F.col("rk") * F.col("rev")) / (F.lit(n) * F.sum("rev"))
-            - (F.lit(n) + 1.0) / F.lit(n),
+            2.0 * F.sum(F.col("rk") * F.col("rev")) / (n * F.sum("rev"))
+            - (n + 1.0) / n,
             6,
         ).alias("gini"),
     )

@@ -333,13 +333,12 @@ def doc_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding-efficient batchers consume.  ``ntile`` needs a global
     order, but a bare ``Window.orderBy`` drags every document onto one
     task (``WindowExec: No Partition Defined``) — so the deciles come
-    from :func:`operators.curation.exact_ntile`: range-partitioned
-    per-partition ranks plus driver-side cumulative offsets (the same
-    two-phase prefix sum as ``budget_select``), identical results to
-    SQL ``NTILE(10)`` with no unpartitioned window.  (The inexact
-    alternative at 100 TB — ``percentile_approx`` cuts — stays
-    documented in ``textstats.unigram_logprob``; it is not needed for
-    exactness here.)"""
+    from :func:`operators.curation.exact_ntile` (range-partitioned
+    prefix-sum ranks), identical results to SQL ``NTILE(10)`` with no
+    unpartitioned window.  (The inexact alternative at 100 TB —
+    ``percentile_approx`` cuts — stays documented in
+    ``textstats.unigram_logprob``; it is not needed for exactness
+    here.)"""
     d = load_table(spark, sf_dir, "documents")
     from ..operators.curation import exact_ntile
 

@@ -2677,7 +2677,7 @@ def doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("c"))
     )
-    ranked, n = global_rank(
+    ranked = global_rank(
         freq.select(
             "term", "c", (-F.col("c")).alias("neg_c")
         ),
@@ -2687,7 +2687,7 @@ def doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lr = F.log(F.col("rank").cast("double"))
     lf = F.log(F.col("c").cast("double"))
     return ranked.agg(
-        F.lit(n).cast("bigint").alias("vocab_size"),
+        F.count("*").alias("vocab_size"),
         F.round(F.regr_slope(lf, lr), 6).alias("zipf_exponent"),
         F.round(F.regr_r2(lf, lr), 6).alias("r2"),
     )

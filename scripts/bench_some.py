@@ -1,6 +1,8 @@
-"""Targeted min-of-N timing for named queries (optimization-round
-iteration tool; the standing protocol stays bench.py's best-of-2 full
-run).
+"""Targeted min-of-N timing for named queries, split into plan
+CONSTRUCTION (the Python call building the DataFrame: py4j, analysis
+and any eager jobs such as checkpoints) and EXECUTION (the noop write:
+optimization, codegen and the run).  The standing protocol stays
+bench.py's best-of-2 full run.
 
 Usage:
     python scripts/bench_some.py q1 q2 ...            # min-of-3 at sf0.1
@@ -8,9 +10,12 @@ Usage:
     SPARK_GRAFT_PLAN_DIR=plans/r10 SPARK_GRAFT_PLAN_TAG=before \
         python scripts/bench_some.py q1               # also dump explain
 
-Each query is warmed once at sf0.001 (JIT/codegen), then timed
-SPARK_GRAFT_RUNS times into the noop sink at $SPARK_GRAFT_SF_DIR.
-Prints one JSON line {"queries": {name: min_sec}, "all_runs": {...}}.
+Names are looked up in ``__spark_entry__.queries()``.  Each query is
+warmed once at sf0.001 (JIT/codegen), then timed SPARK_GRAFT_RUNS
+times into the noop sink at $SPARK_GRAFT_SF_DIR.  Prints one JSON
+line {"queries": {name: min_total_s}, "construct": {name: min_s},
+"execute": {name: min_s}, "all_runs": {name: [[construct, execute],
+...]}, ...}.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, ROTATION_SAMPLE  # noqa: E402
+import __spark_entry__ as entrymod  # noqa: E402
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark  # noqa: E402
 
 
@@ -32,26 +37,19 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
     plan_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR")
     plan_tag = os.environ.get("SPARK_GRAFT_PLAN_TAG", "plan")
-    registry = {}
-    for n, reg in HEADLINE + ROTATION_SAMPLE:
-        registry[n] = reg
+    registry = entrymod.queries()
     missing = [n for n in names if n not in registry]
     if missing:
-        # fall back to the full query registry for unbenched slots
-        import __spark_entry__ as entrymod
-
-        allq = entrymod.queries()
-        for n in missing:
-            if n not in allq:
-                raise KeyError(f"unknown query {n!r}")
-            registry[n] = allq
+        raise KeyError(f"unknown queries {missing!r}")
 
     spark = get_spark("bench-some")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
+    construct: dict[str, float] = {}
+    execute: dict[str, float] = {}
+    all_runs: dict[str, list[list[float]]] = {}
     for n in names:
-        fn = registry[n][n]
+        fn = registry[n]
         spark.sparkContext.setJobDescription(f"warmup:{n}")
         fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
             "overwrite"
@@ -66,12 +64,22 @@ def main() -> None:
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"timed:{n}:{i}")
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 3))
-        out[n] = min(ts)
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            ts.append([round(t1 - t0, 3), round(t2 - t1, 3)])
+        out[n] = round(min(c + e for c, e in ts), 3)
+        construct[n] = min(c for c, _ in ts)
+        execute[n] = min(e for _, e in ts)
         all_runs[n] = ts
-        print(f"# {n}: min {min(ts)}  runs {ts}", file=sys.stderr)
-    print(json.dumps({"queries": out, "all_runs": all_runs,
+        print(
+            f"# {n}: min {out[n]}  construct {construct[n]}  "
+            f"execute {execute[n]}  runs {ts}",
+            file=sys.stderr,
+        )
+    print(json.dumps({"queries": out, "construct": construct,
+                      "execute": execute, "all_runs": all_runs,
                       "sf_dir": sf_dir, "loadavg": list(os.getloadavg())}))
 
 

@@ -261,10 +261,36 @@ def test_global_cumsum_equals_global_window(spark, sf_dir):
     assert want and got == want
 
 
+def test_global_rank_equals_row_number(spark):
+    """operators.curation.global_rank over a forced 5-partition range
+    layout must equal row_number over the same total order, with heavy
+    ties in the leading key; an empty input ranks to an empty frame."""
+    import random
+
+    from pyspark.sql import Window
+
+    random.seed(3)
+    rows = [(i, random.randint(0, 3)) for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, v long")
+    key = [F.col("v").desc(), F.col("id").asc()]
+    got = {
+        r.id: r.global_rank
+        for r in curation.global_rank(df, key, num_partitions=5).collect()
+    }
+    want = {
+        r.id: r.rn
+        for r in df.withColumn("rn", F.row_number().over(Window.orderBy(*key)))
+        .collect()
+    }
+    assert got == want
+    empty = spark.createDataFrame([], "id long, v long")
+    assert curation.global_rank(empty, key, num_partitions=5).collect() == []
+
+
 def test_exact_ntile_matches_spark_ntile(spark):
     """operators.curation.exact_ntile (two-phase prefix-sum rank) must
     reproduce F.ntile over a global Window exactly, across remainder
-    shapes (N % k), ties in the value column, and N < k."""
+    shapes (N % k), ties in the value column, N < k, and empty input."""
     import random
 
     from pyspark.sql import Window
@@ -274,9 +300,9 @@ def test_exact_ntile_matches_spark_ntile(spark):
     )
 
     random.seed(1)
-    for n, k in [(10, 4), (3, 5), (100, 7), (1, 1), (57, 10), (16, 16)]:
+    for n, k in [(10, 4), (3, 5), (100, 7), (1, 1), (57, 10), (16, 16), (0, 3)]:
         rows = [(i, random.randint(0, 20)) for i in range(n)]
-        df = spark.createDataFrame(rows, ["id", "v"])
+        df = spark.createDataFrame(rows, "id long, v long")
         key = [F.col("v").asc(), F.col("id").asc()]
         got = {r.id: r.bucket for r in exact_ntile(df, k, key).collect()}
         w = Window.orderBy("v", "id")

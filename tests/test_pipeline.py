@@ -559,6 +559,40 @@ def test_purge_keys_deletes_across_tables(spark, tmp_path):
     assert deleted2 == {orders_p: 0}
 
 
+def test_failed_purge_swap_leaves_nothing_finalize_registers(
+    spark, tmp_path, monkeypatch
+):
+    """A purge whose rename swap fails leaves its written version
+    directory behind; finalize must not register that leftover as a
+    ``*_stage`` view next to the real stage table."""
+    from gcp_cloudsql_airflow_bigquery_spark import pipeline
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").write.parquet(
+        wh.path("purged_t")
+    )
+
+    def failing_swap(*_args):
+        raise RuntimeError("injected swap failure")
+
+    monkeypatch.setattr(pipeline, "_swap_into_place", failing_swap)
+    forget = spark.createDataFrame([(1,)], "key long")
+    with pytest.raises(RuntimeError, match="injected"):
+        pipeline.purge_keys(spark, {wh.path("purged_t"): "k"}, forget)
+
+    spec = PipelineSpec(
+        export_table="purged_t",
+        source=SourceSpec(kind="parquet", path=wh.path("purged_t")),
+        stage_final_query="SELECT COUNT(*) AS n FROM purged_t_stage",
+    )
+    pipeline.finalize(spark, spec, wh)
+    views = {
+        t.name for t in spark.catalog.listTables() if t.name.startswith("purged_t")
+    }
+    assert views == {"purged_t_stage"}
+    assert spark.read.parquet(wh.path("purged_t")).count() == 2
+
+
 def test_backfill_writes_idempotent_day_partitions(spark, tmp_path):
     """Each backfilled day lands in its own partition; re-running one
     day replaces only that day; snapshot reads prune to one partition."""

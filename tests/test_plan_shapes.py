@@ -526,8 +526,8 @@ _HINT_FREE_OPERATORS = {
 # independently of corpus SF:
 #   - 1-row aggregates riding a crossJoin (pagerank dangling mass,
 #     doc-count/total/cutoff frames, vocab-size counts);
-#   - per-shuffle-partition offset frames (numPartitions rows:
-#     global_rank/global_cumsum/budget_select, skyline/prefix stats);
+#   - the per-shuffle-partition offset frame (numPartitions rows) of
+#     curation._prefix_scan, the one scan behind the global-order ops;
 #   - top-k / limit-capped / sketch-sized frames (heavy-hitter
 #     candidates, ``limit(vocab_size)`` vocab grids, benchmark shingle
 #     sets, CMS tables, PQ/IVF codebook tables — model-sized by
@@ -542,13 +542,11 @@ _HINT_FREE_OPERATORS = {
 # A NEW broadcast hint anywhere in operators/ fails this test until
 # its (file, function) is audited and added here.
 _BROADCAST_HINT_ALLOWLIST = {
-    ("curation.py", "budget_select"),
+    ("curation.py", "_prefix_scan"),
     ("curation.py", "decontaminate"),
     ("curation.py", "decontaminate_fuzzy"),
     ("curation.py", "dsir_importance_weights"),
     ("curation.py", "dsir_logratio_table"),
-    ("curation.py", "global_cumsum"),
-    ("curation.py", "global_rank"),
     ("dedup.py", "bloom_new_docs"),
     ("frequency.py", "cms_estimate"),
     ("frequency.py", "heavy_hitters"),
@@ -566,8 +564,6 @@ _BROADCAST_HINT_ALLOWLIST = {
     ("sketches.py", "audience_overlap_matrix"),
     ("sketches.py", "join_key_overlap_estimate"),
     ("skew.py", "skew_report"),
-    ("stats.py", "running_prefix_max"),
-    ("stats.py", "skyline_2d"),
     ("textsearch.py", "bm25_topk"),
     ("textsearch.py", "tfidf_topk"),
     ("textstats.py", "bigram_logprob"),
@@ -587,22 +583,38 @@ def test_operator_broadcast_hints_are_allowlisted():
     recur undetected anywhere else.  Scan ALL operator bodies for both
     hint spellings and pin the complete audited-bounded set; the
     known-scaling operators (_HINT_FREE_OPERATORS) must additionally
-    stay off the allowlist, preserving the r10 guarantee."""
+    stay off the allowlist, preserving the r10 guarantee.  SQL hints
+    (``/*+ BROADCAST(...) */`` inside a string constant or f-string,
+    as the SQL-string rounds of ``graph.pagerank`` build them) count
+    as hints too, and an allowlist entry that no longer hints fails."""
     import ast
     import pathlib
+    import re
 
     import gcp_cloudsql_airflow_bigquery_spark.operators as ops_pkg
 
     assert not (_HINT_FREE_OPERATORS & _BROADCAST_HINT_ALLOWLIST)
 
+    sql_hint = re.compile(r"/\*\+[^*]*\b(BROADCAST|MAPJOIN)", re.IGNORECASE)
     ops_dir = pathlib.Path(ops_pkg.__file__).parent
-    offenders = []
+    offenders, hinting = [], set()
     for path, fn in _iter_module_functions(ops_dir):
-        for call in [n for n in ast.walk(fn) if isinstance(n, ast.Call)]:
-            f = call.func
+        for node in ast.walk(fn):
+            f = getattr(node, "func", None)
             hinted = (
-                isinstance(f, ast.Attribute) and f.attr == "broadcast"
-            ) or (isinstance(f, ast.Name) and f.id == "broadcast")
-            if hinted and (path.name, fn.name) not in _BROADCAST_HINT_ALLOWLIST:
-                offenders.append(f"{path.name}:{call.lineno} {fn.name}")
+                (isinstance(f, ast.Attribute) and f.attr == "broadcast")
+                or (isinstance(f, ast.Name) and f.id == "broadcast")
+                or (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and sql_hint.search(node.value) is not None
+                )
+            )
+            if not hinted:
+                continue
+            hinting.add((path.name, fn.name))
+            if (path.name, fn.name) not in _BROADCAST_HINT_ALLOWLIST:
+                offenders.append(f"{path.name}:{node.lineno} {fn.name}")
     assert not offenders, offenders
+    stale = _BROADCAST_HINT_ALLOWLIST - hinting
+    assert not stale, f"allowlisted but hinting nowhere: {sorted(stale)}"
