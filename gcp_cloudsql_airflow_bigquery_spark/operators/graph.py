@@ -12,8 +12,9 @@ representatives, compose the round assignments — whose live-node
 count at least halves per round, so the fallback converges in
 O(log n) rounds regardless of component diameter.  Pure propagation
 is O(diameter) and was measured to silently exhaust a 20-round budget
-on a 120-node near-path component.  Lineage is cut per round with
-``localCheckpoint`` so iterated plans stay constant-size.
+on a 120-node near-path component.  Connected components, PageRank
+and label propagation cut lineage per round with ``localCheckpoint``
+so iterated plans stay constant-size; k-core peeling is one lazy plan.
 """
 
 from __future__ import annotations
@@ -452,53 +453,44 @@ def k_core(
     *,
     k: int = 3,
     rounds: int = 6,
-    broadcast_alive: bool = False,
 ) -> DataFrame:
     """Fixed-round k-core peeling (the crawl-curation centrality
     filter: keep only nodes embedded in a dense mutual neighborhood —
     host-graph k-cores are a published web-corpus quality signal):
     each round drops every node whose degree in the surviving subgraph
     is below ``k``, then recomputes degrees.  A FIXED number of
-    synchronous rounds (converged when no round removes anything)
-    keeps the result a pure function of the graph, replayable by the
-    DuckDB oracle as unrolled CTEs — same determinism contract as
-    :func:`label_propagation` and :func:`pagerank`.
+    synchronous rounds keeps the result a pure function of the graph,
+    replayable by the DuckDB oracle as unrolled CTEs — same
+    determinism contract as :func:`label_propagation` and
+    :func:`pagerank`.
 
     Returns ``(node, core_degree)`` — the nodes with at least one
     surviving edge after ``rounds`` peels, with their degree inside
     the surviving subgraph.
 
-    Scale shape: the symmetrized edge list is cut once; each round is
-    ONE degree aggregation plus two semi-joins against the alive set —
-    never quadratic, and the edge frame only shrinks.
-    ``broadcast_alive`` is OPT-IN (default False): the alive set is
-    node-sized, and a forced hint bypasses
-    ``autoBroadcastJoinThreshold`` at any size, so on SF-scaling node
-    sets (e.g. the part-keyed co-purchase graph) the plain frame is
-    passed and Catalyst/AQE picks the strategy from its own stats.
-    Pass True only for bounded node sets the caller KNOWS are
-    model-sized."""
-    half = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    cur = (
-        half.unionByName(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    Scale shape: one lazy plan, built as a single SQL statement, so
+    construction runs no Spark job.  Peeling keeps the edge set
+    symmetric, so deg(x) is the number of rows with ``u = x`` and also
+    the number with ``v = x``: a round is ``COUNT(*) OVER (PARTITION
+    BY u)`` and ``... BY v`` over the same edges, keeping rows where
+    both are ``>= k``.  The window order alternates per round, so each
+    round's first window runs on the partitioning the previous round
+    left and a round costs ONE edge-sized exchange; the final degree
+    count groups on that same column."""
+    steps = [f"""e0 AS (SELECT DISTINCT u, v FROM (
+  SELECT `{src}` AS u, `{dst}` AS v FROM {{edges}}
+  UNION ALL SELECT `{dst}`, `{src}` FROM {{edges}}
+) WHERE u <> v)"""]
+    first, second = "u", "v"
+    for i in range(1, rounds + 1):
+        steps.append(f"""e{i} AS (SELECT u, v FROM (
+  SELECT u, v, d1, COUNT(*) OVER (PARTITION BY {second}) AS d2 FROM (
+    SELECT u, v, COUNT(*) OVER (PARTITION BY {first}) AS d1 FROM e{i - 1})
+) WHERE d1 >= :k AND d2 >= :k)""")
+        # the next round (or the final count) starts on this partitioning
+        first, second = second, first
+    q = "WITH " + ",\n".join(steps) + (
+        f"\nSELECT {first} AS node, COUNT(*) AS core_degree"
+        f" FROM e{rounds} GROUP BY {first}"
     )
-    for _ in range(rounds):
-        deg = cur.groupBy("u").agg(F.count("*").alias("deg"))
-        alive = deg.filter(F.col("deg") >= k).select("u").localCheckpoint(
-            eager=True
-        )
-        a_u = F.broadcast(alive) if broadcast_alive else alive
-        a_v = alive.withColumnRenamed("u", "v")
-        if broadcast_alive:
-            a_v = F.broadcast(a_v)
-        cur = (
-            cur.join(a_u, "u", "left_semi")
-            .join(a_v, "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return cur.groupBy("u").agg(F.count("*").alias("core_degree")).select(
-        F.col("u").alias("node"), "core_degree"
-    )
+    return edges.sparkSession.sql(q, args={"k": k}, edges=edges)

@@ -1,7 +1,8 @@
 """Targeted min-of-N timing for named queries, split into plan
 CONSTRUCTION (the Python call building the DataFrame: py4j, analysis
 and any eager jobs such as checkpoints) and EXECUTION (the noop write:
-optimization, codegen and the run).  The standing protocol stays
+optimization, codegen and the run), plus the number of Spark jobs
+submitted during construction.  The standing protocol stays
 bench.py's best-of-2 full run.
 
 Usage:
@@ -14,8 +15,8 @@ Names are looked up in ``__spark_entry__.queries()``.  Each query is
 warmed once at sf0.001 (JIT/codegen), then timed SPARK_GRAFT_RUNS
 times into the noop sink at $SPARK_GRAFT_SF_DIR.  Prints one JSON
 line {"queries": {name: min_total_s}, "construct": {name: min_s},
-"execute": {name: min_s}, "all_runs": {name: [[construct, execute],
-...]}, ...}.
+"execute": {name: min_s}, "construct_jobs": {name: max_jobs},
+"all_runs": {name: [[construct, execute, jobs], ...]}, ...}.
 """
 
 from __future__ import annotations
@@ -43,14 +44,16 @@ def main() -> None:
         raise KeyError(f"unknown queries {missing!r}")
 
     spark = get_spark("bench-some")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     out: dict[str, float] = {}
     construct: dict[str, float] = {}
     execute: dict[str, float] = {}
+    construct_jobs: dict[str, int] = {}
     all_runs: dict[str, list[list[float]]] = {}
     for n in names:
         fn = registry[n]
-        spark.sparkContext.setJobDescription(f"warmup:{n}")
+        sc.setJobDescription(f"warmup:{n}")
         fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
             "overwrite"
         ).save()
@@ -62,24 +65,32 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"))
         ts = []
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"timed:{n}:{i}")
+            group = f"construct:{n}:{i}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(f"timed:{n}:{i}")
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            ts.append([round(t1 - t0, 3), round(t2 - t1, 3)])
-        out[n] = round(min(c + e for c, e in ts), 3)
-        construct[n] = min(c for c, _ in ts)
-        execute[n] = min(e for _, e in ts)
+            ts.append([round(t1 - t0, 3), round(t2 - t1, 3), jobs])
+        out[n] = round(min(c + e for c, e, _ in ts), 3)
+        construct[n] = min(c for c, _, _ in ts)
+        execute[n] = min(e for _, e, _ in ts)
+        construct_jobs[n] = max(j for _, _, j in ts)
         all_runs[n] = ts
         print(
             f"# {n}: min {out[n]}  construct {construct[n]}  "
-            f"execute {execute[n]}  runs {ts}",
+            f"execute {execute[n]}  construct_jobs {construct_jobs[n]}  "
+            f"runs {ts}",
             file=sys.stderr,
         )
     print(json.dumps({"queries": out, "construct": construct,
-                      "execute": execute, "all_runs": all_runs,
+                      "execute": execute, "construct_jobs": construct_jobs,
+                      "all_runs": all_runs,
                       "sf_dir": sf_dir, "loadavg": list(os.getloadavg())}))
 
 

@@ -535,7 +535,7 @@ _HINT_FREE_OPERATORS = {
 #   - probe/query batches bounded by the operator's documented
 #     contract (brute-force/LSH/PQ top-k take bounded query sets; the
 #     corpus-sized-probe operators are exactly _HINT_FREE_OPERATORS);
-#   - opt-in ``broadcast_*`` knob branches (label_propagation, k_core)
+#   - opt-in ``broadcast_*`` knob branches (label_propagation)
 #     — default-off is enforced by
 #     test_operator_broadcast_knobs_default_off and every plans/
 #     opt-in site is allowlisted as bounded above.
@@ -550,7 +550,6 @@ _BROADCAST_HINT_ALLOWLIST = {
     ("dedup.py", "bloom_new_docs"),
     ("frequency.py", "cms_estimate"),
     ("frequency.py", "heavy_hitters"),
-    ("graph.py", "k_core"),
     ("graph.py", "label_propagation"),
     ("graph.py", "pagerank"),
     ("mixing.py", "resample"),

@@ -722,16 +722,51 @@ def _py_kcore(edges, k, rounds):
 
 
 @settings(max_examples=6, deadline=None)
-@given(_edge_list(), st.integers(1, 3))
-def test_k_core_matches_python_reference(spark, edges, k):
+@given(_edge_list(), st.integers(1, 3), st.integers(0, 5))
+def test_k_core_matches_python_reference(spark, edges, k, rounds):
     """Property: fixed-round k_core ≡ the pure-Python peeling
     reference on arbitrary small multigraphs (dedup + symmetrize +
-    peel are engine-independent set arithmetic)."""
+    peel are engine-independent set arithmetic), for both window
+    orders of a round and for zero rounds."""
     from gcp_cloudsql_airflow_bigquery_spark.operators.graph import k_core
 
     df = spark.createDataFrame(edges, ["a", "b"])
-    got = {r.node: r.core_degree for r in k_core(df, k=k, rounds=4).collect()}
-    assert got == _py_kcore(edges, k, 4)
+    got = {r.node: r.core_degree for r in k_core(df, k=k, rounds=rounds).collect()}
+    assert got == _py_kcore(edges, k, rounds)
+
+
+def test_k_core_builds_without_jobs_one_exchange_per_round(spark):
+    """k_core is one lazy plan: building it submits no Spark job, and
+    each added round adds exactly one Exchange (the round's first
+    window reuses the partitioning the previous round left)."""
+    from gcp_cloudsql_airflow_bigquery_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], ["a", "b"])
+    sc = spark.sparkContext
+    sc.setJobGroup("k_core_build", "k_core construction")
+    try:
+        k_core(edges, k=2, rounds=6)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("k_core_build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    def exchanges(r):
+        plan = k_core(edges, k=2, rounds=r)._jdf.queryExecution().executedPlan()
+        return plan.toString().count("Exchange")
+
+    for r in range(4):
+        assert exchanges(r + 2) - exchanges(r) == 2, r
+
+
+def test_k_core_empty_input(spark):
+    from gcp_cloudsql_airflow_bigquery_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame([], "a long, b long")
+    out = k_core(edges, k=2, rounds=3)
+    assert out.columns == ["node", "core_degree"]
+    assert out.collect() == []
 
 
 def _py_lpa(edges_w, rounds):
