@@ -16,329 +16,204 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import (
-    advanced,
-    curation,
-    dq,
-    events,
-    llmdata,
-    quality,
-    relational,
-    scale,
-    search,
-    temporal,
-    tpch2,
-)
+from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark
 
-HEADLINE = [
-    ("flagship_revenue_by_region_nation", relational.QUERIES),
-    ("pricing_summary", relational.QUERIES),
-    ("join_broadcast", relational.QUERIES),
-    ("agg_count_distinct", relational.QUERIES),
-    ("topk_per_group", relational.QUERIES),
-    ("window_running", relational.QUERIES),
-    ("dedup_exact", relational.QUERIES),
-    ("events_session", events.QUERIES),
-    ("events_asof_purchase", temporal.QUERIES),
-    ("salted_agg_hot_keys", scale.QUERIES),
-    ("doc_dedup_minhash", llmdata.QUERIES),
-    ("knn_bruteforce", llmdata.QUERIES),
-    ("doc_token_stats", llmdata.QUERIES),
-    ("doc_tfidf_top_term", llmdata.QUERIES),
-    ("doc_repetition", quality.QUERIES),
-    ("doc_decontaminated", quality.QUERIES),
-    ("doc_mix_resampled", curation.QUERIES),
-    ("doc_packed_bins", quality.QUERIES),
-    ("corpus_funnel", quality.QUERIES),
-    # r2 additions: the heaviest join/agg shapes (TPC-H q9/q18/q21
-    # equivalents) + the iterative connected-components path, so
-    # round-over-round regressions in those plans stay visible
-    ("q9_product_type_profit", tpch2.QUERIES),
-    ("large_volume_orders", advanced.QUERIES),  # Q18 shape
-    ("lone_late_supplier", advanced.QUERIES),  # Q21 shape
-    ("doc_dup_clusters", llmdata.QUERIES),
-    # r4 additions: the new timeseries/dedup surfaces, so their cost at
-    # sf0.1 is tracked from the round they landed
-    ("events_multires_rollup", events.QUERIES),
-    ("events_session_error_overlap", temporal.QUERIES),
-    ("doc_bloom_incremental_new", llmdata.QUERIES),
-    ("event_heavy_hitters", events.QUERIES),
-    ("doc_duplicate_passages", llmdata.QUERIES),
-    ("doc_passage_redacted", llmdata.QUERIES),
-    ("doc_dedup_prefix_jaccard", llmdata.QUERIES),
-    ("topk_per_group_salted", scale.QUERIES),
-    ("customer_sorted_neighborhood", advanced.QUERIES),
-    ("embedding_covariance_matrix", llmdata.QUERIES),
-    ("doc_weighted_sample", curation.QUERIES),
-    ("doc_bm25_search", search.QUERIES),
-    # r4 wave 2: importance resampling, fuzzy decontamination, anomaly
-    # scoring, the stateful-kernel sessionization, and the PMI basket
-    # join — the new surfaces whose cost should be tracked from the
-    # round they landed
-    ("doc_dsir_resample", curation.QUERIES),
-    ("doc_decontaminated_fuzzy", quality.QUERIES),
-    ("events_anomaly_zscore", events.QUERIES),
-    ("events_funnel_windowed", events.QUERIES),
-    ("events_session_capped", temporal.QUERIES),
-    ("doc_gopher_report", quality.QUERIES),
-    ("part_affinity_pmi", advanced.QUERIES),
-    # r5 additions: the fixed-iteration PageRank, the learned quality
-    # classifier, and the exact distinct rollup — cost tracked from the
-    # round they landed.  (doc_dedup_minhash_portable is deliberately
-    # NOT benched: it is the sf0.01 oracle-replay twin, and its cost is
-    # the md5-vs-xxhash64 ratio by construction.)
-    ("event_type_pagerank", events.QUERIES),
-    ("doc_quality_classifier", quality.QUERIES),
-    ("events_distinct_users_rollup_exact", scale.QUERIES),
-    # r6 additions: bigram-LM perplexity filter (corpus-trained model +
-    # one model join over the exploded corpus), hybrid BM25+vector RRF
-    # retrieval, the kNN label-eval probe, the documents DQ gate, and
-    # the exact-regime KLL rollup twin
-    ("doc_perplexity_bigram", llmdata.QUERIES),
-    ("hybrid_search_rrf", search.QUERIES),
-    ("embedding_knn_label_eval", llmdata.QUERIES),
-    ("dq_documents_report", dq.QUERIES),
-    ("events_value_quantiles_rollup_exactmode", scale.QUERIES),
-    # r7 additions: the events DQ gate (landed after the r6 baseline
-    # runs), the persisted-IVF-index kNN label eval and SemDeDup pass
-    # (index build + partition-pruned probe/partition-local pair join —
-    # the full-corpus scale paths), and the Z-order layout audit
-    ("dq_events_report", dq.QUERIES),
-    ("embedding_knn_label_eval_ivf", llmdata.QUERIES),
-    ("embedding_semantic_dedup_indexed", llmdata.QUERIES),
-    ("events_zorder_layout", scale.QUERIES),
-    # r7 wave 2: asymmetric containment dedup (one-sided prefix filter)
-    # and the sparse tf-idf lexical kNN — both new candidate/scoring
-    # shapes whose cost should be tracked from the round they landed
-    ("doc_containment_pairs", llmdata.QUERIES),
-    ("doc_tfidf_knn", search.QUERIES),
-    # r7 wave 3: LPA community detection over the event-state graph,
-    # the map/struct HOF surface, the per-source token-distribution
-    # drift monitor, and the IVF recall@10 eval.  (doc_minhash_recall_eval
-    # is NOT benched for the same reason as doc_dedup_minhash_portable:
-    # it is the portable md5 oracle-replay shape, and its cost is the
-    # md5-vs-xxhash64 ratio by construction.)
-    ("event_state_communities", events.QUERIES),
-    ("map_struct_funcs", advanced.QUERIES),
-    ("doc_source_token_drift", llmdata.QUERIES),
-    ("embedding_ann_recall_eval", llmdata.QUERIES),
-    # r7 wave 4: k-core peeling, cluster-keyed leakage-safe splits,
-    # the zero-join RANGE-frame attribution, the two seasonal-grid
-    # queries, and association rules
-    ("part_cooccurrence_kcore", advanced.QUERIES),
-    ("doc_leakage_safe_splits", llmdata.QUERIES),
-    ("events_attribution_linear", temporal.QUERIES),
-    ("events_hourly_autocorr", events.QUERIES),
-    ("events_seasonal_anomaly", events.QUERIES),
-    ("part_association_rules", advanced.QUERIES),
-    ("events_user_rfm_segments", events.QUERIES),
-    ("nation_revenue_trend", advanced.QUERIES),
-    ("events_ab_significance", events.QUERIES),
-    ("orders_open_backlog", advanced.QUERIES),
-    # r7 wave 7: closed-form CUSUM, sequence mining, sliding HLL
-    # merge, week-bin Kaplan-Meier, score-group Mann-Whitney AUC
-    ("events_changepoint_cusum", events.QUERIES),
-    ("events_frequent_sequences", events.QUERIES),
-    ("events_sliding_distinct_users", scale.QUERIES),
-    ("customer_survival_km", advanced.QUERIES),
-    ("doc_quality_auc_eval", quality.QUERIES),
-    # r7 wave 8: F-S linkage scoring, seasonal-naive backtest, KL novelty
-    ("customer_linkage_scores", advanced.QUERIES),
-    ("events_forecast_eval", events.QUERIES),
-    ("doc_ngram_novelty", llmdata.QUERIES),
-    # r7 wave 9: Benford screen, global-rank Gini, Flesch readability
-    ("orders_benford_screen", advanced.QUERIES),
-    ("customer_revenue_gini", advanced.QUERIES),
-    ("doc_readability", quality.QUERIES),
-    # r7 wave 10: diagonal-Mahalanobis outlier screen, Zipf corpus fit
-    ("embedding_outlier_score", llmdata.QUERIES),
-    ("doc_zipf_fit", llmdata.QUERIES),
-    # r7 wave 11: k-anonymity gate, bot-regularity screen, PSI drift
-    ("customer_k_anonymity", dq.QUERIES),
-    ("events_bot_regularity", events.QUERIES),
-    ("doc_source_psi_drift", llmdata.QUERIES),
-    # r7 wave 12: product-quantization codes (train + encode) and the
-    # unrolled greedy MMR diversity re-rank
-    ("embedding_pq_codes", llmdata.QUERIES),
-    ("embedding_mmr_diverse", search.QUERIES),
-    # r7 wave 13: prequential expanding-window z-score (batch twin of
-    # the Welford GroupState stream)
-    ("events_prequential_zscore", events.QUERIES),
-    # r7 wave 14: PQ asymmetric-distance top-k (train + encode + ADC)
-    # and the held-out Stupid Backoff trigram LM eval
-    ("knn_pq_adc", llmdata.QUERIES),
-    ("doc_backoff_lm_eval", llmdata.QUERIES),
-    # r7 wave 15: duplicate-purchase (double-charge) screen
-    ("events_duplicate_purchases", events.QUERIES),
-    # r7 wave 16: BM25-vs-semantic-gold nDCG@10 ranking eval and the
-    # greedy k-center diversity coreset
-    ("search_ndcg_eval", search.QUERIES),
-    ("embedding_kcenter_coreset", llmdata.QUERIES),
-    ("knn_ivfpq", llmdata.QUERIES),
-    ("doc_tokenizer_fertility", llmdata.QUERIES),
-    # r7 wave 17: RAKE keyphrase extraction
-    ("doc_rake_keyphrases", llmdata.QUERIES),
-    # r7 wave 18: protocol-conformance screen and TextRank summarization
-    ("events_transition_conformance", events.QUERIES),
-    ("doc_textrank_sentence", llmdata.QUERIES),
-    # r7 wave 19: Theil-Sen robust trend (OLS twin)
-    ("nation_revenue_theilsen", advanced.QUERIES),
-    # r8 wave 1: the registered end-to-end Structured Streaming run
-    # (parquet file source -> 7-day tumbling windows -> memory sink,
-    # availableNow); timed cost = stream startup + one micro-batch
-    # over the full fixture
-    ("events_weekly_counts_streamed", events.QUERIES),
-    # r8 wave 2: Adamic-Adar link prediction (hub-capped common-
-    # neighbor join), recency-decayed engagement, reliability-bin
-    # calibration, and RM1 pseudo-relevance-feedback expansion
-    ("part_adamic_adar", advanced.QUERIES),
-    ("events_decay_value", events.QUERIES),
-    ("doc_quality_calibration", quality.QUERIES),
-    ("search_prf_expansion", search.QUERIES),
-    # r8 wave 3: grid-quantized two-sample KS drift, Dunning-LLR
-    # collocations, t-closeness privacy gate, and the oracle-paired
-    # image aHash (encode->decode->hash through the codec path)
-    ("events_ks_drift", events.QUERIES),
-    ("doc_collocations_llr", llmdata.QUERIES),
-    ("customer_t_closeness", dq.QUERIES),
-    ("media_image_ahash", llmdata.QUERIES),
-    # r8 wave 4: SCD2 dimension history (the warehouse-history surface
-    # the reference's WRITE_TRUNCATE reloads discard), Mann-Kendall
-    # trend significance (the Theil-Sen estimator's test twin), and
-    # the language-ID confusion-matrix eval
-    ("customer_scd2_history", advanced.QUERIES),
-    ("nation_mann_kendall", advanced.QUERIES),
-    ("doc_lang_confusion", llmdata.QUERIES),
-    # r8 wave 5: median/MAD robust anomaly screen (the breakdown-
-    # resistant twin of events_anomaly_zscore), chi-square
-    # independence test, and the grid-banded weighted median
-    ("events_mad_outliers", events.QUERIES),
-    ("events_weekday_chi2", events.QUERIES),
-    ("nation_weighted_median_price", advanced.QUERIES),
-    # r8 wave 6: Laspeyres price index (fixed base-month basket)
-    ("part_price_index", advanced.QUERIES),
-    # r9 wave 1: second registered stream (stateful dedup) and the
-    # WAV-path oracle-paired signal statistics
-    ("events_dedup_streamed", events.QUERIES),
-    ("media_audio_stats", llmdata.QUERIES),
-    # r9 wave 2: stream-stream join registered stream, behavioral
-    # entropy, per-brand correlation, EWMA forecast baseline,
-    # hash-stratified sampling census, IVF cell-balance census
-    ("events_attribution_streamed", events.QUERIES),
-    ("events_user_entropy", events.QUERIES),
-    ("brand_price_qty_corr", advanced.QUERIES),
-    ("events_ewma_daily", events.QUERIES),
-    ("events_stratified_sample", events.QUERIES),
-    ("embedding_cluster_balance", llmdata.QUERIES),
-    # r9 wave 3: Markov stationary distribution, rank movers, and the
-    # classical trend/seasonal decomposition
-    ("events_markov_stationary", events.QUERIES),
-    ("brand_monthly_rank_moves", advanced.QUERIES),
-    ("events_daily_decomposition", events.QUERIES),
-    ("nation_supplier_hhi", advanced.QUERIES),
-    # r9 wave 4: context-window truncation census and the Pareto 80%
-    # cohort (global_cumsum scale path)
-    ("doc_context_fit_report", curation.QUERIES),
-    ("events_power_users_pareto", events.QUERIES),
-    # r9 wave 5: registered stream #4 — exactly-once partitioned
-    # file sink (landing-zone shape), landed table rolled up
-    ("events_filesink_pipeline", events.QUERIES),
-    ("embedding_quantization_error", llmdata.QUERIES),
-    # r9 wave 6: registered stream #5 — custom GroupState
-    # sessionization (applyInPandasWithState), closed sessions only
-    ("events_sessions_streamed", events.QUERIES),
-    # r9 wave 7: resize path oracle-paired end-to-end (byte-exact hex)
-    ("media_resized_hex", llmdata.QUERIES),
-    # r10: registered stream #6 — foreachBatch event-time LWW MERGE
-    # upsert (the reference's daily incremental finalize)
-    ("events_upsert_streamed", events.QUERIES),
-    # r10 waves 1-3: the distributed-work-dominated additions (policy
-    # paragraph in BASELINE.md; the sub-0.3 s window/privacy slots stay
-    # rotation-sampled)
-    ("doc_heaps_law", llmdata.QUERIES),
-    ("customer_rfm_segments", advanced.QUERIES),
-    ("embedding_knn_graph", llmdata.QUERIES),
-    ("events_session_entry_exit", events.QUERIES),
-    ("part_graph_assortativity", advanced.QUERIES),
-    ("orders_trimmed_mean_price", advanced.QUERIES),
-    ("events_brown_trend_daily", events.QUERIES),
-    ("media_image_channel_stats", llmdata.QUERIES),
-    # r10 wave 4: HITS (16 lineage-cut half-steps), degree-ordered
-    # per-node triangles, basket-bounded item-item CF, brand-month
-    # elasticity OLS; the 1-row inference rollups (welch/cuped/anova)
-    # stay rotation-sampled per the policy
-    ("event_type_hits", events.QUERIES),
-    ("part_clustering_coefficient", advanced.QUERIES),
-    ("part_item_cf_recs", advanced.QUERIES),
-    ("brand_price_elasticity", advanced.QUERIES),
-    # r10 wave 5: registered stream #7 (broadcast enrichment),
-    # U-shaped attribution (time-band join), rank-2 ALS (6 unrolled
-    # in-plan ridge solves)
-    ("events_enriched_streamed", events.QUERIES),
-    ("events_attribution_position", temporal.QUERIES),
-    ("brand_als_factors", advanced.QUERIES),
-    # r10 wave 6: Nelson-Aalen hazard, LPA modularity, chunk-level
-    # dedup (RAG-granularity fingerprint groupBy)
-    ("customer_hazard_na", advanced.QUERIES),
-    ("event_state_modularity", events.QUERIES),
-    ("doc_chunk_dedup", curation.QUERIES),
-    # r10 wave 7: 2-D skyline (range-partitioned prefix-max) and the
-    # array HOF surface (zip_with/aggregate fold over lineitem)
-    ("part_skyline_price_size", advanced.QUERIES),
-    ("array_zip_funcs", advanced.QUERIES),
-    # r10 wave 8: survival comparison, rank statistics, recursive
-    # closure, burstiness census, and registered stream #8
-    ("customer_logrank_test", advanced.QUERIES),
-    ("nation_weekly_spearman", advanced.QUERIES),
-    ("events_mann_whitney", events.QUERIES),
-    ("event_type_reachability", events.QUERIES),
-    ("events_interarrival_burstiness", events.QUERIES),
-    ("events_heavy_hitters_streamed", events.QUERIES),
-    # r10 wave 9: stratified/rank tests, CMS sketch, Wasserstein,
-    # LATERAL decorrelation
-    ("orders_cmh_returns", advanced.QUERIES),
-    ("events_kruskal_wallis", events.QUERIES),
-    ("events_user_cms", events.QUERIES),
-    ("events_wasserstein_drift", events.QUERIES),
-    ("lateral_topk_orders", advanced.QUERIES),
-    # r10 wave 10: cluster separation, lexical diversity, DP release
-    ("embedding_cluster_separation", llmdata.QUERIES),
-    ("doc_source_diversity", llmdata.QUERIES),
-    ("events_dp_noisy_counts", events.QUERIES),
-    # r10 wave 11: tail index, runs test, conversion latency, tau-b
-    ("events_value_hill_tail", events.QUERIES),
-    ("events_runs_test_daily", events.QUERIES),
-    ("events_time_to_convert", events.QUERIES),
-    ("nation_weekly_kendall", advanced.QUERIES),
-    # r10 wave 12: HW forecast kernel, DiD, conversion paths, GROUP BY ALL
-    ("events_holt_winters_daily", events.QUERIES),
-    ("events_diff_in_diff", events.QUERIES),
-    ("events_conversion_paths", events.QUERIES),
-    ("groupby_all_revenue", advanced.QUERIES),
-    # r10 wave 13: portmanteau test, Markov prediction eval, 2-way ANOVA
-    ("events_ljung_box", events.QUERIES),
-    ("events_markov_prediction_eval", events.QUERIES),
-    ("lineitem_two_way_anova", advanced.QUERIES),
-    # r10 wave 14: prefix-max watermark audit, generated calendar dim,
-    # deterministic mode
-    ("events_late_arrival_audit", events.QUERIES),
-    ("orders_calendar_dim_join", advanced.QUERIES),
-    ("part_mode_size_by_brand", advanced.QUERIES),
-    # r10 wave 15: stream #9, curation cross-checks, substitutes
-    ("events_distinct_users_streamed", events.QUERIES),
-    ("doc_dup_quality_report", llmdata.QUERIES),
-    ("doc_label_source_alignment", llmdata.QUERIES),
-    ("part_substitutes", advanced.QUERIES),
-    # r10 wave 16: growth accounting, periodogram, window-fn surface
-    ("events_growth_accounting", events.QUERIES),
-    ("events_periodogram_daily", events.QUERIES),
-    ("window_nth_ignore_nulls", advanced.QUERIES),
-    # r10 wave 17: DLQ stream, feature matrix, ABC/XYZ
-    ("events_quarantine_streamed", events.QUERIES),
-    ("events_user_feature_matrix", events.QUERIES),
-    ("part_abc_xyz", advanced.QUERIES),
-]
+HEADLINE = (
+    "flagship_revenue_by_region_nation",
+    "pricing_summary",
+    "join_broadcast",
+    "agg_count_distinct",
+    "topk_per_group",
+    "window_running",
+    "dedup_exact",
+    "events_session",
+    "events_asof_purchase",
+    "salted_agg_hot_keys",
+    "doc_dedup_minhash",
+    "knn_bruteforce",
+    "doc_token_stats",
+    "doc_tfidf_top_term",
+    "doc_repetition",
+    "doc_decontaminated",
+    "doc_mix_resampled",
+    "doc_packed_bins",
+    "corpus_funnel",
+    "q9_product_type_profit",
+    "large_volume_orders",  # Q18 shape
+    "lone_late_supplier",  # Q21 shape
+    "doc_dup_clusters",
+    "events_multires_rollup",
+    "events_session_error_overlap",
+    "doc_bloom_incremental_new",
+    "event_heavy_hitters",
+    "doc_duplicate_passages",
+    "doc_passage_redacted",
+    "doc_dedup_prefix_jaccard",
+    "topk_per_group_salted",
+    "customer_sorted_neighborhood",
+    "embedding_covariance_matrix",
+    "doc_weighted_sample",
+    "doc_bm25_search",
+    "doc_dsir_resample",
+    "doc_decontaminated_fuzzy",
+    "events_anomaly_zscore",
+    "events_funnel_windowed",
+    "events_session_capped",
+    "doc_gopher_report",
+    "part_affinity_pmi",
+    "event_type_pagerank",
+    "doc_quality_classifier",
+    "events_distinct_users_rollup_exact",
+    "doc_perplexity_bigram",
+    "hybrid_search_rrf",
+    "embedding_knn_label_eval",
+    "dq_documents_report",
+    "events_value_quantiles_rollup_exactmode",
+    "dq_events_report",
+    "embedding_knn_label_eval_ivf",
+    "embedding_semantic_dedup_indexed",
+    "events_zorder_layout",
+    "doc_containment_pairs",
+    "doc_tfidf_knn",
+    "event_state_communities",
+    "map_struct_funcs",
+    "doc_source_token_drift",
+    "embedding_ann_recall_eval",
+    "part_cooccurrence_kcore",
+    "doc_leakage_safe_splits",
+    "events_attribution_linear",
+    "events_hourly_autocorr",
+    "events_seasonal_anomaly",
+    "part_association_rules",
+    "events_user_rfm_segments",
+    "nation_revenue_trend",
+    "events_ab_significance",
+    "orders_open_backlog",
+    "events_changepoint_cusum",
+    "events_frequent_sequences",
+    "events_sliding_distinct_users",
+    "customer_survival_km",
+    "doc_quality_auc_eval",
+    "customer_linkage_scores",
+    "events_forecast_eval",
+    "doc_ngram_novelty",
+    "orders_benford_screen",
+    "customer_revenue_gini",
+    "doc_readability",
+    "embedding_outlier_score",
+    "doc_zipf_fit",
+    "customer_k_anonymity",
+    "events_bot_regularity",
+    "doc_source_psi_drift",
+    "embedding_pq_codes",
+    "embedding_mmr_diverse",
+    "events_prequential_zscore",
+    "knn_pq_adc",
+    "doc_backoff_lm_eval",
+    "events_duplicate_purchases",
+    "search_ndcg_eval",
+    "embedding_kcenter_coreset",
+    "knn_ivfpq",
+    "doc_tokenizer_fertility",
+    "doc_rake_keyphrases",
+    "events_transition_conformance",
+    "doc_textrank_sentence",
+    "nation_revenue_theilsen",
+    "events_weekly_counts_streamed",
+    "part_adamic_adar",
+    "events_decay_value",
+    "doc_quality_calibration",
+    "search_prf_expansion",
+    "events_ks_drift",
+    "doc_collocations_llr",
+    "customer_t_closeness",
+    "media_image_ahash",
+    "customer_scd2_history",
+    "nation_mann_kendall",
+    "doc_lang_confusion",
+    "events_mad_outliers",
+    "events_weekday_chi2",
+    "nation_weighted_median_price",
+    "part_price_index",
+    "events_dedup_streamed",
+    "media_audio_stats",
+    "events_attribution_streamed",
+    "events_user_entropy",
+    "brand_price_qty_corr",
+    "events_ewma_daily",
+    "events_stratified_sample",
+    "embedding_cluster_balance",
+    "events_markov_stationary",
+    "brand_monthly_rank_moves",
+    "events_daily_decomposition",
+    "nation_supplier_hhi",
+    "doc_context_fit_report",
+    "events_power_users_pareto",
+    "events_filesink_pipeline",
+    "embedding_quantization_error",
+    "events_sessions_streamed",
+    "media_resized_hex",
+    "events_upsert_streamed",
+    "doc_heaps_law",
+    "customer_rfm_segments",
+    "embedding_knn_graph",
+    "events_session_entry_exit",
+    "part_graph_assortativity",
+    "orders_trimmed_mean_price",
+    "events_brown_trend_daily",
+    "media_image_channel_stats",
+    "event_type_hits",
+    "part_clustering_coefficient",
+    "part_item_cf_recs",
+    "brand_price_elasticity",
+    "events_enriched_streamed",
+    "events_attribution_position",
+    "brand_als_factors",
+    "customer_hazard_na",
+    "event_state_modularity",
+    "doc_chunk_dedup",
+    "part_skyline_price_size",
+    "array_zip_funcs",
+    "customer_logrank_test",
+    "nation_weekly_spearman",
+    "events_mann_whitney",
+    "event_type_reachability",
+    "events_interarrival_burstiness",
+    "events_heavy_hitters_streamed",
+    "orders_cmh_returns",
+    "events_kruskal_wallis",
+    "events_user_cms",
+    "events_wasserstein_drift",
+    "lateral_topk_orders",
+    "embedding_cluster_separation",
+    "doc_source_diversity",
+    "events_dp_noisy_counts",
+    "events_value_hill_tail",
+    "events_runs_test_daily",
+    "events_time_to_convert",
+    "nation_weekly_kendall",
+    "events_holt_winters_daily",
+    "events_diff_in_diff",
+    "events_conversion_paths",
+    "groupby_all_revenue",
+    "events_ljung_box",
+    "events_markov_prediction_eval",
+    "lineitem_two_way_anova",
+    "events_late_arrival_audit",
+    "orders_calendar_dim_join",
+    "part_mode_size_by_brand",
+    "events_distinct_users_streamed",
+    "doc_dup_quality_report",
+    "doc_label_source_alignment",
+    "part_substitutes",
+    "events_growth_accounting",
+    "events_periodogram_daily",
+    "window_nth_ignore_nulls",
+    "events_quarantine_streamed",
+    "events_user_feature_matrix",
+    "part_abc_xyz",
+)
 
 # Headline inclusion rule (BASELINE.md "Bench headline selection
 # policy"): every registered query whose sf0.1 cost is dominated by
@@ -349,21 +224,20 @@ HEADLINE = [
 # So no registered query stays bench-blind forever, each round times a
 # small ROTATION_SAMPLE of unbenched registry slots once (single run,
 # after the same warmup; reported separately, no baseline gate).
-ROTATION_SAMPLE = [
-    # r10 sample: one per excluded family
-    ("agg_rollup", relational.QUERIES),
-    ("join_full", relational.QUERIES),
-    ("window_range_frame", advanced.QUERIES),
-    ("doc_topic_clusters", llmdata.QUERIES),
-    ("knn_ivf", llmdata.QUERIES),
-    ("events_value_quantiles_rollup", scale.QUERIES),
-    ("media_codec_features", llmdata.QUERIES),
-    ("scd2_customer_history", advanced.QUERIES),
-]
+ROTATION_SAMPLE = (
+    "agg_rollup",
+    "join_full",
+    "window_range_frame",
+    "doc_topic_clusters",
+    "knn_ivf",
+    "events_value_quantiles_rollup",
+    "media_codec_features",
+    "scd2_customer_history",
+)
 
 # fail at import, not 12 minutes into a timed run, if a name is wrong
-for _name, _reg in HEADLINE + ROTATION_SAMPLE:
-    if _name not in _reg:
+for _name in HEADLINE + ROTATION_SAMPLE:
+    if _name not in QUERIES:
         raise KeyError(f"bench list references unregistered query {_name!r}")
 
 
@@ -422,8 +296,6 @@ def scale_probe(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans.events import QUERIES
-
     ev = load_table(spark, sf_dir, "events")
     n_events = ev.count()
     per_key = ev.groupBy("user_id").count()
@@ -694,12 +566,8 @@ def main() -> None:
     # heavy runs per invocation; they stay ON by default so the
     # per-round driver record keeps the scaling curves (VERDICT r6
     # "keep the probe in the bench"), but local regression iteration
-    # can skip them (ADVICE r6) with --no-iterative-probe or
-    # SPARK_GRAFT_NO_ITER_PROBE=1.
-    run_iter_probe = (
-        "--no-iterative-probe" not in sys.argv[1:]
-        and not os.environ.get("SPARK_GRAFT_NO_ITER_PROBE")
-    )
+    # can skip them (ADVICE r6) with --no-iterative-probe.
+    run_iter_probe = "--no-iterative-probe" not in sys.argv[1:]
     env_start = env_info()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -707,18 +575,18 @@ def main() -> None:
     # JVM/codegen warm-up: run every headline plan shape once on the
     # smallest fixture (not timed) so the timed sf runs measure
     # data-proportional work, not Janino compilation.
-    for name, registry in HEADLINE:
-        registry[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
+    for name in HEADLINE:
+        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
             "overwrite"
         ).save()
 
     # best-of-2: report the steady-state run, not scheduler/GC noise
     timings: dict[str, float] = {}
-    for name, registry in HEADLINE:
+    for name in HEADLINE:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            registry[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
 
@@ -729,12 +597,12 @@ def main() -> None:
     # separately — not part of the headline total or the regression
     # gate (no standing baselines)
     rotation: dict[str, float] = {}
-    for name, registry in ROTATION_SAMPLE:
-        registry[name](spark, "/root/testdata/sf0.001").write.format(
+    for name in ROTATION_SAMPLE:
+        QUERIES[name](spark, "/root/testdata/sf0.001").write.format(
             "noop"
         ).mode("overwrite").save()
         t0 = time.perf_counter()
-        registry[name](spark, sf_dir).write.format("noop").mode(
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         rotation[name] = round(time.perf_counter() - t0, 3)

@@ -237,7 +237,7 @@ def pagerank(
     n = nodes.count()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
     # r11 (VERDICT r10 #4): the round is built as ONE ``spark.sql``
-    # statement over temp views instead of ~15 chained DataFrame calls.
+    # statement over the frames instead of ~15 chained DataFrame calls.
     # The computation is unchanged — same joins, same hints, same
     # expression tree, verified by before/after physical-plan diff
     # (plans/r11/event_type_pagerank_*) — but plan CONSTRUCTION cost
@@ -261,14 +261,8 @@ def pagerank(
     #   action), and ReuseExchange evaluates the contribution shuffle
     #   once (the CTE is referenced twice, exactly like the DF object
     #   was).
-    import uuid
-
     spark = edges.sparkSession
-    tag = uuid.uuid4().hex[:12]
-    norm_view = f"pr_norm_{tag}"
-    ranks_view = f"pr_ranks_{tag}"
-    norm.createOrReplaceTempView(norm_view)
-    rank_hint = f"/*+ BROADCAST({ranks_view}) */ " if broadcast_ranks else ""
+    rank_hint = "/*+ BROADCAST({ranks}) */ " if broadcast_ranks else ""
     step_hint = (
         "/*+ BROADCAST(c), BROADCAST(e) */"
         if broadcast_ranks
@@ -276,10 +270,10 @@ def pagerank(
     )
     round_sql = f"""
 WITH contribs AS (
-  SELECT {rank_hint}{norm_view}.dst AS dst,
-         SUM({norm_view}.p * r.rank) AS contrib
-  FROM {norm_view} JOIN {ranks_view} r ON {norm_view}.src = r.node
-  GROUP BY {norm_view}.dst
+  SELECT {rank_hint}{{norm}}.dst AS dst,
+         SUM({{norm}}.p * r.rank) AS contrib
+  FROM {{norm}} JOIN {{ranks}} r ON {{norm}}.src = r.node
+  GROUP BY {{norm}}.dst
 ),
 emitted AS (
   SELECT COALESCE(SUM(contrib), :zero) AS emitted FROM contribs
@@ -288,7 +282,7 @@ SELECT {step_hint} r.node,
        :teleport + :dn * (:one - e.emitted)
          + :d * COALESCE(c.contrib, :zero) AS rank,
        r.rank AS old_rank
-FROM {ranks_view} r
+FROM {{ranks}} r
 LEFT JOIN contribs c ON r.node = c.dst
 CROSS JOIN emitted e
 """
@@ -302,8 +296,7 @@ CROSS JOIN emitted e
         "d": damping,
     }
     for _ in range(max_iter):
-        ranks.createOrReplaceTempView(ranks_view)
-        step = spark.sql(round_sql, args=round_args)
+        step = spark.sql(round_sql, args=round_args, norm=norm, ranks=ranks)
         if tol > 0:
             # convergence probe folded into the checkpoint job: the
             # eager materialization is the round's ONE action and the
@@ -328,8 +321,6 @@ CROSS JOIN emitted e
             # measured 12.4 s vs 4.5 s per-round-lazy vs 5.3 s
             # per-round-eager on the 20-round event graph at sf0.1)
             ranks = step.drop("old_rank").localCheckpoint(eager=False)
-    spark.catalog.dropTempView(norm_view)
-    spark.catalog.dropTempView(ranks_view)
     return ranks
 
 

@@ -25,6 +25,13 @@ STOPWORDS: tuple[str, ...] = tuple(
     sorted({w for ws in LANG_MARKERS.values() for w in ws})
 )
 
+# DuckDB fragments the oracles use to mirror the marker lists
+_STOPLIST_SQL = "', '".join(STOPWORDS)
+
+
+def _lang_list_sql(lang: str) -> str:
+    return "', '".join(LANG_MARKERS[lang])
+
 
 def tokens(text: Column) -> Column:
     r"""Whitespace tokenization of trimmed text (empty text → [])."""
@@ -99,6 +106,10 @@ def normalize_text(text: Column) -> Column:
     r"""Canonical form for fingerprinting: lowercase, collapse runs of
     whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
+# DuckDB fragment mirroring normalize_text
+_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
 def fingerprint_md5(text: Column) -> Column:

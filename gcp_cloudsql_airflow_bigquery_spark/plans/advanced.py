@@ -9,13 +9,12 @@ for interpolated stats, unique tie-breaker orderings.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_tables
 from ..operators import curation as curation_ops
+from . import register
 
 _DEC = "decimal(18,6)"
 
@@ -345,39 +344,20 @@ GROUP BY supp_nation, cust_nation, ship_year
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "agg_stats": agg_stats,
-    "agg_percentiles": agg_percentiles,
-    "pivot_status": pivot_status,
-    "unpivot_part": unpivot_part,
-    "sql_exists_subquery": sql_exists_subquery,
-    "sql_in_subquery": sql_in_subquery,
-    "split_explode": split_explode,
-    "array_agg_sorted": array_agg_sorted,
-    "null_funcs": null_funcs,
-    "between_like_in": between_like_in,
-    "conditional_agg": conditional_agg,
-    "window_range_frame": window_range_frame,
-    "late_shipment_orders": late_shipment_orders,
-    "nation_trade_volume": nation_trade_volume,
-}
-
-ORACLE: dict[str, str] = {
-    "agg_stats": _AGG_STATS_SQL,
-    "agg_percentiles": _AGG_PCT_SQL,
-    "pivot_status": _PIVOT_SQL,
-    "unpivot_part": _UNPIVOT_SQL,
-    "sql_exists_subquery": _SQL_EXISTS_SQL,
-    "sql_in_subquery": _SQL_IN_SQL,
-    "split_explode": _SPLIT_SQL,
-    "array_agg_sorted": _ARRAY_AGG_SQL,
-    "null_funcs": _NULL_SQL,
-    "between_like_in": _BETWEEN_SQL,
-    "conditional_agg": _COND_AGG_SQL,
-    "window_range_frame": _RANGE_FRAME_SQL,
-    "late_shipment_orders": _LATE_SHIP_SQL,
-    "nation_trade_volume": _TRADE_VOLUME_SQL,
-}
+register(agg_stats, _AGG_STATS_SQL)
+register(agg_percentiles, _AGG_PCT_SQL)
+register(pivot_status, _PIVOT_SQL)
+register(unpivot_part, _UNPIVOT_SQL)
+register(sql_exists_subquery, _SQL_EXISTS_SQL)
+register(sql_in_subquery, _SQL_IN_SQL)
+register(split_explode, _SPLIT_SQL)
+register(array_agg_sorted, _ARRAY_AGG_SQL)
+register(null_funcs, _NULL_SQL)
+register(between_like_in, _BETWEEN_SQL)
+register(conditional_agg, _COND_AGG_SQL)
+register(window_range_frame, _RANGE_FRAME_SQL)
+register(late_shipment_orders, _LATE_SHIP_SQL)
+register(nation_trade_volume, _TRADE_VOLUME_SQL)
 
 
 def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,29 +580,13 @@ GROUP BY s_name
 """
 
 
-QUERIES.update(
-    {
-        "window_analytics": window_analytics,
-        "string_funcs2": string_funcs2,
-        "math_funcs2": math_funcs2,
-        "date_funcs2": date_funcs2,
-        "custdist": custdist,
-        "large_volume_orders": large_volume_orders,
-        "lone_late_supplier": lone_late_supplier,
-    }
-)
-
-ORACLE.update(
-    {
-        "window_analytics": _WINDOW_ANALYTICS_SQL,
-        "string_funcs2": _STRING2_SQL,
-        "math_funcs2": _MATH2_SQL,
-        "date_funcs2": _DATE2_SQL,
-        "custdist": _CUSTDIST_SQL,
-        "large_volume_orders": _LARGE_VOLUME_SQL,
-        "lone_late_supplier": _LONE_LATE_SQL,
-    }
-)
+register(window_analytics, _WINDOW_ANALYTICS_SQL)
+register(string_funcs2, _STRING2_SQL)
+register(math_funcs2, _MATH2_SQL)
+register(date_funcs2, _DATE2_SQL)
+register(custdist, _CUSTDIST_SQL)
+register(large_volume_orders, _LARGE_VOLUME_SQL)
+register(lone_late_supplier, _LONE_LATE_SQL)
 
 
 def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,21 +668,9 @@ def agg_approx_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update(
-    {
-        "array_funcs": array_funcs,
-        "sample_hash": sample_hash,
-        "agg_approx_sketch": agg_approx_sketch,
-    }
-)
-
-# agg_approx_sketch is rows-only (sketches are engine-specific estimates)
-ORACLE.update(
-    {
-        "array_funcs": _ARRAY_FUNCS_SQL,
-        "sample_hash": _SAMPLE_HASH_SQL,
-    }
-)
+register(array_funcs, _ARRAY_FUNCS_SQL)
+register(sample_hash, _SAMPLE_HASH_SQL)
+register(agg_approx_sketch)  # rows-only: sketches are engine-specific estimates
 
 
 def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,8 +694,7 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
-QUERIES["agg_grouping_id"] = agg_grouping_id
-ORACLE["agg_grouping_id"] = _GROUPING_ID_SQL
+register(agg_grouping_id, _GROUPING_ID_SQL)
 
 
 def supplier_best_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,20 +764,9 @@ SELECT p_partkey,
 FROM part WHERE p_partkey % 17 = 0
 """
 
-QUERIES.update(
-    {
-        "supplier_best_balance": supplier_best_balance,
-        "top_revenue_suppliers": top_revenue_suppliers,
-        "posexplode_words": posexplode_words,
-    }
-)
-ORACLE.update(
-    {
-        "supplier_best_balance": _BEST_BALANCE_SQL,
-        "top_revenue_suppliers": _TOP_REVENUE_SQL,
-        "posexplode_words": _POSEXPLODE_SQL,
-    }
-)
+register(supplier_best_balance, _BEST_BALANCE_SQL)
+register(top_revenue_suppliers, _TOP_REVENUE_SQL)
+register(posexplode_words, _POSEXPLODE_SQL)
 
 
 def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,8 +821,7 @@ UNION ALL
 SELECT c_custkey, c_name, c_acctbal, eff, NULL FROM changed
 """
 
-QUERIES["scd2_customer_history"] = scd2_customer_history
-ORACLE["scd2_customer_history"] = _SCD2_SQL
+register(scd2_customer_history, _SCD2_SQL)
 
 
 def regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,20 +896,9 @@ SELECT c_custkey, c_nationkey,
 FROM customer
 """
 
-QUERIES.update(
-    {
-        "regexp_funcs": regexp_funcs,
-        "explode_outer_words": explode_outer_words,
-        "forward_fill": forward_fill,
-    }
-)
-ORACLE.update(
-    {
-        "regexp_funcs": _REGEXP_SQL,
-        "explode_outer_words": _EXPLODE_OUTER_SQL,
-        "forward_fill": _FFILL_SQL,
-    }
-)
+register(regexp_funcs, _REGEXP_SQL)
+register(explode_outer_words, _EXPLODE_OUTER_SQL)
+register(forward_fill, _FFILL_SQL)
 
 
 def agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,10 +952,8 @@ JOIN nation ON c_nationkey = n_nationkey
 GROUP BY n_name, event_type
 """
 
-QUERIES.update({"agg_corr": agg_corr, "events_user_rollup": events_user_rollup})
-ORACLE.update(
-    {"agg_corr": _AGG_CORR_SQL, "events_user_rollup": _EVENTS_ROLLUP_SQL}
-)
+register(agg_corr, _AGG_CORR_SQL)
+register(events_user_rollup, _EVENTS_ROLLUP_SQL)
 
 
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1059,15 +985,8 @@ INTERSECT ALL
 SELECT l_orderkey, l_partkey FROM lineitem WHERE l_discount >= 0.02
 """
 
-QUERIES.update(
-    {"set_except_all": set_except_all, "set_intersect_all": set_intersect_all}
-)
-ORACLE.update(
-    {
-        "set_except_all": _SET_EXCEPT_ALL_SQL,
-        "set_intersect_all": _SET_INTERSECT_ALL_SQL,
-    }
-)
+register(set_except_all, _SET_EXCEPT_ALL_SQL)
+register(set_intersect_all, _SET_INTERSECT_ALL_SQL)
 
 
 def order_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1092,8 +1011,7 @@ FROM orders JOIN stats USING (o_custkey)
 WHERE md > 0 AND ROUND(ABS(o_totalprice - med) / md, 6) >= 2.0
 """
 
-QUERIES["order_price_outliers"] = order_price_outliers
-ORACLE["order_price_outliers"] = _MAD_OUTLIERS_SQL
+register(order_price_outliers, _MAD_OUTLIERS_SQL)
 
 
 def price_histogram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1121,8 +1039,7 @@ SELECT CAST(FLOOR(l_extendedprice / 10000) AS BIGINT) AS price_bin,
 FROM lineitem GROUP BY 1
 """
 
-QUERIES["price_histogram_bits"] = price_histogram_bits
-ORACLE["price_histogram_bits"] = _HISTOGRAM_BITS_SQL
+register(price_histogram_bits, _HISTOGRAM_BITS_SQL)
 
 
 def geomean_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1185,12 +1102,8 @@ SELECT doc_id,
 FROM parts
 """
 
-QUERIES.update(
-    {"geomean_prices": geomean_prices, "sentences_udtf": sentences_udtf}
-)
-ORACLE.update(
-    {"geomean_prices": _GEOMEAN_SQL, "sentences_udtf": _SENTENCES_SQL}
-)
+register(geomean_prices, _GEOMEAN_SQL)
+register(sentences_udtf, _SENTENCES_SQL)
 
 
 def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1242,8 +1155,7 @@ WITH old AS (
 SELECT * FROM j WHERE change_type IS NOT NULL
 """
 
-QUERIES["snapshot_cdc_diff"] = snapshot_cdc_diff
-ORACLE["snapshot_cdc_diff"] = _SNAPSHOT_CDC_SQL
+register(snapshot_cdc_diff, _SNAPSHOT_CDC_SQL)
 
 
 def customer_name_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1267,8 +1179,7 @@ FROM customer a JOIN customer b
  AND levenshtein(a.c_name, b.c_name) <= 1
 """
 
-QUERIES["customer_name_neardup"] = customer_name_neardup
-ORACLE["customer_name_neardup"] = _FUZZY_NAME_SQL
+register(customer_name_neardup, _FUZZY_NAME_SQL)
 
 
 def part_cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,8 +1216,7 @@ JOIN e e2 ON e2.u = e1.u AND e1.v < e2.v
 JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
 """
 
-QUERIES["part_cooccurrence_triangles"] = part_cooccurrence_triangles
-ORACLE["part_cooccurrence_triangles"] = _TRIANGLES_SQL
+register(part_cooccurrence_triangles, _TRIANGLES_SQL)
 
 
 def customer_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1335,8 +1245,7 @@ FROM ranked a JOIN ranked b ON b.r > a.r AND b.r <= a.r + 3
 WHERE levenshtein(a.n, b.n) <= 2
 """
 
-QUERIES["customer_sorted_neighborhood"] = customer_sorted_neighborhood
-ORACLE["customer_sorted_neighborhood"] = _SORTED_NEIGHBORHOOD_SQL
+register(customer_sorted_neighborhood, _SORTED_NEIGHBORHOOD_SQL)
 
 
 def customer_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1390,8 +1299,7 @@ reach(a, b) AS (
 SELECT a AS c_custkey, LEAST(a, MIN(b)) AS entity_id FROM reach GROUP BY a
 """
 
-QUERIES["customer_entity_clusters"] = customer_entity_clusters
-ORACLE["customer_entity_clusters"] = _ENTITY_CLUSTERS_SQL
+register(customer_entity_clusters, _ENTITY_CLUSTERS_SQL)
 
 
 def url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1434,8 +1342,7 @@ SELECT c_custkey,
 FROM u
 """
 
-QUERIES["url_funcs"] = url_funcs
-ORACLE["url_funcs"] = _URL_SQL
+register(url_funcs, _URL_SQL)
 
 
 def part_affinity_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1499,8 +1406,7 @@ ORDER BY pmi DESC, pa, pb
 LIMIT 50
 """
 
-QUERIES["part_affinity_pmi"] = part_affinity_pmi
-ORACLE["part_affinity_pmi"] = _PMI_SQL
+register(part_affinity_pmi, _PMI_SQL)
 
 
 def orders_price_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1562,8 +1468,7 @@ FROM dev d JOIN mad m ON d.o_orderstatus = m.o_orderstatus
 WHERE d.adev > 1.9 * m.mad
 """
 
-QUERIES["orders_price_mad_outliers"] = orders_price_mad_outliers
-ORACLE["orders_price_mad_outliers"] = _MAD_SQL
+register(orders_price_mad_outliers, _MAD_SQL)
 
 
 def weekly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1603,8 +1508,7 @@ SELECT wk,
 FROM wk
 """
 
-QUERIES["weekly_revenue_growth"] = weekly_revenue_growth
-ORACLE["weekly_revenue_growth"] = _WOW_SQL
+register(weekly_revenue_growth, _WOW_SQL)
 
 
 def supplier_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1645,8 +1549,7 @@ JOIN nation ON s_nationkey = n_nationkey
 GROUP BY 1
 """
 
-QUERIES["supplier_fulfillment_latency"] = supplier_fulfillment_latency
-ORACLE["supplier_fulfillment_latency"] = _FULFILL_SQL
+register(supplier_fulfillment_latency, _FULFILL_SQL)
 
 
 def map_struct_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1732,8 +1635,7 @@ SELECT user_id,
 FROM kv GROUP BY user_id
 """
 
-QUERIES["map_struct_funcs"] = map_struct_funcs
-ORACLE["map_struct_funcs"] = _MAP_STRUCT_SQL
+register(map_struct_funcs, _MAP_STRUCT_SQL)
 
 
 def part_cooccurrence_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1806,8 +1708,7 @@ SELECT u AS part, COUNT(*) AS core_degree
 FROM e6 GROUP BY u ORDER BY part
 """
 
-QUERIES["part_cooccurrence_kcore"] = part_cooccurrence_kcore
-ORACLE["part_cooccurrence_kcore"] = _KCORE_SQL
+register(part_cooccurrence_kcore, _KCORE_SQL)
 
 
 def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1885,8 +1786,7 @@ JOIN item ib ON ib.p = b
 ORDER BY lift DESC, a, b LIMIT 50
 """
 
-QUERIES["part_association_rules"] = part_association_rules
-ORACLE["part_association_rules"] = _ASSOC_RULES_SQL
+register(part_association_rules, _ASSOC_RULES_SQL)
 
 
 def nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1956,8 +1856,7 @@ SELECT n_name,
 FROM trend GROUP BY 1
 """
 
-QUERIES["nation_revenue_trend"] = nation_revenue_trend
-ORACLE["nation_revenue_trend"] = _REVENUE_TREND_SQL
+register(nation_revenue_trend, _REVENUE_TREND_SQL)
 
 
 def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2033,8 +1932,7 @@ SELECT wk, net_delta,
 FROM weekly
 """
 
-QUERIES["orders_open_backlog"] = orders_open_backlog
-ORACLE["orders_open_backlog"] = _OPEN_BACKLOG_SQL
+register(orders_open_backlog, _OPEN_BACKLOG_SQL)
 
 
 def customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2159,8 +2057,7 @@ FROM k
 WINDOW wc AS (ORDER BY t_week ROWS UNBOUNDED PRECEDING)
 """
 
-QUERIES["customer_survival_km"] = customer_survival_km
-ORACLE["customer_survival_km"] = _SURVIVAL_KM_SQL
+register(customer_survival_km, _SURVIVAL_KM_SQL)
 
 
 def customer_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2280,8 +2177,7 @@ JOIN customer cb ON cb.c_custkey = p.key_b,
 u_nat, u_seg
 """
 
-QUERIES["customer_linkage_scores"] = customer_linkage_scores
-ORACLE["customer_linkage_scores"] = _LINKAGE_SCORES_SQL
+register(customer_linkage_scores, _LINKAGE_SCORES_SQL)
 
 
 def orders_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2369,8 +2265,7 @@ SELECT o_orderpriority, n_orders, chi2, chi2 <= 20.09 AS benford_ok
 FROM chi
 """
 
-QUERIES["orders_benford_screen"] = orders_benford_screen
-ORACLE["orders_benford_screen"] = _BENFORD_SQL
+register(orders_benford_screen, _BENFORD_SQL)
 
 
 def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2429,8 +2324,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_customers,
 FROM r
 """
 
-QUERIES["customer_revenue_gini"] = customer_revenue_gini
-ORACLE["customer_revenue_gini"] = _GINI_SQL
+register(customer_revenue_gini, _GINI_SQL)
 
 
 def nation_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2540,8 +2434,7 @@ FROM pts p JOIN med m USING (n_name)
 GROUP BY 1
 """
 
-QUERIES["nation_revenue_theilsen"] = nation_revenue_theilsen
-ORACLE["nation_revenue_theilsen"] = _THEILSEN_SQL
+register(nation_revenue_theilsen, _THEILSEN_SQL)
 
 
 def part_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2639,8 +2532,7 @@ ORDER BY s.aa_score DESC, s.a, s.b
 LIMIT 30
 """
 
-QUERIES["part_adamic_adar"] = part_adamic_adar
-ORACLE["part_adamic_adar"] = _ADAMIC_ADAR_SQL
+register(part_adamic_adar, _ADAMIC_ADAR_SQL)
 
 
 def customer_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2700,8 +2592,7 @@ FROM daily
 WINDOW w AS (PARTITION BY custkey ORDER BY valid_from)
 """
 
-QUERIES["customer_scd2_history"] = customer_scd2_history
-ORACLE["customer_scd2_history"] = _SCD2_SQL
+register(customer_scd2_history, _SCD2_SQL)
 
 
 def nation_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2807,8 +2698,7 @@ SELECT n_name, CAST(n_weeks AS BIGINT) AS n_weeks, s_stat, z,
 FROM j
 """
 
-QUERIES["nation_mann_kendall"] = nation_mann_kendall
-ORACLE["nation_mann_kendall"] = _MANN_KENDALL_SQL
+register(nation_mann_kendall, _MANN_KENDALL_SQL)
 
 
 def nation_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2890,8 +2780,7 @@ WHERE c.cum_qty * 2 >= t.total_qty
 GROUP BY 1, 2
 """
 
-QUERIES["nation_weighted_median_price"] = nation_weighted_median_price
-ORACLE["nation_weighted_median_price"] = _WEIGHTED_MEDIAN_SQL
+register(nation_weighted_median_price, _WEIGHTED_MEDIAN_SQL)
 
 
 def part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2978,8 +2867,7 @@ SELECT mo, COUNT(*)::BIGINT AS n_parts,
 FROM j GROUP BY 1
 """
 
-QUERIES["part_price_index"] = part_price_index
-ORACLE["part_price_index"] = _PRICE_INDEX_SQL
+register(part_price_index, _PRICE_INDEX_SQL)
 
 
 def brand_price_qty_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3060,8 +2948,7 @@ SELECT p_brand,
 FROM m
 """
 
-QUERIES["brand_price_qty_corr"] = brand_price_qty_corr
-ORACLE["brand_price_qty_corr"] = _BRAND_CORR_SQL
+register(brand_price_qty_corr, _BRAND_CORR_SQL)
 
 
 def brand_monthly_rank_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3143,8 +3030,7 @@ SELECT mo, p_brand, revenue,
 FROM ranked
 """
 
-QUERIES["brand_monthly_rank_moves"] = brand_monthly_rank_moves
-ORACLE["brand_monthly_rank_moves"] = _RANK_MOVES_SQL
+register(brand_monthly_rank_moves, _RANK_MOVES_SQL)
 
 
 def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3237,8 +3123,7 @@ SELECT n_name, n_suppliers, hhi,
 FROM agg ORDER BY n_name
 """
 
-QUERIES["nation_supplier_hhi"] = nation_supplier_hhi
-ORACLE["nation_supplier_hhi"] = _HHI_SQL
+register(nation_supplier_hhi, _HHI_SQL)
 
 
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3339,8 +3224,7 @@ SELECT custkey, r_score, f_score, m_score,
 FROM s
 """
 
-QUERIES["customer_rfm_segments"] = customer_rfm_segments
-ORACLE["customer_rfm_segments"] = _RFM_SQL
+register(customer_rfm_segments, _RFM_SQL)
 
 
 def part_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3436,8 +3320,7 @@ SELECT CAST(n / 2 AS BIGINT) AS n_edges,
 FROM s
 """
 
-QUERIES["part_graph_assortativity"] = part_graph_assortativity
-ORACLE["part_graph_assortativity"] = _ASSORTATIVITY_SQL
+register(part_graph_assortativity, _ASSORTATIVITY_SQL)
 
 
 def orders_trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3530,8 +3413,7 @@ SELECT priority, n,
 FROM agg
 """
 
-QUERIES["orders_trimmed_mean_price"] = orders_trimmed_mean_price
-ORACLE["orders_trimmed_mean_price"] = _TRIMMED_MEAN_SQL
+register(orders_trimmed_mean_price, _TRIMMED_MEAN_SQL)
 
 
 def brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3637,8 +3519,7 @@ SELECT p_brand AS brand, CAST(n AS BIGINT) AS n_months,
 FROM s ORDER BY 1
 """
 
-QUERIES["brand_price_elasticity"] = brand_price_elasticity
-ORACLE["brand_price_elasticity"] = _ELASTICITY_SQL
+register(brand_price_elasticity, _ELASTICITY_SQL)
 
 
 def part_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3771,8 +3652,7 @@ SELECT deg.node AS partkey,
 FROM deg LEFT JOIN credits c ON deg.node = c.node
 """
 
-QUERIES["part_clustering_coefficient"] = part_clustering_coefficient
-ORACLE["part_clustering_coefficient"] = _LCC_SQL
+register(part_clustering_coefficient, _LCC_SQL)
 
 
 def part_item_cf_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3881,8 +3761,7 @@ SELECT ia AS item, CAST(na AS BIGINT) AS item_users,
 FROM ranked WHERE rank <= 5
 """
 
-QUERIES["part_item_cf_recs"] = part_item_cf_recs
-ORACLE["part_item_cf_recs"] = _ITEM_CF_SQL
+register(part_item_cf_recs, _ITEM_CF_SQL)
 
 
 _ALS_ROUNDS = 3
@@ -4083,8 +3962,7 @@ ORDER BY 1
     return "".join(parts)
 
 
-QUERIES["brand_als_factors"] = brand_als_factors
-ORACLE["brand_als_factors"] = _als_sql()
+register(brand_als_factors, _als_sql())
 
 
 def customer_hazard_na(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,8 +4084,7 @@ SELECT t_week,
 FROM h ORDER BY 1
 """
 
-QUERIES["customer_hazard_na"] = customer_hazard_na
-ORACLE["customer_hazard_na"] = _HAZARD_NA_SQL
+register(customer_hazard_na, _HAZARD_NA_SQL)
 
 
 def part_skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4261,8 +4138,7 @@ WHERE NOT EXISTS (
 )
 """
 
-QUERIES["part_skyline_price_size"] = part_skyline_price_size
-ORACLE["part_skyline_price_size"] = _SKYLINE_SQL
+register(part_skyline_price_size, _SKYLINE_SQL)
 
 
 def array_zip_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4315,8 +4191,7 @@ FROM lineitem
 GROUP BY 1
 """
 
-QUERIES["array_zip_funcs"] = array_zip_funcs
-ORACLE["array_zip_funcs"] = _ARRAY_ZIP_SQL
+register(array_zip_funcs, _ARRAY_ZIP_SQL)
 
 
 def customer_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4458,8 +4333,7 @@ SELECT events_g1, events_g0,
 FROM agg
 """
 
-QUERIES["customer_logrank_test"] = customer_logrank_test
-ORACLE["customer_logrank_test"] = _LOGRANK_SQL
+register(customer_logrank_test, _LOGRANK_SQL)
 
 
 def nation_weekly_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4573,8 +4447,7 @@ SELECT n_name, n_weeks,
 FROM s ORDER BY 1
 """
 
-QUERIES["nation_weekly_spearman"] = nation_weekly_spearman
-ORACLE["nation_weekly_spearman"] = _SPEARMAN_SQL
+register(nation_weekly_spearman, _SPEARMAN_SQL)
 
 
 def orders_cmh_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4678,8 +4551,7 @@ SELECT n_strata, exposed_late,
 FROM agg
 """
 
-QUERIES["orders_cmh_returns"] = orders_cmh_returns
-ORACLE["orders_cmh_returns"] = _CMH_SQL
+register(orders_cmh_returns, _CMH_SQL)
 
 
 def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4718,8 +4590,7 @@ LATERAL (SELECT o_orderkey, o_totalprice FROM orders
 WHERE c.c_acctbal > 9000
 """
 
-QUERIES["lateral_topk_orders"] = lateral_topk_orders
-ORACLE["lateral_topk_orders"] = _LATERAL_TOPK_SQL
+register(lateral_topk_orders, _LATERAL_TOPK_SQL)
 
 
 def nation_weekly_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4823,8 +4694,7 @@ SELECT n_name, n0, concordant, discordant,
 FROM agg ORDER BY 1
 """
 
-QUERIES["nation_weekly_kendall"] = nation_weekly_kendall
-ORACLE["nation_weekly_kendall"] = _KENDALL_SQL
+register(nation_weekly_kendall, _KENDALL_SQL)
 
 
 def groupby_all_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4859,8 +4729,7 @@ GROUP BY ALL
 ORDER BY yr, o_orderpriority
 """
 
-QUERIES["groupby_all_revenue"] = groupby_all_revenue
-ORACLE["groupby_all_revenue"] = _GROUPBY_ALL_SQL
+register(groupby_all_revenue, _GROUPBY_ALL_SQL)
 
 
 def lineitem_two_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5012,8 +4881,7 @@ SELECT n_tot, f_returnflag, f_linestatus, f_interaction,
 FROM f
 """
 
-QUERIES["lineitem_two_way_anova"] = lineitem_two_way_anova
-ORACLE["lineitem_two_way_anova"] = _TWO_WAY_ANOVA_SQL
+register(lineitem_two_way_anova, _TWO_WAY_ANOVA_SQL)
 
 
 def orders_calendar_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5088,8 +4956,7 @@ FROM dim LEFT JOIN daily ON daily.day = dim.day
 ORDER BY dim.day
 """
 
-QUERIES["orders_calendar_dim_join"] = orders_calendar_dim_join
-ORACLE["orders_calendar_dim_join"] = _CALENDAR_DIM_SQL
+register(orders_calendar_dim_join, _CALENDAR_DIM_SQL)
 
 
 def part_mode_size_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5141,8 +5008,7 @@ SELECT p_brand, CAST(p_size AS INT) AS mode_size,
 FROM r WHERE rn = 1 ORDER BY p_brand
 """
 
-QUERIES["part_mode_size_by_brand"] = part_mode_size_by_brand
-ORACLE["part_mode_size_by_brand"] = _MODE_SIZE_SQL
+register(part_mode_size_by_brand, _MODE_SIZE_SQL)
 
 
 def part_substitutes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5231,8 +5097,7 @@ SELECT p_partkey, p_brand, l_partkey AS substitute_partkey,
 FROM best WHERE pick = 1 ORDER BY p_partkey
 """
 
-QUERIES["part_substitutes"] = part_substitutes
-ORACLE["part_substitutes"] = _SUBSTITUTES_SQL
+register(part_substitutes, _SUBSTITUTES_SQL)
 
 
 def window_nth_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5290,8 +5155,7 @@ WINDOW
 ORDER BY o_custkey, o_orderkey
 """
 
-QUERIES["window_nth_ignore_nulls"] = window_nth_ignore_nulls
-ORACLE["window_nth_ignore_nulls"] = _NTH_IGNORE_NULLS_SQL
+register(window_nth_ignore_nulls, _NTH_IGNORE_NULLS_SQL)
 
 
 def part_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5395,5 +5259,4 @@ SELECT abc, xyz, CAST(COUNT(*) AS BIGINT) AS n_parts,
 FROM c GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-QUERIES["part_abc_xyz"] = part_abc_xyz
-ORACLE["part_abc_xyz"] = _ABC_XYZ_SQL
+register(part_abc_xyz, _ABC_XYZ_SQL)

@@ -5,13 +5,12 @@ chunk windows replicate with ``generate_series``)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import curation, mixing
+from . import register
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,25 +191,13 @@ FROM h ORDER BY shard, position
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "doc_chunks": doc_chunks,
-    "doc_balanced_sample": doc_balanced_sample,
-    "doc_stratified_sample": doc_stratified_sample,
-    "doc_split_counts": doc_split_counts,
-    "doc_mix_rates": doc_mix_rates,
-    "doc_mix_resampled": doc_mix_resampled,
-    "doc_shard_order": doc_shard_order,
-}
-
-ORACLE: dict[str, str] = {
-    "doc_chunks": _CHUNKS_SQL,
-    "doc_balanced_sample": _BALANCED_SQL,
-    "doc_stratified_sample": _STRATIFIED_SQL,
-    "doc_split_counts": _SPLITS_SQL,
-    "doc_mix_rates": _MIX_RATES_SQL,
-    "doc_mix_resampled": _MIX_RESAMPLED_SQL,
-    "doc_shard_order": _SHARD_SQL,
-}
+register(doc_chunks, _CHUNKS_SQL)
+register(doc_balanced_sample, _BALANCED_SQL)
+register(doc_stratified_sample, _STRATIFIED_SQL)
+register(doc_split_counts, _SPLITS_SQL)
+register(doc_mix_rates, _MIX_RATES_SQL)
+register(doc_mix_resampled, _MIX_RESAMPLED_SQL)
+register(doc_shard_order, _SHARD_SQL)
 
 
 def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,8 +220,7 @@ ORDER BY priority DESC, doc_id
 LIMIT 100
 """
 
-QUERIES["doc_weighted_sample"] = doc_weighted_sample
-ORACLE["doc_weighted_sample"] = _WEIGHTED_SAMPLE_SQL
+register(doc_weighted_sample, _WEIGHTED_SAMPLE_SQL)
 
 
 def doc_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,8 +308,7 @@ ORDER BY priority DESC, doc_id
 LIMIT 100
 """
 
-QUERIES["doc_dsir_resample"] = doc_dsir_resample
-ORACLE["doc_dsir_resample"] = _DSIR_SQL
+register(doc_dsir_resample, _DSIR_SQL)
 
 
 def doc_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -375,8 +360,7 @@ SELECT bucket, COUNT(*) AS n_docs,
 FROM b GROUP BY 1
 """
 
-QUERIES["doc_curriculum_buckets"] = doc_curriculum_buckets
-ORACLE["doc_curriculum_buckets"] = _CURRICULUM_SQL
+register(doc_curriculum_buckets, _CURRICULUM_SQL)
 
 
 def doc_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,8 +387,7 @@ SELECT CAST(('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::UBIGINT % 5 AS INT) AS
 FROM documents GROUP BY 1
 """
 
-QUERIES["doc_kfold_assignment"] = doc_kfold_assignment
-ORACLE["doc_kfold_assignment"] = _KFOLD_SQL
+register(doc_kfold_assignment, _KFOLD_SQL)
 
 
 def doc_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,8 +449,7 @@ SELECT doc_id, source, quality, n_tokens, cum_cost FROM (
 WHERE cum_cost <= 20000
 """
 
-QUERIES["doc_token_budget_selection"] = doc_token_budget_selection
-ORACLE["doc_token_budget_selection"] = _BUDGET_SELECT_SQL
+register(doc_token_budget_selection, _BUDGET_SELECT_SQL)
 
 
 _CONTEXT_WINDOW = 256
@@ -534,8 +516,7 @@ FROM base
 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["doc_context_fit_report"] = doc_context_fit_report
-ORACLE["doc_context_fit_report"] = _CONTEXT_FIT_SQL
+register(doc_context_fit_report, _CONTEXT_FIT_SQL)
 
 
 def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,5 +571,4 @@ GROUP BY 1
 HAVING COUNT(DISTINCT doc_id) >= 2
 """
 
-QUERIES["doc_chunk_dedup"] = doc_chunk_dedup
-ORACLE["doc_chunk_dedup"] = _CHUNK_DEDUP_SQL
+register(doc_chunk_dedup, _CHUNK_DEDUP_SQL)

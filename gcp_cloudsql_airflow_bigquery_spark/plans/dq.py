@@ -12,13 +12,12 @@ for true dims; the fact never re-scans per check).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import validate as V
+from . import register
 
 
 def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,21 +371,11 @@ FROM per_k CROSS JOIN totals
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dq_orders_report": dq_orders_report,
-    "dq_lineitem_report": dq_lineitem_report,
-    "dq_documents_report": dq_documents_report,
-    "dq_events_report": dq_events_report,
-    "customer_k_anonymity": customer_k_anonymity,
-}
-
-ORACLE: dict[str, str] = {
-    "dq_orders_report": _DQ_ORDERS_SQL,
-    "dq_lineitem_report": _DQ_LINEITEM_SQL,
-    "dq_documents_report": _DQ_DOCUMENTS_SQL,
-    "dq_events_report": _DQ_EVENTS_SQL,
-    "customer_k_anonymity": _K_ANONYMITY_SQL,
-}
+register(dq_orders_report, _DQ_ORDERS_SQL)
+register(dq_lineitem_report, _DQ_LINEITEM_SQL)
+register(dq_documents_report, _DQ_DOCUMENTS_SQL)
+register(dq_events_report, _DQ_EVENTS_SQL)
+register(customer_k_anonymity, _K_ANONYMITY_SQL)
 
 
 def customer_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -459,8 +448,7 @@ ORDER BY t_emd DESC, c_nationkey, c_mktsegment
 LIMIT 20
 """
 
-QUERIES["customer_t_closeness"] = customer_t_closeness
-ORACLE["customer_t_closeness"] = _T_CLOSENESS_SQL
+register(customer_t_closeness, _T_CLOSENESS_SQL)
 
 
 def customer_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,5 +496,4 @@ ORDER BY distinct_l ASC, entropy_l ASC, c_nationkey ASC, bal_band ASC
 LIMIT 25
 """
 
-QUERIES["customer_l_diversity"] = customer_l_diversity
-ORACLE["customer_l_diversity"] = _L_DIVERSITY_SQL
+register(customer_l_diversity, _L_DIVERSITY_SQL)

@@ -13,7 +13,6 @@ millisecond-truncated session bounds so both engines agree.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import frequency, graph
 from ..streaming import streams, windows
+from . import register
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -593,37 +593,19 @@ FROM scored
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "events_tumbling": events_tumbling,
-    "events_anomaly_zscore": events_anomaly_zscore,
-    "events_funnel_windowed": events_funnel_windowed,
-    "events_sliding": events_sliding,
-    "events_multires_rollup": events_multires_rollup,
-    "events_ohlc_hourly": events_ohlc_hourly,
-    "events_session": events_session,
-    "events_funnel": events_funnel,
-    "events_cohort_retention": events_cohort_retention,
-    "events_transition_matrix": events_transition_matrix,
-    "events_variant_props": events_variant_props,
-    "event_type_pagerank": event_type_pagerank,
-    "event_heavy_hitters": event_heavy_hitters,
-}
-
-ORACLE: dict[str, str] = {
-    "event_heavy_hitters": _HEAVY_HITTERS_SQL,
-    "events_anomaly_zscore": _ANOMALY_SQL,
-    "events_funnel_windowed": _FUNNEL_WINDOWED_SQL,
-    "events_tumbling": _TUMBLING_SQL,
-    "events_sliding": _SLIDING_SQL,
-    "events_multires_rollup": _MULTIRES_SQL,
-    "events_ohlc_hourly": _OHLC_SQL,
-    "events_session": _SESSION_SQL,
-    "events_funnel": _FUNNEL_SQL,
-    "events_cohort_retention": _COHORT_SQL,
-    "events_transition_matrix": _TRANSITION_SQL,
-    "events_variant_props": _VARIANT_SQL,
-    "event_type_pagerank": _pagerank_unrolled_sql(),
-}
+register(events_tumbling, _TUMBLING_SQL)
+register(events_anomaly_zscore, _ANOMALY_SQL)
+register(events_funnel_windowed, _FUNNEL_WINDOWED_SQL)
+register(events_sliding, _SLIDING_SQL)
+register(events_multires_rollup, _MULTIRES_SQL)
+register(events_ohlc_hourly, _OHLC_SQL)
+register(events_session, _SESSION_SQL)
+register(events_funnel, _FUNNEL_SQL)
+register(events_cohort_retention, _COHORT_SQL)
+register(events_transition_matrix, _TRANSITION_SQL)
+register(events_variant_props, _VARIANT_SQL)
+register(event_type_pagerank, _pagerank_unrolled_sql())
+register(event_heavy_hitters, _HEAVY_HITTERS_SQL)
 
 
 def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -653,8 +635,7 @@ SELECT event_type,
 FROM events GROUP BY 1, 2
 """
 
-QUERIES["events_value_histogram"] = events_value_histogram
-ORACLE["events_value_histogram"] = _VALUE_HIST_SQL
+register(events_value_histogram, _VALUE_HIST_SQL)
 
 
 def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,8 +711,7 @@ SELECT b.cohort_wk, b.week_offset,
 FROM buys b JOIN sizes s ON b.cohort_wk = s.cohort_wk
 """
 
-QUERIES["events_cohort_ltv"] = events_cohort_ltv
-ORACLE["events_cohort_ltv"] = _COHORT_LTV_SQL
+register(events_cohort_ltv, _COHORT_LTV_SQL)
 
 
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -803,8 +783,7 @@ SELECT dau.d, dau.dau, wau.wau, mau.mau,
 FROM dau JOIN wau ON dau.d = wau.d JOIN mau ON dau.d = mau.d
 """
 
-QUERIES["events_dau_mau_stickiness"] = events_dau_mau_stickiness
-ORACLE["events_dau_mau_stickiness"] = _DAU_MAU_SQL
+register(events_dau_mau_stickiness, _DAU_MAU_SQL)
 
 
 def events_error_rate_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -876,8 +855,7 @@ SELECT h,
 FROM rolled CROSS JOIN base
 """
 
-QUERIES["events_error_rate_sli"] = events_error_rate_sli
-ORACLE["events_error_rate_sli"] = _ERROR_SLI_SQL
+register(events_error_rate_sli, _ERROR_SLI_SQL)
 
 
 def event_state_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,8 +951,7 @@ sym AS (
 SELECT node AS state, label AS community FROM l5 ORDER BY state
 """
 
-QUERIES["event_state_communities"] = event_state_communities
-ORACLE["event_state_communities"] = _STATE_COMMUNITIES_SQL
+register(event_state_communities, _STATE_COMMUNITIES_SQL)
 
 
 def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,8 +1039,7 @@ SELECT event_type,
 FROM lagged GROUP BY 1
 """
 
-QUERIES["events_hourly_autocorr"] = events_hourly_autocorr
-ORACLE["events_hourly_autocorr"] = _HOURLY_AUTOCORR_SQL
+register(events_hourly_autocorr, _HOURLY_AUTOCORR_SQL)
 
 
 def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1150,8 +1126,7 @@ SELECT event_type, h, n, baseline_mean, zscore FROM (
 ) WHERE sigma > 0 AND ABS(zscore) > 3
 """
 
-QUERIES["events_seasonal_anomaly"] = events_seasonal_anomaly
-ORACLE["events_seasonal_anomaly"] = _SEASONAL_ANOMALY_SQL
+register(events_seasonal_anomaly, _SEASONAL_ANOMALY_SQL)
 
 
 def events_user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1266,8 +1241,7 @@ SELECT user_id, recency_days, frequency, monetary,
 FROM tiers
 """
 
-QUERIES["events_user_rfm_segments"] = events_user_rfm_segments
-ORACLE["events_user_rfm_segments"] = _RFM_SQL
+register(events_user_rfm_segments, _RFM_SQL)
 
 
 def events_ab_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,8 +1338,7 @@ SELECT n_a, n_b, conv_a, conv_b,
 FROM agg
 """
 
-QUERIES["events_ab_significance"] = events_ab_significance
-ORACLE["events_ab_significance"] = _AB_SIGNIFICANCE_SQL
+register(events_ab_significance, _AB_SIGNIFICANCE_SQL)
 
 
 def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1466,8 +1439,7 @@ SELECT event_type, day, ROUND(x, 6) AS day_value, ROUND(z, 4) AS zscore,
 FROM c
 """
 
-QUERIES["events_changepoint_cusum"] = events_changepoint_cusum
-ORACLE["events_changepoint_cusum"] = _CHANGEPOINT_CUSUM_SQL
+register(events_changepoint_cusum, _CHANGEPOINT_CUSUM_SQL)
 
 
 def events_frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1521,8 +1493,7 @@ ORDER BY support DESC, t1, t2, t3
 LIMIT 20
 """
 
-QUERIES["events_frequent_sequences"] = events_frequent_sequences
-ORACLE["events_frequent_sequences"] = _FREQUENT_SEQUENCES_SQL
+register(events_frequent_sequences, _FREQUENT_SEQUENCES_SQL)
 
 
 def events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1613,8 +1584,7 @@ FROM f WHERE fc IS NOT NULL
 GROUP BY event_type
 """
 
-QUERIES["events_forecast_eval"] = events_forecast_eval
-ORACLE["events_forecast_eval"] = _FORECAST_EVAL_SQL
+register(events_forecast_eval, _FORECAST_EVAL_SQL)
 
 
 def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1693,8 +1663,7 @@ SELECT user_id, n_events,
 FROM per_user WHERE n_events >= 20
 """
 
-QUERIES["events_bot_regularity"] = events_bot_regularity
-ORACLE["events_bot_regularity"] = _BOT_REGULARITY_SQL
+register(events_bot_regularity, _BOT_REGULARITY_SQL)
 
 
 def events_prequential_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1783,8 +1752,7 @@ SELECT event_type, day, ROUND(x, 6) AS day_value, prior_n,
 FROM prior
 """
 
-QUERIES["events_prequential_zscore"] = events_prequential_zscore
-ORACLE["events_prequential_zscore"] = _PREQUENTIAL_Z_SQL
+register(events_prequential_zscore, _PREQUENTIAL_Z_SQL)
 
 
 def events_duplicate_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1859,8 +1827,7 @@ FROM l
 WHERE prev_us IS NOT NULL AND us - prev_us <= 48 * 3600000000
 """
 
-QUERIES["events_duplicate_purchases"] = events_duplicate_purchases
-ORACLE["events_duplicate_purchases"] = _DUPLICATE_PURCHASES_SQL
+register(events_duplicate_purchases, _DUPLICATE_PURCHASES_SQL)
 
 
 # the declared event protocol for conformance checking: a session is
@@ -1941,8 +1908,7 @@ FROM pairs WHERE prev IS NOT NULL
 GROUP BY user_id
 """
 
-QUERIES["events_transition_conformance"] = events_transition_conformance
-ORACLE["events_transition_conformance"] = _TRANSITION_CONFORMANCE_SQL
+register(events_transition_conformance, _TRANSITION_CONFORMANCE_SQL)
 
 
 # Epoch-aligned 7-day buckets: Spark's window('7 days') aligns tumbling
@@ -1965,8 +1931,7 @@ GROUP BY 1, 2
 # null ts cannot cause a phantom extra NULL wk_start group on the
 # oracle side (ADVICE r8).
 
-QUERIES["events_weekly_counts_streamed"] = streams.events_weekly_counts_streamed
-ORACLE["events_weekly_counts_streamed"] = _WEEKLY_STREAMED_SQL
+register(streams.events_weekly_counts_streamed, _WEEKLY_STREAMED_SQL)
 
 
 # Registered end-to-end stream #2 (VERDICT r8 #5): stateful
@@ -1988,8 +1953,7 @@ FROM d
 GROUP BY 1
 """
 
-QUERIES["events_dedup_streamed"] = streams.events_dedup_streamed
-ORACLE["events_dedup_streamed"] = _DEDUP_STREAMED_SQL
+register(streams.events_dedup_streamed, _DEDUP_STREAMED_SQL)
 
 
 # Registered end-to-end stream #3 (r9): the stream-stream join shape.
@@ -2010,8 +1974,7 @@ JOIN events p
 WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 """
 
-QUERIES["events_attribution_streamed"] = streams.events_attribution_streamed
-ORACLE["events_attribution_streamed"] = _ATTRIBUTION_STREAMED_SQL
+register(streams.events_attribution_streamed, _ATTRIBUTION_STREAMED_SQL)
 
 
 # Registered end-to-end stream #4 (r9): the exactly-once partitioned
@@ -2028,8 +1991,7 @@ WHERE value >= 10.0
 GROUP BY 1
 """
 
-QUERIES["events_filesink_pipeline"] = streams.events_filesink_pipeline
-ORACLE["events_filesink_pipeline"] = _FILESINK_SQL
+register(streams.events_filesink_pipeline, _FILESINK_SQL)
 
 
 # Registered end-to-end stream #5 (r9): the custom GroupState shape.
@@ -2063,8 +2025,7 @@ FROM sess s
 JOIN last l ON s.user_id = l.user_id AND s.session_start <> l.last_start
 """
 
-QUERIES["events_sessions_streamed"] = streams.events_sessions_streamed
-ORACLE["events_sessions_streamed"] = _SESSIONS_STREAMED_SQL
+register(streams.events_sessions_streamed, _SESSIONS_STREAMED_SQL)
 
 
 # Registered end-to-end stream #6 (r10, VERDICT r9 #4): the foreachBatch
@@ -2095,8 +2056,7 @@ FROM (
 WHERE rn = 1
 """
 
-QUERIES["events_upsert_streamed"] = streams.events_upsert_streamed
-ORACLE["events_upsert_streamed"] = _UPSERT_STREAMED_SQL
+register(streams.events_upsert_streamed, _UPSERT_STREAMED_SQL)
 
 
 def events_decay_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2145,8 +2105,7 @@ FROM events
 GROUP BY user_id
 """
 
-QUERIES["events_decay_value"] = events_decay_value
-ORACLE["events_decay_value"] = _DECAY_VALUE_SQL
+register(events_decay_value, _DECAY_VALUE_SQL)
 
 
 def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2295,8 +2254,7 @@ SELECT d.event_type, t.n_early, t.n_late, d.ks_d,
 FROM d JOIN tot t ON d.event_type = t.event_type
 """
 
-QUERIES["events_ks_drift"] = events_ks_drift
-ORACLE["events_ks_drift"] = _KS_DRIFT_SQL
+register(events_ks_drift, _KS_DRIFT_SQL)
 
 
 def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2407,8 +2365,7 @@ SELECT event_type, d, day_total, med, mad, mod_z,
 FROM ranked WHERE rk <= 5
 """
 
-QUERIES["events_mad_outliers"] = events_mad_outliers
-ORACLE["events_mad_outliers"] = _MAD_OUTLIERS_SQL
+register(events_mad_outliers, _MAD_OUTLIERS_SQL)
 
 
 # Upper-tail 5% chi-square critical values, dof 1-30 (standard table);
@@ -2548,8 +2505,7 @@ SELECT chi2, dof, n_cells,
 FROM final
 """.format(crit=_CHI2_CRIT_SQL_CASE.format(dof="dof"))
 
-QUERIES["events_weekday_chi2"] = events_weekday_chi2
-ORACLE["events_weekday_chi2"] = _WEEKDAY_CHI2_SQL
+register(events_weekday_chi2, _WEEKDAY_CHI2_SQL)
 
 
 def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2626,8 +2582,7 @@ SELECT user_id,
 FROM agg
 """
 
-QUERIES["events_user_entropy"] = events_user_entropy
-ORACLE["events_user_entropy"] = _USER_ENTROPY_SQL
+register(events_user_entropy, _USER_ENTROPY_SQL)
 
 
 def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2712,8 +2667,7 @@ SELECT event_type,
 FROM agg
 """
 
-QUERIES["events_ewma_daily"] = events_ewma_daily
-ORACLE["events_ewma_daily"] = _EWMA_DAILY_SQL
+register(events_ewma_daily, _EWMA_DAILY_SQL)
 
 
 # Per-type sampling rates (percent kept): rare/valuable types kept
@@ -2788,8 +2742,7 @@ GROUP BY 1
     cases=" ".join(f"WHEN '{k}' THEN {v}" for k, v in _STRATA_RATES.items())
 )
 
-QUERIES["events_stratified_sample"] = events_stratified_sample
-ORACLE["events_stratified_sample"] = _STRATIFIED_SQL
+register(events_stratified_sample, _STRATIFIED_SQL)
 
 
 _MARKOV_ROUNDS = 12
@@ -2898,8 +2851,7 @@ FROM pi{_MARKOV_ROUNDS} ORDER BY 1
     return head + "".join(rounds) + tail
 
 
-QUERIES["events_markov_stationary"] = events_markov_stationary
-ORACLE["events_markov_stationary"] = _markov_sql()
+register(events_markov_stationary, _markov_sql())
 
 
 def events_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2993,8 +2945,7 @@ GROUP BY 1, 2
 ORDER BY 1, 2
 """
 
-QUERIES["events_daily_decomposition"] = events_daily_decomposition
-ORACLE["events_daily_decomposition"] = _DAILY_DECOMP_SQL
+register(events_daily_decomposition, _DAILY_DECOMP_SQL)
 
 
 def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3077,8 +3028,7 @@ SELECT CAST(tot.n_users AS BIGINT) AS n_users,
 FROM head, tot
 """
 
-QUERIES["events_power_users_pareto"] = events_power_users_pareto
-ORACLE["events_power_users_pareto"] = _PARETO_SQL
+register(events_power_users_pareto, _PARETO_SQL)
 
 
 def events_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3188,8 +3138,7 @@ SELECT entry_type, exit_type,
 FROM per GROUP BY 1, 2
 """
 
-QUERIES["events_session_entry_exit"] = events_session_entry_exit
-ORACLE["events_session_entry_exit"] = _ENTRY_EXIT_SQL
+register(events_session_entry_exit, _ENTRY_EXIT_SQL)
 
 
 def events_brown_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3300,8 +3249,7 @@ SELECT event_type, n_days, last_day,
 FROM agg
 """
 
-QUERIES["events_brown_trend_daily"] = events_brown_trend_daily
-ORACLE["events_brown_trend_daily"] = _BROWN_TREND_SQL
+register(events_brown_trend_daily, _BROWN_TREND_SQL)
 
 
 def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3412,8 +3360,7 @@ SELECT CAST(n_a_l AS BIGINT) AS n_a, CAST(n_b_l AS BIGINT) AS n_b,
 FROM s
 """
 
-QUERIES["events_welch_ttest"] = events_welch_ttest
-ORACLE["events_welch_ttest"] = _WELCH_SQL
+register(events_welch_ttest, _WELCH_SQL)
 
 
 def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3561,8 +3508,7 @@ FROM pv, model
 ORDER BY variant
 """
 
-QUERIES["events_cuped_adjusted"] = events_cuped_adjusted
-ORACLE["events_cuped_adjusted"] = _CUPED_SQL
+register(events_cuped_adjusted, _CUPED_SQL)
 
 
 def events_anova_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3649,8 +3595,7 @@ SELECT CAST(nn_l AS BIGINT) AS n_total, CAST(k_l AS BIGINT) AS k_groups,
 FROM f
 """
 
-QUERIES["events_anova_value_by_type"] = events_anova_value_by_type
-ORACLE["events_anova_value_by_type"] = _ANOVA_SQL
+register(events_anova_value_by_type, _ANOVA_SQL)
 
 
 _HITS_ROUNDS = 8
@@ -3700,7 +3645,7 @@ def event_type_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # r11 (VERDICT r10 #4, same mechanism as graph.pagerank): each
-    # half-step is ONE spark.sql statement over temp views instead of
+    # half-step is ONE spark.sql statement over the frames instead of
     # ~12 chained DataFrame calls — the computation (joins, decimal
     # casts, the ROUND(12) pin, the no-hint 1-row cross join) is
     # unchanged and the physical plan identical modulo expr ids
@@ -3710,47 +3655,31 @@ def event_type_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoints: it references its raw frame TWICE (per-node
     # join + total) — without the cut the plan doubles twice per
     # round (4^rounds analysis blowup); the frame is |types|-sized,
-    # so the eager cut is free.
-    import uuid
-
-    tag = uuid.uuid4().hex[:12]
-    edges_v = f"hits_edges_{tag}"
-    nodes_v = f"hits_nodes_{tag}"
-    score_v = f"hits_score_{tag}"
-    edges.createOrReplaceTempView(edges_v)
-    nodes.createOrReplaceTempView(nodes_v)
+    # so the eager cut is free.  Column names go in through .format:
+    # spark.sql would quote a str argument as a literal.
     half_sql = """
 WITH raws AS (
   SELECT e.{to_col} AS k, SUM(CAST(s.{score} * e.n AS DECIMAL(28,12))) AS raw
-  FROM {ev} e JOIN {sv} s ON e.{from_col} = s.node
+  FROM {{edges}} e JOIN {{scores}} s ON e.{from_col} = s.node
   GROUP BY e.{to_col}
 ),
 tot AS (SELECT CAST(SUM(raw) AS DOUBLE) AS tot FROM raws)
 SELECT n.node,
        ROUND(CAST(COALESCE(r.raw, CAST(0 AS DECIMAL(28,12))) AS DOUBLE)
              / t.tot, 12) AS {out}
-FROM {nd} n
+FROM {{nodes}} n
 LEFT JOIN raws r ON n.node = r.k
 CROSS JOIN tot t
 """
-    auth_sql = half_sql.format(
-        ev=edges_v, nd=nodes_v, sv=score_v,
-        from_col="src", to_col="dst", score="hub", out="auth",
-    )
-    hub_sql = half_sql.format(
-        ev=edges_v, nd=nodes_v, sv=score_v,
-        from_col="dst", to_col="src", score="auth", out="hub",
-    )
+    auth_sql = half_sql.format(from_col="src", to_col="dst", score="hub", out="auth")
+    hub_sql = half_sql.format(from_col="dst", to_col="src", score="auth", out="hub")
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = None
     for _ in range(_HITS_ROUNDS):
-        hub.createOrReplaceTempView(score_v)
-        auth = spark.sql(auth_sql).localCheckpoint(eager=True)
-        auth.createOrReplaceTempView(score_v)
-        hub = spark.sql(hub_sql).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(edges_v)
-    spark.catalog.dropTempView(nodes_v)
-    spark.catalog.dropTempView(score_v)
+        auth = spark.sql(auth_sql, edges=edges, nodes=nodes, scores=hub)
+        auth = auth.localCheckpoint(eager=True)
+        hub = spark.sql(hub_sql, edges=edges, nodes=nodes, scores=auth)
+        hub = hub.localCheckpoint(eager=True)
     return (
         hub.join(auth, "node")
         .select(
@@ -3818,8 +3747,7 @@ ORDER BY 1
     return head + "".join(rounds) + tail
 
 
-QUERIES["event_type_hits"] = event_type_hits
-ORACLE["event_type_hits"] = _hits_sql()
+register(event_type_hits, _hits_sql())
 
 
 # Registered end-to-end stream #7 (r10): stream-static broadcast
@@ -3844,8 +3772,7 @@ FROM events e LEFT JOIN dim d ON e.user_id = d.user_id
 GROUP BY 1, 2
 """
 
-QUERIES["events_enriched_streamed"] = streams.events_enriched_streamed
-ORACLE["events_enriched_streamed"] = _ENRICHED_STREAMED_SQL
+register(streams.events_enriched_streamed, _ENRICHED_STREAMED_SQL)
 
 
 def event_state_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3979,8 +3906,7 @@ FROM per_c p JOIN sizes s ON p.community = s.community, tot t
 ORDER BY 1
 """
 
-QUERIES["event_state_modularity"] = event_state_modularity
-ORACLE["event_state_modularity"] = _STATE_MODULARITY_SQL
+register(event_state_modularity, _STATE_MODULARITY_SQL)
 
 
 def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4122,8 +4048,7 @@ SELECT n_a, n_b,
 FROM agg
 """
 
-QUERIES["events_mann_whitney"] = events_mann_whitney
-ORACLE["events_mann_whitney"] = _MANN_WHITNEY_SQL
+register(events_mann_whitney, _MANN_WHITNEY_SQL)
 
 
 def event_type_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4198,8 +4123,7 @@ SELECT src, dst, CAST(MIN(hops) AS INT) AS hops
 FROM walk GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-QUERIES["event_type_reachability"] = event_type_reachability
-ORACLE["event_type_reachability"] = _REACHABILITY_SQL
+register(event_type_reachability, _REACHABILITY_SQL)
 
 
 def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4308,8 +4232,7 @@ SELECT CASE WHEN n_gaps < 10 THEN '02-09'
 FROM st GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_interarrival_burstiness"] = events_interarrival_burstiness
-ORACLE["events_interarrival_burstiness"] = _BURSTINESS_SQL
+register(events_interarrival_burstiness, _BURSTINESS_SQL)
 
 
 # Registered end-to-end stream #8 (r10): the bounded-memory sketch
@@ -4329,8 +4252,7 @@ FROM c JOIN t ON c.event_type = t.event_type
 ORDER BY 1, 2
 """
 
-QUERIES["events_heavy_hitters_streamed"] = streams.events_heavy_hitters_streamed
-ORACLE["events_heavy_hitters_streamed"] = _HEAVY_HITTERS_STREAMED_SQL
+register(streams.events_heavy_hitters_streamed, _HEAVY_HITTERS_STREAMED_SQL)
 
 
 def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4476,8 +4398,7 @@ SELECT n_groups, n_total,
 FROM agg
 """
 
-QUERIES["events_kruskal_wallis"] = events_kruskal_wallis
-ORACLE["events_kruskal_wallis"] = _KRUSKAL_SQL
+register(events_kruskal_wallis, _KRUSKAL_SQL)
 
 
 def events_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4579,8 +4500,7 @@ FROM pc JOIN counters USING (row, col)
 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_user_cms"] = events_user_cms
-ORACLE["events_user_cms"] = _CMS_SQL
+register(events_user_cms, _CMS_SQL)
 
 
 def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4699,8 +4619,7 @@ SELECT event_type,
 FROM r GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_wasserstein_drift"] = events_wasserstein_drift
-ORACLE["events_wasserstein_drift"] = _WASSERSTEIN_SQL
+register(events_wasserstein_drift, _WASSERSTEIN_SQL)
 
 
 def events_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4768,8 +4687,7 @@ SELECT event_type, exact_n,
 FROM n ORDER BY event_type
 """
 
-QUERIES["events_dp_noisy_counts"] = events_dp_noisy_counts
-ORACLE["events_dp_noisy_counts"] = _DP_NOISY_SQL
+register(events_dp_noisy_counts, _DP_NOISY_SQL)
 
 
 def events_value_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4828,8 +4746,7 @@ SELECT CAST(200 AS BIGINT) AS k,
 FROM agg
 """
 
-QUERIES["events_value_hill_tail"] = events_value_hill_tail
-ORACLE["events_value_hill_tail"] = _HILL_SQL
+register(events_value_hill_tail, _HILL_SQL)
 
 
 def events_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4930,8 +4847,7 @@ SELECT n_up, n_down, runs,
 FROM agg
 """
 
-QUERIES["events_runs_test_daily"] = events_runs_test_daily
-ORACLE["events_runs_test_daily"] = _RUNS_TEST_SQL
+register(events_runs_test_daily, _RUNS_TEST_SQL)
 
 
 def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5011,8 +4927,7 @@ SELECT days, n_users,
 FROM bins ORDER BY days
 """
 
-QUERIES["events_time_to_convert"] = events_time_to_convert
-ORACLE["events_time_to_convert"] = _TIME_TO_CONVERT_SQL
+register(events_time_to_convert, _TIME_TO_CONVERT_SQL)
 
 
 def events_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5126,8 +5041,7 @@ SELECT event_type, CAST(nd AS BIGINT) AS n_points,
 FROM fin ORDER BY event_type
 """
 
-QUERIES["events_holt_winters_daily"] = events_holt_winters_daily
-ORACLE["events_holt_winters_daily"] = _HW_SQL
+register(events_holt_winters_daily, _HW_SQL)
 
 
 def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5274,8 +5188,7 @@ SELECT ROUND(a_e, 6) AS a_early, ROUND(a_l, 6) AS a_late,
 FROM p
 """
 
-QUERIES["events_diff_in_diff"] = events_diff_in_diff
-ORACLE["events_diff_in_diff"] = _DID_SQL
+register(events_diff_in_diff, _DID_SQL)
 
 
 def events_conversion_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5355,8 +5268,7 @@ SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users
 FROM paths GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_conversion_paths"] = events_conversion_paths
-ORACLE["events_conversion_paths"] = _CONVERSION_PATHS_SQL
+register(events_conversion_paths, _CONVERSION_PATHS_SQL)
 
 
 def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5472,8 +5384,7 @@ SELECT n_days, q_stat,
 FROM q
 """
 
-QUERIES["events_ljung_box"] = events_ljung_box
-ORACLE["events_ljung_box"] = _LJUNG_BOX_SQL
+register(events_ljung_box, _LJUNG_BOX_SQL)
 
 
 def events_markov_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5571,8 +5482,7 @@ WHERE NOT early
 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_markov_prediction_eval"] = events_markov_prediction_eval
-ORACLE["events_markov_prediction_eval"] = _MARKOV_EVAL_SQL
+register(events_markov_prediction_eval, _MARKOV_EVAL_SQL)
 
 
 def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5641,8 +5551,7 @@ SELECT watermark,
 FROM late, w GROUP BY watermark, bound ORDER BY watermark
 """
 
-QUERIES["events_late_arrival_audit"] = events_late_arrival_audit
-ORACLE["events_late_arrival_audit"] = _LATE_ARRIVAL_SQL
+register(events_late_arrival_audit, _LATE_ARRIVAL_SQL)
 
 
 # Registered end-to-end stream #9 (r10): exact windowed distinct
@@ -5663,10 +5572,7 @@ SELECT wk_start,
 FROM e GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_distinct_users_streamed"] = (
-    streams.events_distinct_users_streamed
-)
-ORACLE["events_distinct_users_streamed"] = _DISTINCT_USERS_STREAMED_SQL
+register(streams.events_distinct_users_streamed, _DISTINCT_USERS_STREAMED_SQL)
 
 
 def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5781,8 +5687,7 @@ FROM counts c LEFT JOIN counts p ON p.week = c.week - 1
 ORDER BY 1
 """
 
-QUERIES["events_growth_accounting"] = events_growth_accounting
-ORACLE["events_growth_accounting"] = _GROWTH_SQL
+register(events_growth_accounting, _GROWTH_SQL)
 
 
 def events_periodogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5860,8 +5765,7 @@ SELECT k, ROUND((c * c + s2 * s2) * 2.0 / n, 4) AS power
 FROM per_k ORDER BY k
 """
 
-QUERIES["events_periodogram_daily"] = events_periodogram_daily
-ORACLE["events_periodogram_daily"] = _PERIODOGRAM_SQL
+register(events_periodogram_daily, _PERIODOGRAM_SQL)
 
 
 # Registered end-to-end stream #10 (r10): the foreachBatch DLQ gate.
@@ -5883,8 +5787,7 @@ SELECT CASE WHEN fails = '' THEN 'clean' ELSE fails END AS bucket,
 FROM f GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["events_quarantine_streamed"] = streams.events_quarantine_streamed
-ORACLE["events_quarantine_streamed"] = _QUARANTINE_STREAMED_SQL
+register(streams.events_quarantine_streamed, _QUARANTINE_STREAMED_SQL)
 
 
 def events_user_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5966,5 +5869,4 @@ FROM events, m WHERE ts IS NOT NULL
 GROUP BY user_id ORDER BY user_id
 """
 
-QUERIES["events_user_feature_matrix"] = events_user_feature_matrix
-ORACLE["events_user_feature_matrix"] = _USER_FEATURES_SQL
+register(events_user_feature_matrix, _USER_FEATURES_SQL)

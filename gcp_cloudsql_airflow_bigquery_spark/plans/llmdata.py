@@ -10,13 +10,13 @@ xxhash64, LSH buckets) are rows-only here and property-tested in
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup, profiling, similarity, textstats
+from ..operators.textstats import _NORM, _STOPLIST_SQL, _lang_list_sql
+from . import register
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,8 +27,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-# SQL fragment mirroring textstats.normalize_text
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 # SQL fragment mirroring dedup.word_shingles(text, 3) on normalized text
 _SHINGLES = (
     "list_distinct(list_transform("
@@ -279,6 +277,76 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _kmeans_ctes(k: int, iters: int = 2) -> str:
+    """Unrolled-CTE DuckDB replay of ``similarity.ivf_build`` over a
+    prior CTE ``v(id, vec DOUBLE[])``: normalize, init from the ``k``
+    smallest ids, then per Lloyd round argmax-assign (first-max
+    tie-break like ``array_position``) and re-average + re-normalize
+    with empty cells keeping their old centroid.  Produces ``vn`` and
+    the final centroid table ``c{iters}``."""
+    parts = [
+        "vn AS MATERIALIZED (SELECT id,"
+        " list_transform(vec, x -> x / sqrt(list_dot_product(vec, vec))) AS nv,"
+        " vec FROM v)",
+        f"c0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY id) - 1"
+        f" AS cluster, nv AS c FROM vn ORDER BY id LIMIT {k})",
+    ]
+    for i in range(1, iters + 1):
+        parts.append(f"""a{i} AS MATERIALIZED (
+  SELECT id, nv, cluster FROM (
+    SELECT vn.id, vn.nv, c.cluster,
+           ROW_NUMBER() OVER (PARTITION BY vn.id
+                              ORDER BY list_dot_product(vn.nv, c.c) DESC,
+                                       c.cluster) AS rn
+    FROM vn, c{i - 1} c) WHERE rn = 1
+)""")
+        parts.append(f"""m{i} AS MATERIALIZED (
+  SELECT cluster, list(m ORDER BY pos) AS mc FROM (
+    SELECT cluster, pos, AVG(x) AS m FROM (
+      SELECT a.cluster, generate_subscripts(a.nv, 1) AS pos,
+             unnest(a.nv) AS x FROM a{i} a)
+    GROUP BY 1, 2) GROUP BY cluster
+)""")
+        parts.append(f"""c{i} AS MATERIALIZED (
+  SELECT p.cluster,
+         CASE WHEN m.mc IS NULL THEN p.c
+              ELSE list_transform(m.mc,
+                     x -> x / sqrt(list_dot_product(m.mc, m.mc))) END AS c
+  FROM c{i - 1} p LEFT JOIN m{i} m USING (cluster)
+)""")
+    return ",\n".join(parts)
+
+
+# embedding_semantic_dedup's oracle: the unrolled k-means replay (k=8)
+# over the planted-duplicate input, then within-cell cosine pairs and
+# the smallest-id-canonical keep verdict.
+_SEMANTIC_DEDUP_SQL = f"""
+WITH base AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec
+              FROM embeddings WHERE vec_id % 20 = 0),
+v AS (SELECT id, vec FROM base
+      UNION ALL
+      SELECT id + 1000000, list_transform(vec, x -> x * 2.0) FROM base),
+{_kmeans_ctes(8, 2)},
+assign AS MATERIALIZED (
+  SELECT id, vec, cluster FROM (
+    SELECT vn.id, vn.vec, c.cluster,
+           ROW_NUMBER() OVER (PARTITION BY vn.id
+                              ORDER BY list_dot_product(vn.nv, c.c) DESC,
+                                       c.cluster) AS rn
+    FROM vn, c2 c) WHERE rn = 1
+),
+dropped AS (
+  SELECT DISTINCT b.id
+  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.id < b.id
+  WHERE ROUND(list_dot_product(a.vec, b.vec) /
+              (SQRT(list_dot_product(a.vec, a.vec)) *
+               SQRT(list_dot_product(b.vec, b.vec))), 6) >= 0.95
+)
+SELECT a.id, a.cluster, d.id IS NULL AS keep
+FROM assign a LEFT JOIN dropped d ON d.id = a.id
+"""
+
+
 _EMB_NEARDUP_SQL = """
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e
               FROM embeddings WHERE vec_id % 20 = 0),
@@ -391,8 +459,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STOPLIST_SQL = "', '".join(textstats.STOPWORDS)
-
 _QUALITY_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, text,
@@ -430,10 +496,6 @@ def doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         textstats.detect_lang(F.col("text")).alias("lang_pred"),
     )
-
-
-def _lang_list_sql(lang: str) -> str:
-    return "', '".join(textstats.LANG_MARKERS[lang])
 
 
 _LANGID_SQL = rf"""
@@ -483,44 +545,26 @@ FROM n
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "doc_dedup_exact": doc_dedup_exact,
-    "doc_dedup_ngram_jaccard": doc_dedup_ngram_jaccard,
-    "doc_dedup_minhash": doc_dedup_minhash,
-    "doc_dedup_minhash_portable": doc_dedup_minhash_portable,
-    "doc_dedup_simhash": doc_dedup_simhash,
-    "knn_bruteforce": knn_bruteforce,
-    "knn_lsh": knn_lsh,
-    "embedding_neardup": embedding_neardup,
-    "embedding_semantic_dedup": embedding_semantic_dedup,
-    "doc_token_stats": doc_token_stats,
-    "doc_quality": doc_quality,
-    "doc_langid": doc_langid,
-    "doc_fingerprint": doc_fingerprint,
-}
-
 # rows-only (no oracle): doc_dedup_minhash (xxhash64 scale path — the
 # portable md5 twin doc_dedup_minhash_portable IS hash-checked and
 # unit-pinned to the same pair set), media_* (Python-side feature
-# UDFs), doc_bpe_* (sequential merge application has no SQL form;
-# differential-tested vs pure-Python Sennrich), embedding_pca_projected
-# (driver-side eigh).  Everything else here — including the formerly
-# rows-only knn_lsh (seeded hyperplanes inlined), knn_ivf /
+# UDFs) and embedding_pca_projected (driver-side eigh).  Everything
+# else here — including knn_lsh (seeded hyperplanes inlined), knn_ivf /
 # embedding_semantic_dedup / doc_topic_clusters (unrolled k-means
 # replay) — is value-hash-checked against DuckDB.
-ORACLE: dict[str, str] = {
-    "doc_dedup_exact": _DEDUP_EXACT_SQL,
-    "doc_dedup_ngram_jaccard": _DEDUP_JACCARD_SQL,
-    "knn_bruteforce": _KNN_SQL,
-    "embedding_neardup": _EMB_NEARDUP_SQL,
-    "doc_token_stats": _TOKEN_STATS_SQL,
-    "doc_quality": _QUALITY_SQL,
-    "doc_langid": _LANGID_SQL,
-    "doc_fingerprint": _FINGERPRINT_SQL,
-    "doc_dedup_simhash": _DEDUP_SIMHASH_SQL,
-    "doc_dedup_minhash_portable": _DEDUP_MINHASH_PORTABLE_SQL,
-    "knn_lsh": _knn_lsh_sql(),
-}
+register(doc_dedup_exact, _DEDUP_EXACT_SQL)
+register(doc_dedup_ngram_jaccard, _DEDUP_JACCARD_SQL)
+register(doc_dedup_minhash)
+register(doc_dedup_minhash_portable, _DEDUP_MINHASH_PORTABLE_SQL)
+register(doc_dedup_simhash, _DEDUP_SIMHASH_SQL)
+register(knn_bruteforce, _KNN_SQL)
+register(knn_lsh, _knn_lsh_sql())
+register(embedding_neardup, _EMB_NEARDUP_SQL)
+register(embedding_semantic_dedup, _SEMANTIC_DEDUP_SQL)
+register(doc_token_stats, _TOKEN_STATS_SQL)
+register(doc_quality, _QUALITY_SQL)
+register(doc_langid, _LANGID_SQL)
+register(doc_fingerprint, _FINGERPRINT_SQL)
 
 
 def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,8 +593,7 @@ FROM tok JOIN freq USING (term), tot
 GROUP BY doc_id
 """
 
-QUERIES["doc_lm_score"] = doc_lm_score
-ORACLE["doc_lm_score"] = _LM_SCORE_SQL
+register(doc_lm_score, _LM_SCORE_SQL)
 
 
 def doc_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,8 +627,7 @@ FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1), voc
 GROUP BY doc_id
 """
 
-QUERIES["doc_perplexity_bigram"] = doc_perplexity_bigram
-ORACLE["doc_perplexity_bigram"] = _BIGRAM_PPL_SQL
+register(doc_perplexity_bigram, _BIGRAM_PPL_SQL)
 
 
 def doc_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -614,8 +656,7 @@ ranked AS (
 SELECT doc_id, term AS top_term, tfidf FROM ranked WHERE rn = 1
 """
 
-QUERIES["doc_tfidf_top_term"] = doc_tfidf_top_term
-ORACLE["doc_tfidf_top_term"] = _TFIDF_SQL
+register(doc_tfidf_top_term, _TFIDF_SQL)
 
 
 def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,8 +706,7 @@ reach(a, b) AS (
 SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
 """
 
-QUERIES["doc_dup_clusters"] = doc_dup_clusters
-ORACLE["doc_dup_clusters"] = _DUP_CLUSTERS_SQL
+register(doc_dup_clusters, _DUP_CLUSTERS_SQL)
 
 
 def doc_dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,8 +823,7 @@ SELECT doc_id, cluster_id, quality, n_members FROM (
 WHERE rn = 1
 """
 
-QUERIES["doc_dedup_keep_best_quality"] = doc_dedup_keep_best_quality
-ORACLE["doc_dedup_keep_best_quality"] = _KEEP_BEST_SQL
+register(doc_dedup_keep_best_quality, _KEEP_BEST_SQL)
 
 
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,46 +837,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 5)
     return similarity.ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=4)
-
-
-def _kmeans_ctes(k: int, iters: int = 2) -> str:
-    """Unrolled-CTE DuckDB replay of ``similarity.ivf_build`` over a
-    prior CTE ``v(id, vec DOUBLE[])``: normalize, init from the ``k``
-    smallest ids, then per Lloyd round argmax-assign (first-max
-    tie-break like ``array_position``) and re-average + re-normalize
-    with empty cells keeping their old centroid.  Produces ``vn`` and
-    the final centroid table ``c{iters}``."""
-    parts = [
-        "vn AS MATERIALIZED (SELECT id,"
-        " list_transform(vec, x -> x / sqrt(list_dot_product(vec, vec))) AS nv,"
-        " vec FROM v)",
-        f"c0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY id) - 1"
-        f" AS cluster, nv AS c FROM vn ORDER BY id LIMIT {k})",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(f"""a{i} AS MATERIALIZED (
-  SELECT id, nv, cluster FROM (
-    SELECT vn.id, vn.nv, c.cluster,
-           ROW_NUMBER() OVER (PARTITION BY vn.id
-                              ORDER BY list_dot_product(vn.nv, c.c) DESC,
-                                       c.cluster) AS rn
-    FROM vn, c{i - 1} c) WHERE rn = 1
-)""")
-        parts.append(f"""m{i} AS MATERIALIZED (
-  SELECT cluster, list(m ORDER BY pos) AS mc FROM (
-    SELECT cluster, pos, AVG(x) AS m FROM (
-      SELECT a.cluster, generate_subscripts(a.nv, 1) AS pos,
-             unnest(a.nv) AS x FROM a{i} a)
-    GROUP BY 1, 2) GROUP BY cluster
-)""")
-        parts.append(f"""c{i} AS MATERIALIZED (
-  SELECT p.cluster,
-         CASE WHEN m.mc IS NULL THEN p.c
-              ELSE list_transform(m.mc,
-                     x -> x / sqrt(list_dot_product(m.mc, m.mc))) END AS c
-  FROM c{i - 1} p LEFT JOIN m{i} m USING (cluster)
-)""")
-    return ",\n".join(parts)
 
 
 _KNN_IVF_SQL = f"""
@@ -876,40 +875,7 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
 WHERE rank <= 10
 """
 
-QUERIES["knn_ivf"] = knn_ivf
-ORACLE["knn_ivf"] = _KNN_IVF_SQL
-
-
-# embedding_semantic_dedup's oracle reuses the same unrolled k-means
-# replay (k=8) over the planted-duplicate input, then within-cell
-# cosine pairs and the smallest-id-canonical keep verdict.
-_SEMANTIC_DEDUP_SQL = f"""
-WITH base AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec
-              FROM embeddings WHERE vec_id % 20 = 0),
-v AS (SELECT id, vec FROM base
-      UNION ALL
-      SELECT id + 1000000, list_transform(vec, x -> x * 2.0) FROM base),
-{_kmeans_ctes(8, 2)},
-assign AS MATERIALIZED (
-  SELECT id, vec, cluster FROM (
-    SELECT vn.id, vn.vec, c.cluster,
-           ROW_NUMBER() OVER (PARTITION BY vn.id
-                              ORDER BY list_dot_product(vn.nv, c.c) DESC,
-                                       c.cluster) AS rn
-    FROM vn, c2 c) WHERE rn = 1
-),
-dropped AS (
-  SELECT DISTINCT b.id
-  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.id < b.id
-  WHERE ROUND(list_dot_product(a.vec, b.vec) /
-              (SQRT(list_dot_product(a.vec, a.vec)) *
-               SQRT(list_dot_product(b.vec, b.vec))), 6) >= 0.95
-)
-SELECT a.id, a.cluster, d.id IS NULL AS keep
-FROM assign a LEFT JOIN dropped d ON d.id = a.id
-"""
-
-ORACLE["embedding_semantic_dedup"] = _SEMANTIC_DEDUP_SQL
+register(knn_ivf, _KNN_IVF_SQL)
 
 
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -930,7 +896,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["media_features"] = media_features
+register(media_features)
 
 
 def media_codec_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,7 +921,7 @@ def media_codec_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["media_codec_features"] = media_codec_features
+register(media_codec_features)
 
 
 def media_resized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,7 +947,7 @@ def media_resized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-QUERIES["media_resized"] = media_resized
+register(media_resized)
 
 
 def doc_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1059,12 +1025,7 @@ def doc_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_FILTER_SQL = None  # assembled below from the existing parity SQL
-
-
-QUERIES["doc_dedup_keep_canonical"] = doc_dedup_keep_canonical
-ORACLE["doc_dedup_keep_canonical"] = _KEEP_CANONICAL_SQL
-QUERIES["doc_corpus_filter"] = doc_corpus_filter
+register(doc_dedup_keep_canonical, _KEEP_CANONICAL_SQL)
 
 
 _CORPUS_FILTER_SQL = rf"""
@@ -1109,7 +1070,7 @@ WHERE det_lang = 'en' AND quality >= 0.5 AND n_tok BETWEEN 5 AND 5000
 GROUP BY source
 """
 
-ORACLE["doc_corpus_filter"] = _CORPUS_FILTER_SQL
+register(doc_corpus_filter, _CORPUS_FILTER_SQL)
 
 
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1143,8 +1104,7 @@ FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
 GROUP BY 1, 2 ORDER BY label, dim
 """
 
-QUERIES["embedding_centroids"] = embedding_centroids
-ORACLE["embedding_centroids"] = _CENTROIDS_SQL
+register(embedding_centroids, _CENTROIDS_SQL)
 
 
 def embedding_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,8 +1141,7 @@ SELECT vec_id,
 FROM m
 """
 
-QUERIES["embedding_quantized"] = embedding_quantized
-ORACLE["embedding_quantized"] = _QUANTIZED_SQL
+register(embedding_quantized, _QUANTIZED_SQL)
 
 
 def knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1227,8 +1186,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 ) WHERE rank <= 10
 """
 
-QUERIES["knn_int8"] = knn_int8
-ORACLE["knn_int8"] = _KNN_INT8_SQL
+register(knn_int8, _KNN_INT8_SQL)
 
 
 def doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,8 +1211,7 @@ SELECT DISTINCT a.id AS id_a, b.id AS id_b
 FROM fps a JOIN fps b ON a.fp = b.fp AND a.id < b.id
 """
 
-QUERIES["doc_winnow_candidates"] = doc_winnow_candidates
-ORACLE["doc_winnow_candidates"] = _WINNOW_SQL
+register(doc_winnow_candidates, _WINNOW_SQL)
 
 
 def doc_bloom_incremental_new(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1282,8 +1239,7 @@ WHERE d.doc_id % 7 = 0
   )
 """
 
-QUERIES["doc_bloom_incremental_new"] = doc_bloom_incremental_new
-ORACLE["doc_bloom_incremental_new"] = _BLOOM_INCREMENTAL_SQL
+register(doc_bloom_incremental_new, _BLOOM_INCREMENTAL_SQL)
 
 
 def doc_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1321,8 +1277,7 @@ SELECT doc_id, MIN(p) AS span_start, MAX(p) + 4 AS span_end,
 FROM dup GROUP BY doc_id, grp
 """
 
-QUERIES["doc_duplicate_passages"] = doc_duplicate_passages
-ORACLE["doc_duplicate_passages"] = _DUP_PASSAGES_SQL
+register(doc_duplicate_passages, _DUP_PASSAGES_SQL)
 
 
 def doc_passage_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1374,8 +1329,7 @@ FROM documents d LEFT JOIN kept k USING (doc_id)
 GROUP BY d.doc_id, d.text
 """
 
-QUERIES["doc_passage_redacted"] = doc_passage_redacted
-ORACLE["doc_passage_redacted"] = _PASSAGE_REDACT_SQL
+register(doc_passage_redacted, _PASSAGE_REDACT_SQL)
 
 
 def doc_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1390,11 +1344,10 @@ def doc_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["doc_dedup_prefix_jaccard"] = doc_dedup_prefix_jaccard
-ORACLE["doc_dedup_prefix_jaccard"] = _DEDUP_JACCARD_SQL
+register(doc_dedup_prefix_jaccard, _DEDUP_JACCARD_SQL)
 
 
-def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64x64 sample covariance of the embedding corpus via one-pass
     per-batch outer-product partials (``operators/linalg``): the
     shuffle carries d*d+d+1 numbers per Arrow batch regardless of row
@@ -1441,9 +1394,8 @@ def embedding_pca_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("component", F.col("component") + F.lit(1))
 
 
-QUERIES["embedding_covariance_matrix"] = embedding_covariance
-ORACLE["embedding_covariance_matrix"] = _EMB_COV_SQL
-QUERIES["embedding_pca_projected"] = embedding_pca_projected
+register(embedding_covariance_matrix, _EMB_COV_SQL)
+register(embedding_pca_projected)
 
 
 def doc_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,10 +1532,8 @@ def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(docs.select("doc_id", "n_chars"), "doc_id")
 
 
-QUERIES["doc_bpe_vocab"] = doc_bpe_vocab
-ORACLE["doc_bpe_vocab"] = _bpe_vocab_oracle()
-QUERIES["doc_bpe_tokens"] = doc_bpe_tokens
-ORACLE["doc_bpe_tokens"] = _bpe_tokens_oracle()
+register(doc_bpe_vocab, _bpe_vocab_oracle())
+register(doc_bpe_tokens, _bpe_tokens_oracle())
 
 
 def doc_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,8 +1620,7 @@ FROM assign a JOIN documents d ON d.doc_id = a.id
 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["doc_topic_clusters"] = doc_topic_clusters
-ORACLE["doc_topic_clusters"] = _TOPIC_CLUSTERS_SQL
+register(doc_topic_clusters, _TOPIC_CLUSTERS_SQL)
 
 
 def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1729,8 +1678,7 @@ SELECT anchor_id, neighbor_id AS hard_negative_id, cosine FROM (
 ) WHERE rn = 1
 """
 
-QUERIES["embedding_hard_negatives"] = embedding_hard_negatives
-ORACLE["embedding_hard_negatives"] = _HARD_NEG_SQL
+register(embedding_hard_negatives, _HARD_NEG_SQL)
 
 
 def embedding_standardized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1770,8 +1718,7 @@ SELECT ex.vec_id, ex.dim, ROUND((ex.v - m.mu) / m.sigma, 6) AS z
 FROM ex JOIN model m ON ex.dim = m.dim
 """
 
-QUERIES["embedding_standardized"] = embedding_standardized
-ORACLE["embedding_standardized"] = _EMB_STD_SQL
+register(embedding_standardized, _EMB_STD_SQL)
 
 
 def doc_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1830,8 +1777,7 @@ FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
 GROUP BY 1, 2
 """
 
-QUERIES["doc_source_overlap"] = doc_source_overlap
-ORACLE["doc_source_overlap"] = _SOURCE_OVERLAP_SQL
+register(doc_source_overlap, _SOURCE_OVERLAP_SQL)
 
 
 def doc_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1863,8 +1809,7 @@ FROM pred p JOIN totals t ON p.lang = t.lang
 GROUP BY 1, 2
 """
 
-QUERIES["doc_langid_confusion"] = doc_langid_confusion
-ORACLE["doc_langid_confusion"] = _LANGID_CONF_SQL
+register(doc_langid_confusion, _LANGID_CONF_SQL)
 
 _KNN_EVAL_PROBES = 100  # constant-size probe set (does NOT scale with corpus)
 
@@ -1997,8 +1942,7 @@ nn AS (
 {_KNN_VOTE_TAIL_SQL}
 """
 
-QUERIES["embedding_knn_label_eval"] = embedding_knn_label_eval
-ORACLE["embedding_knn_label_eval"] = _KNN_LABEL_EVAL_SQL
+register(embedding_knn_label_eval, _KNN_LABEL_EVAL_SQL)
 
 
 def embedding_knn_label_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2071,8 +2015,7 @@ nn AS (
 {_KNN_VOTE_TAIL_SQL}
 """
 
-QUERIES["embedding_knn_label_eval_ivf"] = embedding_knn_label_eval_ivf
-ORACLE["embedding_knn_label_eval_ivf"] = _KNN_LABEL_EVAL_IVF_SQL
+register(embedding_knn_label_eval_ivf, _KNN_LABEL_EVAL_IVF_SQL)
 
 
 def embedding_semantic_dedup_indexed(
@@ -2119,8 +2062,7 @@ SELECT a.id, a.cluster, d.id IS NULL AS keep
 FROM assign a LEFT JOIN dropped d ON d.id = a.id
 """
 
-QUERIES["embedding_semantic_dedup_indexed"] = embedding_semantic_dedup_indexed
-ORACLE["embedding_semantic_dedup_indexed"] = _SEMANTIC_DEDUP_INDEXED_SQL
+register(embedding_semantic_dedup_indexed, _SEMANTIC_DEDUP_INDEXED_SQL)
 
 
 def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2157,8 +2099,7 @@ SELECT id_a, id_b, containment FROM (
 ) WHERE containment >= 0.8
 """
 
-QUERIES["doc_containment_pairs"] = doc_containment_pairs
-ORACLE["doc_containment_pairs"] = _CONTAINMENT_SQL
+register(doc_containment_pairs, _CONTAINMENT_SQL)
 
 
 def doc_source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2207,8 +2148,7 @@ SELECT source,
 FROM grid GROUP BY source
 """
 
-QUERIES["doc_source_token_drift"] = doc_source_token_drift
-ORACLE["doc_source_token_drift"] = _SOURCE_DRIFT_SQL
+register(doc_source_token_drift, _SOURCE_DRIFT_SQL)
 
 
 def doc_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2312,8 +2252,7 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
              / (SELECT COUNT(*) FROM truth), 6) AS recall
 """
 
-QUERIES["doc_minhash_recall_eval"] = doc_minhash_recall_eval
-ORACLE["doc_minhash_recall_eval"] = _MINHASH_RECALL_SQL
+register(doc_minhash_recall_eval, _MINHASH_RECALL_SQL)
 
 
 def embedding_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2434,8 +2373,7 @@ SELECT COUNT(*) AS n_queries,
 FROM per
 """
 
-QUERIES["embedding_ann_recall_eval"] = embedding_ann_recall_eval
-ORACLE["embedding_ann_recall_eval"] = _ANN_RECALL_SQL
+register(embedding_ann_recall_eval, _ANN_RECALL_SQL)
 
 
 def doc_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2528,8 +2466,7 @@ SELECT doc_id, cluster_id, cluster_size,
 FROM sized
 """
 
-QUERIES["doc_leakage_safe_splits"] = doc_leakage_safe_splits
-ORACLE["doc_leakage_safe_splits"] = _LEAKAGE_SPLITS_SQL
+register(doc_leakage_safe_splits, _LEAKAGE_SPLITS_SQL)
 
 
 def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2590,8 +2527,7 @@ FROM dc JOIN nd USING (doc_id) JOIN cf USING (term), tot
 GROUP BY dc.doc_id
 """
 
-QUERIES["doc_ngram_novelty"] = doc_ngram_novelty
-ORACLE["doc_ngram_novelty"] = _NGRAM_NOVELTY_SQL
+register(doc_ngram_novelty, _NGRAM_NOVELTY_SQL)
 
 
 def embedding_outlier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2648,8 +2584,7 @@ s AS (
 SELECT vec_id, m2, m2 > 104.72 AS is_outlier FROM s
 """
 
-QUERIES["embedding_outlier_score"] = embedding_outlier_score
-ORACLE["embedding_outlier_score"] = _EMB_OUTLIER_SQL
+register(embedding_outlier_score, _EMB_OUTLIER_SQL)
 
 
 def doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2708,8 +2643,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS vocab_size,
 FROM r
 """
 
-QUERIES["doc_zipf_fit"] = doc_zipf_fit
-ORACLE["doc_zipf_fit"] = _ZIPF_SQL
+register(doc_zipf_fit, _ZIPF_SQL)
 
 
 def doc_source_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2764,8 +2698,7 @@ scored AS (
 SELECT g AS source, n_rows, psi, psi > 0.2 AS drift_flag FROM scored
 """
 
-QUERIES["doc_source_psi_drift"] = doc_source_psi_drift
-ORACLE["doc_source_psi_drift"] = _SOURCE_PSI_SQL
+register(doc_source_psi_drift, _SOURCE_PSI_SQL)
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2859,8 +2792,7 @@ SELECT id AS vec_id,
 FROM final GROUP BY 1
 """
 
-QUERIES["embedding_pq_codes"] = embedding_pq_codes
-ORACLE["embedding_pq_codes"] = _PQ_CODES_SQL
+register(embedding_pq_codes, _PQ_CODES_SQL)
 
 
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2900,8 +2832,7 @@ SELECT query_id, neighbor_id, adc_dist, rank FROM (
   FROM scored) WHERE rank <= 10
 """
 
-QUERIES["knn_pq_adc"] = knn_pq_adc
-ORACLE["knn_pq_adc"] = _PQ_ADC_SQL
+register(knn_pq_adc, _PQ_ADC_SQL)
 
 
 def doc_backoff_lm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2964,8 +2895,7 @@ SELECT doc_id, COUNT(*) AS n_trigrams,
 FROM scored GROUP BY 1
 """
 
-QUERIES["doc_backoff_lm_eval"] = doc_backoff_lm_eval
-ORACLE["doc_backoff_lm_eval"] = _BACKOFF_LM_SQL
+register(doc_backoff_lm_eval, _BACKOFF_LM_SQL)
 
 
 def embedding_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3014,8 +2944,7 @@ WITH v AS MATERIALIZED
 SELECT pick, id AS vec_id, md AS min_dist_sq FROM all10
 """
 
-QUERIES["embedding_kcenter_coreset"] = embedding_kcenter_coreset
-ORACLE["embedding_kcenter_coreset"] = _KCENTER_SQL
+register(embedding_kcenter_coreset, _KCENTER_SQL)
 
 
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3105,8 +3034,7 @@ SELECT query_id, neighbor_id, adc_dist, rank FROM (
   FROM scored) WHERE rank <= 10
 """
 
-QUERIES["knn_ivfpq"] = knn_ivfpq
-ORACLE["knn_ivfpq"] = _IVFPQ_SQL
+register(knn_ivfpq, _IVFPQ_SQL)
 
 
 def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3168,8 +3096,7 @@ GROUP BY 1
 """
 
 
-QUERIES["doc_tokenizer_fertility"] = doc_tokenizer_fertility
-ORACLE["doc_tokenizer_fertility"] = _bpe_fertility_oracle()
+register(doc_tokenizer_fertility, _bpe_fertility_oracle())
 
 
 def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3223,8 +3150,7 @@ SELECT doc_id, phrase, n_words, score FROM (
   FROM phrases) WHERE rn = 1
 """
 
-QUERIES["doc_rake_keyphrases"] = doc_rake_keyphrases
-ORACLE["doc_rake_keyphrases"] = _RAKE_SQL
+register(doc_rake_keyphrases, _RAKE_SQL)
 
 
 def doc_textrank_sentence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3293,8 +3219,7 @@ JOIN n ON n.doc_id = r.doc_id
 WHERE r.rn = 1
 """
 
-QUERIES["doc_textrank_sentence"] = doc_textrank_sentence
-ORACLE["doc_textrank_sentence"] = _TEXTRANK_SQL
+register(doc_textrank_sentence, _TEXTRANK_SQL)
 
 
 def doc_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3422,8 +3347,7 @@ ORDER BY llr DESC, w1, w2
 LIMIT 30
 """
 
-QUERIES["doc_collocations_llr"] = doc_collocations_llr
-ORACLE["doc_collocations_llr"] = _COLLOCATIONS_SQL
+register(doc_collocations_llr, _COLLOCATIONS_SQL)
 
 
 def media_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3489,8 +3413,7 @@ SELECT mid AS media_id, ahash_hex, b0, b1, b2, b3
 FROM packed ORDER BY media_id
 """
 
-QUERIES["media_image_ahash"] = media_image_ahash
-ORACLE["media_image_ahash"] = _IMAGE_AHASH_SQL
+register(media_image_ahash, _IMAGE_AHASH_SQL)
 
 
 def media_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3545,8 +3468,7 @@ GROUP BY 1
 ORDER BY media_id
 """
 
-QUERIES["media_audio_stats"] = media_audio_stats
-ORACLE["media_audio_stats"] = _AUDIO_STATS_SQL
+register(media_audio_stats, _AUDIO_STATS_SQL)
 
 
 def doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3604,8 +3526,7 @@ SELECT cm.lang, cm.lang_pred, CAST(cm.n AS BIGINT) AS n,
 FROM cm JOIN tot ON cm.lang = tot.lang
 """
 
-QUERIES["doc_lang_confusion"] = doc_lang_confusion
-ORACLE["doc_lang_confusion"] = _LANG_CONFUSION_SQL
+register(doc_lang_confusion, _LANG_CONFUSION_SQL)
 
 
 def embedding_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3663,8 +3584,7 @@ FROM census c CROSS JOIN nn
 ORDER BY cluster
 """
 
-QUERIES["embedding_cluster_balance"] = embedding_cluster_balance
-ORACLE["embedding_cluster_balance"] = _CLUSTER_BALANCE_SQL
+register(embedding_cluster_balance, _CLUSTER_BALANCE_SQL)
 
 
 def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3782,8 +3702,7 @@ FROM per_vec p CROSS JOIN maxn
 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["embedding_quantization_error"] = embedding_quantization_error
-ORACLE["embedding_quantization_error"] = _QUANT_ERROR_SQL
+register(embedding_quantization_error, _QUANT_ERROR_SQL)
 
 
 def media_resized_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3830,8 +3749,7 @@ SELECT mid AS media_id,
 FROM px GROUP BY mid ORDER BY media_id
 """
 
-QUERIES["media_resized_hex"] = media_resized_hex
-ORACLE["media_resized_hex"] = _RESIZED_HEX_SQL
+register(media_resized_hex, _RESIZED_HEX_SQL)
 
 
 def doc_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3961,8 +3879,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
 FROM cum
 """
 
-QUERIES["doc_heaps_law"] = doc_heaps_law
-ORACLE["doc_heaps_law"] = _HEAPS_SQL
+register(doc_heaps_law, _HEAPS_SQL)
 
 
 def embedding_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4020,8 +3937,7 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
 WHERE rank <= 3
 """
 
-QUERIES["embedding_knn_graph"] = embedding_knn_graph
-ORACLE["embedding_knn_graph"] = _KNN_GRAPH_SQL
+register(embedding_knn_graph, _KNN_GRAPH_SQL)
 
 
 def media_image_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4069,8 +3985,7 @@ FROM px GROUP BY 1, 2
 ORDER BY media_id, channel
 """
 
-QUERIES["media_image_channel_stats"] = media_image_channel_stats
-ORACLE["media_image_channel_stats"] = _IMAGE_CHANNEL_SQL
+register(media_image_channel_stats, _IMAGE_CHANNEL_SQL)
 
 
 def embedding_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4192,8 +4107,7 @@ JOIN nearest ON nearest.label = pl.label AND nearest.rn = 1
 ORDER BY pl.label
 """
 
-QUERIES["embedding_cluster_separation"] = embedding_cluster_separation
-ORACLE["embedding_cluster_separation"] = _CLUSTER_SEP_SQL
+register(embedding_cluster_separation, _CLUSTER_SEP_SQL)
 
 
 def doc_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4266,8 +4180,7 @@ SELECT source, n_tokens, vocab,
 FROM agg ORDER BY source
 """
 
-QUERIES["doc_source_diversity"] = doc_source_diversity
-ORACLE["doc_source_diversity"] = _SOURCE_DIVERSITY_SQL
+register(doc_source_diversity, _SOURCE_DIVERSITY_SQL)
 
 
 def doc_dup_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4359,8 +4272,7 @@ SELECT COALESCE(r.fp IN (SELECT fp FROM d), FALSE) AS is_dup,
 FROM r GROUP BY 1 ORDER BY 1
 """
 
-QUERIES["doc_dup_quality_report"] = doc_dup_quality_report
-ORACLE["doc_dup_quality_report"] = _DUP_QUALITY_SQL
+register(doc_dup_quality_report, _DUP_QUALITY_SQL)
 
 
 def doc_label_source_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4449,5 +4361,4 @@ SELECT CAST(nt AS BIGINT) AS n_docs,
 FROM chi
 """
 
-QUERIES["doc_label_source_alignment"] = doc_label_source_alignment
-ORACLE["doc_label_source_alignment"] = _LABEL_SOURCE_SQL
+register(doc_label_source_alignment, _LABEL_SOURCE_SQL)

@@ -10,13 +10,13 @@ text is byte-compared via md5.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import curation, privacy, profiling, textstats
+from ..operators.textstats import _NORM, _STOPLIST_SQL, _lang_list_sql
+from . import register
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,9 +456,6 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _funnel_sql() -> str:
-    # reuse the proven parity fragments from the llmdata plans
-    from .llmdata import _NORM, _STOPLIST_SQL, _lang_list_sql
-
     gmax = "GREATEST(s_en, s_de, s_es, s_fr)"
     grams8 = (
         "list_distinct(list_transform("
@@ -531,28 +528,14 @@ UNION ALL SELECT '5_' || split, COUNT(*) FROM clean GROUP BY split
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "doc_pii_redact": doc_pii_redact,
-    "doc_repetition": doc_repetition,
-    "doc_decontaminated": doc_decontaminated,
-    "doc_decontaminated_fuzzy": doc_decontaminated_fuzzy,
-    "doc_packed_bins": doc_packed_bins,
-    "table_profile": table_profile,
-    "corpus_funnel": corpus_funnel,
-    "doc_unicode_clean": doc_unicode_clean,
-}
-
-ORACLE: dict[str, str] = {
-    "corpus_funnel": _funnel_sql(),
-    "doc_unicode_clean": _UNICODE_SQL,
-    "doc_pii_redact": _PII_SQL,
-    "doc_repetition": _REPETITION_SQL,
-    "doc_decontaminated": _DECONTAM_SQL,
-    "doc_decontaminated_fuzzy": _DECONTAM_FUZZY_SQL,
-    "doc_packed_bins": _PACK_SQL,
-    "table_profile": _PROFILE_SQL,
-}
-
+register(doc_pii_redact, _PII_SQL)
+register(doc_repetition, _REPETITION_SQL)
+register(doc_decontaminated, _DECONTAM_SQL)
+register(doc_decontaminated_fuzzy, _DECONTAM_FUZZY_SQL)
+register(doc_packed_bins, _PACK_SQL)
+register(table_profile, _PROFILE_SQL)
+register(corpus_funnel, _funnel_sql())
+register(doc_unicode_clean, _UNICODE_SQL)
 
 
 def doc_gopher_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,8 +579,7 @@ SELECT doc_id, n_words, mean_word_len, alpha_word_frac, required_word_hits,
 FROM m
 """
 
-QUERIES["doc_gopher_report"] = doc_gopher_report
-ORACLE["doc_gopher_report"] = _GOPHER_SQL
+register(doc_gopher_report, _GOPHER_SQL)
 
 
 def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,8 +633,6 @@ def _classifier_oracle(n_iter: int = 8, ridge: float = 1e-6) -> str:
     replay: once converged the remaining steps perturb beta below the
     1e-6 score rounding."""
     from itertools import permutations
-
-    from .llmdata import _STOPLIST_SQL, _lang_list_sql
 
     d = 4
     gmax = "GREATEST(s_en, s_de, s_es, s_fr)"
@@ -740,8 +720,7 @@ FROM feats, beta{n_iter} b
 """
 
 
-QUERIES["doc_quality_classifier"] = doc_quality_classifier
-ORACLE["doc_quality_classifier"] = _classifier_oracle()
+register(doc_quality_classifier, _classifier_oracle())
 
 
 def doc_quality_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,8 +777,6 @@ def _score_label_prefix() -> str:
     (quality score, is-English label) frame both ranking evals
     (AUC, calibration) replay.  Kept as one string so the two oracles
     can never drift apart."""
-    from .llmdata import _STOPLIST_SQL, _lang_list_sql
-
     gmax = "GREATEST(s_en, s_de, s_es, s_fr)"
     return rf"""toks AS (
   SELECT doc_id, text,
@@ -847,8 +824,7 @@ FROM r
 """
 
 
-QUERIES["doc_quality_auc_eval"] = doc_quality_auc_eval
-ORACLE["doc_quality_auc_eval"] = _auc_oracle()
+register(doc_quality_auc_eval, _auc_oracle())
 
 
 def doc_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,8 +875,7 @@ FROM b GROUP BY 1
 """
 
 
-QUERIES["doc_quality_calibration"] = doc_quality_calibration
-ORACLE["doc_quality_calibration"] = _calibration_oracle()
+register(doc_quality_calibration, _calibration_oracle())
 
 
 def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,5 +928,4 @@ SELECT doc_id, n_words, n_sentences, n_syllables,
 FROM m WHERE n_words > 0
 """
 
-QUERIES["doc_readability"] = doc_readability
-ORACLE["doc_readability"] = _READABILITY_SQL
+register(doc_readability, _READABILITY_SQL)

@@ -25,12 +25,11 @@ AQE handles skew and partition coalescing at cluster scale.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from . import register
 
 # money expr cast: exact per-row -> exact SUM in any order -> double out
 _DEC = "decimal(18,6)"
@@ -877,83 +876,42 @@ SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM (
 # Registry
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "flagship_revenue_by_region_nation": flagship_revenue_by_region_nation,
-    "pricing_summary": pricing_summary,
-    "agg_basic": agg_basic,
-    "agg_count_distinct": agg_count_distinct,
-    "agg_having": agg_having,
-    "agg_rollup": agg_rollup,
-    "agg_cube": agg_cube,
-    "agg_grouping_sets": agg_grouping_sets,
-    "filter_incremental": filter_incremental,
-    "join_inner": join_inner,
-    "join_left": join_left,
-    "join_right": join_right,
-    "join_full": join_full,
-    "join_semi": join_semi,
-    "join_anti": join_anti,
-    "join_cross": join_cross,
-    "join_broadcast": join_broadcast,
-    "scalar_subquery": scalar_subquery,
-    "window_rank": window_rank,
-    "window_lag_lead": window_lag_lead,
-    "window_running": window_running,
-    "window_ntile": window_ntile,
-    "topk_per_group": topk_per_group,
-    "sort_limit": sort_limit,
-    "set_union_all": set_union_all,
-    "set_union_distinct": set_union_distinct,
-    "set_intersect": set_intersect,
-    "set_except": set_except,
-    "string_funcs": string_funcs,
-    "date_funcs": date_funcs,
-    "math_funcs": math_funcs,
-    "json_funcs": json_funcs,
-    "case_expr": case_expr,
-    "cast_types": cast_types,
-    "dedup_exact": dedup_exact,
-    "dedup_last_write_wins": dedup_last_write_wins,
-}
-
-ORACLE: dict[str, str] = {
-    "flagship_revenue_by_region_nation": _FLAGSHIP_SQL,
-    "pricing_summary": _PRICING_SQL,
-    "agg_basic": _AGG_BASIC_SQL,
-    "agg_count_distinct": _AGG_CD_SQL,
-    "agg_having": _AGG_HAVING_SQL,
-    "agg_rollup": _AGG_ROLLUP_SQL,
-    "agg_cube": _AGG_CUBE_SQL,
-    "agg_grouping_sets": _AGG_GSETS_SQL,
-    "filter_incremental": _FILTER_SQL,
-    "join_inner": _JOIN_INNER_SQL,
-    "join_left": _JOIN_LEFT_SQL,
-    "join_right": _JOIN_RIGHT_SQL,
-    "join_full": _JOIN_FULL_SQL,
-    "join_semi": _JOIN_SEMI_SQL,
-    "join_anti": _JOIN_ANTI_SQL,
-    "join_cross": _JOIN_CROSS_SQL,
-    "join_broadcast": _JOIN_BROADCAST_SQL,
-    "scalar_subquery": _SCALAR_SUBQ_SQL,
-    "window_rank": _WINDOW_RANK_SQL,
-    "window_lag_lead": _WINDOW_LAG_SQL,
-    "window_running": _WINDOW_RUNNING_SQL,
-    "window_ntile": _WINDOW_NTILE_SQL,
-    "topk_per_group": _TOPK_SQL,
-    "sort_limit": _SORT_LIMIT_SQL,
-    "set_union_all": _SET_UNION_ALL_SQL,
-    "set_union_distinct": _SET_UNION_SQL,
-    "set_intersect": _SET_INTERSECT_SQL,
-    "set_except": _SET_EXCEPT_SQL,
-    "string_funcs": _STRING_SQL,
-    "date_funcs": _DATE_SQL,
-    "math_funcs": _MATH_SQL,
-    "json_funcs": _JSON_SQL,
-    "case_expr": _CASE_SQL,
-    "cast_types": _CAST_SQL,
-    "dedup_exact": _DEDUP_EXACT_SQL,
-    "dedup_last_write_wins": _DEDUP_LWW_SQL,
-}
+register(flagship_revenue_by_region_nation, _FLAGSHIP_SQL)
+register(pricing_summary, _PRICING_SQL)
+register(agg_basic, _AGG_BASIC_SQL)
+register(agg_count_distinct, _AGG_CD_SQL)
+register(agg_having, _AGG_HAVING_SQL)
+register(agg_rollup, _AGG_ROLLUP_SQL)
+register(agg_cube, _AGG_CUBE_SQL)
+register(agg_grouping_sets, _AGG_GSETS_SQL)
+register(filter_incremental, _FILTER_SQL)
+register(join_inner, _JOIN_INNER_SQL)
+register(join_left, _JOIN_LEFT_SQL)
+register(join_right, _JOIN_RIGHT_SQL)
+register(join_full, _JOIN_FULL_SQL)
+register(join_semi, _JOIN_SEMI_SQL)
+register(join_anti, _JOIN_ANTI_SQL)
+register(join_cross, _JOIN_CROSS_SQL)
+register(join_broadcast, _JOIN_BROADCAST_SQL)
+register(scalar_subquery, _SCALAR_SUBQ_SQL)
+register(window_rank, _WINDOW_RANK_SQL)
+register(window_lag_lead, _WINDOW_LAG_SQL)
+register(window_running, _WINDOW_RUNNING_SQL)
+register(window_ntile, _WINDOW_NTILE_SQL)
+register(topk_per_group, _TOPK_SQL)
+register(sort_limit, _SORT_LIMIT_SQL)
+register(set_union_all, _SET_UNION_ALL_SQL)
+register(set_union_distinct, _SET_UNION_SQL)
+register(set_intersect, _SET_INTERSECT_SQL)
+register(set_except, _SET_EXCEPT_SQL)
+register(string_funcs, _STRING_SQL)
+register(date_funcs, _DATE_SQL)
+register(math_funcs, _MATH_SQL)
+register(json_funcs, _JSON_SQL)
+register(case_expr, _CASE_SQL)
+register(cast_types, _CAST_SQL)
+register(dedup_exact, _DEDUP_EXACT_SQL)
+register(dedup_last_write_wins, _DEDUP_LWW_SQL)
 
 
 def window_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,5 +943,4 @@ FROM customer
 WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal ASC, c_custkey ASC)
 """
 
-QUERIES["window_percent_rank_cume"] = window_percent_rank_cume
-ORACLE["window_percent_rank_cume"] = _WINDOW_PCT_SQL
+register(window_percent_rank_cume, _WINDOW_PCT_SQL)

@@ -7,13 +7,12 @@ pinning a stage on one task.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.skew import grouped_topk_salted, salted_agg, salted_join
+from . import register
 
 _DEC = "decimal(18,6)"
 
@@ -68,15 +67,8 @@ FROM customer JOIN nation ON c_nationkey = n_nationkey
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "salted_agg_hot_keys": salted_agg_hot_keys,
-    "salted_join_nation": salted_join_nation,
-}
-
-ORACLE: dict[str, str] = {
-    "salted_agg_hot_keys": _SALTED_AGG_SQL,
-    "salted_join_nation": _SALTED_JOIN_SQL,
-}
+register(salted_agg_hot_keys, _SALTED_AGG_SQL)
+register(salted_join_nation, _SALTED_JOIN_SQL)
 
 
 def topk_per_group_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,8 +100,7 @@ SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
 ) WHERE rn <= 3
 """
 
-QUERIES["topk_per_group_salted"] = topk_per_group_salted
-ORACLE["topk_per_group_salted"] = _TOPK_SALTED_SQL
+register(topk_per_group_salted, _TOPK_SALTED_SQL)
 
 
 def events_distinct_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,8 +136,7 @@ SELECT event_type, COUNT(DISTINCT user_id) AS approx_distinct
 FROM events GROUP BY event_type
 """
 
-QUERIES["events_distinct_users_rollup"] = events_distinct_users_rollup
-ORACLE["events_distinct_users_rollup"] = _DISTINCT_ROLLUP_SQL
+register(events_distinct_users_rollup, _DISTINCT_ROLLUP_SQL)
 
 
 def events_distinct_users_rollup_exact(
@@ -172,8 +162,7 @@ SELECT event_type, COUNT(DISTINCT user_id) AS distinct_users
 FROM events GROUP BY event_type
 """
 
-QUERIES["events_distinct_users_rollup_exact"] = events_distinct_users_rollup_exact
-ORACLE["events_distinct_users_rollup_exact"] = _DISTINCT_ROLLUP_EXACT_SQL
+register(events_distinct_users_rollup_exact, _DISTINCT_ROLLUP_EXACT_SQL)
 
 
 def events_value_quantiles_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,12 +223,7 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
 
-QUERIES["events_value_quantiles_rollup_exactmode"] = (
-    events_value_quantiles_rollup_exactmode
-)
-ORACLE["events_value_quantiles_rollup_exactmode"] = (
-    _VALUE_QUANTILES_EXACT_SQL
-)
+register(events_value_quantiles_rollup_exactmode, _VALUE_QUANTILES_EXACT_SQL)
 
 
 def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,9 +262,8 @@ JOIN n nb ON na.event_type < nb.event_type
 LEFT JOIN inter i ON i.a = na.event_type AND i.b = nb.event_type
 """
 
-QUERIES["events_value_quantiles_rollup"] = events_value_quantiles_rollup
-QUERIES["events_audience_overlap"] = events_audience_overlap
-ORACLE["events_audience_overlap"] = _AUDIENCE_OVERLAP_SQL
+register(events_value_quantiles_rollup)
+register(events_audience_overlap, _AUDIENCE_OVERLAP_SQL)
 
 
 def events_user_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,8 +299,7 @@ FROM per_key CROSS JOIN top5
 GROUP BY top_n
 """
 
-QUERIES["events_user_skew_report"] = events_user_skew_report
-ORACLE["events_user_skew_report"] = _SKEW_REPORT_SQL
+register(events_user_skew_report, _SKEW_REPORT_SQL)
 
 
 def orders_customer_join_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,8 +331,7 @@ SELECT l.n AS n_left_keys, r.n AS n_right_keys, s.n AS n_shared_keys,
 FROM l, r, s
 """
 
-QUERIES["orders_customer_join_estimate"] = orders_customer_join_estimate
-ORACLE["orders_customer_join_estimate"] = _JOIN_ESTIMATE_SQL
+register(orders_customer_join_estimate, _JOIN_ESTIMATE_SQL)
 
 
 def _interleave_sql(cols: tuple, bits: int) -> str:
@@ -436,8 +417,7 @@ SELECT CAST(file_id AS INT) AS file_id,
 FROM f GROUP BY 1
 """
 
-QUERIES["events_zorder_layout"] = events_zorder_layout
-ORACLE["events_zorder_layout"] = _ZORDER_SQL
+register(events_zorder_layout, _ZORDER_SQL)
 
 
 def events_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,5 +474,4 @@ SELECT event_type, w_end,
 FROM s GROUP BY 1, 2
 """
 
-QUERIES["events_sliding_distinct_users"] = events_sliding_distinct_users
-ORACLE["events_sliding_distinct_users"] = _SLIDING_DISTINCT_SQL
+register(events_sliding_distinct_users, _SLIDING_DISTINCT_SQL)

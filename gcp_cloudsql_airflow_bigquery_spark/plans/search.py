@@ -13,16 +13,13 @@ comparable.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.textsearch import bm25_topk
+from . import register
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
 
 # the fixed query batch (terms drawn from the fixture vocabulary)
 _QUERY_BATCH = [
@@ -92,8 +89,7 @@ SELECT query_id, doc_id, score, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= {_K}
 """
 
-QUERIES["doc_bm25_search"] = doc_bm25_search
-ORACLE["doc_bm25_search"] = _BM25_SQL
+register(doc_bm25_search, _BM25_SQL)
 
 
 # --- hybrid retrieval (r6): BM25 + vector cosine, RRF fusion ---------------
@@ -263,8 +259,7 @@ FROM f
 QUALIFY rank <= {_FUSE_K}
 """
 
-QUERIES["hybrid_search_rrf"] = hybrid_search_rrf
-ORACLE["hybrid_search_rrf"] = _HYBRID_RRF_SQL
+register(hybrid_search_rrf, _HYBRID_RRF_SQL)
 
 
 def doc_tfidf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,8 +343,7 @@ FROM scored
 QUALIFY rank <= 10
 """
 
-QUERIES["doc_tfidf_knn"] = doc_tfidf_knn
-ORACLE["doc_tfidf_knn"] = _TFIDF_KNN_SQL
+register(doc_tfidf_knn, _TFIDF_KNN_SQL)
 
 
 def embedding_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,8 +434,7 @@ cand AS MATERIALIZED (
 SELECT query_id, pick, cand_id, mmr_score FROM all10
 """
 
-QUERIES["embedding_mmr_diverse"] = embedding_mmr_diverse
-ORACLE["embedding_mmr_diverse"] = _MMR_SQL
+register(embedding_mmr_diverse, _MMR_SQL)
 
 
 def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,8 +592,7 @@ SELECT query_id, dcg_at_10, idcg_at_10,
 FROM dcg JOIN ideal USING (query_id)
 """
 
-QUERIES["search_ndcg_eval"] = search_ndcg_eval
-ORACLE["search_ndcg_eval"] = _NDCG_SQL
+register(search_ndcg_eval, _NDCG_SQL)
 
 
 # --- pseudo-relevance feedback (r8): RM1 query expansion ------------------
@@ -752,5 +744,4 @@ SELECT query_id, term,
 FROM rr WHERE rank <= {_PRF_TERMS}
 """
 
-QUERIES["search_prf_expansion"] = search_prf_expansion
-ORACLE["search_prf_expansion"] = _PRF_SQL
+register(search_prf_expansion, _PRF_SQL)

@@ -10,8 +10,6 @@ oracle side — identical int64s, no precision-truncation parity traps.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -22,6 +20,7 @@ from ..operators.temporal import (
     merge_intervals,
     sessionize_capped,
 )
+from . import register
 
 _BLACKOUT_US = 1_800_000_000  # ±30 min in epoch micros
 
@@ -356,25 +355,13 @@ FROM islands GROUP BY user_id, island
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "events_session_capped": events_session_capped,
-    "events_blackout_merged": events_blackout_merged,
-    "events_asof_purchase": events_asof_purchase,
-    "events_error_blackout": events_error_blackout,
-    "events_session_error_overlap": events_session_error_overlap,
-    "events_time_weighted_value": events_time_weighted_value,
-    "events_gap_fill_locf": events_gap_fill_locf,
-}
-
-ORACLE: dict[str, str] = {
-    "events_session_capped": _SESSION_CAPPED_SQL,
-    "events_blackout_merged": _BLACKOUT_MERGED_SQL,
-    "events_asof_purchase": _ASOF_SQL,
-    "events_error_blackout": _BLACKOUT_SQL,
-    "events_session_error_overlap": _SESSION_OVERLAP_SQL,
-    "events_time_weighted_value": _TWA_SQL,
-    "events_gap_fill_locf": _GAP_FILL_SQL,
-}
+register(events_session_capped, _SESSION_CAPPED_SQL)
+register(events_blackout_merged, _BLACKOUT_MERGED_SQL)
+register(events_asof_purchase, _ASOF_SQL)
+register(events_error_blackout, _BLACKOUT_SQL)
+register(events_session_error_overlap, _SESSION_OVERLAP_SQL)
+register(events_time_weighted_value, _TWA_SQL)
+register(events_gap_fill_locf, _GAP_FILL_SQL)
 
 
 def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,8 +421,7 @@ SELECT event_id, user_id, ts_us, ROUND(revenue, 6) AS revenue,
 FROM m WHERE rn = 1 OR rn IS NULL
 """
 
-QUERIES["events_attribution_last_touch"] = events_attribution_last_touch
-ORACLE["events_attribution_last_touch"] = _ATTRIBUTION_SQL
+register(events_attribution_last_touch, _ATTRIBUTION_SQL)
 
 
 def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,8 +494,7 @@ SELECT event_id, user_id, ts_us,
 FROM framed WHERE event_type = 'purchase'
 """
 
-QUERIES["events_attribution_linear"] = events_attribution_linear
-ORACLE["events_attribution_linear"] = _ATTRIBUTION_LINEAR_SQL
+register(events_attribution_linear, _ATTRIBUTION_LINEAR_SQL)
 
 
 def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,5 +594,4 @@ SELECT click_id, user_id,
 FROM credited GROUP BY 1, 2
 """
 
-QUERIES["events_attribution_position"] = events_attribution_position
-ORACLE["events_attribution_position"] = _ATTRIBUTION_POSITION_SQL
+register(events_attribution_position, _ATTRIBUTION_POSITION_SQL)

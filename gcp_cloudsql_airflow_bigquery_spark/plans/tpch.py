@@ -10,12 +10,11 @@ unique tie-breakers on every ORDER BY ... LIMIT.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from . import register
 
 _DEC = "decimal(18,6)"
 
@@ -242,20 +241,10 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q10_returned_items": q10_returned_items,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q19_discounted_revenue": q19_discounted_revenue,
-}
+register(q3_shipping_priority, _Q3_SQL)
+register(q5_local_supplier_volume, _Q5_SQL)
+register(q6_forecast_revenue, _Q6_SQL)
+register(q10_returned_items, _Q10_SQL)
+register(q14_promo_revenue, _Q14_SQL)
+register(q19_discounted_revenue, _Q19_SQL)
 
-ORACLE: dict[str, str] = {
-    "q3_shipping_priority": _Q3_SQL,
-    "q5_local_supplier_volume": _Q5_SQL,
-    "q6_forecast_revenue": _Q6_SQL,
-    "q10_returned_items": _Q10_SQL,
-    "q14_promo_revenue": _Q14_SQL,
-    "q19_discounted_revenue": _Q19_SQL,
-}

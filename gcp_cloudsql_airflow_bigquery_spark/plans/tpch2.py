@@ -17,12 +17,11 @@ shuffle is introduced.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from . import register
 
 _DEC = "decimal(18,6)"
 
@@ -385,24 +384,12 @@ GROUP BY cntrycode ORDER BY cntrycode
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q8_market_share": q8_market_share,
-    "q9_product_type_profit": q9_product_type_profit,
-    "q11_important_stock": q11_important_stock,
-    "q12_shipping_priority_class": q12_shipping_priority_class,
-    "q16_parts_supplier_relationship": q16_parts_supplier_relationship,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q20_potential_promotion": q20_potential_promotion,
-    "q22_global_sales_opportunity": q22_global_sales_opportunity,
-}
+register(q8_market_share, _Q8_SQL)
+register(q9_product_type_profit, _Q9_SQL)
+register(q11_important_stock, _Q11_SQL)
+register(q12_shipping_priority_class, _Q12_SQL)
+register(q16_parts_supplier_relationship, _Q16_SQL)
+register(q17_small_quantity_revenue, _Q17_SQL)
+register(q20_potential_promotion, _Q20_SQL)
+register(q22_global_sales_opportunity, _Q22_SQL)
 
-ORACLE: dict[str, str] = {
-    "q8_market_share": _Q8_SQL,
-    "q9_product_type_profit": _Q9_SQL,
-    "q11_important_stock": _Q11_SQL,
-    "q12_shipping_priority_class": _Q12_SQL,
-    "q16_parts_supplier_relationship": _Q16_SQL,
-    "q17_small_quantity_revenue": _Q17_SQL,
-    "q20_potential_promotion": _Q20_SQL,
-    "q22_global_sales_opportunity": _Q22_SQL,
-}

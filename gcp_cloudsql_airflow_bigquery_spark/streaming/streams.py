@@ -66,10 +66,8 @@ EVENT_SCHEMA = StructType(
 # cluster) is wrong in BOTH directions — 2×32 HDFS-backed state stores
 # for a 23-row sf0.1 result are pure per-batch commit overhead, and the
 # same constant starves a 100 TB feed.  Derive the count from the bytes
-# the source will feed the query instead; the target is a Spark conf so
-# production deployments size it like any other partition-bytes knob.
-_STATE_TARGET_CONF = "spark.graft.streaming.statePartitionTargetBytes"
-_STATE_TARGET_DEFAULT = 128 * 1024 * 1024
+# the source will feed the query instead.
+_STATE_TARGET_BYTES = 128 * 1024 * 1024
 
 
 def _source_bytes(path: str) -> int:
@@ -103,18 +101,11 @@ def scaled_state_partitions(spark: SparkSession, *paths: str):
     batch queries untouched.  The rule is monotone in data size — it is
     NOT a local-core-count tune: at sf0.1 (2 MB of events) it yields 1
     state store instead of 32, on a 100 TB feed it yields more
-    partitions than any session default, and the per-partition target
-    is conf-overridable (``spark.graft.streaming.statePartitionTargetBytes``,
-    default 128 MB per guide §2.2's 100 MB–1 GB band).
+    partitions than any session default.  The per-partition target is
+    128 MB, inside guide §2.2's 100 MB–1 GB band.
     """
-    try:
-        target = int(
-            spark.conf.get(_STATE_TARGET_CONF, str(_STATE_TARGET_DEFAULT))
-        )
-    except ValueError:
-        target = _STATE_TARGET_DEFAULT
     nbytes = sum(_source_bytes(p) for p in paths)
-    n = max(1, math.ceil(nbytes / max(1, target)))
+    n = max(1, math.ceil(nbytes / _STATE_TARGET_BYTES))
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

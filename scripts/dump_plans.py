@@ -13,6 +13,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES  # noqa: E402
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -33,8 +34,8 @@ def main() -> None:
         "|---|---|---|---|---|---|",
     ]
     scans: list[str] = []
-    for name, registry in HEADLINE:
-        df = registry[name](spark, SF_DIR)
+    for name in HEADLINE:
+        df = QUERIES[name](spark, SF_DIR)
         p = df._jdf.queryExecution().executedPlan().toString()
         lines.append(
             f"| {name} | {p.count('Exchange hashpartitioning')} "

@@ -3,24 +3,14 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 from gcp_cloudsql_airflow_bigquery_spark.operators import curation
-from gcp_cloudsql_airflow_bigquery_spark.plans import curation as plans
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
 
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
-@pytest.mark.parametrize("name", sorted(plans.QUERIES))
-def test_curation_matches_oracle(spark, duck, sf_dir, name):
-    df = plans.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, plans.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    assert set(plans.QUERIES) == set(plans.ORACLE)
+test_curation_matches_oracle = oracle_test("curation")
 
 
 def test_chunks_cover_full_text(spark, sf_dir):

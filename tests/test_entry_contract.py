@@ -1,11 +1,20 @@
 """Driver-contract meta-tests for ``__spark_entry__``: name hygiene and
-the smoke path.  These catch the silent failure modes of the registry
-pattern — a duplicate query name shadowing an earlier module's entry
-via dict.update, or an oracle key with no matching query."""
+the smoke path.  These catch the silent failure modes of the registry:
+a duplicate query name, an oracle key with no matching query, or a
+registration order that depends on which module is imported first."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
+import inspect
+import os
+import subprocess
+import sys
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _entry():
@@ -18,13 +27,52 @@ def _entry():
 
 
 def test_no_duplicate_query_names_across_modules():
-    mod = _entry()
-    total = sum(len(m.QUERIES) for m in mod._MODULES)
-    merged = mod.queries()
-    assert total == len(merged), (
-        "duplicate query name across plan modules shadows an entry: "
-        f"{total} module entries -> {len(merged)} merged"
+    """``register`` refuses a name that is already registered and
+    leaves the registry as it was."""
+    from gcp_cloudsql_airflow_bigquery_spark import plans
+    from gcp_cloudsql_airflow_bigquery_spark.plans import ORACLE, QUERIES, register
+
+    before_q, before_o = list(QUERIES.items()), list(ORACLE.items())
+    with pytest.raises(ValueError, match="q3_shipping_priority"):
+        register(plans.tpch.q3_shipping_priority, "SELECT 1")
+    assert list(QUERIES.items()) == before_q
+    assert list(ORACLE.items()) == before_o
+
+
+def _registry_families(first_import: str) -> list[str]:
+    """The registering plans module of each registry entry, in a fresh
+    interpreter that imports ``first_import`` first."""
+    code = (
+        f"import {first_import}\n"
+        "from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES\n"
+        "for f in QUERIES.values():\n"
+        "    m = f.__module__.rsplit('.', 1)[-1]\n"
+        "    print('events' if m == 'streams' else m)\n"
     )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True,
+        check=True,
+    )
+    return out.stdout.split()
+
+
+def test_registry_order_is_import_order():
+    """Each plans module's entries form one block, in the order the
+    package imports the modules, whichever module is imported first.  A
+    plan module that imports a sibling at import time breaks this."""
+    from gcp_cloudsql_airflow_bigquery_spark import plans
+
+    families = _registry_families("__spark_entry__")
+    assert _registry_families(f"{plans.__name__}.advanced") == families
+    blocks = [f for i, f in enumerate(families) if i == 0 or families[i - 1] != f]
+    init = ast.parse(inspect.getsource(plans))
+    imported = [
+        alias.name
+        for node in init.body
+        if isinstance(node, ast.ImportFrom) and node.level == 1 and not node.module
+        for alias in node.names
+    ]
+    assert blocks == imported
 
 
 def test_every_oracle_key_has_a_query():

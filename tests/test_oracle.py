@@ -1,0 +1,83 @@
+"""Oracle-differential tests over the one query registry.
+
+Every ``ORACLE`` pair runs Spark against DuckDB on the sf0.001 fixture,
+and every rows-only entry at least runs.  The pairs are grouped by the
+plans module that registers them: each family's test lives beside that
+family's other tests (``test_<family>_matches_oracle``), built here by
+``oracle_test``.  dq has no other tests, so its family runs here."""
+
+from __future__ import annotations
+
+import importlib
+
+import pytest
+
+from gcp_cloudsql_airflow_bigquery_spark.plans import ORACLE, QUERIES
+from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
+
+# the entries with no oracle: engine-specific hashes and sketches,
+# Python-side media features, driver-side eigh
+ROWS_ONLY = {
+    "agg_approx_sketch",
+    "doc_dedup_minhash",
+    "embedding_pca_projected",
+    "events_value_quantiles_rollup",
+    "media_codec_features",
+    "media_features",
+    "media_resized",
+}
+
+# the test module that runs each family's oracle pairs
+FAMILY_TESTS = {
+    "tpch": "test_oracle_tpch",
+    "tpch2": "test_oracle_tpch2",
+    "temporal": "test_temporal",
+    "quality": "test_oracle_quality",
+    "curation": "test_curation",
+    "dq": "test_oracle",
+    "search": "test_oracle_search",
+    "scale": "test_scale",
+    "llmdata": "test_oracle_llmdata",
+    "events": "test_oracle_events",
+    "relational": "test_oracle_relational",
+    "advanced": "test_oracle_advanced",
+}
+
+
+def family(name: str) -> str:
+    """The plans module that registers ``name`` (events registers the
+    streams of ``streaming/streams.py``)."""
+    module = QUERIES[name].__module__.rsplit(".", 1)[-1]
+    return "events" if module == "streams" else module
+
+
+def oracle_test(fam: str):
+    @pytest.mark.parametrize("name", sorted(n for n in ORACLE if family(n) == fam))
+    def test(spark, duck, sf_dir, name):
+        df = QUERIES[name](spark, sf_dir)
+        mismatch = compare_spark_duckdb(df, duck, ORACLE[name])
+        assert mismatch is None, f"{name}: {mismatch}"
+
+    return test
+
+
+def rows_only_test(fam: str):
+    @pytest.mark.parametrize("name", sorted(n for n in ROWS_ONLY if family(n) == fam))
+    def test(spark, sf_dir, name):
+        assert QUERIES[name](spark, sf_dir).count() > 0
+
+    return test
+
+
+test_dq_matches_oracle = oracle_test("dq")
+
+
+def test_registry_keys_align():
+    assert set(ORACLE) <= set(QUERIES)
+    assert set(QUERIES) - set(ORACLE) == ROWS_ONLY
+
+
+def test_every_oracle_pair_has_a_test():
+    assert {family(n) for n in ORACLE} == set(FAMILY_TESTS)
+    for fam, module in FAMILY_TESTS.items():
+        assert hasattr(importlib.import_module(module), f"test_{fam}_matches_oracle")

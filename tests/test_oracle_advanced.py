@@ -2,24 +2,13 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
 
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
-@pytest.mark.parametrize("name", sorted(advanced.ORACLE))
-def test_advanced_matches_oracle(spark, duck, sf_dir, name):
-    df = advanced.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, advanced.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    # rows-only entries (sketch estimates) have a query but no oracle
-    assert set(advanced.ORACLE) <= set(advanced.QUERIES)
-    assert set(advanced.QUERIES) - set(advanced.ORACLE) == {"agg_approx_sketch"}
+test_advanced_matches_oracle = oracle_test("advanced")
 
 
 def test_approx_sketch_accuracy(spark, duck, sf_dir):

@@ -2,21 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import events
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(events.ORACLE))
-def test_events_matches_oracle(spark, duck, sf_dir, name):
-    df = events.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, events.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-@pytest.mark.parametrize("name", sorted(set(events.QUERIES) - set(events.ORACLE)))
-def test_events_rows_only_runs(spark, sf_dir, name):
-    # iterative/non-SQL-expressible plans: the driver's weaker rows-only check
-    df = events.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+test_events_matches_oracle = oracle_test("events")

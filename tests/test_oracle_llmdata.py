@@ -2,20 +2,7 @@
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test, rows_only_test
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(llmdata.ORACLE))
-def test_llmdata_matches_oracle(spark, duck, sf_dir, name):
-    df = llmdata.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, llmdata.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-@pytest.mark.parametrize("name", sorted(set(llmdata.QUERIES) - set(llmdata.ORACLE)))
-def test_llmdata_rows_only_runs(spark, sf_dir, name):
-    df = llmdata.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+test_llmdata_matches_oracle = oracle_test("llmdata")
+test_llmdata_rows_only_runs = rows_only_test("llmdata")

@@ -3,20 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import quality
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(quality.ORACLE))
-def test_quality_matches_oracle(spark, duck, sf_dir, name):
-    df = quality.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, quality.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-@pytest.mark.parametrize("name", sorted(set(quality.QUERIES) - set(quality.ORACLE)))
-def test_quality_rows_only_runs(spark, sf_dir, name):
-    df = quality.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+test_quality_matches_oracle = oracle_test("quality")

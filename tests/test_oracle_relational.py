@@ -2,18 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import relational
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(relational.QUERIES))
-def test_relational_matches_oracle(spark, duck, sf_dir, name):
-    df = relational.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, relational.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    assert set(relational.QUERIES) == set(relational.ORACLE)
+test_relational_matches_oracle = oracle_test("relational")

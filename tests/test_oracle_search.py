@@ -3,22 +3,6 @@ tf-idf kNN / MMR / nDCG / PRF expansion)."""
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import search
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(search.ORACLE))
-def test_search_matches_oracle(spark, duck, sf_dir, name):
-    df = search.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, search.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-@pytest.mark.parametrize(
-    "name", sorted(set(search.QUERIES) - set(search.ORACLE))
-)
-def test_search_rows_only_runs(spark, sf_dir, name):
-    df = search.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+test_search_matches_oracle = oracle_test("search")

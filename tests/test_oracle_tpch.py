@@ -2,18 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import tpch
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(tpch.QUERIES))
-def test_tpch_matches_oracle(spark, duck, sf_dir, name):
-    df = tpch.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, tpch.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    assert set(tpch.QUERIES) == set(tpch.ORACLE)
+test_tpch_matches_oracle = oracle_test("tpch")

@@ -3,21 +3,11 @@
 
 from __future__ import annotations
 
-import pytest
-
 from gcp_cloudsql_airflow_bigquery_spark.plans import tpch2
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
 
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
-@pytest.mark.parametrize("name", sorted(tpch2.QUERIES))
-def test_tpch2_matches_oracle(spark, duck, sf_dir, name):
-    df = tpch2.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, tpch2.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    assert set(tpch2.QUERIES) == set(tpch2.ORACLE)
+test_tpch2_matches_oracle = oracle_test("tpch2")
 
 
 def test_q22_nonempty(spark, sf_dir):

@@ -7,11 +7,11 @@ from __future__ import annotations
 
 import pytest
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import relational
+from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
 
 def _plan(spark, sf_dir, name):
-    df = relational.QUERIES[name](spark, sf_dir)
+    df = QUERIES[name](spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -86,9 +86,7 @@ def test_partition_pruning_static_and_dynamic(spark, sf_dir, tmp_path_factory):
 def test_repetition_stats_is_fully_narrow(spark, sf_dir):
     # the per-doc quality signals must never pay a corpus exchange
     # (the explode/groupBy formulation was ~20× slower at sf0.1)
-    from gcp_cloudsql_airflow_bigquery_spark.plans import quality
-
-    df = quality.QUERIES["doc_repetition"](spark, sf_dir)
+    df = QUERIES["doc_repetition"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p, p
 
@@ -96,9 +94,7 @@ def test_repetition_stats_is_fully_narrow(spark, sf_dir):
 def test_decontaminate_probes_broadcast_benchmark(spark, sf_dir):
     # corpus side must stay a map-side broadcast-hash probe; the only
     # hash exchanges are the tiny bench-side distinct + final count
-    from gcp_cloudsql_airflow_bigquery_spark.plans import quality
-
-    df = quality.QUERIES["doc_decontaminated"](spark, sf_dir)
+    df = QUERIES["doc_decontaminated"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
@@ -107,9 +103,7 @@ def test_decontaminate_probes_broadcast_benchmark(spark, sf_dir):
 def test_mix_resample_broadcasts_rates(spark, sf_dir):
     # the corpus pass of the resampler is a narrow filter/explode over a
     # broadcast rate table — no corpus shuffle at any temperature
-    from gcp_cloudsql_airflow_bigquery_spark.plans import curation
-
-    df = curation.QUERIES["doc_mix_resampled"](spark, sf_dir)
+    df = QUERIES["doc_mix_resampled"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
@@ -140,9 +134,7 @@ def test_multires_rollup_single_scan(spark, sf_dir):
     """GROUPING SETS must materialize all three resolutions from ONE
     events scan (the 1×-vs-3× I/O claim in SCALE.md) with a single
     aggregation exchange over the expanded buckets."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
-
-    df = events.QUERIES["events_multires_rollup"](spark, sf_dir)
+    df = QUERIES["events_multires_rollup"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert p.count("Scan parquet") == 1, p
     assert "Expand" in p, p
@@ -152,9 +144,7 @@ def test_overlap_join_no_theta_join(spark, sf_dir):
     """The interval-overlap join must plan as an equi-join on
     (user, bucket) — never a BroadcastNestedLoopJoin/CartesianProduct —
     and need no distinct exchange for pair dedup."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import temporal
-
-    df = temporal.QUERIES["events_session_error_overlap"](spark, sf_dir)
+    df = QUERIES["events_session_error_overlap"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in p, p
     assert "CartesianProduct" not in p, p
@@ -167,9 +157,7 @@ def test_bloom_new_docs_broadcasts_bitmap_not_corpus(spark, sf_dir):
     """The bloom probe must broadcast the one-row bitmap; the corpus
     digest side of the verify join must NOT be hint-broadcast (it grows
     with the corpus — the bitmap is the only corpus-size-free summary)."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
-
-    df = llmdata.QUERIES["doc_bloom_incremental_new"](spark, sf_dir)
+    df = QUERIES["doc_bloom_incremental_new"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     # bitmap probe: nested-loop broadcast of a single row is expected
     assert "BroadcastNestedLoopJoin" in p, p
@@ -316,13 +304,14 @@ def _unpartitioned_windows(df):
     return bad
 
 
-import __spark_entry__ as _entrymod
+# the registry chunked by the module that defines each query
+_CHUNKS: dict[str, dict] = {}
+for _name, _fn in QUERIES.items():
+    _CHUNKS.setdefault(_fn.__module__.rsplit(".", 1)[-1], {})[_name] = _fn
 
 
-@pytest.mark.parametrize(
-    "mod", _entrymod._MODULES, ids=lambda m: m.__name__.rsplit(".", 1)[-1]
-)
-def test_no_unpartitioned_window_over_corpus_inputs(spark, sf_dir, mod):
+@pytest.mark.parametrize("chunk", list(_CHUNKS))
+def test_no_unpartitioned_window_over_corpus_inputs(spark, sf_dir, chunk):
     """Registry-wide guard closing the class of bug behind the old
     global-ntile plans (doc_curriculum_buckets / window_ntile, fixed
     via operators.curation.exact_ntile): no query may plan a
@@ -332,13 +321,12 @@ def test_no_unpartitioned_window_over_corpus_inputs(spark, sf_dir, mod):
     the targeted tests: broadcast 1-row scalar crossJoins legitimately
     plan as BNLJ).
 
-    r11 (VERDICT r10 #2): chunked per plans-module — ``queries()`` is
-    exactly the overlay of ``_MODULES``' QUERIES dicts, so the union of
-    the chunks is the old registry-wide sweep, but a driver run that
-    hits its time budget mid-suite still reports every finished module,
-    and offenders within one module still surface together."""
+    Chunked by defining module (the registered streams are their own
+    chunk): the chunks together are the whole registry, but a run that
+    hits its time budget mid-suite still reports every finished chunk,
+    and offenders within one chunk still surface together."""
     offenders = {}
-    for name, fn in mod.QUERIES.items():
+    for name, fn in _CHUNKS[chunk].items():
         df = fn(spark, sf_dir)
         bad = _unpartitioned_windows(df)
         if bad and name not in _GLOBAL_WINDOW_ALLOWLIST:
@@ -416,14 +404,12 @@ def test_dehinted_dims_still_autobroadcast_at_test_sf(spark, sf_dir):
     """De-hinting must not change the bench-scale strategy: customer /
     supplier / part are all under autoBroadcastJoinThreshold at test SF,
     so Catalyst still picks BroadcastHashJoin without the hint."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import dq, tpch
-
-    p3 = tpch.QUERIES["q3_shipping_priority"](spark, sf_dir)
+    p3 = QUERIES["q3_shipping_priority"](spark, sf_dir)
     plan3 = p3._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan3, plan3
     assert "SortMergeJoin" not in plan3, plan3
 
-    p5 = tpch.QUERIES["q5_local_supplier_volume"](spark, sf_dir)
+    p5 = QUERIES["q5_local_supplier_volume"](spark, sf_dir)
     plan5 = p5._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan5, plan5
 

@@ -186,9 +186,9 @@ def test_pagerank_matches_numpy_power_iteration(spark):
 
 
 def test_event_type_pagerank_runs(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    rows = ev.QUERIES["event_type_pagerank"](spark, sf_dir).collect()
+    rows = QUERIES["event_type_pagerank"](spark, sf_dir).collect()
     assert len(rows) == 5  # five event types
     assert abs(sum(r.rank for r in rows) - 1.0) < 1e-3
 

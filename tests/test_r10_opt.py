@@ -13,7 +13,7 @@ from __future__ import annotations
 from collections import defaultdict
 
 from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
 
 def test_clustering_coefficient_matches_python_replay(spark, sf_dir):
@@ -38,7 +38,7 @@ def test_clustering_coefficient_matches_python_replay(spark, sf_dir):
 
     got = {
         r.partkey: r
-        for r in advanced.QUERIES["part_clustering_coefficient"](
+        for r in QUERIES["part_clustering_coefficient"](
             spark, sf_dir
         ).collect()
     }

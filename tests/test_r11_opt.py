@@ -2,13 +2,11 @@
 OPTIMIZATION_r11.md).
 
 - Wave 1: streaming state-store sizing — the derived partition count
-  follows ceil(bytes/target), the session conf is restored, and the
-  target is conf-overridable.
-- Wave 2: SQL-string iterative rounds (pagerank / HITS) — the temp
-  views backing the per-round spark.sql statements are dropped when
-  the operator returns (a leaked view would collide with nothing —
-  names are uuid-tagged — but would pin the checkpointed frames
-  alive for the session).
+  follows ceil(bytes/target) and the session conf is restored.
+- Wave 2: SQL-string iterative rounds (pagerank / HITS) — the frames
+  passed to the per-round spark.sql statements leave no temp view
+  behind (a leaked view would pin the checkpointed frames alive for
+  the session).
 Value semantics of both waves are pinned elsewhere: every touched
 query is oracle-paired (tests/test_oracle_*), and pagerank vs numpy
 power iteration is asserted in tests/test_quality_ops.py.
@@ -19,15 +17,15 @@ from __future__ import annotations
 import math
 import os
 
+from gcp_cloudsql_airflow_bigquery_spark.streaming import streams
 from gcp_cloudsql_airflow_bigquery_spark.streaming.streams import (
-    _STATE_TARGET_CONF,
     scaled_state_partitions,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_scaled_state_partitions_derives_and_restores(spark):
+def test_scaled_state_partitions_derives_and_restores(spark, monkeypatch):
     path = os.path.join(SF_DIR, "events.parquet")
     nbytes = os.path.getsize(path)
     before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -36,13 +34,10 @@ def test_scaled_state_partitions_derives_and_restores(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-    # conf-overridable target: tiny target -> one partition per chunk
-    spark.conf.set(_STATE_TARGET_CONF, str(1024))
-    try:
-        with scaled_state_partitions(spark, path) as n:
-            assert n == math.ceil(nbytes / 1024)
-    finally:
-        spark.conf.unset(_STATE_TARGET_CONF)
+    # tiny target -> one partition per KB of input
+    monkeypatch.setattr(streams, "_STATE_TARGET_BYTES", 1024)
+    with scaled_state_partitions(spark, path) as n:
+        assert n == math.ceil(nbytes / 1024)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -57,12 +52,8 @@ def test_scaled_state_partitions_restores_on_error(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def _leaked_views(spark, prefixes: tuple[str, ...]) -> list[str]:
-    return [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.isTemporary and t.name.startswith(prefixes)
-    ]
+def _temp_views(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
 
 
 def test_pagerank_sql_rounds_drop_temp_views(spark):
@@ -70,9 +61,10 @@ def test_pagerank_sql_rounds_drop_temp_views(spark):
         event_type_pagerank,
     )
 
+    before = _temp_views(spark)
     df = event_type_pagerank(spark, SF_DIR)
     assert df.count() > 0
-    assert _leaked_views(spark, ("pr_norm_", "pr_ranks_")) == []
+    assert _temp_views(spark) == before
 
 
 def test_hits_sql_rounds_drop_temp_views(spark):
@@ -80,8 +72,7 @@ def test_hits_sql_rounds_drop_temp_views(spark):
         event_type_hits,
     )
 
+    before = _temp_views(spark)
     df = event_type_hits(spark, SF_DIR)
     assert df.count() > 0
-    assert _leaked_views(
-        spark, ("hits_edges_", "hits_nodes_", "hits_score_")
-    ) == []
+    assert _temp_views(spark) == before

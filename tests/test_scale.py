@@ -3,28 +3,16 @@ naive formulations (checked via the DuckDB oracle)."""
 
 from __future__ import annotations
 
-import pytest
+from test_oracle import (  # noqa: F401
+    oracle_test,
+    rows_only_test,
+    test_registry_keys_align,
+)
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import scale
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
-
-
-@pytest.mark.parametrize("name", sorted(scale.ORACLE))
-def test_scale_matches_oracle(spark, duck, sf_dir, name):
-    df = scale.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, scale.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-@pytest.mark.parametrize("name", sorted(set(scale.QUERIES) - set(scale.ORACLE)))
-def test_scale_rows_only_runs(spark, sf_dir, name):
-    # sketch-rollup estimates are engine-specific: the driver's weaker
-    # rows-only check applies; accuracy is pinned in tests/test_llmdata.py
-    assert scale.QUERIES[name](spark, sf_dir).count() > 0
-
-
-def test_registry_keys_align():
-    assert set(scale.ORACLE) <= set(scale.QUERIES)
+test_scale_matches_oracle = oracle_test("scale")
+# sketch-rollup estimates are engine-specific: the driver's weaker
+# rows-only check applies; accuracy is pinned in tests/test_llmdata.py
+test_scale_rows_only_runs = rows_only_test("scale")
 
 
 def test_zorder_write_prunes_2d_boxes(spark, tmp_path):

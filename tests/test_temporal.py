@@ -8,8 +8,8 @@ from gcp_cloudsql_airflow_bigquery_spark.operators.temporal import (
     asof_join,
     interval_point_join,
 )
-from gcp_cloudsql_airflow_bigquery_spark.plans import temporal
-from gcp_cloudsql_airflow_bigquery_spark.testing import compare_spark_duckdb
+
+from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
 
 
 @pytest.fixture(scope="module")
@@ -90,15 +90,7 @@ def test_interval_point_join_bounds(spark):
     assert out.count() == 3
 
 
-@pytest.mark.parametrize("name", sorted(temporal.QUERIES))
-def test_temporal_matches_oracle(spark, duck, sf_dir, name):
-    df = temporal.QUERIES[name](spark, sf_dir)
-    mismatch = compare_spark_duckdb(df, duck, temporal.ORACLE[name])
-    assert mismatch is None, f"{name}: {mismatch}"
-
-
-def test_registry_keys_align():
-    assert set(temporal.QUERIES) == set(temporal.ORACLE)
+test_temporal_matches_oracle = oracle_test("temporal")
 
 
 from hypothesis import given, settings, strategies as st

@@ -9,12 +9,7 @@ import math
 
 import duckdb
 
-from gcp_cloudsql_airflow_bigquery_spark.plans import (
-    advanced,
-    events,
-    quality,
-    search,
-)
+from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES, search
 
 SF = "/root/testdata/sf0.001"
 
@@ -60,7 +55,7 @@ def test_adamic_adar_matches_python_replay(spark):
     )[:30]
     got = [
         (r.aa_score, r.a, r.b)
-        for r in advanced.QUERIES["part_adamic_adar"](spark, SF).collect()
+        for r in QUERIES["part_adamic_adar"](spark, SF).collect()
     ]
     assert got == want
 
@@ -81,7 +76,7 @@ def test_decay_value_matches_python_replay(spark):
             cnt_sum[1] += v * 0.5 ** ((anchor - d).days / 30.0)
     got = {
         r.user_id: (r.n_events, r.decayed_value)
-        for r in events.QUERIES["events_decay_value"](spark, SF).collect()
+        for r in QUERIES["events_decay_value"](spark, SF).collect()
     }
     assert set(got) == set(agg)
     for u, (n, s) in agg.items():
@@ -92,7 +87,7 @@ def test_decay_value_matches_python_replay(spark):
 def test_calibration_bins_structurally_sound(spark):
     """Bins in 0..9, counts sum to the corpus, frac_pos in [0,1], and
     avg_pred falls inside its own bin's score range."""
-    rows = quality.QUERIES["doc_quality_calibration"](spark, SF).collect()
+    rows = QUERIES["doc_quality_calibration"](spark, SF).collect()
     n_docs = duckdb.sql(
         f"SELECT COUNT(*) FROM read_parquet('{SF}/documents.parquet')"
     ).fetchone()[0]
@@ -108,7 +103,7 @@ def test_calibration_bins_structurally_sound(spark):
 def test_prf_expansion_excludes_query_terms_and_ranks(spark):
     """Expansion terms never repeat the query's own terms, at most 5
     per query, ranks contiguous from 1, rm1 non-increasing in rank."""
-    out = search.QUERIES["search_prf_expansion"](spark, SF).collect()
+    out = QUERIES["search_prf_expansion"](spark, SF).collect()
     qterms = {
         qid: set(text.lower().split()) for qid, text in search._QUERY_BATCH
     }

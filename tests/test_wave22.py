@@ -15,9 +15,9 @@ def test_heaps_law_matches_python_replay(spark, sf_dir):
     same bucketing on the same fixture (exact integers; the OLS fit
     compared to 6 decimals like the oracle)."""
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = llmdata.QUERIES["doc_heaps_law"](spark, sf_dir).first()
+    got = QUERIES["doc_heaps_law"](spark, sf_dir).first()
 
     docs = [
         (r.doc_id, r.text.strip().lower())
@@ -66,9 +66,9 @@ def test_rfm_segments_bucket_properties(spark, sf_dir):
     by at most one (the NTILE contract), the cell code decomposes back
     into the three scores, and the best-spend customer scores m=1."""
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    rows = advanced.QUERIES["customer_rfm_segments"](spark, sf_dir).collect()
+    rows = QUERIES["customer_rfm_segments"](spark, sf_dir).collect()
     n = len(rows)
     assert n > 0
     for col in ("r_score", "f_score", "m_score"):
@@ -94,9 +94,9 @@ def test_assortativity_matches_python_replay(spark, sf_dir):
     """part_graph_assortativity equals a pure-Python Pearson over the
     collected edge list (exact integer sums, same closed form)."""
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = advanced.QUERIES["part_graph_assortativity"](spark, sf_dir).first()
+    got = QUERIES["part_graph_assortativity"](spark, sf_dir).first()
 
     li = [
         (r.l_orderkey, r.l_partkey)
@@ -137,11 +137,11 @@ def test_trimmed_mean_matches_python_replay(spark, sf_dir):
     from decimal import Decimal
 
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.priority: r
-        for r in advanced.QUERIES["orders_trimmed_mean_price"](
+        for r in QUERIES["orders_trimmed_mean_price"](
             spark, sf_dir
         ).collect()
     }
@@ -170,11 +170,11 @@ def test_trimmed_mean_matches_python_replay(spark, sf_dir):
 def test_entry_exit_sessions_reconcile_with_session_query(spark, sf_dir):
     """The entry/exit matrix accounts for exactly the sessions the
     5-minute-gap events_session query produces."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    matrix = events.QUERIES["events_session_entry_exit"](spark, sf_dir).collect()
+    matrix = QUERIES["events_session_entry_exit"](spark, sf_dir).collect()
     n_total = sum(r.n_sessions for r in matrix)
-    n_sessions = events.QUERIES["events_session"](spark, sf_dir).count()
+    n_sessions = QUERIES["events_session"](spark, sf_dir).count()
     assert n_total == n_sessions
     assert all(r.n_bounces <= r.n_sessions for r in matrix)
     for r in matrix:
@@ -186,11 +186,11 @@ def test_entry_exit_sessions_reconcile_with_session_query(spark, sf_dir):
 def test_brown_trend_matches_iterative_recursion(spark, sf_dir):
     """events_brown_trend_daily's closed form equals the literal
     two-pass recurrence run in Python over the same daily counts."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES, events
 
     got = {
         r.event_type: r
-        for r in events.QUERIES["events_brown_trend_daily"](
+        for r in QUERIES["events_brown_trend_daily"](
             spark, sf_dir
         ).collect()
     }
@@ -229,9 +229,9 @@ def test_knn_graph_recall_vs_bruteforce(spark, sf_dir):
     import numpy as np
 
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    rows = llmdata.QUERIES["embedding_knn_graph"](spark, sf_dir).collect()
+    rows = QUERIES["embedding_knn_graph"](spark, sf_dir).collect()
     by_q: dict[int, list] = {}
     for r in rows:
         assert r.query_id != r.neighbor_id

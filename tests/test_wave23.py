@@ -28,9 +28,9 @@ def _per_user_value_sums(spark, sf_dir):
 
 
 def test_welch_ttest_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = events.QUERIES["events_welch_ttest"](spark, sf_dir).first()
+    got = QUERIES["events_welch_ttest"](spark, sf_dir).first()
     sums = _per_user_value_sums(spark, sf_dir)
     a = [v for u, v in sums.items() if _variant(u) == "A"]
     b = [v for u, v in sums.items() if _variant(u) == "B"]
@@ -54,11 +54,11 @@ def test_welch_ttest_matches_python_replay(spark, sf_dir):
 
 
 def test_cuped_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     rows = {
         r.variant: r
-        for r in events.QUERIES["events_cuped_adjusted"](spark, sf_dir).collect()
+        for r in QUERIES["events_cuped_adjusted"](spark, sf_dir).collect()
     }
     ev = [
         r
@@ -112,9 +112,9 @@ def test_cuped_matches_python_replay(spark, sf_dir):
 
 
 def test_anova_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = events.QUERIES["events_anova_value_by_type"](spark, sf_dir).first()
+    got = QUERIES["events_anova_value_by_type"](spark, sf_dir).first()
     groups: dict[str, list[float]] = defaultdict(list)
     for r in load_table(spark, sf_dir, "events").collect():
         groups[r.event_type].append(round(r.value, 6))
@@ -134,11 +134,11 @@ def test_anova_matches_python_replay(spark, sf_dir):
 
 
 def test_hits_matches_python_power_iteration(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES, events as ev
 
     got = {
         r.event_type: (r.hub, r.authority)
-        for r in ev.QUERIES["event_type_hits"](spark, sf_dir).collect()
+        for r in QUERIES["event_type_hits"](spark, sf_dir).collect()
     }
     rows = sorted(
         (r for r in load_table(spark, sf_dir, "events").collect()),
@@ -189,11 +189,11 @@ def _copurchase_edges(spark, sf_dir):
 
 
 def test_clustering_coefficient_matches_bruteforce(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.partkey: (r.degree, r.triangles, r.lcc)
-        for r in advanced.QUERIES["part_clustering_coefficient"](
+        for r in QUERIES["part_clustering_coefficient"](
             spark, sf_dir
         ).collect()
     }
@@ -222,9 +222,9 @@ def test_clustering_coefficient_matches_bruteforce(spark, sf_dir):
 
 
 def test_item_cf_matches_bruteforce(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    rows = advanced.QUERIES["part_item_cf_recs"](spark, sf_dir).collect()
+    rows = QUERIES["part_item_cf_recs"](spark, sf_dir).collect()
     li = load_table(spark, sf_dir, "lineitem").collect()
     orders = {
         r.o_orderkey: r.o_custkey
@@ -255,11 +255,11 @@ def test_item_cf_matches_bruteforce(spark, sf_dir):
 
 
 def test_elasticity_matches_python_ols(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.brand: (r.n_months, r.elasticity)
-        for r in advanced.QUERIES["brand_price_elasticity"](
+        for r in QUERIES["brand_price_elasticity"](
             spark, sf_dir
         ).collect()
     }
@@ -289,11 +289,11 @@ def test_elasticity_matches_python_ols(spark, sf_dir):
 
 
 def test_position_attribution_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import temporal
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     rows = {
         r.click_id: (r.n_purchases, r.attributed_revenue)
-        for r in temporal.QUERIES["events_attribution_position"](
+        for r in QUERIES["events_attribution_position"](
             spark, sf_dir
         ).collect()
     }
@@ -343,11 +343,11 @@ def test_position_attribution_matches_python_replay(spark, sf_dir):
 
 
 def test_als_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES, advanced
 
     got = {
         r.brand: (r.n_raters, r.q1, r.q2, r.rmse)
-        for r in advanced.QUERIES["brand_als_factors"](spark, sf_dir).collect()
+        for r in QUERIES["brand_als_factors"](spark, sf_dir).collect()
     }
     li = load_table(spark, sf_dir, "lineitem").collect()
     orders = {

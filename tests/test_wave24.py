@@ -12,11 +12,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_nelson_aalen_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     rows = {
         r.t_week: r
-        for r in advanced.QUERIES["customer_hazard_na"](spark, sf_dir).collect()
+        for r in QUERIES["customer_hazard_na"](spark, sf_dir).collect()
     }
     orders = sorted(
         load_table(spark, sf_dir, "orders").collect(),
@@ -54,7 +54,7 @@ def test_nelson_aalen_matches_python_replay(spark, sf_dir):
     # Fleming-Harrington tracks KM: exp(-H) >= KM product everywhere
     km = {
         r.t_week: r
-        for r in advanced.QUERIES["customer_survival_km"](spark, sf_dir).collect()
+        for r in QUERIES["customer_survival_km"](spark, sf_dir).collect()
     }
     surv_col = [c for c in ("survival", "surv_km", "km") if c in next(iter(km.values())).asDict()]
     if surv_col:
@@ -64,11 +64,11 @@ def test_nelson_aalen_matches_python_replay(spark, sf_dir):
 
 
 def test_modularity_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.community: (r.n_nodes, r.w_in, r.w_deg, r.q_contribution)
-        for r in ev.QUERIES["event_state_modularity"](spark, sf_dir).collect()
+        for r in QUERIES["event_state_modularity"](spark, sf_dir).collect()
     }
     rows = sorted(
         load_table(spark, sf_dir, "events").collect(),
@@ -119,11 +119,11 @@ def test_modularity_matches_python_replay(spark, sf_dir):
 
 
 def test_chunk_dedup_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import curation as cur
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.chunk_md5: (r.n_docs, r.n_occurrences, r.first_doc, r.last_doc)
-        for r in cur.QUERIES["doc_chunk_dedup"](spark, sf_dir).collect()
+        for r in QUERIES["doc_chunk_dedup"](spark, sf_dir).collect()
     }
     docs = [
         (r.doc_id, r.text)
@@ -147,11 +147,11 @@ def test_chunk_dedup_matches_python_replay(spark, sf_dir):
 
 
 def test_skyline_matches_bruteforce(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.p_partkey
-        for r in advanced.QUERIES["part_skyline_price_size"](
+        for r in QUERIES["part_skyline_price_size"](
             spark, sf_dir
         ).collect()
     }
@@ -200,11 +200,11 @@ def test_skyline_operator_multipartition_equivalence(spark):
 
 
 def test_array_zip_funcs_matches_python(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.orderkey: (r.n_lines, r.max_qty, r.has_bulk_line, r.qty_weighted_total)
-        for r in advanced.QUERIES["array_zip_funcs"](spark, sf_dir).collect()
+        for r in QUERIES["array_zip_funcs"](spark, sf_dir).collect()
     }
     li = load_table(spark, sf_dir, "lineitem").collect()
     per: dict[int, list] = defaultdict(list)

@@ -39,9 +39,9 @@ def _gap_frame(spark, sf_dir):
 
 
 def test_logrank_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = advanced.QUERIES["customer_logrank_test"](spark, sf_dir).collect()[0]
+    got = QUERIES["customer_logrank_test"](spark, sf_dir).collect()[0]
     durs = _gap_frame(spark, sf_dir)
     bins: dict[int, list[int]] = defaultdict(lambda: [0, 0, 0, 0])
     for dur, event, g1 in durs:
@@ -73,11 +73,11 @@ def test_logrank_matches_python_replay(spark, sf_dir):
 def test_spearman_matches_python_replay(spark, sf_dir):
     from decimal import Decimal
 
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.n_name: (r.n_weeks, r.spearman_rho)
-        for r in advanced.QUERIES["nation_weekly_spearman"](
+        for r in QUERIES["nation_weekly_spearman"](
             spark, sf_dir
         ).collect()
     }
@@ -128,9 +128,9 @@ def test_spearman_matches_python_replay(spark, sf_dir):
 
 
 def test_mann_whitney_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_mann_whitney"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_mann_whitney"](spark, sf_dir).collect()[0]
     rows = [
         r
         for r in load_table(spark, sf_dir, "events").collect()
@@ -167,11 +167,11 @@ def test_mann_whitney_matches_python_replay(spark, sf_dir):
 
 
 def test_reachability_matches_bfs_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         (r.src, r.dst): r.hops
-        for r in ev.QUERIES["event_type_reachability"](spark, sf_dir).collect()
+        for r in QUERIES["event_type_reachability"](spark, sf_dir).collect()
     }
     rows = sorted(
         load_table(spark, sf_dir, "events").collect(),
@@ -208,11 +208,11 @@ def test_reachability_matches_bfs_replay(spark, sf_dir):
 
 
 def test_burstiness_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.activity_band: (r.n_users, r.avg_burstiness, r.avg_cv)
-        for r in ev.QUERIES["events_interarrival_burstiness"](
+        for r in QUERIES["events_interarrival_burstiness"](
             spark, sf_dir
         ).collect()
     }

@@ -13,9 +13,9 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_cmh_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = advanced.QUERIES["orders_cmh_returns"](spark, sf_dir).collect()[0]
+    got = QUERIES["orders_cmh_returns"](spark, sf_dir).collect()[0]
     pri = {
         r.o_orderkey: r.o_orderpriority in ("1-URGENT", "2-HIGH")
         for r in load_table(spark, sf_dir, "orders").collect()
@@ -47,9 +47,9 @@ def test_cmh_matches_python_replay(spark, sf_dir):
 
 
 def test_kruskal_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_kruskal_wallis"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_kruskal_wallis"](spark, sf_dir).collect()[0]
     rows = [
         r
         for r in load_table(spark, sf_dir, "events").collect()
@@ -87,11 +87,11 @@ def test_kruskal_matches_python_replay(spark, sf_dir):
 
 
 def test_cms_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.user_id: (r.exact_n, r.cms_n, r.overcount)
-        for r in ev.QUERIES["events_user_cms"](spark, sf_dir).collect()
+        for r in QUERIES["events_user_cms"](spark, sf_dir).collect()
     }
     pu: dict[int, int] = defaultdict(int)
     for r in load_table(spark, sf_dir, "events").collect():
@@ -114,11 +114,11 @@ def test_cms_matches_python_replay(spark, sf_dir):
 
 
 def test_wasserstein_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.event_type: (r.n_early, r.n_late, r.w1_bins, r.w1_value)
-        for r in ev.QUERIES["events_wasserstein_drift"](
+        for r in QUERIES["events_wasserstein_drift"](
             spark, sf_dir
         ).collect()
     }
@@ -157,11 +157,11 @@ def test_lateral_equals_window_topk(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         (r.c_custkey, r.o_orderkey)
-        for r in advanced.QUERIES["lateral_topk_orders"](
+        for r in QUERIES["lateral_topk_orders"](
             spark, sf_dir
         ).collect()
     }

@@ -14,11 +14,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_cluster_separation_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.label: r
-        for r in llmdata.QUERIES["embedding_cluster_separation"](
+        for r in QUERIES["embedding_cluster_separation"](
             spark, sf_dir
         ).collect()
     }
@@ -57,11 +57,11 @@ def test_cluster_separation_matches_python_replay(spark, sf_dir):
 
 
 def test_source_diversity_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.source: r
-        for r in llmdata.QUERIES["doc_source_diversity"](
+        for r in QUERIES["doc_source_diversity"](
             spark, sf_dir
         ).collect()
     }
@@ -84,11 +84,11 @@ def test_source_diversity_matches_python_replay(spark, sf_dir):
 
 
 def test_dp_noisy_counts_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.event_type: r
-        for r in ev.QUERIES["events_dp_noisy_counts"](spark, sf_dir).collect()
+        for r in QUERIES["events_dp_noisy_counts"](spark, sf_dir).collect()
     }
     counts: dict[str, int] = defaultdict(int)
     for r in load_table(spark, sf_dir, "events").collect():

@@ -13,9 +13,9 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_hill_tail_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_value_hill_tail"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_value_hill_tail"](spark, sf_dir).collect()[0]
     vals = sorted(
         (
             (r.value, r.event_id)
@@ -34,9 +34,9 @@ def test_hill_tail_matches_python_replay(spark, sf_dir):
 
 
 def test_runs_test_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_runs_test_daily"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_runs_test_daily"](spark, sf_dir).collect()[0]
     daily: dict = defaultdict(Decimal)
     for r in load_table(spark, sf_dir, "events").collect():
         if r.ts is not None and r.value is not None:
@@ -58,11 +58,11 @@ def test_runs_test_matches_python_replay(spark, sf_dir):
 
 
 def test_time_to_convert_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.days: (r.n_users, r.cum_share)
-        for r in ev.QUERIES["events_time_to_convert"](
+        for r in QUERIES["events_time_to_convert"](
             spark, sf_dir
         ).collect()
     }
@@ -98,11 +98,11 @@ def test_time_to_convert_matches_python_replay(spark, sf_dir):
 
 
 def test_kendall_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.n_name: r
-        for r in advanced.QUERIES["nation_weekly_kendall"](
+        for r in QUERIES["nation_weekly_kendall"](
             spark, sf_dir
         ).collect()
     }

@@ -12,11 +12,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_holt_winters_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.event_type: r
-        for r in ev.QUERIES["events_holt_winters_daily"](
+        for r in QUERIES["events_holt_winters_daily"](
             spark, sf_dir
         ).collect()
     }
@@ -51,9 +51,9 @@ def test_holt_winters_matches_python_replay(spark, sf_dir):
 
 
 def test_diff_in_diff_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_diff_in_diff"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_diff_in_diff"](spark, sf_dir).collect()[0]
     rows = [
         r
         for r in load_table(spark, sf_dir, "events").collect()
@@ -89,11 +89,11 @@ def test_diff_in_diff_matches_python_replay(spark, sf_dir):
 
 
 def test_conversion_paths_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.path: r.n_users
-        for r in ev.QUERIES["events_conversion_paths"](
+        for r in QUERIES["events_conversion_paths"](
             spark, sf_dir
         ).collect()
     }
@@ -119,11 +119,11 @@ def test_conversion_paths_matches_python_replay(spark, sf_dir):
 def test_groupby_all_equals_explicit_grouping(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         (r.yr, r.o_orderpriority): (r.n_orders, r.revenue)
-        for r in advanced.QUERIES["groupby_all_revenue"](
+        for r in QUERIES["groupby_all_revenue"](
             spark, sf_dir
         ).collect()
     }

@@ -12,9 +12,9 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_ljung_box_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = ev.QUERIES["events_ljung_box"](spark, sf_dir).collect()[0]
+    got = QUERIES["events_ljung_box"](spark, sf_dir).collect()[0]
     daily: dict = defaultdict(Decimal)
     for r in load_table(spark, sf_dir, "events").collect():
         if r.ts is not None and r.value is not None:
@@ -37,11 +37,11 @@ def test_ljung_box_matches_python_replay(spark, sf_dir):
 
 
 def test_markov_eval_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.src: (r.n_test, r.predicted, r.top1_accuracy)
-        for r in ev.QUERIES["events_markov_prediction_eval"](
+        for r in QUERIES["events_markov_prediction_eval"](
             spark, sf_dir
         ).collect()
     }
@@ -94,9 +94,9 @@ def test_markov_eval_matches_python_replay(spark, sf_dir):
 
 
 def test_two_way_anova_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = advanced.QUERIES["lineitem_two_way_anova"](
+    got = QUERIES["lineitem_two_way_anova"](
         spark, sf_dir
     ).collect()[0]
     cells: dict[tuple, list] = defaultdict(lambda: [0, Decimal(0), Decimal(0)])

@@ -30,11 +30,11 @@ def test_running_prefix_max_multipartition(spark):
 
 
 def test_late_arrival_audit_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.watermark: (r.n_events, r.n_dropped, r.dropped_share)
-        for r in ev.QUERIES["events_late_arrival_audit"](
+        for r in QUERIES["events_late_arrival_audit"](
             spark, sf_dir
         ).collect()
     }
@@ -75,11 +75,11 @@ def test_late_arrival_audit_matches_python_replay(spark, sf_dir):
 def test_calendar_dim_matches_python_replay(spark, sf_dir):
     import datetime as dt
 
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.day: r
-        for r in advanced.QUERIES["orders_calendar_dim_join"](
+        for r in QUERIES["orders_calendar_dim_join"](
             spark, sf_dir
         ).collect()
     }
@@ -107,11 +107,11 @@ def test_calendar_dim_matches_python_replay(spark, sf_dir):
 
 
 def test_mode_size_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.p_brand: (r.mode_size, r.n_mode, r.mode_share)
-        for r in advanced.QUERIES["part_mode_size_by_brand"](
+        for r in QUERIES["part_mode_size_by_brand"](
             spark, sf_dir
         ).collect()
     }

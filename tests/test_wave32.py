@@ -13,11 +13,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_dup_quality_report_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.is_dup: (r.n_docs, r.mean_tokens)
-        for r in llmdata.QUERIES["doc_dup_quality_report"](
+        for r in QUERIES["doc_dup_quality_report"](
             spark, sf_dir
         ).collect()
     }
@@ -42,9 +42,9 @@ def test_dup_quality_report_matches_python_replay(spark, sf_dir):
 
 
 def test_label_source_alignment_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import llmdata
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
-    got = llmdata.QUERIES["doc_label_source_alignment"](
+    got = QUERIES["doc_label_source_alignment"](
         spark, sf_dir
     ).collect()[0]
     src = {
@@ -73,11 +73,11 @@ def test_label_source_alignment_matches_python_replay(spark, sf_dir):
 
 
 def test_part_substitutes_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.p_partkey: (r.substitute_partkey, round(r.saving, 2))
-        for r in advanced.QUERIES["part_substitutes"](
+        for r in QUERIES["part_substitutes"](
             spark, sf_dir
         ).collect()
     }

@@ -12,11 +12,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_growth_accounting_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.epoch_week: r
-        for r in ev.QUERIES["events_growth_accounting"](
+        for r in QUERIES["events_growth_accounting"](
             spark, sf_dir
         ).collect()
     }
@@ -52,11 +52,11 @@ def test_growth_accounting_matches_python_replay(spark, sf_dir):
 
 
 def test_periodogram_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.k: r.power
-        for r in ev.QUERIES["events_periodogram_daily"](
+        for r in QUERIES["events_periodogram_daily"](
             spark, sf_dir
         ).collect()
     }
@@ -80,11 +80,11 @@ def test_periodogram_matches_python_replay(spark, sf_dir):
 
 
 def test_window_nth_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.o_orderkey: r
-        for r in advanced.QUERIES["window_nth_ignore_nulls"](
+        for r in QUERIES["window_nth_ignore_nulls"](
             spark, sf_dir
         ).collect()
     }

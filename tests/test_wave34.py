@@ -12,11 +12,11 @@ from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
 
 
 def test_user_feature_matrix_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import events as ev
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         r.user_id: r
-        for r in ev.QUERIES["events_user_feature_matrix"](
+        for r in QUERIES["events_user_feature_matrix"](
             spark, sf_dir
         ).collect()
     }
@@ -48,11 +48,11 @@ def test_user_feature_matrix_matches_python_replay(spark, sf_dir):
 
 
 def test_abc_xyz_matches_python_replay(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
 
     got = {
         (r.abc, r.xyz): (r.n_parts, r.revenue_share)
-        for r in advanced.QUERIES["part_abc_xyz"](spark, sf_dir).collect()
+        for r in QUERIES["part_abc_xyz"](spark, sf_dir).collect()
     }
     per: dict[int, list] = defaultdict(
         lambda: [Decimal(0), Decimal(0), Decimal(0), set()]
