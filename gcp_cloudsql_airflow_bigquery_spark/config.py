@@ -37,6 +37,10 @@ class SourceSpec:
     num_partitions: int = 1
     csv_options: dict[str, str] = field(default_factory=dict)
 
+    def __post_init__(self) -> None:
+        if self.kind not in ("parquet", "csv", "json", "jdbc"):
+            raise ValueError(f"unknown source kind {self.kind!r}")
+
 
 @dataclass
 class PipelineSpec:
@@ -59,11 +63,16 @@ class PipelineSpec:
     retry_delay_s: float = 60.0
     # v1 submit-then-wait contract: the reference bounds each export at
     # 3600 s (``gcloud beta sql operations wait --timeout=3600``,
-    # reference ``dags/cloudsql_to_bigquery.py:117``); here it bounds
-    # one pipeline attempt's wall clock. None disables the bound.
+    # reference ``dags/cloudsql_to_bigquery.py:117``); here the Spark
+    # jobs an attempt runs or starts after this many seconds are
+    # cancelled. None disables the bound.
     timeout_s: float | None = 3600.0
 
     def __post_init__(self) -> None:
+        if self.write_mode not in ("overwrite", "append", "snapshot", "merge"):
+            raise ValueError(f"unknown write_mode {self.write_mode!r}")
+        if self.write_mode == "merge" and not self.merge_keys:
+            raise ValueError("write_mode='merge' requires merge_keys")
         if self.export_query is None:
             self.export_query = f"SELECT * FROM {self.export_table}"
         if self.stage_table is None:

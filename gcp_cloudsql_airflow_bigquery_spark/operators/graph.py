@@ -19,24 +19,32 @@ so iterated plans stay constant-size; k-core peeling is one lazy plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
+#: connected components: min-label propagation rounds before the
+#: star-contraction fallback, and the fallback's round budget
+_PROP_ROUNDS = 4
+_MAX_ITER = 20
+
+
+def _checkpoint_observed(df: DataFrame, *exprs):
+    """Materialize ``df`` with one eager ``localCheckpoint`` and return
+    it with the values of ``exprs``, observed on that same job."""
+    ob = Observation()
+    return df.observe(ob, *exprs).localCheckpoint(eager=True), ob.get
+
+
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_iter: int = 20,
-    prop_rounds: int = 4,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Return (node, label) with label = min node id of the component.
 
     Only nodes appearing in ``edges`` are labeled (isolated nodes are
     their own trivial clusters — callers add them back if needed).
 
-    Hybrid algorithm.  Fast path: up to ``prop_rounds`` rounds of
+    Hybrid algorithm.  Fast path: up to ``_PROP_ROUNDS`` rounds of
     min-label propagation (one join + one agg per round) with an exact
     fixpoint test — at a propagation fixpoint every edge has equal
     labels on both ends, which is provably the correct answer, and
@@ -50,44 +58,47 @@ def connected_components(
     that budget is exhausted — never return unconverged labels.  Both
     phases cut lineage per round.
     """
-    from pyspark.sql import Observation
-
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    # edge-set stability signature (count, decimal-sum-of-hashes over
+    # the canonical a<b half) for the fallback; observed on each
+    # symmetric edge set's checkpoint, so the probe costs no extra job
+    sig_exprs = (
+        F.count_if(F.col("a") < F.col("b")).alias("c"),
+        F.sum(
+            F.when(F.col("a") < F.col("b"), F.xxhash64("a", "b")).cast(
+                "decimal(38,0)"
+            )
+        ).alias("h"),
     )
-    sym = sym.distinct().localCheckpoint(eager=True)
+
+    def _resym(pairs: DataFrame):
+        both = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        return _checkpoint_observed(both.distinct(), *sig_exprs)
+
+    sym, prev_sig = _resym(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
 
     # labels only ever decrease; the exact decimal sum strictly
     # decreases until the fixpoint, so one aggregate replaces a
     # join-based changed? probe.  The sum rides the SAME job as each
     # round's materializing localCheckpoint via ``observe`` — one job
     # per round, not two.
-    _sum_expr = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-
-    def _ckpt(lb: DataFrame):
-        ob = Observation()
-        out = lb.observe(ob, _sum_expr).localCheckpoint(eager=True)
-        return out, ob.get["s"]
-
-    labels, prev_sum = _ckpt(
+    sum_expr = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, prev_sum = _checkpoint_observed(
         sym.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
+        .withColumn("label", F.col("node")),
+        sum_expr,
     )
-    converged = False
-    for _ in range(prop_rounds):
+    for _ in range(_PROP_ROUNDS):
         msgs = sym.join(labels, sym.b == F.col("node")).select(
             F.col("a").alias("node"), "label"
         )
-        labels, new_sum = _ckpt(
-            msgs.union(labels).groupBy("node").agg(F.min("label").alias("label"))
+        labels, new_sum = _checkpoint_observed(
+            msgs.union(labels).groupBy("node").agg(F.min("label").alias("label")),
+            sum_expr,
         )
         if new_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = new_sum
-    if converged:
-        return labels
 
     # Large-star/small-star fallback (Kiveris et al., "Connected
     # Components in MapReduce and Beyond"): alternate
@@ -100,43 +111,7 @@ def connected_components(
     # + one join; edge-set stability is probed with an exact
     # (count, decimal-sum-of-hashes) signature instead of a join diff.
     cur = sym  # already symmetric + distinct + materialized
-
-    # edge-set stability signature (count, decimal-sum-of-hashes over
-    # the canonical a<b half); observed during the resym checkpoint so
-    # the probe costs zero extra jobs
-    _sig_exprs = (
-        F.count_if(F.col("a") < F.col("b")).alias("c"),
-        F.sum(
-            F.when(F.col("a") < F.col("b"), F.xxhash64("a", "b")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("h"),
-    )
-
-    def _resym(pairs: DataFrame):
-        ob = Observation()
-        out = (
-            pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .observe(ob, *_sig_exprs)
-            .localCheckpoint(eager=True)
-        )
-        got = ob.get
-        return out, (got["c"], got["h"])
-
-    def _sig(e: DataFrame):
-        row = (
-            e.filter(F.col("a") < F.col("b"))
-            .agg(
-                F.count("*").alias("c"),
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-            )
-            .first()
-        )
-        return (row.c, row.h)
-
-    prev_sig = _sig(cur)
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # large-star
         mins = (
             cur.groupBy("a")
@@ -169,7 +144,7 @@ def connected_components(
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components: star contraction did not stabilize in {max_iter} rounds"
+            f"connected_components: star contraction did not stabilize in {_MAX_ITER} rounds"
         )
     # terminal stars: every node's label is the min over its closed
     # neighborhood (the root for leaves, itself for roots)

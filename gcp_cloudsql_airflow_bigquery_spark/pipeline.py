@@ -22,12 +22,24 @@ Write modes:
 At scale: the staged write is partitioned parquet; dynamic partition
 overwrite touches one date partition, never the table.  The merge is a
 full-outer-free anti-join + union — shuffle on merge keys only.
+
+Attempts (v1's submit-then-wait contract, ``gcloud beta sql operations
+wait --timeout=3600``, reference ``dags/cloudsql_to_bigquery.py:117``):
+each attempt runs on the caller's thread under its own Spark job group.
+``spec.timeout_s`` after it starts, the group and every job it submits
+later are cancelled, so an attempt has stopped writing before its retry
+starts.  An attempt that raises after that deadline raises
+``TimeoutError`` (retryable, chained to Spark's cancellation error); one
+that still returns, because its tail ran no Spark job, is returned — its
+write has landed.  The caller's job group is restored afterwards.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,10 +81,8 @@ def extract(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
         df = read_csv(spark, src.path, options=src.csv_options, header=True)
     elif src.kind == "json":
         df = read_ndjson(spark, src.path)
-    elif src.kind == "parquet":
-        df = read_parquet(spark, src.path)
     else:
-        raise ValueError(f"unknown source kind {src.kind!r}")
+        df = read_parquet(spark, src.path)
     # file sources can't push export_query to a remote engine; run it
     # through Spark SQL over a temp view for identical semantics
     if spec.export_query and spec.export_query != f"SELECT * FROM {spec.export_table}":
@@ -221,14 +231,6 @@ def compact_parquet(
     )
 
 
-def _write_merge(
-    spark: SparkSession, df: DataFrame, spec: PipelineSpec, out: str
-) -> None:
-    if not spec.merge_keys:
-        raise ValueError("write_mode='merge' requires merge_keys")
-    merge_parquet(spark, df, out, list(spec.merge_keys))
-
-
 #: write_mode → BigQuery writeDisposition for the sink seam (ops F/H);
 #: snapshot/merge have no disposition analogue and always stage locally.
 _MODE_DISPOSITIONS = {"overwrite": "WRITE_TRUNCATE", "append": "WRITE_APPEND"}
@@ -251,16 +253,12 @@ def load(
             df, spec.stage_table, _MODE_DISPOSITIONS[spec.write_mode]
         )
     out = warehouse.path(spec.stage_table)
-    if spec.write_mode == "overwrite":
-        df.write.mode("overwrite").parquet(out)
-    elif spec.write_mode == "append":
-        df.write.mode("append").parquet(out)
-    elif spec.write_mode == "snapshot":
+    if spec.write_mode == "snapshot":
         _write_snapshot(df, spec, out)
     elif spec.write_mode == "merge":
-        _write_merge(spark, df, spec, out)
-    else:
-        raise ValueError(f"unknown write_mode {spec.write_mode!r}")
+        merge_parquet(spark, df, out, list(spec.merge_keys))
+    else:  # overwrite | append
+        df.write.mode(spec.write_mode).parquet(out)
     return out
 
 
@@ -310,45 +308,41 @@ def finalize(
     return out
 
 
+#: the local properties ``setJobGroup`` sets, restored after an attempt
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
 def _attempt_with_timeout(spark: SparkSession, fn, timeout_s: float | None):
-    """Run one pipeline attempt bounded by wall clock — the Spark
-    analogue of v1's submit-then-wait contract (``gcloud beta sql
-    operations wait --timeout=3600``, reference
-    ``dags/cloudsql_to_bigquery.py:117``).  Spark actions are
-    synchronous, so the bound is enforced by running the attempt in a
-    worker thread under a job group and cancelling the group on
-    expiry; the TimeoutError is an ordinary attempt failure, i.e.
-    retryable, exactly like the reference's timed-out export task."""
-    if not timeout_s:
-        return fn()
-    import threading
-    import uuid
-
+    """Run ``fn`` as one attempt under the contract in the module
+    docstring; ``timeout_s=None`` sets no deadline."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
     group = f"pipeline-attempt-{uuid.uuid4().hex[:12]}"
-    box: dict = {}
+    expired = threading.Event()
 
-    def target() -> None:
-        # job-group tagging is thread-local: set it on the thread that
-        # actually triggers the Spark actions
-        spark.sparkContext.setJobGroup(group, "bounded pipeline attempt",
-                                       interruptOnCancel=True)
-        try:
-            box["result"] = fn()
-        except Exception as e:  # noqa: BLE001 — re-raised on the caller
-            box["error"] = e
-        finally:
-            spark.sparkContext.setJobGroup("", "")
+    def expire() -> None:
+        expired.set()
+        sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
 
-    th = threading.Thread(target=target, daemon=True)
-    th.start()
-    th.join(timeout_s)
-    if th.is_alive():
-        spark.sparkContext.cancelJobGroup(group)
-        th.join(10.0)
-        raise TimeoutError(f"pipeline attempt exceeded {timeout_s} s")
-    if "error" in box:
-        raise box["error"]
-    return box["result"]
+    timer = threading.Timer(timeout_s, expire) if timeout_s else None
+    sc.setJobGroup(group, "bounded pipeline attempt", interruptOnCancel=True)
+    try:
+        if timer:
+            timer.start()
+        return fn()
+    except Exception as e:
+        if expired.is_set():
+            raise TimeoutError(f"pipeline attempt exceeded {timeout_s} s") from e
+        raise
+    finally:
+        if timer:
+            timer.cancel()
+        for k, v in zip(_JOB_GROUP_KEYS, saved):
+            sc.setLocalProperty(k, v)
 
 
 def run_pipeline(
@@ -378,7 +372,7 @@ def run_pipeline(
             last_err = e
             log.warning("pipeline %s attempt %d failed: %s", spec.export_table, attempt, e)
             if attempt <= spec.retries:
-                time.sleep(min(spec.retry_delay_s, 1.0))  # capped for tests
+                time.sleep(spec.retry_delay_s)
     raise RuntimeError(f"pipeline {spec.export_table} failed") from last_err
 
 

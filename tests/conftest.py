@@ -1,11 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gcp_cloudsql_airflow_bigquery_spark.catalog import TABLES
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark

@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
+        "spark_entry", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

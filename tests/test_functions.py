@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import DecimalType, DoubleType, LongType
@@ -16,7 +18,7 @@ from gcp_cloudsql_airflow_bigquery_spark.functions import (
     spark_type_for,
 )
 
-FIXTURES = "/root/repo/tests/fixtures"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 # --- op C: type mapper (reference dags/cloudsql_to_bigquery.py:152-165) ---

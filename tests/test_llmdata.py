@@ -768,6 +768,40 @@ def test_connected_components_long_path(spark):
     assert {r.label for r in out} == {0}
 
 
+def test_connected_components_jobs_are_its_checkpoints(spark, monkeypatch):
+    """Every job connected components submits while it is built is one
+    of its eager checkpoints: the convergence sums and the fallback's
+    edge-set signature ride those jobs.  AQE is off so that each
+    checkpoint is exactly one job."""
+    from gcp_cloudsql_airflow_bigquery_spark.operators.graph import (
+        connected_components,
+    )
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(199)], "a long, b long")
+    calls = {"n": 0}
+    real = type(df).localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls["n"] += 1
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", counting)
+    sc = spark.sparkContext
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("cc_build", "connected components construction")
+    try:
+        connected_components(df, "a", "b")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup("cc_build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert calls["n"] > 5  # reached the star-contraction fallback
+    assert len(jobs) == calls["n"]
+
+
 def test_hll_sketch_rollup_accuracy_and_merge(spark, sf_dir):
     """Distinct-user estimates from merged per-day sketches must agree
     with the direct per-type sketch exactly (same binary state space)

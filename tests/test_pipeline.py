@@ -445,6 +445,8 @@ def test_attempt_timeout_cancels_running_job(spark):
 
 
 def test_run_pipeline_timeout_is_retryable(spark, sf_dir, warehouse, monkeypatch):
+    """The first attempt's Spark job outlives the deadline and is
+    cancelled; the retry succeeds."""
     import time
 
     import gcp_cloudsql_airflow_bigquery_spark.pipeline as P
@@ -454,14 +456,82 @@ def test_run_pipeline_timeout_is_retryable(spark, sf_dir, warehouse, monkeypatch
     def slow_first(df, spec):
         calls["n"] += 1
         if calls["n"] == 1:
-            time.sleep(3)
+            spark.range(1).foreachPartition(lambda it: time.sleep(60))
         return real(df, spec)
 
     monkeypatch.setattr(P, "transform", slow_first)
-    spec = _parquet_spec(sf_dir, timeout_s=0.5)
+    spec = _parquet_spec(sf_dir, timeout_s=4.0)
     r = P.run_pipeline(spark, spec, warehouse)
     assert r.attempts == 2  # first attempt timed out, second succeeded
     assert r.rows_written == 150
+
+
+def test_attempt_job_started_after_deadline_fails_at_submission(spark, tmp_path):
+    """A job the attempt starts after its deadline never runs: the
+    attempt raises TimeoutError when it submits the job."""
+    import os
+    import time
+
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import (
+        _attempt_with_timeout,
+    )
+
+    flag = str(tmp_path / "flag")
+
+    def late_job():
+        time.sleep(1.0)
+        spark.range(1).foreach(lambda _: open(flag, "w").close())
+
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="exceeded"):
+        _attempt_with_timeout(spark, late_job, 0.5)
+    assert time.monotonic() - t0 < 5
+    time.sleep(1.0)
+    assert not os.path.exists(flag)
+
+
+def test_run_pipeline_runs_on_caller_thread_and_keeps_its_job_group(
+    spark, sf_dir, warehouse, monkeypatch
+):
+    import threading
+
+    import gcp_cloudsql_airflow_bigquery_spark.pipeline as P
+
+    sc = spark.sparkContext
+    real, seen = P.transform, {}
+
+    def recording(df, spec):
+        seen["thread"] = threading.get_ident()
+        seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
+        return real(df, spec)
+
+    monkeypatch.setattr(P, "transform", recording)
+    sc.setJobGroup("caller_group", "caller's job group")
+    try:
+        r = P.run_pipeline(spark, _parquet_spec(sf_dir), warehouse)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller_group"
+        assert sc.getLocalProperty("spark.job.description") == "caller's job group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert r.rows_written == 150
+    assert seen["thread"] == threading.get_ident()
+    assert seen["group"].startswith("pipeline-attempt-")
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda: PipelineSpec(export_table="t", write_mode="bogus"),
+        lambda: PipelineSpec(export_table="t", write_mode="merge"),
+        lambda: SourceSpec(kind="bogus"),
+    ],
+    ids=["write_mode", "merge_keys", "source_kind"],
+)
+def test_spec_errors_raise_when_the_spec_is_built(build):
+    with pytest.raises(ValueError):
+        build()
 
 
 def test_incremental_rollup_merge_equals_full_rollup(spark, sf_dir):
