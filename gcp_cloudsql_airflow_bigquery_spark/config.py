@@ -65,7 +65,8 @@ class PipelineSpec:
     # 3600 s (``gcloud beta sql operations wait --timeout=3600``,
     # reference ``dags/cloudsql_to_bigquery.py:117``); here the Spark
     # jobs an attempt runs or starts after this many seconds are
-    # cancelled. None disables the bound.
+    # cancelled, and a JDBC source's statements, connects and socket
+    # reads time out after it. None disables the bound.
     timeout_s: float | None = 3600.0
 
     def __post_init__(self) -> None:

@@ -58,23 +58,12 @@ def connected_components(
     that budget is exhausted — never return unconverged labels.  Both
     phases cut lineage per round.
     """
-    # edge-set stability signature (count, decimal-sum-of-hashes over
-    # the canonical a<b half) for the fallback; observed on each
-    # symmetric edge set's checkpoint, so the probe costs no extra job
-    sig_exprs = (
-        F.count_if(F.col("a") < F.col("b")).alias("c"),
-        F.sum(
-            F.when(F.col("a") < F.col("b"), F.xxhash64("a", "b")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("h"),
-    )
-
-    def _resym(pairs: DataFrame):
+    def _sym(pairs: DataFrame) -> DataFrame:
         both = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        return _checkpoint_observed(both.distinct(), *sig_exprs)
+        return both.distinct()
 
-    sym, prev_sig = _resym(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    sym = _sym(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    sym = sym.localCheckpoint(eager=True)
 
     # labels only ever decrease; the exact decimal sum strictly
     # decreases until the fixpoint, so one aggregate replaces a
@@ -109,8 +98,21 @@ def connected_components(
     # rounds REGARDLESS OF DIAMETER (a 200-node path closes in 9
     # rounds; pure propagation needs 199).  Each op is one groupBy-min
     # + one join; edge-set stability is probed with an exact
-    # (count, decimal-sum-of-hashes) signature instead of a join diff.
-    cur = sym  # already symmetric + distinct + materialized
+    # (count, decimal-sum-of-hashes over the canonical a<b half)
+    # signature, observed on each round's checkpoint, instead of a join
+    # diff.  The first round needs no reference signature: one star per
+    # component is the only edge set a round leaves unchanged, and the
+    # fallback only starts when propagation found no fixpoint, so the
+    # edge set is not yet in that state.
+    sig_exprs = (
+        F.count_if(F.col("a") < F.col("b")).alias("c"),
+        F.sum(
+            F.when(F.col("a") < F.col("b"), F.xxhash64("a", "b")).cast(
+                "decimal(38,0)"
+            )
+        ).alias("h"),
+    )
+    cur, prev_sig = sym, None  # already symmetric + distinct + materialized
     for _ in range(_MAX_ITER):
         # large-star
         mins = (
@@ -126,7 +128,7 @@ def connected_components(
                 F.least("b", "m").alias("a"), F.greatest("b", "m").alias("b")
             )
         )
-        cur, _ = _resym(large)
+        cur = _sym(large).localCheckpoint(eager=True)
         # small-star
         le = cur.filter(F.col("b") <= F.col("a"))
         mins_s = le.groupBy("a").agg(F.min("b").alias("m"))
@@ -138,7 +140,7 @@ def connected_components(
             .filter(F.col("b") != F.col("m"))
             .select(F.col("m").alias("a"), F.col("b").alias("b"))
         )
-        cur, sig = _resym(small)
+        cur, sig = _checkpoint_observed(_sym(small), *sig_exprs)
         if sig == prev_sig:
             break
         prev_sig = sig

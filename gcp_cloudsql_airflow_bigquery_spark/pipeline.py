@@ -27,11 +27,23 @@ Attempts (v1's submit-then-wait contract, ``gcloud beta sql operations
 wait --timeout=3600``, reference ``dags/cloudsql_to_bigquery.py:117``):
 each attempt runs on the caller's thread under its own Spark job group.
 ``spec.timeout_s`` after it starts, the group and every job it submits
-later are cancelled, so an attempt has stopped writing before its retry
-starts.  An attempt that raises after that deadline raises
+later are cancelled, so no Spark job of an attempt runs on into its
+retry.  An attempt that raises after that deadline raises
 ``TimeoutError`` (retryable, chained to Spark's cancellation error); one
 that still returns, because its tail ran no Spark job, is returned — its
 write has landed.  The caller's job group is restored afterwards.
+
+What the deadline does not cover:
+- Work on the driver outside a Spark job runs to its end: the JDBC
+  schema lookup in ``read_jdbc``'s ``load()``, the Hadoop renames in
+  ``_swap_into_place``, a sink connector's driver calls.  JDBC, the
+  reference's main source, is bounded separately: ``extract`` passes
+  ``timeout_s`` to the reader as its statement, connect and socket
+  timeouts (``sources.jdbc.jdbc_reader_options``), so a hung source or
+  proxy fails the attempt about ``timeout_s`` after the call starts.
+- Retrying is not idempotent for ``append``: an attempt whose write has
+  landed but whose later ``finalize`` or row count fails — by the
+  deadline too — is retried and appends the same rows again.
 """
 
 from __future__ import annotations
@@ -76,7 +88,7 @@ class Warehouse:
 def extract(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
     src = spec.source
     if src.kind == "jdbc":
-        return read_jdbc(spark, src, query=spec.export_query)
+        return read_jdbc(spark, src, query=spec.export_query, timeout_s=spec.timeout_s)
     if src.kind == "csv":
         df = read_csv(spark, src.path, options=src.csv_options, header=True)
     elif src.kind == "json":

@@ -22,6 +22,7 @@ to INTEGER.
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass, field
 
@@ -52,6 +53,9 @@ class JdbcDialect:
     schema_column: str = "TABLE_SCHEMA"
     default_schema: str | None = None
     type_overrides: dict[str, str] = field(default_factory=dict)
+    # driver connection properties that bound connecting and each
+    # blocking socket read, with their unit in parts of a second
+    timeout_props: tuple[tuple[str, int], ...] = ()
 
     def url(
         self,
@@ -67,6 +71,10 @@ class JdbcDialect:
             return f"jdbc:sqlserver://{host}:{p};databaseName={database}{extra}"
         qs = "&".join(f"{k}={v}" for k, v in (params or {}).items())
         return f"jdbc:{self.name}://{host}:{p}/{database}" + (f"?{qs}" if qs else "")
+
+    def timeout_properties(self, seconds: float) -> dict[str, str]:
+        """This driver's connect and socket timeouts, set to ``seconds``."""
+        return {k: str(math.ceil(seconds * per_s)) for k, per_s in self.timeout_props}
 
     def quote(self, ident: str) -> str:
         validate_ident(ident)
@@ -125,6 +133,7 @@ MYSQL = JdbcDialect(
     name="mysql",
     default_port=3306,
     driver="com.mysql.cj.jdbc.Driver",
+    timeout_props=(("connectTimeout", 1000), ("socketTimeout", 1000)),
     quote_open="`",
     quote_close="`",
     # MySQL YEAR is a 1-2 byte year number; TIME is wall-clock duration
@@ -135,6 +144,7 @@ POSTGRESQL = JdbcDialect(
     name="postgresql",
     default_port=5432,
     driver="org.postgresql.Driver",
+    timeout_props=(("connectTimeout", 1), ("socketTimeout", 1)),
     quote_open='"',
     quote_close='"',
     default_schema="public",
@@ -153,6 +163,7 @@ MSSQL = JdbcDialect(
     name="mssql",
     default_port=1433,
     driver="com.microsoft.sqlserver.jdbc.SQLServerDriver",
+    timeout_props=(("loginTimeout", 1), ("socketTimeout", 1000)),
     quote_open="[",
     quote_close="]",
     default_schema="dbo",

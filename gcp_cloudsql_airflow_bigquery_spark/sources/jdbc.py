@@ -22,13 +22,19 @@ and range-partitioned parallel extract.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import SourceSpec
+from .dialects import dialect_for_url, validate_ident
 
 
 def jdbc_reader_options(
-    spec: SourceSpec, query: str | None = None, table: str | None = None
+    spec: SourceSpec,
+    query: str | None = None,
+    table: str | None = None,
+    timeout_s: float | None = None,
 ) -> dict[str, str]:
     """Assemble the option dict for ``spark.read.format("jdbc")``.
 
@@ -36,12 +42,23 @@ def jdbc_reader_options(
     full pushdown, exactly the reference's delegation model.  With a
     ``partition_column`` we use ``dbtable`` (a subquery alias) instead,
     because Spark's JDBC partitioning requires it.
+
+    ``timeout_s`` bounds every statement (``queryTimeout``, which also
+    covers the schema lookup ``load()`` runs on the driver) and, for
+    the networked dialects, connecting and each blocking socket read,
+    so a hung source or proxy fails the read instead of stalling it.
+    ``spec.properties`` override these.
     """
     if spec.url is None:
         raise ValueError("jdbc source requires url")
     opts: dict[str, str] = {"url": spec.url}
     if spec.driver:
         opts["driver"] = spec.driver
+    if timeout_s:
+        opts["queryTimeout"] = str(math.ceil(timeout_s))
+        d = dialect_for_url(spec.url)
+        if d is not None:
+            opts.update(d.timeout_properties(timeout_s))
     opts.update(spec.properties)
     if spec.partition_column:
         subq = f"({query}) AS t" if query else (table or "")
@@ -62,9 +79,11 @@ def read_jdbc(
     spec: SourceSpec,
     query: str | None = None,
     table: str | None = None,
+    timeout_s: float | None = None,
 ) -> DataFrame:
     reader = spark.read.format("jdbc")
-    for k, v in jdbc_reader_options(spec, query=query, table=table).items():
+    opts = jdbc_reader_options(spec, query=query, table=table, timeout_s=timeout_s)
+    for k, v in opts.items():
         reader = reader.option(k, v)
     return reader.load()
 
@@ -89,8 +108,6 @@ def scan_schema(
     other schemas never bleed in.  A custom
     ``information_schema_query`` overrides everything."""
     if information_schema_query is None:
-        from .dialects import dialect_for_url, validate_ident
-
         validate_ident(table)
         d = dialect_for_url(spec.url or "")
         if d is None:

@@ -287,6 +287,35 @@ def test_jdbc_option_assembly():
         query="SELECT 1",
     )
     assert plain["query"] == "SELECT 1"
+    assert "queryTimeout" not in plain
+
+
+def test_jdbc_options_carry_the_attempt_timeout():
+    """``timeout_s`` becomes the statement timeout (which bounds the
+    driver-side schema lookup) plus the driver's connect and socket
+    timeouts in its own units; explicit properties win."""
+    mysql = jdbc_reader_options(
+        SourceSpec(kind="jdbc", url="jdbc:mysql://proxy:3306/db"),
+        query="SELECT 1",
+        timeout_s=90.5,
+    )
+    assert mysql["queryTimeout"] == "91"
+    assert mysql["connectTimeout"] == mysql["socketTimeout"] == "90500"
+    pg = jdbc_reader_options(
+        SourceSpec(
+            kind="jdbc",
+            url="jdbc:postgresql://proxy:5432/db",
+            properties={"socketTimeout": "0"},
+        ),
+        query="SELECT 1",
+        timeout_s=30,
+    )
+    assert pg["queryTimeout"] == pg["connectTimeout"] == "30"
+    assert pg["socketTimeout"] == "0"
+    derby = jdbc_reader_options(
+        SourceSpec(kind="jdbc", url="jdbc:derby:memory:x"), table="T", timeout_s=5
+    )
+    assert derby == {"url": "jdbc:derby:memory:x", "queryTimeout": "5", "dbtable": "T"}
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path_factory):
