@@ -420,8 +420,7 @@ def iterative_scale_probe(spark, sf_dir: str) -> dict:
         )
         t0 = _t.perf_counter()
         graph.pagerank(
-            edges, src="from_type", dst="to_type", weight="n",
-            tol=0.0, max_iter=20,
+            edges, src="from_type", dst="to_type", weight="n", max_iter=20,
         ).write.format("noop").mode("overwrite").save()
         dt = _t.perf_counter() - t0
         out[f"pagerank_sec_{mult}x"] = round(dt, 3)

@@ -149,10 +149,13 @@ def connected_components(
             f"connected_components: star contraction did not stabilize in {_MAX_ITER} rounds"
         )
     # terminal stars: every node's label is the min over its closed
-    # neighborhood (the root for leaves, itself for roots)
+    # neighborhood (the root for leaves, itself for roots).  The "itself"
+    # rows come from ``sym``, not ``cur``: a node whose only edge is a
+    # self-loop has no star edge (large-star keeps b > a only), and
+    # labels itself.
     return (
         cur.select("a", F.col("b").alias("label"))
-        .union(cur.select("a", F.col("a").alias("label")))
+        .union(sym.select("a", F.col("a").alias("label")))
         .groupBy("a")
         .agg(F.min("label").alias("label"))
         .select(F.col("a").alias("node"), "label")
@@ -167,7 +170,6 @@ def pagerank(
     *,
     damping: float = 0.85,
     max_iter: int = 20,
-    tol: float = 1e-6,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Weighted PageRank: (node, rank), ranks summing to 1.
@@ -178,14 +180,13 @@ def pagerank(
     redistributed mass of dangling nodes (computed as total minus
     emitted mass — no extra anti-join), and cuts lineage with
     ``localCheckpoint`` so the iterated plan stays constant-size.
-    The dangling-mass scalar is a broadcast 1-row cross join over the
-    SAME contribution aggregate (ReuseExchange dedups the shuffle) and
-    the L1 convergence delta is ``observe``d during the checkpoint, so
-    a round is exactly ONE Spark job; at 100 TB the per-round cost is
+    It runs exactly ``max_iter`` rounds (no convergence test), so the
+    result replays as fixed-round SQL.  The dangling-mass scalar is a
+    broadcast 1-row cross join over the SAME contribution aggregate
+    (ReuseExchange dedups the shuffle); at 100 TB the per-round cost is
     one edge-list join + one aggregation, the same shape GraphX's
     Pregel emits.
     """
-    from pyspark.sql import Observation
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
@@ -257,8 +258,7 @@ emitted AS (
 )
 SELECT {step_hint} r.node,
        :teleport + :dn * (:one - e.emitted)
-         + :d * COALESCE(c.contrib, :zero) AS rank,
-       r.rank AS old_rank
+         + :d * COALESCE(c.contrib, :zero) AS rank
 FROM {{ranks}} r
 LEFT JOIN contribs c ON r.node = c.dst
 CROSS JOIN emitted e
@@ -272,32 +272,14 @@ CROSS JOIN emitted e
         "dn": damping / n,
         "d": damping,
     }
+    # no early exit, so no per-round driver action: a LAZY per-round
+    # cut bounds the plan (the round's contribs subtree is referenced
+    # twice, so un-cut rounds grow the plan exponentially: every-5th-
+    # round cuts measured 12.4 s vs 4.5 s per-round-lazy vs 5.3 s
+    # per-round-eager on the 20-round event graph at sf0.1)
     for _ in range(max_iter):
         step = spark.sql(round_sql, args=round_args, norm=norm, ranks=ranks)
-        if tol > 0:
-            # convergence probe folded into the checkpoint job: the
-            # eager materialization is the round's ONE action and the
-            # Observation rides it for free
-            ob = Observation()
-            ranks = (
-                step.observe(
-                    ob, F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("d")
-                )
-                .drop("old_rank")
-                .localCheckpoint(eager=True)
-            )
-            delta = ob.get["d"]
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed-iteration mode (tol=0, e.g. the oracle-replayable
-            # query): no early exit means no per-round driver action is
-            # needed — a LAZY per-round cut still bounds the plan (the
-            # round's contribs subtree is referenced twice, so un-cut
-            # rounds grow the plan exponentially: every-5th-round cuts
-            # measured 12.4 s vs 4.5 s per-round-lazy vs 5.3 s
-            # per-round-eager on the 20-round event graph at sf0.1)
-            ranks = step.drop("old_rank").localCheckpoint(eager=False)
+        ranks = step.localCheckpoint(eager=False)
     return ranks
 
 

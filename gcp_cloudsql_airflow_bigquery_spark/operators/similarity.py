@@ -8,6 +8,13 @@ shape); the fact side streams, never shuffles.  For all-pairs or large
 Q, LSH buckets cut the candidate space; recall is tunable via
 tables × hyperplanes, verified against the exact baseline in tests.
 
+One search core: every top-k operator is candidate generation (a
+broadcast cross join, shared LSH buckets, probed IVF cells, PQ codes)
+followed by the same scoring and ranking step — :func:`_rank_neighbors`
+for cosine, :func:`_adc_top_k` for PQ distances — and both semantic-dedup
+operators run :func:`_dedup_cells`.  The persisted-index variants differ
+from their in-memory twins only in where the corpus frame comes from.
+
 Dot products use ``F.zip_with`` + ``F.aggregate`` — JVM array
 expressions, no Python.  (A Pandas-UDF/numpy variant is a drop-in if a
 deployment prefers BLAS throughput over codegen; at 64 dims the
@@ -52,20 +59,78 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _cosine_pre(dot_ab: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine from a per-pair dot and per-SIDE norm columns — the same
-    ``dot/(na*nb)`` expression as :func:`cosine` on identical values,
-    with each norm computed once per ROW (bound column) instead of once
-    per candidate PAIR (guide §2.3: don't recompute in the hot
-    operator).  The norms stay the compact HOF fold — the r10 wave-2
-    measurement showed unrolled fixed-width kernels lose to plan-size
-    costs at every tested scale, so only the REUSE changes, never the
-    expression form."""
-    return dot_ab / (norm_a * norm_b)
+def _score(
+    a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | None = None
+) -> Column:
+    """The oracle-pinned score: cosine rounded to 6 places.  Given bound
+    per-SIDE norm columns it is the same ``dot/(na*nb)`` expression as
+    :func:`cosine` on identical values, with each norm computed once per
+    ROW instead of once per candidate PAIR (guide §2.3: don't recompute
+    in the hot operator).  The norms stay the compact HOF fold — the r10
+    wave-2 measurement showed unrolled fixed-width kernels lose to
+    plan-size costs at every tested scale, so only the REUSE changes,
+    never the expression form."""
+    norm_a = norm(a) if norm_a is None else norm_a
+    norm_b = norm(b) if norm_b is None else norm_b
+    return F.round(dot(a, b) / (norm_a * norm_b), 6)
 
 
 def _as_double(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str = "id", vec_as: str = "vec"
+) -> DataFrame:
+    """(id, vec) with the vector cast to ``array<double>``."""
+    return df.select(F.col(id_col).alias(id_as), _as_double(vec_col).alias(vec_as))
+
+
+def _top_k(scored: DataFrame, k: int, order: list, out: list) -> DataFrame:
+    """Each query's first ``k`` rows in ``order``, numbered as ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*out, "rank")
+    )
+
+
+def _rank_neighbors(pairs: DataFrame, k: int, score: Column | None = None) -> DataFrame:
+    """The search tail shared by every cosine top-k operator: drop
+    self-matches, score each (query, neighbor) candidate and keep the
+    ``k`` best per query, ties broken on the smaller neighbor id.
+    ``pairs`` carries ``query_id``/``vec_q``/``_qn`` and
+    ``neighbor_id``/``vec_n``/``_nn``; pass ``score`` when it is built
+    from other columns."""
+    if score is None:
+        score = _score(F.col("vec_q"), F.col("vec_n"), F.col("_qn"), F.col("_nn"))
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        "cosine", score
+    )
+    return _top_k(
+        scored,
+        k,
+        [F.col("cosine").desc(), F.col("neighbor_id")],
+        ["query_id", "neighbor_id", "cosine"],
+    )
+
+
+def _side(vn: DataFrame, s: str, *keep: str) -> DataFrame:
+    """One side of a pair join over (id, vec, _n): columns suffixed ``s``."""
+    return vn.select(
+        *keep,
+        F.col("id").alias(f"id_{s}"),
+        F.col("vec").alias(f"vec_{s}"),
+        F.col("_n").alias(f"_n{s}"),
+    )
+
+
+def _close_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Candidate (a, b) pairs scored by cosine, kept at ``>= threshold``."""
+    return pairs.withColumn(
+        "cosine", _score(F.col("vec_a"), F.col("vec_b"), F.col("_na"), F.col("_nb"))
+    ).filter(F.col("cosine") >= threshold)
 
 
 def brute_force_topk(
@@ -77,34 +142,13 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set against the corpus,
     rank per query.  Excludes self-matches."""
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("vec_n")
-    ).withColumn("_nn", norm(F.col("vec_n")))
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vec_q")
-    ).withColumn("_qn", norm(F.col("vec_q")))
-    scored = (
-        corpus.join(F.broadcast(qs))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_q"), F.col("vec_n")),
-                    F.col("_qn"),
-                    F.col("_nn"),
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    corpus = _vectors(embeddings, id_col, vec_col, "neighbor_id", "vec_n")
+    qs = _vectors(queries, id_col, vec_col, "query_id", "vec_q")
+    return _rank_neighbors(
+        corpus.withColumn("_nn", norm(F.col("vec_n"))).join(
+            F.broadcast(qs.withColumn("_qn", norm(F.col("vec_q"))))
+        ),
+        k,
     )
 
 
@@ -120,31 +164,34 @@ def cosine_neardup_pairs(
     :func:`lsh_neardup_pairs`, which is the declared/scale path;
     restrict with ``subset_filter`` if running it directly."""
     base = embeddings if subset_filter is None else embeddings.filter(subset_filter)
-    v = base.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    ).withColumn("_n", norm(F.col("vec")))
-    a = v.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), F.col("_n").alias("_na")
+    v = _vectors(base, id_col, vec_col).withColumn("_n", norm(F.col("vec")))
+    a, b = _side(v, "a"), _side(v, "b")
+    return _close_pairs(a.join(b, F.col("id_a") < F.col("id_b")), threshold).select(
+        "id_a", "id_b", "cosine"
     )
-    b = v.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), F.col("_n").alias("_nb")
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_a"), F.col("vec_b")),
-                    F.col("_na"),
-                    F.col("_nb"),
-                ),
-                6,
-            ),
+
+
+def _lsh_buckets(
+    v: DataFrame, keep: list[str], vec: str, dim: int, num_planes: int, num_tables: int
+) -> DataFrame:
+    """``keep`` plus one (table, bucket) row per hash table: the sign
+    pattern of ``vec`` against that table's seeded hyperplanes."""
+    tables = [
+        [_hyperplane(dim, t * 1000 + i) for i in range(num_planes)]
+        for t in range(num_tables)
+    ]
+    tb = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("table"),
+                    lsh_bucket(F.col(vec), planes).alias("bucket"),
+                )
+                for t, planes in enumerate(tables)
+            ]
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    ).alias("tb")
+    return v.select(*keep, tb).select(*keep, "tb.table", "tb.bucket")
 
 
 def lsh_neardup_pairs(
@@ -165,7 +212,7 @@ def lsh_neardup_pairs(
     the cosine, so the corpus-wide shape is a uniform (table, bucket)
     self-join instead of the O(n²) cross join of
     :func:`cosine_neardup_pairs` — which remains the exact oracle this
-    operator is recall-tested against (tests/test_llmdata.py).
+    operator is recall-tested against (tests/test_similarity.py).
 
     Recall per table is ``p^planes`` with ``p = 1 - arccos(cos θ)/π``;
     for true near-dups (cosine ≥ 0.95, p ≈ 0.9) the defaults give
@@ -181,25 +228,8 @@ def lsh_neardup_pairs(
     key (table, bucket) is hash-uniform; the two id joins that fetch
     vectors for verification touch candidates only."""
     base = embeddings if subset_filter is None else embeddings.filter(subset_filter)
-    v = base.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
-    tables = [
-        [_hyperplane(dim, t * 1000 + i) for i in range(num_planes)]
-        for t in range(num_tables)
-    ]
-    bucketed = v.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        lsh_bucket(F.col("vec"), planes).alias("bucket"),
-                    )
-                    for t, planes in enumerate(tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("id", "tb.table", "tb.bucket")
+    v = _vectors(base, id_col, vec_col)
+    bucketed = _lsh_buckets(v, ["id"], "vec", dim, num_planes, num_tables)
     cand = (
         bucketed.alias("a")
         .join(bucketed.alias("b"), ["table", "bucket"])
@@ -208,37 +238,8 @@ def lsh_neardup_pairs(
         .distinct()
     )
     vn = v.withColumn("_n", norm(F.col("vec")))
-    return (
-        cand.join(
-            vn.select(
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("vec_a"),
-                F.col("_n").alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            vn.select(
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("vec_b"),
-                F.col("_n").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_a"), F.col("vec_b")),
-                    F.col("_na"),
-                    F.col("_nb"),
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    pairs = cand.join(_side(vn, "a"), "id_a").join(_side(vn, "b"), "id_b")
+    return _close_pairs(pairs, threshold).select("id_a", "id_b", "cosine")
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
@@ -287,55 +288,25 @@ def lsh_topk(
     corpora (near-dup cosine ≥ 0.9, p ≥ 0.85) reach the same recall
     with more planes and far smaller candidate sets; raise ``num_planes``
     there to cut rerank cost."""
-    tables = [
-        [_hyperplane(dim, t * 1000 + i) for i in range(num_planes)]
-        for t in range(num_tables)
-    ]
 
     def bucketed(df: DataFrame, side: str) -> DataFrame:
-        v = df.select(
-            F.col(id_col).alias(f"{side}_id"), _as_double(vec_col).alias(f"vec_{side}")
-        )
-        return v.select(
-            f"{side}_id",
-            f"vec_{side}",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            lsh_bucket(F.col(f"vec_{side}"), planes).alias("bucket"),
-                        )
-                        for t, planes in enumerate(tables)
-                    ]
-                )
-            ).alias("tb"),
-        ).select(f"{side}_id", f"vec_{side}", "tb.table", "tb.bucket")
+        v = _vectors(df, id_col, vec_col, f"{side}_id", f"vec_{side}")
+        keep = [f"{side}_id", f"vec_{side}"]
+        return _lsh_buckets(v, keep, f"vec_{side}", dim, num_planes, num_tables)
 
-    corpus_b = bucketed(embeddings, "n")
-    query_b = bucketed(queries, "q")
     cands = (
-        corpus_b.join(F.broadcast(query_b), ["table", "bucket"])
+        bucketed(embeddings, "n")
+        .join(F.broadcast(bucketed(queries, "q")), ["table", "bucket"])
         .filter(F.col("q_id") != F.col("n_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("n_id").alias("neighbor_id"),
             "vec_q",
-            F.col("vec_n").alias("vec_n"),
+            "vec_n",
         )
         .distinct()
     )
-    scored = cands.withColumn(
-        "cosine", F.round(cosine(F.col("vec_q"), F.col("vec_n")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_neighbors(cands, k, _score(F.col("vec_q"), F.col("vec_n")))
 
 
 def _normalize(vec: Column) -> Column:
@@ -401,12 +372,46 @@ def ivf_build(
     return centroids
 
 
+def _centroid_dots(vec: Column, centroids: list[list[float]]) -> Column:
+    return F.array(*[dot(vec, lit_vec(c)) for c in centroids])
+
+
 def ivf_assign(vec: Column, centroids: list[list[float]]) -> Column:
     """Index of the max-dot centroid (vectors must be normalized)."""
-    dots = F.array(
-        *[dot(vec, lit_vec(c)) for c in centroids]
-    )
+    dots = _centroid_dots(vec, centroids)
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+
+
+def _with_cells(
+    v: DataFrame, centroids: list[list[float]], vec: str = "vec", cell: str = "cluster"
+) -> DataFrame:
+    """``v`` plus each row's IVF cell: the max-dot centroid of the
+    normalized ``vec``."""
+    return v.withColumn(cell, ivf_assign(_normalize(F.col(vec)), centroids))
+
+
+def _probe_cells(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    cell: str = "cluster",
+) -> DataFrame:
+    """The IVF probe list: each query's ``nprobe`` highest-dot cells,
+    ties broken on the smaller cell id, as ``(query_id, vec_q, cell,
+    _qn)`` rows (a caller that needs only the cells lets column pruning
+    drop the vector)."""
+    qs = _vectors(queries, id_col, vec_col, "query_id", "vec_q")
+    cdots = _centroid_dots(_normalize(F.col("vec_q")), centroids)
+    w = Window.partitionBy("query_id").orderBy(F.col("cdot").desc(), F.col(cell))
+    probes = (
+        qs.select("query_id", "vec_q", F.posexplode(cdots).alias(cell, "cdot"))
+        .withColumn("pr", F.row_number().over(w))
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", "vec_q", cell)
+    )
+    return probes.withColumn("_qn", norm(F.col("vec_q")))
 
 
 def ivf_topk(
@@ -428,71 +433,42 @@ def ivf_topk(
     baseline is asserted in tests — measured on the fixture (64-dim,
     16 cells): 0.82 @ nprobe=2, 0.86 @ 4, 0.93 @ 6."""
     centroids = ivf_build(embeddings, n_centroids, iters, id_col, vec_col)
-    corpus = (
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("vec_n")
-        )
-        .withColumn("cluster", ivf_assign(_normalize(F.col("vec_n")), centroids))
-        .withColumn("_nn", norm(F.col("vec_n")))
+    corpus = _vectors(embeddings, id_col, vec_col, "neighbor_id", "vec_n")
+    corpus = _with_cells(corpus, centroids, "vec_n").withColumn(
+        "_nn", norm(F.col("vec_n"))
     )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vec_q")
+    probes = _probe_cells(queries, centroids, nprobe, id_col, vec_col)
+    # no broadcast hint (r10 de-hinting policy, same class as the
+    # k_core alive-set fix): ``queries`` may be the FULL corpus
+    # (``embedding_knn_graph`` passes emb×emb), so the probe frame
+    # is SF-scaling there and a forced broadcast would bypass
+    # autoBroadcastJoinThreshold at any size.  Catalyst/AQE pick
+    # the strategy: bounded probe batches still auto-broadcast
+    # (under the threshold at every SF), corpus-sized probe sides
+    # shuffle on the cluster key.  That key is uniform but has
+    # only n_centroids distinct values (default 16), which caps a
+    # shuffle join's effective parallelism at n_centroids tasks
+    # regardless of shuffle.partitions — consistent with the
+    # 100 TB guidance below (partitionBy(cluster) layout): raise
+    # n_centroids with SF so the shuffle-join path parallelizes.
+    return _rank_neighbors(corpus.join(probes, "cluster"), k)
+
+
+def _dedup_cells(v: DataFrame, threshold: float) -> DataFrame:
+    """The SemDeDup step over (id, vec, cluster) rows: a within-cell
+    self-join drops every vector with a same-cell neighbor at cosine
+    >= ``threshold`` and a smaller id; returns ``(id, cluster, keep)``."""
+    vn = v.withColumn("_n", norm(F.col("vec")))
+    pairs = _side(vn, "a", "cluster").join(_side(vn, "b", "cluster"), "cluster")
+    dropped = (
+        _close_pairs(pairs.filter(F.col("id_a") < F.col("id_b")), threshold)
+        .select(F.col("id_b").alias("id"))
+        .distinct()
     )
-    cdots = F.array(
-        *[
-            dot(_normalize(F.col("vec_q")), lit_vec(c))
-            for c in centroids
-        ]
-    )
-    probes = qs.select(
-        "query_id",
-        "vec_q",
-        F.posexplode(cdots).alias("cluster", "cdot"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cdot").desc(), F.col("cluster")
-    )
-    probes = (
-        probes.withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "vec_q", "cluster")
-        .withColumn("_qn", norm(F.col("vec_q")))
-    )
-    scored = (
-        # no broadcast hint (r10 de-hinting policy, same class as the
-        # k_core alive-set fix): ``queries`` may be the FULL corpus
-        # (``embedding_knn_graph`` passes emb×emb), so the probe frame
-        # is SF-scaling there and a forced broadcast would bypass
-        # autoBroadcastJoinThreshold at any size.  Catalyst/AQE pick
-        # the strategy: bounded probe batches still auto-broadcast
-        # (under the threshold at every SF), corpus-sized probe sides
-        # shuffle on the cluster key.  That key is uniform but has
-        # only n_centroids distinct values (default 16), which caps a
-        # shuffle join's effective parallelism at n_centroids tasks
-        # regardless of shuffle.partitions — consistent with the
-        # 100 TB guidance below (partitionBy(cluster) layout): raise
-        # n_centroids with SF so the shuffle-join path parallelizes.
-        corpus.join(probes, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_q"), F.col("vec_n")),
-                    F.col("_qn"),
-                    F.col("_nn"),
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return v.join(dropped.withColumn("dropped", F.lit(True)), "id", "left").select(
+        "id",
+        "cluster",
+        F.coalesce(~F.col("dropped"), F.lit(True)).alias("keep"),
     )
 
 
@@ -524,48 +500,8 @@ def semantic_dedup(
     separation), which is the accepted trade for never paying an
     all-pairs join."""
     centroids = ivf_build(embeddings, n_centroids, iters, id_col, vec_col)
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    ).withColumn("cluster", ivf_assign(_normalize(F.col("vec")), centroids))
-    vn = v.withColumn("_n", norm(F.col("vec")))
-    a = vn.select(
-        "cluster",
-        F.col("id").alias("id_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("_n").alias("_na"),
-    )
-    b = vn.select(
-        "cluster",
-        F.col("id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("_n").alias("_nb"),
-    )
-    dropped = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_a"), F.col("vec_b")),
-                    F.col("_na"),
-                    F.col("_nb"),
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("id_b").alias("id"))
-        .distinct()
-    )
-    return (
-        v.join(dropped.withColumn("dropped", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            "cluster",
-            F.coalesce(~F.col("dropped"), F.lit(True)).alias("keep"),
-        )
-    )
+    v = _with_cells(_vectors(embeddings, id_col, vec_col), centroids)
+    return _dedup_cells(v, threshold)
 
 
 def quantize_int8(vec: Column) -> Column:
@@ -637,25 +573,9 @@ def brute_force_topk_int8(
         qz.getField("q").alias("qv"),
         qz.getField("scale").alias("qs"),
     )
-    qs_ = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vec_q")
-    )
-    scored = (
-        corpus.join(F.broadcast(qs_))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(cosine(F.col("vec_q"), dequantize(F.col("qv"), F.col("qs"))), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    qs = _vectors(queries, id_col, vec_col, "query_id", "vec_q")
+    score = _score(F.col("vec_q"), dequantize(F.col("qv"), F.col("qs")))
+    return _rank_neighbors(corpus.join(F.broadcast(qs)), k, score)
 
 
 def materialize_ivf_index(
@@ -684,9 +604,7 @@ def materialize_ivf_index(
 
     spark = embeddings.sparkSession
     centroids = ivf_build(embeddings, n_centroids, iters, id_col, vec_col)
-    assigned = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    ).withColumn("cluster", ivf_assign(_normalize(F.col("vec")), centroids))
+    assigned = _with_cells(_vectors(embeddings, id_col, vec_col), centroids)
     for t in (table, f"{table}_codebook"):
         drop_managed_table(spark, t)
     assigned.write.mode("overwrite").partitionBy("cluster").saveAsTable(table)
@@ -708,7 +626,8 @@ def ivf_topk_from_index(
 ) -> DataFrame:
     """ANN top-k against a persisted IVF index (see
     :func:`materialize_ivf_index`) — no corpus pass, no codebook
-    retraining.
+    retraining.  Same probe and ranking as :func:`ivf_topk`, which
+    also leaves the join strategy to Catalyst (no broadcast hint).
 
     The probe list (query × nprobe cells) is model-sized, so the cell
     ids are collected and pushed into the scan as a static ``IN``
@@ -719,27 +638,7 @@ def ivf_topk_from_index(
     spark = queries.sparkSession
     cb_rows = spark.table(f"{table}_codebook").collect()  # k×d model
     centroids = [list(r.centroid) for r in sorted(cb_rows, key=lambda r: r.cluster)]
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vec_q")
-    )
-    cdots = F.array(
-        *[
-            dot(_normalize(F.col("vec_q")), lit_vec(c))
-            for c in centroids
-        ]
-    )
-    probes = qs.select(
-        "query_id", "vec_q", F.posexplode(cdots).alias("cluster", "cdot")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cdot").desc(), F.col("cluster")
-    )
-    probes = (
-        probes.withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "vec_q", "cluster")
-        .withColumn("_qn", norm(F.col("vec_q")))
-    )
+    probes = _probe_cells(queries, centroids, nprobe, id_col, vec_col)
     cells = sorted({r.cluster for r in probes.select("cluster").distinct().collect()})
     corpus = (
         spark.table(table)
@@ -747,32 +646,7 @@ def ivf_topk_from_index(
         .select("cluster", F.col("id").alias("neighbor_id"), F.col("vec").alias("vec_n"))
         .withColumn("_nn", norm(F.col("vec_n")))
     )
-    scored = (
-        # threshold-driven like ivf_topk: the probe frame scales with
-        # the caller's query batch, so the strategy stays Catalyst's
-        # choice (bounded batches auto-broadcast; see ivf_topk)
-        corpus.join(probes, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_q"), F.col("vec_n")),
-                    F.col("_qn"),
-                    F.col("_nn"),
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_neighbors(corpus.join(probes, "cluster"), k)
 
 
 def semantic_dedup_from_index(
@@ -788,45 +662,7 @@ def semantic_dedup_from_index(
     :func:`semantic_dedup`: drop every vector with a same-cell neighbor
     at cosine >= ``threshold`` and a smaller id; returns
     ``(id, cluster, keep)`` for every indexed vector."""
-    v = spark.table(table).select("cluster", "id", "vec")
-    vn = v.withColumn("_n", norm(F.col("vec")))
-    a = vn.select(
-        "cluster",
-        F.col("id").alias("id_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("_n").alias("_na"),
-    )
-    b = vn.select(
-        "cluster",
-        F.col("id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("_n").alias("_nb"),
-    )
-    dropped = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine_pre(
-                    dot(F.col("vec_a"), F.col("vec_b")),
-                    F.col("_na"),
-                    F.col("_nb"),
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("id_b").alias("id"))
-        .distinct()
-    )
-    return v.join(
-        dropped.withColumn("dropped", F.lit(True)), "id", "left"
-    ).select(
-        "id",
-        "cluster",
-        F.coalesce(~F.col("dropped"), F.lit(True)).alias("keep"),
-    )
+    return _dedup_cells(spark.table(table).select("cluster", "id", "vec"), threshold)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -841,13 +677,11 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def _pq_codebook_lit(codebooks: list[list[list[float]]]) -> Column:
-    return F.array(
-        *[
-            F.array(*[lit_vec(c) for c in cb])
-            for cb in codebooks
-        ]
-    )
+def _pq_dists(sv: Column, sub: Column, codebooks: list[list[list[float]]]) -> Column:
+    """Squared L2 from subvector ``sv`` to every centroid of subspace
+    ``sub``, in centroid order (the codebooks ride as one literal)."""
+    lit = F.array(*[F.array(*[lit_vec(c) for c in cb]) for cb in codebooks])
+    return F.transform(F.element_at(lit, sub + 1), lambda c: _l2sq(sv, c))
 
 
 def pq_subvectors(
@@ -858,10 +692,7 @@ def pq_subvectors(
 ) -> DataFrame:
     """(id, sub, sv) rows: each vector split into ``m`` contiguous
     subvectors — a narrow explode (rows × m), no shuffle."""
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    )
-    return v.select(
+    return _vectors(embeddings, id_col, vec_col).select(
         "id",
         F.posexplode(
             F.expr(
@@ -891,14 +722,7 @@ def pq_build(
     against the broadcast codebook literal, one (sub, cluster, pos)
     re-average — only the m×ks×(d/m) codebook (= d·ks doubles total,
     the model artifact) ever reaches the driver."""
-    init = (
-        embeddings.select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-        )
-        .orderBy("id")
-        .limit(ks)
-        .collect()
-    )
+    init = _vectors(embeddings, id_col, vec_col).orderBy("id").limit(ks).collect()
     dim = len(init[0].vec)
     sub_dim = dim // m
     codebooks = [
@@ -936,8 +760,7 @@ def pq_assign(
 ) -> Column:
     """Index of the min-L2 centroid of subspace ``sub`` (first-min
     tie-break, matching the oracle's ``ORDER BY d2, cluster``)."""
-    cb = F.element_at(_pq_codebook_lit(codebooks), sub + 1)
-    dists = F.transform(cb, lambda c: _l2sq(sv, c))
+    dists = _pq_dists(sv, sub, codebooks)
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
@@ -955,13 +778,10 @@ def pq_encode(
     decoded approximation.  One narrow explode + one groupBy(id): a
     single shuffle sized by rows×m tiny rows, codebooks ride along as
     a broadcast literal."""
-    m = len(codebooks)
-    ks = len(codebooks[0])
-    if ks > 16:
+    if len(codebooks[0]) > 16:
         raise ValueError("pq_encode packs 4-bit fields; ks must be <= 16")
-    subs = pq_subvectors(embeddings, m, id_col, vec_col)
-    cb = F.element_at(_pq_codebook_lit(codebooks), F.col("sub") + 1)
-    dists = F.transform(cb, lambda c: _l2sq(F.col("sv"), c))
+    subs = pq_subvectors(embeddings, len(codebooks), id_col, vec_col)
+    dists = _pq_dists(F.col("sv"), F.col("sub"), codebooks)
     assigned = subs.select(
         "id",
         "sub",
@@ -979,6 +799,53 @@ def pq_encode(
             F.round(F.sqrt(F.sum("d2")), 6).alias("recon_err"),
         )
         .select(F.col("id").alias(id_col), "pq_code", "recon_err")
+    )
+
+
+def _pq_codes(
+    embeddings: DataFrame, codebooks: list[list[list[float]]], id_col: str, vec_col: str
+) -> DataFrame:
+    """(cand_id, pq_code) for every corpus vector."""
+    return pq_encode(embeddings, codebooks, id_col, vec_col).select(
+        F.col(id_col).alias("cand_id"), "pq_code"
+    )
+
+
+def _pq_decode(codes: DataFrame, m: int, *keep: str) -> DataFrame:
+    """``keep`` plus one row per subspace ``sub`` with its 4-bit centroid
+    index as ``cluster``."""
+    return codes.select(
+        *keep,
+        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
+        "pq_code",
+    ).withColumn("cluster", F.expr("CAST(shiftright(pq_code, 4 * sub) & 15 AS INT)"))
+
+
+def _pq_tables(
+    queries: DataFrame, codebooks: list[list[list[float]]], id_col: str, vec_col: str
+) -> DataFrame:
+    """Per-query ADC distance tables: (query_id, sub, cluster, d2) — the
+    squared L2 from each query subvector to each subspace centroid."""
+    qsubs = pq_subvectors(queries, len(codebooks), id_col, vec_col)
+    dists = _pq_dists(F.col("sv"), F.col("sub"), codebooks)
+    return qsubs.select(
+        F.col("id").alias("query_id"),
+        "sub",
+        F.posexplode(dists).alias("cluster", "d2"),
+    )
+
+
+def _adc_top_k(looked_up: DataFrame, k: int) -> DataFrame:
+    """Sum each (query, candidate)'s m table lookups into ``adc_dist``
+    and keep the ``k`` nearest per query, ties broken on the smaller id."""
+    scored = looked_up.groupBy("query_id", "cand_id").agg(
+        F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist")
+    )
+    return _top_k(
+        scored,
+        k,
+        ["adc_dist", "cand_id"],
+        ["query_id", F.col("cand_id").alias("neighbor_id"), "adc_dist"],
     )
 
 
@@ -1090,41 +957,14 @@ def pq_adc_topk(
     Cost is corpus × m × Q code-sized rows; at real scale the IVF cell
     routing (``ivf_topk_from_index``) prunes the corpus side first —
     this operator is the in-cell scorer of that IVF-PQ composition."""
-    m = len(codebooks)
-    ks = len(codebooks[0])
-    codes = pq_encode(embeddings, codebooks, id_col, vec_col).select(
-        F.col(id_col).alias("cand_id"), "pq_code"
-    )
-    decoded = codes.select(
-        "cand_id",
-        "pq_code",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-    ).withColumn(
-        "cluster",
-        F.expr("CAST(shiftright(pq_code, 4 * sub) & 15 AS INT)"),
-    )
-    qsubs = pq_subvectors(queries, m, id_col, vec_col)
-    cb = F.element_at(_pq_codebook_lit(codebooks), F.col("sub") + 1)
-    tables = qsubs.select(
-        F.col("id").alias("query_id"),
-        "sub",
-        F.posexplode(F.transform(cb, lambda c: _l2sq(F.col("sv"), c))).alias(
-            "cluster", "d2"
-        ),
-    )
-    assert ks <= 16  # pq_encode packs 4-bit fields
-    scored = (
-        decoded.join(F.broadcast(tables), ["sub", "cluster"])
+    codes = _pq_codes(embeddings, codebooks, id_col, vec_col)
+    tables = _pq_tables(queries, codebooks, id_col, vec_col)
+    looked_up = (
+        _pq_decode(codes, len(codebooks), "cand_id")
+        .join(F.broadcast(tables), ["sub", "cluster"])
         .filter(F.col("query_id") != F.col("cand_id"))
-        .groupBy("query_id", "cand_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("cand_id").alias("neighbor_id"), "adc_dist", "rank")
-    )
+    return _adc_top_k(looked_up, k)
 
 
 def kcenter_select(
@@ -1151,26 +991,13 @@ def kcenter_select(
     before the argmax with id tie-breaks so a SQL replay picks
     identically.  Returns the k (pick, id, min_dist_sq) rows as a
     local frame — the coreset IS driver-sized by construction."""
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    )
+    v = _vectors(embeddings, id_col, vec_col)
     first = v.orderBy("id").limit(1).collect()[0]
     picked: list[tuple[int, int, float | None]] = [(1, first.id, None)]
     sel_vecs: list[list[float]] = [list(first.vec)]
     for step in range(2, k + 1):
-        mind = F.round(
-            F.least(
-                *[
-                    _l2sq(F.col("vec"), lit_vec(s))
-                    for s in sel_vecs
-                ]
-            )
-            if len(sel_vecs) > 1
-            else _l2sq(
-                F.col("vec"), lit_vec(sel_vecs[0])
-            ),
-            6,
-        )
+        dists = [_l2sq(F.col("vec"), lit_vec(s)) for s in sel_vecs]
+        mind = F.round(F.least(*dists) if len(dists) > 1 else dists[0], 6)
         far = (
             v.filter(~F.col("id").isin(*[i for _, i, _ in picked]))
             .select("id", "vec", mind.alias("md"))
@@ -1228,67 +1055,16 @@ def ivfpq_topk(
     ).localCheckpoint(eager=True)
     centroids = ivf_build(base, n_centroids, iters, id_col, vec_col)
     codebooks = pq_build(base, m, ks, iters, id_col, vec_col)
-    cells = base.select(
-        F.col(id_col).alias("cand_id"), _as_double(vec_col).alias("vec_n")
-    ).select(
-        "cand_id",
-        ivf_assign(_normalize(F.col("vec_n")), centroids).alias("cell"),
+    cells = _with_cells(
+        _vectors(base, id_col, vec_col, "cand_id", "vec_n"), centroids, "vec_n", "cell"
+    ).select("cand_id", "cell")
+    cand = cells.join(_pq_codes(base, codebooks, id_col, vec_col), "cand_id")
+    probes = _probe_cells(queries, centroids, nprobe, id_col, vec_col, cell="cell")
+    tables = _pq_tables(queries, codebooks, id_col, vec_col)
+    routed = cand.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("cand_id")
     )
-    codes = pq_encode(base, codebooks, id_col, vec_col).select(
-        F.col(id_col).alias("cand_id"), "pq_code"
+    looked_up = _pq_decode(routed, m, "query_id", "cand_id").join(
+        F.broadcast(tables), ["query_id", "sub", "cluster"]
     )
-    cand = cells.join(codes, "cand_id")
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vec_q")
-    )
-    cdots = F.array(
-        *[
-            dot(_normalize(F.col("vec_q")), lit_vec(c))
-            for c in centroids
-        ]
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cdot").desc(), F.col("cell")
-    )
-    probes = (
-        qs.select("query_id", F.posexplode(cdots).alias("cell", "cdot"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "cell")
-    )
-    qsubs = pq_subvectors(queries, m, id_col, vec_col)
-    cb = F.element_at(_pq_codebook_lit(codebooks), F.col("sub") + 1)
-    tables = qsubs.select(
-        F.col("id").alias("query_id"),
-        "sub",
-        F.posexplode(F.transform(cb, lambda c: _l2sq(F.col("sv"), c))).alias(
-            "cluster", "d2"
-        ),
-    )
-    routed = (
-        cand.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-            "pq_code",
-        )
-        .withColumn(
-            "cluster",
-            F.expr("CAST(shiftright(pq_code, 4 * sub) & 15 AS INT)"),
-        )
-    )
-    scored = (
-        routed.join(F.broadcast(tables), ["query_id", "sub", "cluster"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("cand_id").alias("neighbor_id"), "adc_dist", "rank"
-        )
-    )
+    return _adc_top_k(looked_up, k)

@@ -355,7 +355,7 @@ def event_type_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the event-type transition graph (nodes = event
     types, edge weight = observed transition count) — which states the
     user journey gravitates to.  Pinned at exactly 20 power iterations
-    (``tol=0`` disables the early exit) so the DuckDB oracle can replay
+    (``graph.pagerank`` has no early exit) so the DuckDB oracle can replay
     the identical recurrence as 20 unrolled CTE steps; double-precision
     drift across engines is bounded far below the 6-decimal rounding.
     Convergence properties are additionally unit-tested against numpy
@@ -369,7 +369,6 @@ def event_type_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         src="from_type",
         dst="to_type",
         weight="n",
-        tol=0.0,
         max_iter=20,
         broadcast_ranks=True,
     )

@@ -11,6 +11,13 @@ Usage:
     SPARK_GRAFT_PLAN_DIR=plans/r10 SPARK_GRAFT_PLAN_TAG=before \
         python scripts/bench_some.py q1               # also dump explain
 
+The dumped formatted plan has its run-specific ids replaced by fixed
+tokens (expression ids ``#123`` -> ``#N``, ``plan_id=123`` ->
+``plan_id=N``, RDD ids ``RDD[123]`` -> ``RDD[N]``, generated lambda
+variables ``x_12`` -> ``x_N``, the checkout's own path, as in its
+``spark-warehouse`` tables -> ``<checkout>``), so dumps of two
+checkouts compare byte for byte with ``diff``.
+
 Names are looked up in ``__spark_entry__.queries()``.  Each query is
 warmed once at sf0.001 (JIT/codegen), then timed SPARK_GRAFT_RUNS
 times into the noop sink at $SPARK_GRAFT_SF_DIR.  Prints one JSON
@@ -23,13 +30,32 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark  # noqa: E402
+
+_RUN_IDS = [
+    (re.compile(re.escape(ROOT)), "<checkout>"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b(lambda [A-Za-z]+)_\d+"), r"\1_N"),
+]
+
+
+def normalized_plan(df) -> str:
+    """The formatted physical plan with run-specific ids replaced."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    for pattern, token in _RUN_IDS:
+        text = pattern.sub(token, text)
+    return text
 
 
 def main() -> None:
@@ -61,8 +87,7 @@ def main() -> None:
             os.makedirs(plan_dir, exist_ok=True)
             df = fn(spark, sf_dir)
             with open(os.path.join(plan_dir, f"{n}_{plan_tag}.txt"), "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+                f.write(normalized_plan(df))
         ts = []
         for i in range(runs):
             group = f"construct:{n}:{i}"

@@ -97,29 +97,3 @@ def test_zorder_plan_is_codegen_no_shuffle_no_udf(spark):
     assert "PythonUDF" not in plan and "ArrowEval" not in plan
     # "*(n)" prefixes mark whole-stage-codegen'd operators
     assert "*(" in plan
-
-
-def test_semantic_dedup_from_index_equals_direct(spark, sf_dir):
-    """The persisted-index SemDeDup pass must reproduce the direct
-    semantic_dedup verdicts exactly: same deterministic codebook =>
-    same cells => same within-cell pairs and keep flags."""
-    from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    direct = {
-        (r.id, r.cluster, r.keep)
-        for r in similarity.semantic_dedup(
-            emb, threshold=0.95, n_centroids=16
-        ).collect()
-    }
-    similarity.materialize_ivf_index(
-        emb, table="t_semdedup_ivf", n_centroids=16, iters=2
-    )
-    indexed = {
-        (r.id, r.cluster, r.keep)
-        for r in similarity.semantic_dedup_from_index(
-            spark, table="t_semdedup_ivf", threshold=0.95
-        ).collect()
-    }
-    assert direct == indexed

@@ -1,11 +1,11 @@
 """Differential tests for the round-7 wave-11..18 operators: each
 Spark plan is replayed by a small pure-Python reference (dict-of-counts
-k-anonymity, sequential gap statistics, textbook PSI sum, PQ Lloyd,
-greedy MMR / k-center, the stupid-backoff ladder, nDCG, RAKE, TextRank
-power iteration, transition conformance) on the collected fixture rows
-— proving the intended ALGORITHM on top of the DuckDB oracles'
-cross-engine agreement.  Hypothesis sections add randomized invariants
-(PQ training monotonicity, Misra-Gries guarantees)."""
+k-anonymity, sequential gap statistics, textbook PSI sum, the
+stupid-backoff ladder, nDCG, RAKE, TextRank power iteration, transition
+conformance) on the collected fixture rows — proving the intended
+ALGORITHM on top of the DuckDB oracles' cross-engine agreement.  A
+Hypothesis section adds randomized Misra-Gries guarantees.  The PQ,
+MMR, k-center and IVF-PQ differentials live in test_similarity.py."""
 
 from __future__ import annotations
 
@@ -96,163 +96,6 @@ def test_psi_drift_matches_textbook_sum(spark, sf_dir):
         assert r["psi"] == pytest.approx(round(psi, 6), abs=1e-5)
         assert r["drift_flag"] == (r["psi"] > 0.2)
         assert r["psi"] >= -1e-9  # PSI is a sum of nonneg KL-style terms
-
-
-def test_pq_matches_pure_python_lloyd(spark, sf_dir):
-    """Replay pq_build's deterministic training (init = 16 smallest
-    ids' subvectors, 2 plain-L2 Lloyd rounds, first-min tie-break,
-    empty cells keep centroids) in pure Python and check codes and
-    reconstruction errors row-for-row."""
-    from gcp_cloudsql_airflow_bigquery_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = sorted(
-        ((r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect())
-    )
-    m, ks, sub_dim = 8, 16, len(rows[0][1]) // 8
-    subs = {
-        (vid, s): vec[s * sub_dim : (s + 1) * sub_dim] for vid, vec in rows for s in range(m)
-    }
-    books = [
-        [rows[c][1][s * sub_dim : (s + 1) * sub_dim] for c in range(ks)]
-        for s in range(m)
-    ]
-
-    def d2(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    def argmin(sv, cb):
-        ds = [d2(sv, c) for c in cb]
-        return ds.index(min(ds))
-
-    for _ in range(2):
-        members: defaultdict = defaultdict(list)
-        for (vid, s), sv in subs.items():
-            members[(s, argmin(sv, books[s]))].append(sv)
-        books = [
-            [
-                [sum(v[p] for v in mem) / len(mem) for p in range(sub_dim)]
-                if (mem := members.get((s, c)))
-                else books[s][c]
-                for c in range(ks)
-            ]
-            for s in range(m)
-        ]
-    expect = {}
-    for vid, vec in rows:
-        code, err2 = 0, 0.0
-        for s in range(m):
-            cl = argmin(subs[(vid, s)], books[s])
-            code |= cl << (4 * s)
-            err2 += d2(subs[(vid, s)], books[s][cl])
-        expect[vid] = (code, round(math.sqrt(err2), 6))
-
-    got = {
-        r["vec_id"]: (r["pq_code"], r["recon_err"])
-        for r in llmdata.embedding_pq_codes(spark, sf_dir).collect()
-    }
-    assert got.keys() == expect.keys()
-    n_code_match = sum(got[v][0] == expect[v][0] for v in got)
-    # argmin near-ties may flip a rare subspace code between float
-    # summation orders; demand near-total agreement, exact err where
-    # codes agree
-    assert n_code_match >= len(got) - 1, f"{len(got) - n_code_match} code mismatches"
-    for v in got:
-        if got[v][0] == expect[v][0]:
-            assert got[v][1] == pytest.approx(expect[v][1], abs=2e-6)
-
-    # 4-bit packing invariant: every unpacked field is a valid cluster
-    for code, _ in got.values():
-        for s in range(m):
-            assert 0 <= (code >> (4 * s)) & 0xF < ks
-
-    with pytest.raises(ValueError):
-        similarity.pq_encode(emb, [[[0.0]] * 17])
-
-
-def test_mmr_matches_pure_python_greedy(spark, sf_dir):
-    """Replay the unrolled greedy MMR (lam=0.7, round-6 scores,
-    cand_id tie-break) in pure Python from the same brute-force
-    top-25 pool and check every pick and score."""
-    from gcp_cloudsql_airflow_bigquery_spark.plans import search
-
-    got = defaultdict(dict)
-    for r in search.embedding_mmr_diverse(spark, sf_dir).collect():
-        got[r["query_id"]][r["pick"]] = (r["cand_id"], r["mmr_score"])
-    emb = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in load_table(spark, sf_dir, "embeddings").collect()
-    }
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb)
-
-    lam = 0.7
-    for qid in range(5):
-        rels = sorted(
-            ((round(cos(emb[qid], v), 6), cid) for cid, v in emb.items() if cid != qid),
-            key=lambda t: (-t[0], t[1]),
-        )[:25]
-        pool = {cid: rel for rel, cid in rels}
-        # pick 1 = max rel, cand_id tie-break
-        sel = [sorted(pool.items(), key=lambda t: (-t[1], t[0]))[0]]
-        for pick in range(2, 11):
-            scored = []
-            for cid, rel in pool.items():
-                if cid in {c for c, _ in sel}:
-                    continue
-                ms = max(cos(emb[cid], emb[sc]) for sc, _ in sel)
-                scored.append((cid, round(lam * rel - (1 - lam) * ms, 6)))
-            scored.sort(key=lambda t: (-t[1], t[0]))
-            sel.append(scored[0])
-        assert sorted(got[qid]) == list(range(1, 11))
-        for pick, (cid, score) in enumerate(sel, start=1):
-            gcid, gscore = got[qid][pick]
-            assert gcid == cid, (qid, pick)
-            expect = round(pool[cid], 6) if pick == 1 else score
-            assert gscore == pytest.approx(expect, abs=2e-6), (qid, pick)
-        # diversification sanity: no candidate picked twice
-        assert len({c for c, _ in sel}) == 10
-
-
-def test_pq_adc_recall_and_shortlist(spark, sf_dir):
-    """PQ-ADC quality contract on the worst-case (random, clusterless)
-    fixture: direct ADC top-10 keeps a measurable fraction of the
-    exact top-10, and the production composition — ADC shortlist 100 +
-    exact rerank — recovers nearly all of it (measured 0.94 at sf0.01,
-    0.3 direct)."""
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_airflow_bigquery_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 5)
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(emb, probes, k=10).collect()
-    }
-    cb = similarity.pq_build(emb, m=8, ks=16, iters=2)
-    direct = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.pq_adc_topk(emb, probes, cb, k=10).collect()
-    }
-    assert len(truth & direct) / len(truth) >= 0.2
-    shortlist = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.pq_adc_topk(emb, probes, cb, k=100).collect()
-    }
-    assert len(truth & shortlist) / len(truth) >= 0.8
-    # ADC distance is a true distance to the reconstruction: it must
-    # equal sqrt(sum of the per-sub table entries), already covered by
-    # the oracle; here pin ranks are 1..10 per query and deterministic
-    per_q = defaultdict(list)
-    for r in similarity.pq_adc_topk(emb, probes, cb, k=10).collect():
-        per_q[r.query_id].append(r.rank)
-    for q, ranks in per_q.items():
-        assert sorted(ranks) == list(range(1, 11)), q
 
 
 def test_backoff_lm_matches_pure_python_ladder(spark, sf_dir):
@@ -390,122 +233,8 @@ def test_ndcg_eval_matches_pure_python_formula(spark, sf_dir):
         assert r["n_graded_hits"] == sum(1 for d in ranked if (qid, d) in gold)
 
 
-def test_kcenter_matches_pure_python_greedy(spark, sf_dir):
-    """Replay greedy farthest-point selection (round-6 min-dists, id
-    tie-breaks) in pure Python; also pin the defining invariant: each
-    pick's min-distance-to-prior is non-increasing."""
-    emb = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in load_table(spark, sf_dir, "embeddings").collect()
-    }
-    sel = [min(emb)]
-    dists = [None]
-    for _ in range(9):
-        # farthest point: max rounded min-dist, tie -> smallest id
-        cands = []
-        for vid, v in emb.items():
-            if vid in sel:
-                continue
-            md = round(
-                min(sum((x - y) ** 2 for x, y in zip(v, emb[s])) for s in sel), 6
-            )
-            cands.append((-md, vid))
-        cands.sort()
-        sel.append(cands[0][1])
-        dists.append(-cands[0][0])
-    got = sorted(
-        (r["pick"], r["vec_id"], r["min_dist_sq"])
-        for r in llmdata.embedding_kcenter_coreset(spark, sf_dir).collect()
-    )
-    assert [g[1] for g in got] == sel
-    for (pick, vid, md), expect in zip(got, dists):
-        if expect is None:
-            assert md is None
-        else:
-            assert md == pytest.approx(expect, abs=2e-6)
-    picked_d = [g[2] for g in got if g[2] is not None]
-    assert all(a >= b - 1e-9 for a, b in zip(picked_d, picked_d[1:]))
-
-
-def test_ivfpq_consistent_with_components(spark, sf_dir):
-    """IVF-PQ = PQ-ADC restricted to IVF-probed cells: every IVF-PQ
-    result appears in the unrouted ADC ranking of the same query with
-    the SAME distance, and every ADC top-k candidate that lives in a
-    probed cell survives routing."""
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_airflow_bigquery_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 5)
-    centroids = similarity.ivf_build(emb, 16, 2)
-    codebooks = similarity.pq_build(emb, m=8, ks=16, iters=2)
-    cells = {
-        r["cand_id"]: r["cell"]
-        for r in emb.select(
-            F.col("vec_id").alias("cand_id"),
-            similarity.ivf_assign(
-                similarity._normalize(similarity._as_double("embedding")),
-                centroids,
-            ).alias("cell"),
-        ).collect()
-    }
-    probed = defaultdict(set)
-    for r in similarity.ivfpq_topk(emb, probes, k=10).collect():
-        probed[r["query_id"]].add((r["neighbor_id"], r["adc_dist"]))
-    assert set(probed) == {0, 1, 2, 3, 4}
-    full = defaultdict(dict)
-    for r in similarity.pq_adc_topk(emb, probes, codebooks, k=10_000).collect():
-        full[r["query_id"]][r["neighbor_id"]] = r["adc_dist"]
-    for q, pairs in probed.items():
-        assert len(pairs) == 10
-        for nid, d in pairs:
-            assert full[q][nid] == d, (q, nid)
-
-
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as hst  # noqa: E402
-
-
-@given(
-    hst.lists(
-        hst.lists(
-            hst.floats(min_value=-4.0, max_value=4.0, width=32),
-            min_size=8,
-            max_size=8,
-        ),
-        min_size=6,
-        max_size=24,
-        unique_by=tuple,
-    )
-)
-@settings(max_examples=6, deadline=None)
-def test_pq_invariants_hypothesis(spark, vecs):
-    """Random tiny corpora: codes stay in range, reconstruction error
-    is nonneg, and two Lloyd rounds never give a WORSE total
-    distortion than zero rounds (training monotonicity of k-means on
-    the same init)."""
-    from gcp_cloudsql_airflow_bigquery_spark.operators import similarity
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    m, ks = 4, 4
-    trained = similarity.pq_build(df, m=m, ks=ks, iters=2)
-    init = similarity.pq_build(df, m=m, ks=ks, iters=0)
-    err = {
-        it: sum(
-            r["recon_err"] ** 2
-            for r in similarity.pq_encode(df, cb).collect()
-        )
-        for it, cb in (("trained", trained), ("init", init))
-    }
-    assert err["trained"] <= err["init"] + 1e-6
-    for r in similarity.pq_encode(df, trained).collect():
-        assert r["recon_err"] >= 0
-        for s in range(m):
-            assert 0 <= (r["pq_code"] >> (4 * s)) & 0xF < ks
 
 
 @given(

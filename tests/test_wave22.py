@@ -221,34 +221,3 @@ def test_brown_trend_matches_iterative_recursion(spark, sf_dir):
         trend = a / (1 - a) * (s1 - s2)
         assert abs(g.level - level) < 1e-4
         assert abs(g.forecast_next - (level + trend)) < 1e-4
-
-
-def test_knn_graph_recall_vs_bruteforce(spark, sf_dir):
-    """embedding_knn_graph (IVF, nprobe=4/16) recalls most exact top-3
-    cosine neighbors, never emits self-edges, and ranks densely."""
-    import numpy as np
-
-    from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
-
-    rows = QUERIES["embedding_knn_graph"](spark, sf_dir).collect()
-    by_q: dict[int, list] = {}
-    for r in rows:
-        assert r.query_id != r.neighbor_id
-        by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
-    for q, ns in by_q.items():
-        assert sorted(rk for rk, _ in ns) == list(range(1, len(ns) + 1))
-
-    emb = load_table(spark, sf_dir, "embeddings").collect()
-    ids = np.array([r.vec_id for r in emb])
-    mat = np.array([r.embedding for r in emb], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sims = mat @ mat.T
-    np.fill_diagonal(sims, -2.0)
-    hits = tot = 0
-    for i, q in enumerate(ids):
-        exact = set(ids[np.argsort(-sims[i])[:3]])
-        approx = {nid for _, nid in by_q.get(int(q), [])}
-        hits += len(exact & approx)
-        tot += 3
-    assert hits / tot >= 0.5, f"recall {hits / tot:.2f}"
