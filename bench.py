@@ -316,7 +316,7 @@ def scale_probe(spark, sf_dir: str) -> dict:
     # the fraction of ingest rows that never pay a shuffle.
     from gcp_cloudsql_airflow_bigquery_spark.operators import dedup
     from gcp_cloudsql_airflow_bigquery_spark.operators.textstats import (
-        normalize_text,
+        fingerprint_md5,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -324,7 +324,7 @@ def scale_probe(spark, sf_dir: str) -> dict:
     corpus = docs.filter(F.col("doc_id") % 7 != 0)
     bloom = dedup.build_digest_bloom(corpus)
     probed = (
-        delta.withColumn("d", F.md5(normalize_text(F.col("text"))))
+        delta.withColumn("d", fingerprint_md5(F.col("text")))
         .crossJoin(F.broadcast(bloom))
         .agg(
             F.count("*").alias("n"),

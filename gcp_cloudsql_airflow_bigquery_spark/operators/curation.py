@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
-from .textstats import token_count, word_ngram_hashes
+from .dedup import _jaccard, word_shingle_hashes
+from .textstats import token_count
 
 # first hex digit of md5 → 16 uniform buckets; 12/2/2 ≈ 75/12.5/12.5
 TRAIN_DIGITS = tuple("0123456789ab")
@@ -170,7 +171,7 @@ def decontaminate(
     64-bit gram hash, not the gram string — the probe table and every
     exploded row carry 8 bytes instead of an n-word string, and the
     overlap count is hash-collision-exact to ~|grams|²/2⁶⁴."""
-    grams = F.explode(F.array_distinct(word_ngram_hashes(F.col(text_col), n)))
+    grams = F.explode(word_shingle_hashes(F.col(text_col), n))
     bench_grams = benchmark.select(grams.alias("gram")).distinct()
     return (
         train.select(F.col(id_col), grams.alias("gram"))
@@ -411,7 +412,7 @@ def decontaminate_fuzzy(
     a full-text shuffle is not a default anyone should pay."""
     if parallelism:
         train = train.repartition(parallelism)
-    arr = F.array_distinct(word_ngram_hashes(F.col(text_col), shingle_n))
+    arr = word_shingle_hashes(F.col(text_col), shingle_n)
     tsh = train.select(
         F.col(id_col), F.size(arr).alias("n_t"), F.explode(arr).alias("gram")
     )
@@ -428,9 +429,7 @@ def decontaminate_fuzzy(
     scored = inter.select(
         id_col,
         bench_id_col,
-        F.round(
-            F.col("inter") / (F.col("n_t") + F.col("n_b") - F.col("inter")), 6
-        ).alias("jaccard"),
+        _jaccard(F.col("inter"), F.col("n_t"), F.col("n_b")).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
     w = Window.partitionBy(id_col).orderBy(
         F.col("jaccard").desc(), F.col(bench_id_col)

@@ -24,59 +24,71 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import normalize_text, tokens
+from .textstats import (
+    fingerprint_md5,
+    normalize_text,
+    rolling_fingerprints,
+    tokens,
+    word_ngram_hashes,
+    word_ngrams,
+)
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text.
-
-    Built by zipping the token array with its own 1..n-1 shifted slices
-    (``arrays_zip`` pads the short arrays with null; rows where the last
-    slot is null are incomplete shingles and dropped).  Measured ~8×
-    faster than indexing with a slice lambda, whose codegen re-derives
-    the tokenize subtree per shingle."""
-    toks = tokens(normalize_text(text))
-    size = F.size(toks)
-    shifted = [toks.alias("w0")] + [
-        F.slice(toks, i + 1, F.greatest(size - i, F.lit(0))).alias(f"w{i}")
-        for i in range(1, n)
-    ]
-    zipped = F.arrays_zip(*shifted)
-    last = f"w{n - 1}"
-    complete = F.filter(zipped, lambda s: s[last].isNotNull())
-    return F.array_distinct(
-        F.transform(
-            complete, lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(n)])
-        )
-    )
+    """Distinct word n-gram shingles of normalized text, in first
+    occurrence order (``textstats.word_ngrams`` made a set)."""
+    return F.array_distinct(word_ngrams(text, n))
 
 
 def word_shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct 64-bit ``xxhash64`` shingles — same construction as
-    ``word_shingles`` but the n token slots feed the hash directly, so
+    """Distinct 64-bit ``xxhash64`` shingles — the n token slots feed
+    the hash directly (``textstats.word_ngram_hashes`` made a set), so
     no shingle string is ever allocated and every downstream
     explode/join/shuffle moves 8-byte longs instead of n-word text.
-    Set-cardinality semantics are hash-collision-exact to ~m²/2⁶⁴.
-    The token array is let-bound (single-element ``transform``) so the
-    tokenizer runs once per row instead of once per slice."""
-    toks = tokens(normalize_text(text))
+    Set-cardinality semantics are hash-collision-exact to ~m²/2⁶⁴."""
+    return F.array_distinct(word_ngram_hashes(text, n))
 
-    def shingles(tk: Column) -> Column:
-        size = F.size(tk)
-        shifted = [tk.alias("w0")] + [
-            F.slice(tk, i + 1, F.greatest(size - i, F.lit(0))).alias(f"w{i}")
-            for i in range(1, n)
-        ]
-        zipped = F.arrays_zip(*shifted)
-        last = f"w{n - 1}"
-        complete = F.filter(zipped, lambda s: s[last].isNotNull())
-        return F.array_distinct(
-            F.transform(
-                complete, lambda s: F.xxhash64(*[s[f"w{i}"] for i in range(n)])
-            )
+
+def _shuffle_parts(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _jaccard(inter: Column, n_a: Column, n_b: Column) -> Column:
+    """The one Jaccard score every verify step reports:
+    ``|A∩B| / (|A| + |B| - |A∩B|)`` rounded to 6 places (the oracles
+    round the same way)."""
+    return F.round(inter / (n_a + n_b - inter), 6)
+
+
+def _verify_counts(inter: DataFrame, inv: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b, inter)`` → ``(id_a, id_b,
+    jaccard)`` at or above ``threshold``, with both set sizes counted
+    from the (id, shingle) index ``inv``."""
+    sizes = inv.groupBy("id").agg(F.count("*").alias("n_sh"))
+    return (
+        inter.join(
+            sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a"
         )
+        .join(
+            sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b"
+        )
+        .withColumn("jaccard", _jaccard(F.col("inter"), F.col("n_a"), F.col("n_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
-    return F.element_at(F.transform(F.array(toks), shingles), 1)
+
+def _block_pairs(keyed: DataFrame, keys: list[str], *extra: Column) -> DataFrame:
+    """The blocking self-join: distinct ``(id_a, id_b)`` with ``id_a <
+    id_b`` over rows sharing every ``keys`` value, plus any ``extra``
+    columns computed from the ``a``/``b`` sides."""
+    return (
+        keyed.alias("a")
+        .join(keyed.alias("b"), keys)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *extra)
+        .distinct()
+    )
 
 
 def exact_dedup_groups(
@@ -85,10 +97,7 @@ def exact_dedup_groups(
     """Hash-groupBy exact dedup: one row per distinct content with the
     canonical (min) id and the duplicate count."""
     return (
-        df.select(
-            F.md5(normalize_text(F.col(text_col))).alias("content_hash"),
-            F.col(id_col),
-        )
+        df.select(fingerprint_md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
         .groupBy("content_hash")
         .agg(
             F.min(id_col).alias("canonical_id"),
@@ -101,7 +110,7 @@ def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Keep exactly one (min-id) row per distinct normalized content."""
-    h = F.md5(normalize_text(F.col(text_col)))
+    h = fingerprint_md5(F.col(text_col))
     w_min = exact_dedup_groups(df, text_col, id_col).select(
         "content_hash", F.col("canonical_id").alias(id_col)
     )
@@ -124,7 +133,6 @@ def ngram_jaccard_pairs(
     precomputed |A|,|B|.
     """
     inv = shingle_index(df, text_col, id_col, n)
-    sizes = inv.groupBy("id").agg(F.count("*").alias("n_sh"))
     pairs = (
         inv.alias("a")
         .join(inv.alias("b"), "shingle")
@@ -132,20 +140,7 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        pairs.join(
-            sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a"
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b"
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_counts(pairs, inv, threshold)
 
 
 def md5_hash60(col: Column) -> Column:
@@ -162,6 +157,14 @@ def md5_hash60_seeded(col: Column, seed: int) -> Column:
     hashing) — the portable stand-in for ``xxhash64(col, seed)`` in
     MinHash signature slots."""
     return md5_hash60(F.concat(F.lit(f"{seed}:"), col.cast("string")))
+
+
+def _shingle_hashes(text: Column, n: int, portable: bool) -> Column:
+    """Distinct shingle hashes: ``xxhash64`` over the words, or (portable)
+    the distinct shingle strings hashed with :func:`md5_hash60`."""
+    if portable:
+        return F.transform(word_shingles(text, n), md5_hash60)
+    return word_shingle_hashes(text, n)
 
 
 def shingle_index(
@@ -184,12 +187,7 @@ def shingle_index(
     + string materialization per shingle) but replayable by any engine
     with md5, which makes downstream MinHash output cross-engine
     hash-checkable."""
-    if portable:
-        shingles = F.transform(
-            word_shingles(F.col(text_col), n), lambda s: md5_hash60(s)
-        )
-    else:
-        shingles = word_shingle_hashes(F.col(text_col), n)
+    shingles = _shingle_hashes(F.col(text_col), n, portable)
     return df.select(
         F.col(id_col).alias("id"),
         F.explode(shingles).alias("shingle"),
@@ -268,13 +266,7 @@ def minhash_lsh_candidates_from_index(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
-    return (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _block_pairs(banded, ["band", "bucket"])
 
 
 def minhash_near_dups(
@@ -301,27 +293,13 @@ def minhash_near_dups(
         eager=False
     )
     cand = minhash_lsh_candidates_from_index(inv, num_hashes, bands, portable)
-    sizes = inv.groupBy("id").agg(F.count("*").alias("n_sh"))
     inter = (
         cand.join(inv.select(F.col("id").alias("id_a"), "shingle"), "id_a")
         .join(inv.select(F.col("id").alias("id_b"), "shingle"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(
-            sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a"
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b"
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_counts(inter, inv, threshold)
 
 
 def simhash_signatures(
@@ -393,17 +371,9 @@ def simhash_near_dups(
             )
         ).alias("bk"),
     ).select("id", "sig", "bk.band", "bk.key")
-    return (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming64(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_distance)
+    hamming = hamming64(F.col("a.sig"), F.col("b.sig")).alias("hamming")
+    return _block_pairs(banded, ["band", "key"], hamming).filter(
+        F.col("hamming") <= max_distance
     )
 
 
@@ -425,8 +395,6 @@ def winnow_candidates(
     Scale shape: explode is rows × (tokens/sample_mod); the join key is
     a uniform 64-bit hash, so no skew; output is distinct candidate
     pairs, to be verified by exact Jaccard like the MinHash path."""
-    from .textstats import rolling_fingerprints
-
     fps = df.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -436,13 +404,7 @@ def winnow_candidates(
             )
         ).alias("fp"),
     ).distinct()
-    return (
-        fps.alias("a")
-        .join(fps.alias("b"), "fp")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _block_pairs(fps, ["fp"])
 
 
 def materialize_shingle_index(
@@ -520,9 +482,7 @@ def digest_bloom_words(
     import numpy as np
 
     n_words = num_bits // 64
-    digests = corpus.select(
-        F.md5(normalize_text(F.col(text_col))).alias("digest")
-    )
+    digests = corpus.select(fingerprint_md5(F.col(text_col)).alias("digest"))
     word_bits = (
         digests.select(
             F.explode(
@@ -615,9 +575,7 @@ def bloom_new_docs(
     # additionally expand to a per-row CreateArray (measured 11 s)
     bloom = build_digest_bloom(corpus, text_col, num_bits, num_hashes)
     probed = (
-        new_docs.withColumn(
-            "__digest", F.md5(normalize_text(F.col(text_col)))
-        )
+        new_docs.withColumn("__digest", fingerprint_md5(F.col(text_col)))
         .crossJoin(F.broadcast(bloom))
         .withColumn(
             "__maybe",
@@ -629,9 +587,7 @@ def bloom_new_docs(
     )
     definite_new = probed.filter(~F.col("__maybe"))
     candidates = probed.filter(F.col("__maybe"))
-    corpus_digests = corpus.select(
-        F.md5(normalize_text(F.col(text_col))).alias("__digest")
-    )
+    corpus_digests = corpus.select(fingerprint_md5(F.col(text_col)).alias("__digest"))
     confirmed_new = candidates.join(corpus_digests, "__digest", "left_anti")
     return definite_new.unionByName(confirmed_new).drop("__digest", "__maybe")
 
@@ -677,13 +633,7 @@ def incremental_near_dups(
     return (
         inter.join(new_sizes.select(F.col("id").alias("new_id"), "n_new"), "new_id")
         .join(old_sizes.select(F.col("id").alias("old_id"), "n_old"), "old_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("n_new") + F.col("n_old") - F.col("inter")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("inter"), F.col("n_new"), F.col("n_old")))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "old_id", "jaccard")
     )
@@ -745,10 +695,7 @@ def duplicate_passages(
     # AQE's byte-based coalescing collapses onto one task at small SF.
     # Both the shared-gram agg and the candidate join key on gh, so the
     # one explicit exchange serves both sides with no extra shuffle.
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    grams = grams.repartition(n_parts, "gh")
+    grams = grams.repartition(_shuffle_parts(df), "gh")
     shared = (
         grams.groupBy("gh")
         .agg(F.count_distinct(id_col).alias("nd"))
@@ -829,6 +776,40 @@ def redact_passages(
     )
 
 
+def _shingle_sets(df: DataFrame, id_col: str, hashes: Column) -> DataFrame:
+    """``(id, sh)``: each document's sorted shingle-hash set, empty sets
+    dropped, materialized once.  The frame feeds three or four
+    consumers (prefix explode, containment's index side, both verify
+    joins) through different exchanges (tok / tok / id_a / id_b), which
+    ReuseExchange cannot collapse — without the cut the per-shingle
+    hash kernel executes once per consumer.  One eager materialization
+    runs it once (id + hash array rows: ~|tokens| longs, far smaller
+    than the text it derives from)."""
+    return (
+        df.select(F.col(id_col).alias("id"), F.array_sort(hashes).alias("sh"))
+        .filter(F.size("sh") > 0)
+        .localCheckpoint(eager=True)
+    )
+
+
+def _prefix_len(threshold: float) -> Column:
+    """Prefix-filter length of ``sh``: ``|A| - ceil(t*|A|) + 1`` under
+    the hash order (see :func:`prefix_filter_jaccard_pairs`)."""
+    return F.size("sh") - F.ceil(F.lit(threshold) * F.size("sh")).cast("int") + 1
+
+
+def _with_sets(cand: DataFrame, sh: DataFrame, n_parts: int) -> DataFrame:
+    """The two-sided verify join: distinct candidate ``(id_a, id_b)``
+    pairs, pinned to ``n_parts`` tasks, with both shingle sets
+    (``sh_a``, ``sh_b``) joined on by id."""
+    return (
+        cand.repartition(n_parts, "id_a", "id_b")
+        .dropDuplicates()
+        .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+    )
+
+
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -872,26 +853,12 @@ def prefix_filter_jaccard_pairs(
     (measured 1-partition stages, 3.6 s -> 1.9 s fixed).  At cluster
     scale the byte volume keeps the stage wide anyway.
     """
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_sort(word_shingle_hashes(F.col(text_col), n)).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
-        # r10: three consumers through three non-identical exchanges
-        # (prefix explode on tok + the two verify joins on id_a/id_b)
-        # — materialize the shingling kernel once (same rationale as
-        # containment_pairs below)
-        .localCheckpoint(eager=True)
-    )
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    plen = F.size("sh") - F.ceil(F.lit(threshold) * F.size("sh")).cast("int") + 1
+    sh = _shingle_sets(df, id_col, word_shingle_hashes(F.col(text_col), n))
+    n_parts = _shuffle_parts(df)
     ex = sh.select(
         "id",
         F.size("sh").alias("m"),
-        F.posexplode(F.slice("sh", 1, plen)).alias("p", "tok"),
+        F.posexplode(F.slice("sh", 1, _prefix_len(threshold))).alias("p", "tok"),
     ).repartition(n_parts, "tok")
     alpha = F.ceil(
         F.lit(threshold / (1.0 + threshold)) * (F.col("a.m") + F.col("b.m"))
@@ -909,25 +876,14 @@ def prefix_filter_jaccard_pairs(
             & (ubound >= alpha)
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .repartition(n_parts, "id_a", "id_b")
-        .dropDuplicates()
     )
-    out = (
-        cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+    return (
+        _with_sets(cand, sh, n_parts)
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("inter"), F.size("sh_a"), F.size("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 def containment_pairs(
@@ -963,37 +919,13 @@ def containment_pairs(
     so the DuckDB oracle replays bit-for-bit
     (``plans/llmdata.doc_containment_pairs``); the default xxhash64
     path is the cheap in-engine twin, equal w.h.p."""
-    if portable:
-        hashes = F.transform(
-            word_shingles(F.col(text_col), n), lambda s: md5_hash60(s)
-        )
-    else:
-        hashes = word_shingle_hashes(F.col(text_col), n)
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_sort(F.array_distinct(hashes)).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
-        # r10: the shingle-set frame feeds FOUR consumers (probe,
-        # index, both verify joins) through four DIFFERENT exchanges
-        # (tok / tok / id_a / id_b), which ReuseExchange cannot
-        # collapse — without a cut the per-shingle md5/xxhash kernel
-        # executes four times.  One eager materialization runs it once
-        # (id + hash array rows: ~|tokens| longs, far smaller than the
-        # text it derives from).
-        .localCheckpoint(eager=True)
-    )
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    plen = (
-        F.size("sh") - F.ceil(F.lit(threshold) * F.size("sh")).cast("int") + 1
-    )
+    hashes = F.array_distinct(_shingle_hashes(F.col(text_col), n, portable))
+    sh = _shingle_sets(df, id_col, hashes)
+    n_parts = _shuffle_parts(df)
     probe = sh.select(
         F.col("id").alias("id_a"),
         F.size("sh").alias("m_a"),
-        F.explode(F.slice("sh", 1, plen)).alias("tok"),
+        F.explode(F.slice("sh", 1, _prefix_len(threshold))).alias("tok"),
     ).repartition(n_parts, "tok")
     index = sh.select(
         F.col("id").alias("id_b"),
@@ -1007,18 +939,9 @@ def containment_pairs(
             & (F.col("m_b") >= F.lit(threshold) * F.col("m_a"))
         )
         .select("id_a", "id_b")
-        .repartition(n_parts, "id_a", "id_b")
-        .dropDuplicates()
     )
     return (
-        cand.join(
-            sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
-            "id_b",
-        )
+        _with_sets(cand, sh, n_parts)
         .withColumn(
             "containment",
             F.round(

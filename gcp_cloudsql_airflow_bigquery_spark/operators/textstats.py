@@ -118,80 +118,66 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
+def _word_grams(text: Column, n: int, gram) -> Column:
+    """The one word n-gram builder: ``gram`` applied to the n words of
+    every n-gram of the normalized text, in order (empty array when
+    the doc has < n words, null for null text).  Pure array HOFs —
+    narrow, zero-shuffle.
+
+    Built as ``arrays_zip`` of the n shifted, equal-length token slices,
+    then a ``transform`` that only touches the zipped struct fields.
+    The obvious ``transform(sequence(...), i -> concat_ws(slice(toks, i,
+    n)))`` formulation is ~10× slower: HOF lambdas re-evaluate every
+    captured subexpression per element, so the tokenizer regex would
+    run once per gram instead of n times per row.  The token array is
+    additionally let-bound via a single-element ``transform`` so the
+    tokenizer runs ONCE per row, not once per slice (another ~n/2×,
+    measured ~5× at n=8)."""
+    toks = tokens(normalize_text(text))
+
+    def grams(tk: Column) -> Column:
+        m = F.greatest(F.size(tk) - n + 1, F.lit(0))
+        zipped = F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(n)])
+        return F.transform(
+            zipped, lambda s: gram(*[s[str(i)] for i in range(n)])
+        )
+
+    return F.element_at(F.transform(F.array(toks), grams), 1)
+
+
+def _joined(*words: Column) -> Column:
+    return F.concat_ws(" ", *words)
+
+
 def rolling_fingerprints(
     text: Column, window: int = 8, portable: bool = False
 ) -> Column:
     """Rolling (Rabin-style) fingerprint set: a 64-bit hash over each
     ``window``-token shingle of the normalized text.  Used for
-    winnowing-style near-dup detection.  Default hash is xxhash64
-    (fastest, engine-specific); ``portable=True`` uses the md5-derived
-    60-bit hash (``dedup.md5_hash60``) that any engine with md5
-    replays, making downstream winnowing output oracle-checkable.
-    Same zip-of-shifted-slices + let-bound tokens shape as
-    :func:`word_ngram_hashes` (the index-lambda formulation re-runs the
-    tokenizer per shingle)."""
-    toks = tokens(normalize_text(text))
+    winnowing-style near-dup detection.  Default hash is xxhash64 of
+    the space-joined shingle (fastest, engine-specific); ``portable=True``
+    uses the md5-derived 60-bit hash (``dedup.md5_hash60``) that any
+    engine with md5 replays, making downstream winnowing output
+    oracle-checkable."""
+    from .dedup import md5_hash60
 
-    def hash_one(s) -> Column:
-        joined = F.concat_ws(" ", *[s[str(i)] for i in range(window)])
-        if portable:
-            from .dedup import md5_hash60
-
-            return md5_hash60(joined)
-        return F.xxhash64(joined)
-
-    def fps(tk: Column) -> Column:
-        m = F.greatest(F.size(tk) - window + 1, F.lit(0))
-        zipped = F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(window)])
-        return F.transform(zipped, hash_one)
-
-    return F.element_at(F.transform(F.array(toks), fps), 1)
+    h = md5_hash60 if portable else F.xxhash64
+    return _word_grams(text, window, lambda *ws: h(_joined(*ws)))
 
 
 def word_ngrams(text: Column, n: int) -> Column:
     """Word n-gram shingles of the normalized text as an array of
-    space-joined strings (empty array when the doc has < n words).
-    Pure array HOFs — narrow, zero-shuffle.
-
-    Built as ``arrays_zip`` of the n shifted token slices, then a
-    ``transform`` that only touches the zipped struct fields.  The
-    obvious ``transform(sequence(...), i -> concat_ws(slice(toks, i,
-    n)))`` formulation is ~10× slower: HOF lambdas re-evaluate every
-    captured subexpression per element, so the tokenizer regex would
-    run once per gram instead of n times per row.  The token array is
-    additionally let-bound via a single-element ``transform`` so the
-    tokenizer runs ONCE per row, not once per slice (another ~n/2×)."""
-    toks = tokens(normalize_text(text))
-
-    def grams(tk: Column) -> Column:
-        m = F.greatest(F.size(tk) - n + 1, F.lit(0))
-        zipped = F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(n)])
-        return F.transform(
-            zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)])
-        )
-
-    return F.element_at(F.transform(F.array(toks), grams), 1)
+    space-joined strings (see :func:`_word_grams`)."""
+    return _word_grams(text, n, _joined)
 
 
 def word_ngram_hashes(text: Column, n: int) -> Column:
     """64-bit ``xxhash64`` of each word n-gram, skipping the gram
-    string entirely — the n token slices feed the hash directly.  For
+    string entirely — the n words feed the hash directly.  For
     counting/dedup stats the hash is as good as the gram (collisions
     ~m²/2⁶⁴ within a document) and far cheaper: no per-gram string
-    allocation, and any later shuffle moves 8-byte longs, not text.
-    The token array is let-bound (single-element ``transform``) so the
-    tokenizer runs once per row instead of once per slice — measured
-    ~5× at n=8."""
-    toks = tokens(normalize_text(text))
-
-    def grams(tk: Column) -> Column:
-        m = F.greatest(F.size(tk) - n + 1, F.lit(0))
-        zipped = F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(n)])
-        return F.transform(
-            zipped, lambda s: F.xxhash64(*[s[str(i)] for i in range(n)])
-        )
-
-    return F.element_at(F.transform(F.array(toks), grams), 1)
+    allocation, and any later shuffle moves 8-byte longs, not text."""
+    return _word_grams(text, n, F.xxhash64)
 
 
 def _max_run_length(sorted_arr: Column, element_type: str = "long") -> Column:
@@ -282,18 +268,15 @@ def tfidf_top_terms(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = False,
 ) -> DataFrame:
     """Per-document top TF-IDF term (tf * ln(N/df), ties broken
     lexicographically). Two token-level aggregations (map-side combined)
     joined on ``term``; the corpus size joins in as a single-row
     broadcast, never a driver-side constant baked into the plan.
 
-    The term→df side joins via an ordinary shuffle join by default:
-    ``term`` is a near-uniform key and at 100-TB corpus scale an open
-    vocabulary can exceed broadcast limits, so shipping it to every
-    executor is the wrong default.  Pass ``broadcast_vocab=True`` only
-    when the vocabulary is known-bounded (e.g. a closed term list).
+    The term→df side joins via an ordinary shuffle join: ``term`` is a
+    near-uniform key and at 100-TB corpus scale an open vocabulary can
+    exceed broadcast limits, so it is never shipped to every executor.
     Scales: the wide explode is rows=tokens, but both aggs reduce
     before any join."""
     t = F.trim(F.lower(F.col(text_col)))
@@ -304,7 +287,7 @@ def tfidf_top_terms(
     df_ = tok.groupBy("term").agg(F.count_distinct(id_col).alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(df_) if broadcast_vocab else df_, "term")
+        tf.join(df_, "term")
         .crossJoin(F.broadcast(n))
         .select(
             id_col,
@@ -528,7 +511,7 @@ def gopher_report(
     All metrics are single-pass array expressions over the token list —
     narrow, whole-stage-codegen, zero shuffles; the token array is
     let-bound once per row (HOF captures re-evaluate, see
-    :func:`word_ngrams`).  Line-shape rules (bullet/ellipsis fractions)
+    :func:`_word_grams`).  Line-shape rules (bullet/ellipsis fractions)
     are omitted: the fixture corpus is single-line text.
     """
     toks = tokens(normalize_text(F.col(text_col)))

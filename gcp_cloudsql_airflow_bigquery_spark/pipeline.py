@@ -198,7 +198,6 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    balance: bool = False,
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
     ``ceil(total_bytes / target_file_bytes)`` files and swap the result
@@ -214,10 +213,8 @@ def compact_parquet(
     invisibly).
 
     Sizing reads only the file-listing metadata, never the data.
-    Default ``coalesce`` merges read-splits with NO shuffle (each
-    output task concatenates neighboring input files); ``balance=True``
-    pays one round-robin shuffle for evenly sized outputs when the
-    input is pathologically skewed.  Partitioned tables: compact each
+    ``coalesce`` merges read-splits with NO shuffle (each output task
+    concatenates neighboring input files).  Partitioned tables: compact each
     partition directory independently (this keeps the operation
     trivially parallel and lets a scheduler compact only partitions
     whose file count drifted)."""
@@ -232,9 +229,7 @@ def compact_parquet(
     n_files = max(1, -(-total // target_file_bytes))
     if n_before <= n_files:
         return n_before  # already compact: don't rewrite the table
-    df = spark.read.parquet(path)
-    df = df.repartition(n_files) if balance else df.coalesce(n_files)
-    _write_versioned(spark, df, path)
+    _write_versioned(spark, spark.read.parquet(path).coalesce(n_files), path)
     p, fs = _hadoop_path(spark, path)
     return sum(
         1

@@ -14,8 +14,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ..catalog import load_table
 from ..operators import frequency, graph
@@ -25,6 +26,24 @@ from . import register
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
+
+
+def _user_order() -> WindowSpec:
+    """Each user's events in order: millisecond-truncated ``ts``, ties
+    broken by ``event_id`` — the oracles' ``PARTITION BY user_id ORDER
+    BY date_trunc('ms', ts), event_id``.  A function, not a module
+    constant: building a ``WindowSpec`` needs a running JVM."""
+    return Window.partitionBy("user_id").orderBy(
+        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
+    )
+
+
+def _with_next(e: DataFrame, col: str, name: str) -> DataFrame:
+    """``e`` plus the user's next event's ``col`` as ``name``; each
+    user's last event (no successor) is dropped."""
+    return e.withColumn(name, F.lead(col).over(_user_order())).filter(
+        F.col(name).isNotNull()
+    )
 
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,14 +299,8 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is (ms-truncated ts, event_id) in both engines so µs-vs-ns
     parquet precision cannot flip tie order."""
     e = _events(spark, sf_dir)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     pairs = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
+        _with_next(e, "event_type", "next_type")
         .groupBy(
             F.col("event_type").alias("from_type"),
             F.col("next_type").alias("to_type"),
@@ -537,8 +550,6 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare so an engine-boundary ulp can't flip a flag.  At 100 TB
     the rollup is the only fact-sized shuffle; the window runs over
     (types x hours) rows — thousands, not billions."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir)
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
@@ -666,8 +677,6 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("v").alias("wk_rev"))
     )
     sizes = cohort.groupBy("cohort_wk").agg(F.count("*").alias("cohort_users"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("cohort_wk").orderBy("week_offset")
     return (
         buys.withColumn("cum_rev", F.sum("wk_rev").over(w))
@@ -798,8 +807,6 @@ def events_error_rate_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum((F.col("event_type") == "error").cast("long")).alias("n_err"),
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy("h").rowsBetween(-5, 0)
     rolled = hourly.select(
         "h",
@@ -869,21 +876,14 @@ def event_state_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: bounded node set (|types|x24) => labels broadcast,
     the edge list is pre-partitioned once, each round is one vote
     aggregation with no edge-sized exchange."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     state = F.concat(
         F.col("event_type"),
         F.lit("@"),
         F.lpad(F.hour("ts").cast("string"), 2, "0"),
     )
     edges = (
-        e.withColumn("state", state)
-        .withColumn("next_state", F.lead("state").over(w))
-        .filter(F.col("next_state").isNotNull())
+        _with_next(e.withColumn("state", state), "state", "next_state")
         .groupBy(
             F.col("state").alias("a"), F.col("next_state").alias("b")
         )
@@ -969,8 +969,6 @@ def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-bounded — at 100 TB the grid is the same few-thousand rows
     per type.  corr is the single-pass co-moment aggregate, ROUND(6)
     cross-engine stable (the agg_corr convention)."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
     cnt = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
@@ -1358,8 +1356,6 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by event_type, never a global sort.  Alert flags
     compare the ROUNDED statistic (the seasonal-anomaly boundary-tie
     lesson)."""
-    from pyspark.sql import Window
-
     k, h = 0.5, 4.0
     daily = (
         _events(spark, sf_dir)
@@ -1455,8 +1451,6 @@ def events_frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup and the support count are the same single hash aggregation
     tree, and the top-20 is a TakeOrdered over the tiny
     (t1,t2,t3)-cardinality aggregate, never the raw stream."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = (
         _events(spark, sf_dir)
@@ -1509,8 +1503,6 @@ def events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the calendar-bounded dense grid (hours-in-span x |types|); the
     lag-24 forecast is a per-type ordered window over that grid, and
     the final metrics are one aggregation per type."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
     cnt = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
@@ -1604,8 +1596,6 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences (``unix_micros`` / ``epoch_us``) so both engines
     aggregate identical doubles; ties within a user's timeline order by
     (ts, event_id), deterministic because event_id is unique."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = _events(spark, sf_dir).select(
         "user_id",
@@ -1683,8 +1673,6 @@ def events_prequential_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare the ROUNDED z (boundary-tie lesson); days with fewer than
     2 prior points or zero prior variance emit NULL z and FALSE
     flag."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -1766,8 +1754,6 @@ def events_duplicate_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     elapsed time).  Scale shape: one narrow filter (pushed to the
     scan) + one window shuffle on the (user, band) key — hash-uniform,
     no global sort, no join."""
-    from pyspark.sql import Window
-
     p = (
         _events(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -1861,8 +1847,6 @@ def events_transition_conformance(spark: SparkSession, sf_dir: str) -> DataFrame
     (the ``events_bot_regularity`` exchange-reuse shape); the legal
     set is a literal IN list, pure whole-stage codegen.  Flags on the
     ROUNDED rate."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         _events(spark, sf_dir)
@@ -2126,8 +2110,6 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation — exact KS needs a per-type global value sort that
     is pointless at 100 TB when the grid D converges to it from
     below."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
@@ -2274,8 +2256,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistic is safe (at unbounded grain you would swap in the
     KLL sketch per the quantiles-rollup pattern); the top-5 rank is a
     per-type window over that same bounded frame."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
@@ -2521,8 +2501,6 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-term ``-p·ln p`` values are DECIMAL-cast before summing (the
     BM25/PRF order-independence convention); the flag-free output
     rounds both statistics to 6 decimals."""
-    from pyspark.sql import Window
-
     cnt = (
         _events(spark, sf_dir)
         .groupBy("user_id", "event_type")
@@ -2600,8 +2578,6 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded type×calendar grain.  ``POWER``-weighted terms are
     DECIMAL-cast before summing (the events_decay_value parity
     pattern)."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -2766,15 +2742,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed LEAD shuffle over the fact scan; the
     chain itself is a |types|² frame, so the 12 rounds are model-sized
     joins (the per-merge-BPE-round shape), nothing corpus-scale."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     cnt = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
+        _with_next(e, "event_type", "next_type")
         .groupBy(
             F.col("event_type").alias("from_type"),
             F.col("next_type").alias("to_type"),
@@ -2870,8 +2840,6 @@ def events_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact-sized (type, day) count; the dense grid,
     window, and weekday agg all live on the bounded type×calendar
     grain."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -3045,8 +3013,6 @@ def events_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the three windows are all user- or session-PARTITIONED
     (never global); the final matrix is |event_type|^2-bounded."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
     w_u = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w_u)
@@ -3160,8 +3126,6 @@ def events_brown_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (type, day) count aggregation; everything after
     is keyed on the bounded type x calendar grain.  No iteration, no
     sequential kernel."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -3620,15 +3584,9 @@ def event_type_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed LEAD shuffle over the fact scan; the
     graph is a |types|² frame (localCheckpointed once), so all 16
     half-steps are model-sized joins."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     edges = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
+        _with_next(e, "event_type", "next_type")
         .groupBy(
             F.col("event_type").alias("src"),
             F.col("next_type").alias("dst"),
@@ -3792,21 +3750,14 @@ def event_state_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one LEAD shuffle over the fact scan; the state graph
     is bounded (|types|×24 nodes), so the LPA rounds, the label joins,
     and the community rollup are all model-sized."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     state = F.concat(
         F.col("event_type"),
         F.lit("@"),
         F.lpad(F.hour("ts").cast("string"), 2, "0"),
     )
     he = (
-        e.withColumn("state", state)
-        .withColumn("next_state", F.lead("state").over(w))
-        .filter(F.col("next_state").isNotNull())
+        _with_next(e.withColumn("state", state), "state", "next_state")
         .groupBy(F.col("state").alias("a"), F.col("next_state").alias("b"))
         .agg(F.count("*").alias("n"))
         .localCheckpoint(eager=True)  # model-sized; feeds LPA AND the
@@ -3925,8 +3876,6 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by construction); one 1-row final aggregate.  Grid
     quantization is the documented approximation — exact midranks
     need a global value sort that the grid statistic converges to."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).filter(F.col("value").isNotNull())
     vmax = ev.agg(F.max("value").alias("vmax"))
     binned = (
@@ -4066,15 +4015,9 @@ def event_type_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame after the distinct is |types|²-bounded (≤ tens of rows at
     any SF), each loop round lazily checkpoints the |types|²-sized
     accumulator to keep the plan linear in rounds."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     edges = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
+        _with_next(e, "event_type", "next_type")
         .select(
             F.col("event_type").alias("src"), F.col("next_type").alias("dst")
         )
@@ -4142,16 +4085,11 @@ def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: one LAG window partitioned by user, one per-user
     aggregation, one band-grain rollup — no global windows, no
     collects."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     t = F.unix_micros(F.date_trunc("millisecond", F.col("ts")))
     gaps = (
         e.select(
-            "user_id", (t - F.lag(t).over(w)).alias("gap_us")
+            "user_id", (t - F.lag(t).over(_user_order())).alias("gap_us")
         )
         .filter(F.col("gap_us").isNotNull())
     )
@@ -4268,8 +4206,6 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 1-row vmax broadcast; one (bin, type) aggregation;
     windows over the FIXED 256-bin grid; a groups-grain rollup and a
     1-row final aggregate."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).filter(F.col("value").isNotNull())
     vmax = ev.agg(F.max("value").alias("vmax"))
     binned = (
@@ -4515,8 +4451,6 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical economics to ``events_ks_drift`` — 1-row
     consts broadcast, one (type, bin, half) aggregation, CDF windows
     over the fixed grid, one per-type rollup."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
@@ -4759,8 +4693,6 @@ def events_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (day) aggregation; the LAG/compare windows run
     over the calendar-bounded day-grain frame; a 1-row rollup."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -4862,8 +4794,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs the signup min first, so two chained user-grain aggs), one
     day-bin rollup, a cumulative window over the calendar-bounded bin
     frame."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
     us = F.unix_micros(F.date_trunc("millisecond", F.col("ts")))
     su = (
@@ -5201,8 +5131,6 @@ def events_conversion_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one per-user min aggregation for the first purchase,
     one window ranking the pre-purchase suffix per user, a path-grain
     rollup (≤ |types|³ + |types|² + |types| rows by construction)."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
     key = F.unix_millis(F.col("ts").cast("timestamp")) * 1_000_000 + F.col(
         "event_id"
@@ -5280,8 +5208,6 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one day-grain aggregation; the lag joins and moment
     sums all run over the calendar-bounded frame; 1-row rollup."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -5400,19 +5326,13 @@ def events_markov_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     baseline frames are |types|²-bounded; one join of the later-half
     pairs against the broadcast-eligible model (Catalyst picks the
     strategy) and a |types|-grain rollup."""
-    from pyspark.sql import Window
-
     e = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy(
-        F.date_trunc("millisecond", F.col("ts")), F.col("event_id")
-    )
     consts = e.agg(
         F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("t0"),
         F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("t1"),
     )
     pairs = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
+        _with_next(e, "event_type", "next_type")
         .crossJoin(F.broadcast(consts))
         .select(
             F.col("event_type").alias("src"),
@@ -5586,8 +5506,6 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (user, week) distinct, one per-user LAG window
     (partitioned by user), a week-grain rollup, and one self-join of
     the BOUNDED week-grain frame for churn (actives_prev − retained)."""
-    from pyspark.sql import Window
-
     wk = 604_800_000_000
     uw = (
         _events(spark, sf_dir)
@@ -5701,8 +5619,6 @@ def events_periodogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one day-grain aggregation; a 10×bounded cross of the
     literal frequency frame with the day frame; a 10-row rollup."""
-    from pyspark.sql import Window
-
     daily = (
         _events(spark, sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())

@@ -373,7 +373,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textstats import (
         detect_lang,
-        normalize_text,
+        fingerprint_md5,
         quality_score,
         token_count,
     )
@@ -390,9 +390,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # survivors partition by content hash; failed docs get a unique key
     # so the window never mixes them in
-    hp = F.when(
-        F.col("passed"), F.md5(normalize_text(F.col("text")))
-    ).otherwise(F.concat(F.lit("u"), F.col("doc_id")))
+    hp = F.when(F.col("passed"), fingerprint_md5(F.col("text"))).otherwise(F.concat(F.lit("u"), F.col("doc_id")))
     wh = Window.partitionBy("hp")
     flagged = scored.withColumn("hp", hp).withColumn(
         "canonical",

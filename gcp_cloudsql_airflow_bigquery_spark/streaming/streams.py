@@ -393,11 +393,10 @@ def dedup_ingest_stream(
     restart replays idempotently because duplicate suppression is
     content-driven."""
     from ..operators import dedup
+    from ..operators.textstats import fingerprint_md5
     from ..pipeline import _exists
 
     def _ingest(batch: DataFrame, _batch_id: int) -> None:
-        from ..operators.textstats import normalize_text
-
         spark = batch.sparkSession
         batch = dedup.exact_dedup(batch)  # within-batch exact dedup
         if not _exists(spark, target_path):  # first batch bootstraps the corpus
@@ -409,7 +408,7 @@ def dedup_ingest_stream(
         # would re-append them if only the near-dup check ran — this
         # cheap md5 join is what makes restart replay idempotent for
         # every document length
-        content = F.md5(normalize_text(F.col("text")))
+        content = fingerprint_md5(F.col("text"))
         seen = existing.select(content.alias("content_hash")).distinct()
         batch = (
             batch.withColumn("content_hash", content)

@@ -1,5 +1,7 @@
-"""Property tests for engine-specific-hash ops (MinHash/SimHash/LSH —
-SURVEY.md §5 "non-SQL-expressible ops") and multimodal plumbing."""
+"""Property tests for LLM-data operators (SURVEY.md §5
+"non-SQL-expressible ops"): multimodal plumbing, corpus language
+models, sketches, graph and entity-resolution helpers.  Near-duplicate
+detection is in ``tests/test_dedup.py``."""
 
 from __future__ import annotations
 
@@ -23,120 +25,6 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").cache()
-
-
-@pytest.mark.parametrize(
-    "pin_sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-)
-def test_minhash_full_recall_on_pinned_fixtures(spark, pin_sf_dir):
-    """``doc_dedup_keep_best_quality``'s oracle computes exact
-    all-pairs Jaccard while the Spark side uses MinHash-LSH candidates
-    (32 hashes / 16 bands), so its hash check is only sound if LSH
-    recovers EVERY J>=0.5 pair on the pinned fixtures.  Pin recall=1
-    at both correctness SFs; if a regenerated fixture breaks this, the
-    driver row for that query is a fixture artifact, not a product bug
-    (see the query docstring in plans/llmdata.py)."""
-    d = load_table(spark, pin_sf_dir, "documents")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    }
-    approx = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_near_dups(
-            d, threshold=0.5, num_hashes=32, bands=16
-        ).collect()
-    }
-    assert exact <= approx, f"missed true pairs: {sorted(exact - approx)[:5]}"
-
-
-def test_minhash_recall_vs_exact(docs):
-    """LSH candidates must recover (almost) all true near-dup pairs."""
-    exact = {
-        (r.id_a, r.id_b)
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    approx = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_near_dups(docs, threshold=0.5).collect()
-    }
-    assert exact, "fixture should contain planted near-dups"
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.9, f"minhash recall {recall:.2f} < 0.9"
-    # verification step guarantees no false positives above threshold
-    assert approx <= exact
-
-
-def test_minhash_portable_twin_matches_xxhash_path(docs):
-    """``doc_dedup_minhash_portable`` (md5-derived hashes, the
-    oracle-replayable twin) must surface the same verified pair set as
-    the xxhash64 scale path on the fixture — the twin exists to make
-    the pipeline cross-engine checkable, not to change its answer."""
-    fast = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_near_dups(docs, threshold=0.5).collect()
-    }
-    portable = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_near_dups(
-            docs, threshold=0.5, portable=True
-        ).collect()
-    }
-    assert fast, "fixture should contain planted near-dups"
-    assert portable == fast
-
-
-def test_minhash_banding_equals_exact(docs):
-    """The banded pipeline the declared ``doc_dedup_ngram_jaccard``
-    query runs (16 bands x 2 rows — candidate prob 1-(1-J^2)^16, ~1
-    above the 0.5 threshold, without the hot-bucket blowup of 1-row
-    banding) must reproduce the exact inverted-index output verbatim
-    on the fixture."""
-    exact = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    routed = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_near_dups(
-            docs, threshold=0.5, num_hashes=32, bands=16
-        ).collect()
-    }
-    assert exact, "fixture should contain planted near-dups"
-    assert routed == exact
-
-
-def test_minhash_band_math(docs):
-    sigs = dedup.minhash_signatures(docs, num_hashes=16)
-    row = sigs.first()
-    assert len(row.signature) == 16
-    # slots must differ (a bug that reuses one seed yields equal slots)
-    assert len(set(row.signature)) > 1
-
-
-def test_simhash_identical_and_disjoint(spark):
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="spark shuffles data across the cluster nodes"),
-            Row(doc_id=2, text="spark shuffles data across the cluster nodes"),
-            Row(doc_id=3, text="completely different words entirely unrelated topic"),
-        ]
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in dedup.simhash_near_dups(df, max_distance=3).collect()
-    }
-    assert pairs.get((1, 2)) == 0
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_exact_dedup_keeps_one_per_content(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in [(1, "a b"), (2, "A  b"), (3, "c")]]
-    )
-    kept = sorted(r.doc_id for r in dedup.exact_dedup(df).collect())
-    # "a b" and "A  b" normalize identically -> min id 1 survives
-    assert kept == [1, 3]
 
 
 # --- multimodal plumbing ---------------------------------------------------
@@ -320,55 +208,6 @@ def test_bigram_logprob_surprising_transitions_score_higher(spark):
     assert got[2] > got[1]  # shuffled transitions are less predictable
 
 
-def test_bloom_new_docs_exact_and_pruning(spark):
-    """The bloom-pruned incremental gate must (a) equal the plain
-    anti-join result exactly and (b) actually short-circuit genuinely
-    new rows past the corpus join (bloom miss = certain new)."""
-    corpus = spark.createDataFrame(
-        [Row(doc_id=i, text=f"corpus doc {i}") for i in range(200)]
-    )
-    delta = spark.createDataFrame(
-        # 5 exact dups of corpus content (normalized), 5 new docs
-        [Row(doc_id=1000 + i, text=f"Corpus  DOC {i}") for i in range(5)]
-        + [Row(doc_id=2000 + i, text=f"fresh doc {i}") for i in range(5)]
-    )
-    got = sorted(r.doc_id for r in dedup.bloom_new_docs(delta, corpus).collect())
-    assert got == [2000, 2001, 2002, 2003, 2004]
-
-    # pruning: with 1 Mbit / 5 hashes over 200 digests, FP rate ~0 —
-    # every fresh row must be a bloom miss (never joins the corpus)
-    bloom = dedup.build_digest_bloom(corpus)
-    probed = (
-        delta.withColumn(
-            "digest",
-            F.md5(
-                F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-            ),
-        )
-        .crossJoin(F.broadcast(bloom))
-        .select(
-            "doc_id",
-            dedup.bloom_might_contain(F.col("words"), F.col("digest")).alias(
-                "maybe"
-            ),
-        )
-    )
-    maybe = {r.doc_id: r.maybe for r in probed.collect()}
-    assert all(maybe[1000 + i] for i in range(5)), "true dups must hit"
-    assert not any(maybe[2000 + i] for i in range(5)), "fresh rows must miss"
-
-
-def test_bloom_bitmap_shape(spark):
-    bloom = dedup.build_digest_bloom(
-        spark.createDataFrame([Row(text="x")]), num_bits=1 << 10
-    ).collect()
-    assert len(bloom) == 1
-    words = bloom[0].words
-    assert len(words) == (1 << 10) // 64
-    # exactly <= 5 bits set for one digest (hash collisions may overlap)
-    assert 1 <= sum(bin(w & ((1 << 64) - 1)).count("1") for w in words) <= 5
-
-
 def test_fuzzy_name_pairs_edit_kinds(spark):
     """Deletion blocking must recover every edit kind at k=1 —
     substitution, insertion, deletion, equality — and reject k=2; the
@@ -445,92 +284,6 @@ def test_heavy_hitters_exact_vs_naive(spark):
         .collect()
     }
     assert got == naive == {"a": 60}
-
-
-def test_duplicate_passages_planted_span(spark):
-    """A 6-word passage planted in two docs yields one maximal span per
-    doc at the right 1-based word offsets (6 words -> 2 five-grams),
-    and a doc sharing nothing is absent."""
-    from gcp_cloudsql_airflow_bigquery_spark.operators.dedup import (
-        duplicate_passages,
-    )
-
-    shared = "the quick brown fox jumps high"
-    docs = [
-        (1, f"alpha beta {shared} gamma delta"),
-        (2, f"{shared} zeta eta theta iota kappa"),
-        (3, "totally unrelated words only here nothing repeats at all"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r.doc_id: (r.span_start, r.span_end, r.n_grams)
-        for r in duplicate_passages(df, k=5).collect()
-    }
-    # doc 1: shared starts at word 3 -> grams at pos 3,4 -> span [3, 8]
-    # doc 2: shared starts at word 1 -> grams at pos 1,2 -> span [1, 6]
-    assert out == {1: (3, 8, 2), 2: (1, 6, 2)}
-
-
-def test_redact_passages_planted(spark):
-    """The planted shared passage is cut from both docs, the untouched
-    doc survives verbatim with n_removed=0, and output stays 1:1 with
-    the corpus."""
-    from gcp_cloudsql_airflow_bigquery_spark.operators.dedup import (
-        redact_passages,
-    )
-
-    shared = "the quick brown fox jumps high"
-    docs = [
-        (1, f"alpha beta {shared} gamma delta"),
-        (2, f"{shared} zeta eta theta iota kappa"),
-        (3, "totally unrelated words only here nothing repeats at all"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r.doc_id: (r.clean_text, r.n_removed)
-        for r in redact_passages(df, k=5).collect()
-    }
-    assert out == {
-        1: ("alpha beta gamma delta", 6),
-        2: ("zeta eta theta iota kappa", 6),
-        3: (docs[2][1], 0),
-    }
-
-
-def test_prefix_filter_equals_exact(docs):
-    """Prefix filtering is exact by construction (no probabilistic
-    recall): it must reproduce the inverted-index output verbatim —
-    the AllPairs lemma says any pair at J >= t shares a prefix token,
-    and the verify step computes true Jaccard on the full sets."""
-    exact = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    pref = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.prefix_filter_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    assert exact, "fixture should contain planted near-dups"
-    assert pref == exact
-
-
-def test_prefix_filter_explodes_less(docs):
-    """The point of prefix filtering: the exploded/shuffled token count
-    must be well under the full inverted index (~(1-t)+1/m of it at
-    threshold t)."""
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_airflow_bigquery_spark.operators.dedup import (
-        word_shingle_hashes,
-    )
-
-    sh = docs.select(
-        F.array_sort(word_shingle_hashes(F.col("text"), 3)).alias("sh")
-    ).filter(F.size("sh") > 0)
-    full = sh.select(F.sum(F.size("sh"))).first()[0]
-    plen = F.size("sh") - F.ceil(0.5 * F.size("sh")).cast("int") + 1
-    pref = sh.select(F.sum(plen)).first()[0]
-    assert pref < 0.6 * full, f"prefix {pref} not < 60% of index {full}"
 
 
 def test_sorted_neighborhood_boundary_exactness(spark):

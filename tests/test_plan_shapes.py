@@ -114,7 +114,7 @@ def test_tfidf_vocab_not_hint_broadcast_by_default(spark, sf_dir):
     # settings: an open vocabulary at corpus scale can exceed broadcast
     # limits, so Catalyst must stay free to pick a shuffle join on the
     # uniform `term` key. The only sanctioned hint is the 1-row corpus
-    # count. broadcast_vocab=True opts in for known-bounded term lists.
+    # count.
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
     from gcp_cloudsql_airflow_bigquery_spark.operators.textstats import (
         tfidf_top_terms,
@@ -127,7 +127,6 @@ def test_tfidf_vocab_not_hint_broadcast_by_default(spark, sf_dir):
         return lp.count("UnresolvedHint broadcast") + lp.count("ResolvedHint")
 
     assert n_hints(tfidf_top_terms(docs)) == 1  # just the 1-row n_docs
-    assert n_hints(tfidf_top_terms(docs, broadcast_vocab=True)) == 2
 
 
 def test_multires_rollup_single_scan(spark, sf_dir):

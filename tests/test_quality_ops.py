@@ -232,24 +232,6 @@ def test_pack_bins_matches_pandas_cumsum(case, budget):
         assert bin_id == r.start // budget
 
 
-def test_winnow_finds_shared_passage(spark):
-    from gcp_cloudsql_airflow_bigquery_spark.operators import dedup
-
-    passage = "the quick brown fox jumps over the lazy dog every single day"
-    rows = [
-        (1, "unrelated preamble words here " + passage),
-        (2, passage + " followed by a totally different ending entirely"),
-        (3, "no overlap with anything else at all in this document text"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in dedup.winnow_candidates(df, window=8, sample_mod=2).collect()
-    }
-    assert (1, 2) in pairs
-    assert all(3 not in p for p in pairs)
-
-
 def test_map_in_arrow_matches_pandas_path(spark, sf_dir):
     from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
     from gcp_cloudsql_airflow_bigquery_spark.operators import multimodal
@@ -298,54 +280,6 @@ def test_mix_rates_match_closed_form(case, temperature):
     # at T=1 the mix is the natural distribution: every rate is exactly 1
     if temperature == 1.0:
         assert all(math.isclose(r.rate, 1.0, rel_tol=1e-12) for r in got.values())
-
-
-def test_materialized_shingle_index_joins_without_exchange(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.operators import dedup
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    inv = dedup.materialize_shingle_index(docs, table="t_shidx", n_buckets=8)
-    # the recurring dedup self-join: bucket-local, no shuffle on shingle
-    joined = (
-        inv.alias("a")
-        .join(inv.alias("b"), "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id"), F.col("b.id"))
-        .count()
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(shingle" not in plan, plan
-    # and it produces the same pair counts as the on-the-fly index
-    fresh = dedup.shingle_index(docs)
-    want = (
-        fresh.alias("a")
-        .join(fresh.alias("b"), "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id"), F.col("b.id"))
-        .count()
-    )
-    assert joined.exceptAll(want).count() == 0 and want.exceptAll(joined).count() == 0
-
-
-def test_incremental_near_dups_against_index(spark, sf_dir):
-    from gcp_cloudsql_airflow_bigquery_spark.catalog import load_table
-    from gcp_cloudsql_airflow_bigquery_spark.operators import dedup
-
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    index = dedup.materialize_shingle_index(docs, table="t_shidx_inc", n_buckets=8)
-    # the delta: one exact copy of an existing doc (new id) + one fresh doc
-    base = docs.limit(1).collect()[0]
-    delta = spark.createDataFrame(
-        [
-            (999_001, base.text),
-            (999_002, "entirely novel words never appearing in the corpus fixture"),
-        ],
-        "doc_id long, text string",
-    )
-    hits = dedup.incremental_near_dups(delta, index, threshold=0.5).collect()
-    assert any(r.new_id == 999_001 and r.old_id == base.doc_id and r.jaccard == 1.0 for r in hits)
-    assert all(r.new_id != 999_002 for r in hits)
 
 
 def test_zorder_key_matches_python_interleave(spark):

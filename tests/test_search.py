@@ -145,41 +145,3 @@ def test_tfidf_knn_planted_similarity_and_plan(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan
-
-
-def test_containment_catches_subset_dup_jaccard_misses(spark):
-    """containment_pairs: a short doc embedded verbatim in a much
-    longer one is found at containment ~1.0 even though its Jaccard is
-    far below any dedup threshold — the asymmetric criterion the
-    operator exists for."""
-    from gcp_cloudsql_airflow_bigquery_spark.operators.dedup import (
-        containment_pairs,
-        prefix_filter_jaccard_pairs,
-    )
-
-    short = "alpha beta gamma delta epsilon zeta"
-    filler = " ".join(f"word{i} next{i} more{i}" for i in range(30))
-    docs = spark.createDataFrame(
-        [
-            (1, short),
-            (2, short + " " + filler),  # contains all of doc 1
-            (3, "completely different text about other things entirely"),
-        ],
-        ["doc_id", "text"],
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.containment
-        for r in containment_pairs(docs, threshold=0.8).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
-    assert (2, 1) not in pairs  # asymmetric: the long doc is not contained
-    assert not any(3 in p for p in pairs)
-    # the same pair is invisible to symmetric Jaccard at any dedup threshold
-    j = prefix_filter_jaccard_pairs(docs, threshold=0.5).collect()
-    assert not any({r.id_a, r.id_b} == {1, 2} for r in j)
-    # portable and xxhash64 hashing agree on the pair set
-    pp = {
-        (r.id_a, r.id_b)
-        for r in containment_pairs(docs, threshold=0.8, portable=True).collect()
-    }
-    assert pp == set(pairs)
