@@ -23,6 +23,26 @@ At scale: the staged write is partitioned parquet; dynamic partition
 overwrite touches one date partition, never the table.  The merge is a
 full-outer-free anti-join + union — shuffle on merge keys only.
 
+One table commit.  BigQuery's ``WRITE_TRUNCATE`` replaces a table in one
+step; here every write that replaces a table's contents — an
+``overwrite`` load, ``finalize``, merge, compaction, purge, the sink's
+local ``WRITE_TRUNCATE`` and the streaming upserts — goes through
+:func:`_write_versioned`.  It writes the new contents ONCE to the
+sibling ``<table>__v<version>``; :func:`_swap_into_place` then renames
+the live table to ``<table>__old<version>``, renames the version into
+place and deletes the old directory.  A first write is the version
+write plus one rename.
+- A failed version write deletes its directory and re-raises: the table
+  keeps its old rows.
+- A crash between the two renames leaves no table and an ``__old``
+  sibling.  :func:`_settle` runs before every read-modify-write and
+  every commit: it renames that sibling back and deletes leftovers.
+- ``append`` and ``snapshot`` only add files and keep Spark's own job
+  commit (a failed job leaves the table's rows as they were); they
+  settle the table first.
+- Between the two renames a concurrent reader finds no table, and all
+  of this assumes one writer per table.
+
 Attempts (v1's submit-then-wait contract, ``gcloud beta sql operations
 wait --timeout=3600``, reference ``dags/cloudsql_to_bigquery.py:117``):
 each attempt runs on the caller's thread under its own Spark job group.
@@ -35,8 +55,10 @@ write has landed.  The caller's job group is restored afterwards.
 
 What the deadline does not cover:
 - Work on the driver outside a Spark job runs to its end: the JDBC
-  schema lookup in ``read_jdbc``'s ``load()``, the Hadoop renames in
-  ``_swap_into_place``, a sink connector's driver calls.  JDBC, the
+  schema lookup in ``read_jdbc``'s ``load()``, the Hadoop renames and
+  deletes of the commit and of :func:`_settle`, a sink connector's
+  driver calls.  A version write cancelled by the deadline is deleted
+  like any failed one, so the table keeps its old rows.  JDBC, the
   reference's main source, is bounded separately: ``extract`` passes
   ``timeout_s`` to the reader as its statement, connect and socket
   timeouts (``sources.jdbc.jdbc_reader_options``), so a hung source or
@@ -49,6 +71,8 @@ What the deadline does not cover:
 from __future__ import annotations
 
 import logging
+import os
+import re
 import threading
 import time
 import uuid
@@ -65,6 +89,12 @@ from .sources.files import read_csv, read_ndjson, read_parquet
 from .sources.jdbc import read_jdbc
 
 log = logging.getLogger(__name__)
+
+#: The name a table commit gives the siblings it stages beside
+#: ``<table>``: ``__v<version>`` (the new contents) and
+#: ``__old<version>`` (the replaced contents, mid-swap), where a version
+#: is ``uuid.uuid4().hex``.  Matched against the end of a directory name.
+_SIBLING = re.compile(r"__(v|old)[0-9a-f]{32}$")
 
 
 @dataclass
@@ -128,12 +158,33 @@ def _hadoop_path(spark: SparkSession, path: str):
     return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` exists on its filesystem.  First-run bootstraps
-    test this instead of catching a failed read, so an existing target
-    that cannot be read raises rather than being overwritten."""
+def _settle(spark: SparkSession, path: str) -> bool:
+    """Finish whatever an interrupted commit left beside ``path``, then
+    return whether the table exists.
+
+    A crash between :func:`_swap_into_place`'s two renames leaves no
+    ``path`` and a ``path__old<version>`` sibling: it is renamed back,
+    which rolls the table back to its old state.  Every other
+    ``path__v…``/``path__old…`` sibling is a version that never went in
+    or a replaced table that was not yet deleted, and is deleted.
+
+    Assumes one writer per table: a version another writer is still
+    writing would be deleted as a leftover.  An existing table that
+    cannot be read is reported as existing, so callers raise on the
+    read rather than overwrite it."""
     p, fs = _hadoop_path(spark, path)
-    return bool(fs.exists(p))
+    parent, name = p.getParent(), p.getName()
+    exists = bool(fs.exists(p))
+    for st in fs.listStatus(parent) if fs.exists(parent) else []:
+        sib = st.getPath()
+        m = _SIBLING.match(sib.getName(), len(name))
+        if not (m and sib.getName().startswith(name)):
+            continue
+        if not exists and m.group(1) == "old":
+            exists = bool(fs.rename(sib, p))  # roll back the half swap
+        else:
+            fs.delete(sib, True)
+    return exists
 
 
 def merge_parquet(
@@ -145,35 +196,40 @@ def merge_parquet(
     """Key-based upsert into a parquet table: incoming rows win on
     ``merge_keys``, unmatched existing rows survive.  Anti-join
     existing←incoming on keys, union — the only shuffle is on the merge
-    keys.
+    keys.  A first merge writes ``incoming`` as the table.
 
-    The merged result is written ONCE, to a versioned sibling
-    directory, then swapped into place with filesystem renames —
-    metadata-only pointer moves, never a second copy of the data.
-    (Parquet can't overwrite a path it is still reading from, and a
-    stage-then-rewrite answer costs 2× the table's I/O per merge —
-    untenable when the table is the 100 TB side.)  On a store without
-    native rename (S3) the same structure maps to a catalog/view
-    pointer swap or a Delta/Iceberg ``MERGE``."""
-    if not _exists(spark, target_path):  # first run: nothing to merge
-        incoming.write.mode("overwrite").parquet(target_path)
-        return
-    existing = spark.read.parquet(target_path)
-    keys = list(merge_keys)
-    survivors = existing.join(
-        incoming.select(*keys).distinct(), on=keys, how="left_anti"
-    )
-    merged = survivors.unionByName(incoming.select(*existing.columns))
+    The merged result is written ONCE through the table commit
+    (:func:`_write_versioned`: a versioned sibling directory swapped
+    into place with filesystem renames — metadata-only pointer moves,
+    never a second copy of the data).  (Parquet can't overwrite a path
+    it is still reading from, and a stage-then-rewrite answer costs 2×
+    the table's I/O per merge — untenable when the table is the 100 TB
+    side.)  On a store without native rename (S3) the same structure
+    maps to a catalog/view pointer swap or a Delta/Iceberg ``MERGE``."""
+    merged = incoming
+    if _settle(spark, target_path):
+        existing = spark.read.parquet(target_path)
+        keys = list(merge_keys)
+        survivors = existing.join(
+            incoming.select(*keys).distinct(), on=keys, how="left_anti"
+        )
+        merged = survivors.unionByName(incoming.select(*existing.columns))
     _write_versioned(spark, merged, target_path)  # the ONE data write
 
 
 def _write_versioned(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Write ``df`` to the versioned sibling ``<path>__v<version>`` and
-    swap it over ``path`` — the one rewrite path of merge, compaction
-    and purge (finalize skips ``__v``/``__old`` leftovers)."""
-    version = time.strftime("%Y%m%d%H%M%S")
+    """The one table commit (module docstring): settle ``path``, write
+    ``df`` to ``<path>__v<version>`` and swap it over ``path``.  A
+    failed write deletes its version directory and re-raises."""
+    _settle(spark, path)
+    version = uuid.uuid4().hex
     vdir = f"{path}__v{version}"
-    df.write.mode("overwrite").parquet(vdir)
+    try:
+        df.write.mode("overwrite").parquet(vdir)
+    except BaseException:
+        p_new, fs = _hadoop_path(spark, vdir)
+        fs.delete(p_new, True)
+        raise
     _swap_into_place(spark, path, vdir, version)
 
 
@@ -181,15 +237,19 @@ def _swap_into_place(
     spark: SparkSession, target_path: str, vdir: str, version: str
 ) -> None:
     """Swap a freshly written versioned directory over ``target_path``
-    with metadata-only renames (restore the old state if the second
-    rename fails)."""
+    with metadata-only renames: the live table (if any) aside to
+    ``__old<version>``, the version into place, the old one deleted.
+    If the second rename fails the old table is renamed back; a crash
+    between the renames is rolled back by the next :func:`_settle`."""
     p_out, fs = _hadoop_path(spark, target_path)
     p_new, _ = _hadoop_path(spark, vdir)
     p_old, _ = _hadoop_path(spark, f"{target_path}__old{version}")
-    if not fs.rename(p_out, p_old):
+    had_table = fs.exists(p_out)
+    if had_table and not fs.rename(p_out, p_old):
         raise RuntimeError(f"swap: could not move {target_path} aside")
     if not fs.rename(p_new, p_out):
-        fs.rename(p_old, p_out)  # restore the previous table state
+        if had_table:
+            fs.rename(p_old, p_out)  # restore the previous table state
         raise RuntimeError(f"swap: could not move {vdir} into place")
     fs.delete(p_old, True)
 
@@ -201,7 +261,7 @@ def compact_parquet(
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
     ``ceil(total_bytes / target_file_bytes)`` files and swap the result
-    into place (same metadata-only rename swap as :func:`merge_parquet`).
+    into place through the table commit (:func:`_write_versioned`).
     Returns the file count after compaction.
 
     Incremental loads (streaming ``foreachBatch`` sinks, frequent
@@ -218,6 +278,7 @@ def compact_parquet(
     partition directory independently (this keeps the operation
     trivially parallel and lets a scheduler compact only partitions
     whose file count drifted)."""
+    _settle(spark, path)
     p, fs = _hadoop_path(spark, path)
     total = 0
     n_before = 0
@@ -254,18 +315,24 @@ def load(
     :class:`~gcp_cloudsql_airflow_bigquery_spark.sinks.BigQuerySink`),
     overwrite/append route through the disposition seam —
     ``WRITE_TRUNCATE``/``WRITE_APPEND`` exactly as the reference's load
-    step (``dags/copy_cloudsql_to_bigquery_v2.py:108``)."""
+    step (``dags/copy_cloudsql_to_bigquery_v2.py:108``).  Locally,
+    overwrite and merge replace the table through the table commit;
+    append and snapshot settle it and add files (module docstring)."""
     if sink is not None and spec.write_mode in _MODE_DISPOSITIONS:
         return sink.write(
             df, spec.stage_table, _MODE_DISPOSITIONS[spec.write_mode]
         )
     out = warehouse.path(spec.stage_table)
-    if spec.write_mode == "snapshot":
-        _write_snapshot(df, spec, out)
+    if spec.write_mode == "overwrite":
+        _write_versioned(spark, df, out)
     elif spec.write_mode == "merge":
         merge_parquet(spark, df, out, list(spec.merge_keys))
-    else:  # overwrite | append
-        df.write.mode(spec.write_mode).parquet(out)
+    else:
+        _settle(spark, out)
+        if spec.write_mode == "snapshot":
+            _write_snapshot(df, spec, out)
+        else:
+            df.write.mode("append").parquet(out)
     return out
 
 
@@ -279,22 +346,21 @@ def finalize(
     this spec's own — the reference's declared intent is a query that
     "joins the stage table with the existing table" (reference
     ``dags/cloudsql_to_bigquery.py:11``), i.e. finalize sees the whole
-    staged star schema (fact ⋈ dims), not one table in isolation."""
+    staged star schema (fact ⋈ dims), not one table in isolation.  The
+    final table is replaced through the table commit
+    (:func:`_write_versioned`)."""
     if not spec.stage_final_query:
         return None
-    import os
-    import re
-
     final_names = {
         s for s in (spec.final_table, f"{spec.stage_table}_final") if s
     }
     for entry in sorted(os.listdir(warehouse.root)) if os.path.isdir(
         warehouse.root
     ) else []:
-        # skip transient merge/stream artifacts and previously written
+        # skip transient commit/stream artifacts and previously written
         # *_final outputs — a finalize query must see stage tables, not
         # its own (or a sibling's) prior results
-        if entry.endswith("__stream_stage") or re.search(r"__(v|old)\d*$", entry):
+        if entry.endswith("__stream_stage") or _SIBLING.search(entry):
             continue
         if entry in final_names or entry.endswith("_final"):
             continue
@@ -311,7 +377,7 @@ def finalize(
             continue
     final_df = spark.sql(spec.stage_final_query)
     out = warehouse.path(spec.final_table or f"{spec.stage_table}_final")
-    final_df.write.mode("overwrite").parquet(out)
+    _write_versioned(spark, final_df, out)
     return out
 
 
@@ -615,16 +681,17 @@ def purge_keys(
 
     Scale shape: the forget set is person-sized (thousands against a
     100 TB lake), so each table is ONE scan with a broadcast LEFT ANTI
-    join — no shuffle of the table — written to a versioned sibling and
-    swapped into place with metadata-only renames (same crash-safe swap
-    as :func:`merge_parquet`).  Returns rows deleted per path; a path
-    whose count is 0 was still rewritten (the audit trail that the
-    purge ran is part of the contract).  On partitioned tables, pair
-    with a key→partition index to rewrite only affected partitions.
+    join — no shuffle of the table — replaced through the table commit
+    (:func:`_write_versioned`, module docstring).  Returns rows deleted
+    per path; a path whose count is 0 was still rewritten (the audit
+    trail that the purge ran is part of the contract).  On partitioned
+    tables, pair with a key→partition index to rewrite only affected
+    partitions.
     """
     fk = forget.select(F.col(key_col).alias("__forget_key")).distinct()
     deleted: dict[str, int] = {}
     for path, col in targets.items():
+        _settle(spark, path)
         df = spark.read.parquet(path)
         before = df.count()
         kept = df.join(

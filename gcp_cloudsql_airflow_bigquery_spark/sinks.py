@@ -11,6 +11,11 @@ the classpath, the local parquet warehouse otherwise.  Pipelines
 exercise identical disposition behavior either way, with zero cloud
 dependency — swapping in the real sink is a jar on the classpath, not
 a code change.
+
+The local ``WRITE_TRUNCATE`` replaces the table through the pipeline's
+one table commit (``pipeline._write_versioned``), so a failed load keeps
+the old table, as BigQuery's does; ``WRITE_APPEND`` and ``WRITE_EMPTY``
+add files under Spark's own job commit.
 """
 
 from __future__ import annotations
@@ -18,6 +23,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .pipeline import _settle, _write_versioned
 
 #: BigQuery writeDisposition → Spark save mode.  WRITE_EMPTY succeeds
 #: only when the target does not already hold data, which is exactly
@@ -63,22 +70,36 @@ class BigQuerySink:
                 f"unknown writeDisposition {disposition!r}; "
                 f"expected one of {sorted(DISPOSITION_MODES)}"
             )
-        mode = DISPOSITION_MODES[disposition]
         spark = df.sparkSession
         if bigquery_connector_available(spark):
-            target = f"{self.dataset}.{table}"
-            w = (
-                df.write.format("bigquery")
-                .mode(mode)
-                .option("writeDisposition", disposition)
-            )
-            if self.temp_gcs_bucket:
-                w = w.option("temporaryGcsBucket", self.temp_gcs_bucket)
-            w.save(target)
-            return target
+            return self._write_bigquery(df, table, disposition)
         out = self.warehouse.path(table)
-        df.write.mode(mode).parquet(out)
+        if disposition == "WRITE_TRUNCATE":
+            _write_versioned(spark, df, out)
+            return out
+        _settle(spark, out)
+        if disposition == "WRITE_APPEND":
+            df.write.mode("append").parquet(out)
+        else:
+            df.write.mode("errorifexists").parquet(out)
         return out
+
+    def _write_bigquery(
+        self, df: DataFrame, table: str, disposition: str
+    ) -> str:
+        """The connector write: BigQuery commits each load job
+        atomically on its managed storage, so the save mode is passed
+        through as the disposition's."""
+        target = f"{self.dataset}.{table}"
+        w = (
+            df.write.format("bigquery")
+            .mode(DISPOSITION_MODES[disposition])
+            .option("writeDisposition", disposition)
+        )
+        if self.temp_gcs_bucket:
+            w = w.option("temporaryGcsBucket", self.temp_gcs_bucket)
+        w.save(target)
+        return target
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         if bigquery_connector_available(spark):

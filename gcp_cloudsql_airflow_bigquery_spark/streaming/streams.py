@@ -347,9 +347,11 @@ def foreach_batch_merge(
     key-merged into a parquet target (incoming rows win on merge_keys) —
     the streaming realization of the reference's declared-but-unwired
     join-merge finalize (reference ``dags/cloudsql_to_bigquery.py:11``).
-    Each batch pays ONE data write (``pipeline.merge_parquet``'s
-    versioned-directory + rename swap); at scale the same callback body
-    targets Delta/Iceberg ``MERGE``."""
+    Each batch pays ONE data write through ``pipeline.merge_parquet``,
+    which replaces the target through the pipeline's one table commit
+    (versioned directory + rename swap; a failed or interrupted batch
+    leaves the previous snapshot, which the replayed batch merges into);
+    at scale the same callback body targets Delta/Iceberg ``MERGE``."""
     from ..pipeline import merge_parquet
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
@@ -391,16 +393,17 @@ def dedup_ingest_stream(
     the dedup cost per micro-batch is proportional to the batch, the
     state is the corpus itself (no executor state to bound), and a
     restart replays idempotently because duplicate suppression is
-    content-driven."""
+    content-driven.  The first batch creates the corpus through the
+    pipeline's table commit; later batches append novel docs."""
     from ..operators import dedup
     from ..operators.textstats import fingerprint_md5
-    from ..pipeline import _exists
+    from ..pipeline import _settle, _write_versioned
 
     def _ingest(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         batch = dedup.exact_dedup(batch)  # within-batch exact dedup
-        if not _exists(spark, target_path):  # first batch bootstraps the corpus
-            batch.write.mode("overwrite").parquet(target_path)
+        if not _settle(spark, target_path):  # first batch creates the corpus
+            _write_versioned(spark, batch, target_path)
             return
         existing = spark.read.parquet(target_path)
         # exact content-hash anti-join FIRST: docs shorter than the
@@ -1002,11 +1005,13 @@ def foreach_batch_merge_lww(
 
     Scale shape per batch: one key-window reduce over the BATCH (not
     the snapshot), one key-join against the snapshot, one
-    ``merge_parquet`` (anti-join + union + rename swap — single data
-    write of the merged table)."""
+    ``merge_parquet`` (anti-join + union, written once through the
+    pipeline's table commit).  The snapshot is settled before it is
+    read, so a batch that failed or stopped mid-swap leaves the previous
+    snapshot for the replayed batch to merge into."""
     from pyspark.sql import Window
 
-    from ..pipeline import _exists, merge_parquet
+    from ..pipeline import _settle, merge_parquet
 
     keys = list(merge_keys)
     ords = [F.col(c) for c in order_cols]
@@ -1019,7 +1024,7 @@ def foreach_batch_merge_lww(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if _exists(spark, target_path):  # else first batch: empty snapshot
+        if _settle(spark, target_path):  # else first batch: empty snapshot
             cur = spark.read.parquet(target_path).select(
                 *keys, F.struct(*ords).alias("__cur_ord")
             )

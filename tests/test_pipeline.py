@@ -678,6 +678,8 @@ def test_failed_purge_swap_leaves_nothing_finalize_registers(
     forget = spark.createDataFrame([(1,)], "key long")
     with pytest.raises(RuntimeError, match="injected"):
         pipeline.purge_keys(spark, {wh.path("purged_t"): "k"}, forget)
+    monkeypatch.undo()  # finalize commits its own table through the swap
+    assert _siblings(wh.path("purged_t"))  # the purge's version is left
 
     spec = PipelineSpec(
         export_table="purged_t",
@@ -735,3 +737,259 @@ def test_backfill_writes_idempotent_day_partitions(spark, tmp_path):
     assert "PartitionFilters" in plan and "snapshot_date" in plan.split(
         "PartitionFilters"
     )[1][:120], plan
+
+
+# --- one table commit: every replacement goes through the versioned swap
+
+_OLD = [(k, f"old{k}") for k in range(100)]
+_NEW = [(k, f"new{k}") for k in range(90, 110)]
+
+
+def _frame(spark, rows, *, fail=False, schema="k long, v string"):
+    """``rows`` as a frame; with ``fail`` one more row whose evaluation
+    fails the Spark job that writes it."""
+    df = spark.createDataFrame(rows, schema)
+    if fail:
+        boom = F.raise_error(F.lit("injected job failure"))
+        df = df.unionByName(
+            spark.range(1).select(
+                *[boom.cast(f.dataType).alias(f.name) for f in df.schema]
+            )
+        )
+    return df
+
+
+def _table(spark, path):
+    """A table's rows as sorted string tuples over its sorted columns."""
+    df = spark.read.parquet(path)
+    return sorted(tuple(map(str, r)) for r in df.select(sorted(df.columns)).collect())
+
+
+def _as_table(rows, day=None):
+    return sorted(
+        (str(k), day, v) if day else (str(k), v) for k, v in rows
+    )
+
+
+def _siblings(path):
+    """Commit leftovers beside ``path``: ``__v…`` and ``__old…`` dirs."""
+    import os
+
+    parent, name = os.path.split(path)
+    return [
+        e for e in os.listdir(parent)
+        if e.startswith(f"{name}__v") or e.startswith(f"{name}__old")
+    ]
+
+
+def _seed(spark, wh, op):
+    """Write table ``t`` for ``op``; return its rows before and after
+    one successful ``_commit(op)``."""
+    old = _frame(spark, _OLD).repartition(4)
+    if op == "snapshot":
+        old.withColumn("snapshot_date", F.lit("20260101")).write.partitionBy(
+            "snapshot_date"
+        ).parquet(wh.path("t"))
+        return _as_table(_OLD, "20260101"), sorted(
+            _as_table(_OLD, "20260101") + _as_table(_NEW, "20260102")
+        )
+    old.write.parquet(wh.path("t"))
+    if op == "finalize":
+        _frame(spark, _NEW).write.parquet(wh.path("src"))
+    after = {
+        "append": _OLD + _NEW,
+        "merge": [r for r in _OLD if r[0] < 90] + _NEW,
+        "compact": _OLD,
+        "purge": [r for r in _OLD if r[0] >= 10],
+    }.get(op, _NEW)
+    return _as_table(_OLD), _as_table(after)
+
+
+def _commit(op, spark, wh, *, fail=False):
+    """Replace or extend table ``t`` the way ``op`` does; with ``fail``
+    the commit's Spark job fails."""
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import (
+        finalize,
+        load,
+        purge_keys,
+    )
+    from gcp_cloudsql_airflow_bigquery_spark.sinks import BigQuerySink
+
+    path = wh.path("t")
+    if op in ("overwrite", "append", "snapshot", "merge"):
+        spec = PipelineSpec(
+            export_table="t",
+            write_mode=op,
+            snapshot_date="20260102",
+            merge_keys=("k",) if op == "merge" else (),
+        )
+        load(spark, _frame(spark, _NEW, fail=fail), spec, wh)
+    elif op == "sink":
+        BigQuerySink("analytics", wh).write(
+            _frame(spark, _NEW, fail=fail), "t", "WRITE_TRUNCATE"
+        )
+    elif op == "finalize":
+        query = "SELECT k, v FROM src_stage"
+        if fail:
+            query += (
+                " UNION ALL SELECT CAST(raise_error('injected job failure')"
+                " AS BIGINT), 'x'"
+            )
+        spec = PipelineSpec(
+            export_table="src", stage_final_query=query, final_table="t"
+        )
+        finalize(spark, spec, wh)
+    elif op == "compact":
+        with pytest.MonkeyPatch.context() as mp:
+            if fail:  # the compaction job fails while it rewrites the table
+                frame_cls = type(spark.range(1))
+                coalesce = frame_cls.coalesce
+                mp.setattr(
+                    frame_cls,
+                    "coalesce",
+                    lambda df, n: coalesce(
+                        _frame(spark, [], fail=True).unionByName(df), n
+                    ),
+                )
+            compact_parquet(spark, path, target_file_bytes=1 << 30)
+    else:  # purge
+        forget = _frame(
+            spark, [(k,) for k in range(10)], fail=fail, schema="key long"
+        )
+        purge_keys(spark, {path: "k"}, forget)
+
+
+_COMMIT_OPS = [
+    "overwrite", "append", "snapshot", "merge", "compact", "purge", "finalize",
+    "sink",
+]
+
+
+@pytest.mark.parametrize("op", _COMMIT_OPS)
+def test_failed_job_keeps_the_old_table_and_leaves_no_debris(
+    spark, tmp_path, op
+):
+    """A commit whose Spark job fails leaves the table's old rows
+    readable and nothing beside it; the next commit lands in full."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    old, new = _seed(spark, wh, op)
+    with pytest.raises(Exception, match="injected job failure"):
+        _commit(op, spark, wh, fail=True)
+    assert _table(spark, wh.path("t")) == old
+    assert _siblings(wh.path("t")) == []
+    _commit(op, spark, wh)
+    assert _table(spark, wh.path("t")) == new
+    assert _siblings(wh.path("t")) == []
+
+
+@pytest.mark.parametrize("op", _COMMIT_OPS)
+def test_crash_between_swap_renames_rolls_back_on_the_next_commit(
+    spark, tmp_path, op, crash_mid_swap
+):
+    """A commit killed between the swap's two renames leaves no table
+    and an ``__old`` sibling; the next commit of any kind settles the
+    table back to its old rows first, so it lands on them (append and
+    snapshot never swap: they follow a crashed overwrite)."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    _, new = _seed(spark, wh, op)
+    with crash_mid_swap(), pytest.raises(RuntimeError, match="injected crash"):
+        _commit(op if op not in ("append", "snapshot") else "overwrite", spark, wh)
+    _commit(op, spark, wh)
+    assert _table(spark, wh.path("t")) == new
+    assert _siblings(wh.path("t")) == []
+
+
+def test_crash_between_swap_renames_then_merge_keeps_every_row(
+    spark, tmp_path, crash_mid_swap
+):
+    """A merge killed between the swap's renames, then a 2-row merge:
+    the 100 old rows survive next to the 2 merged ones, and no
+    ``__v``/``__old`` sibling is left."""
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import merge_parquet
+
+    target = str(tmp_path / "m")
+    _frame(spark, _OLD).write.parquet(target)
+    with crash_mid_swap(), pytest.raises(RuntimeError, match="injected crash"):
+        merge_parquet(spark, _frame(spark, [(0, "x")]), target, ["k"])
+    two = [(200, "a"), (201, "b")]
+    merge_parquet(spark, _frame(spark, two), target, ["k"])
+    assert _table(spark, target) == _as_table(_OLD + two)
+    assert _siblings(target) == []
+
+
+def test_failed_version_write_leaves_no_debris(spark, tmp_path):
+    """A version write that fails deletes its ``__v`` directory and
+    re-raises the job's own error; the table is untouched."""
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import _write_versioned
+
+    target = str(tmp_path / "t2")
+    _frame(spark, _OLD).write.parquet(target)
+    with pytest.raises(Exception, match="injected job failure"):
+        _write_versioned(spark, _frame(spark, _NEW, fail=True), target)
+    assert _siblings(target) == []
+    assert _table(spark, target) == _as_table(_OLD)
+
+
+def test_settle_touches_only_its_own_table(spark, tmp_path):
+    """Settling ``t`` leaves alone a table whose name merely starts with
+    ``t`` and that table's own commit leftovers."""
+    import os
+    import uuid
+
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import _settle
+
+    t2_version = f"t2__v{uuid.uuid4().hex}"
+    for name in ("t", "t2", t2_version, f"t__v{uuid.uuid4().hex}"):
+        os.makedirs(tmp_path / name)
+    assert _settle(spark, str(tmp_path / "t"))
+    assert sorted(os.listdir(tmp_path)) == sorted(["t", "t2", t2_version])
+    assert not _settle(spark, str(tmp_path / "absent"))
+
+
+#: (file, function) that may write a table in place with
+#: ``.mode("overwrite")`` or a computed ``.mode(...)``, and why
+_IN_PLACE_WRITE_ALLOWLIST = {
+    ("pipeline.py", "_write_versioned"),  # the version directory itself
+    ("pipeline.py", "_write_snapshot"),  # dynamic overwrite of one partition
+    ("pipeline.py", "write_bucketed"),  # managed saveAsTable
+    ("pipeline.py", "curate_corpus"),  # partitioned corpus export
+    ("sinks.py", "_write_bigquery"),  # BigQuery commits the load job itself
+    ("streams.py", "events_upsert_streamed"),  # seed into its own mkdtemp
+}
+
+
+def test_table_overwrites_go_through_the_commit():
+    """Every write that replaces a table in ``pipeline.py``, ``sinks.py``
+    and ``streaming/streams.py`` goes through the one table commit:
+    ``.mode("overwrite")`` and ``.mode(<computed>)`` appear only in the
+    allowlisted functions, and an allowlisted function that no longer
+    writes that way fails the test."""
+    import ast
+    import pathlib
+
+    import gcp_cloudsql_airflow_bigquery_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders, writing = [], set()
+
+    def visit(node, path, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        f = getattr(node, "func", None)
+        if isinstance(f, ast.Attribute) and f.attr == "mode" and node.args:
+            arg = node.args[0]
+            literal = isinstance(arg, ast.Constant) and isinstance(arg.value, str)
+            if not literal or arg.value == "overwrite":
+                writing.add((path.name, fn))
+                if (path.name, fn) not in _IN_PLACE_WRITE_ALLOWLIST:
+                    offenders.append(f"{path.name}:{node.lineno} {fn}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, fn)
+
+    for path in (
+        root / "pipeline.py", root / "sinks.py", root / "streaming" / "streams.py"
+    ):
+        visit(ast.parse(path.read_text()), path, None)
+    assert not offenders, offenders
+    stale = _IN_PLACE_WRITE_ALLOWLIST - writing
+    assert not stale, f"allowlisted but writing nowhere: {sorted(stale)}"

@@ -641,6 +641,52 @@ def test_stream_foreach_batch_merge_lww(spark, event_dir, tmp_path):
     assert got2 == want
 
 
+@pytest.mark.parametrize("fault", ["job", "crash_mid_swap"])
+def test_stream_merge_lww_fault_keeps_the_old_snapshot(
+    spark, tmp_path, crash_mid_swap, fault
+):
+    """A micro-batch upsert that fails in its Spark job, or is killed
+    between the table commit's two renames, leaves the previous
+    snapshot; restarted from its checkpoint, the stream replays the
+    batch onto those rows and leaves no ``__v``/``__old`` sibling."""
+    schema = "k long, ord long, v string"
+    target = str(tmp_path / "snap")
+    feed_dir = str(tmp_path / "feed")
+    old = [(k, 1, f"old{k}") for k in range(50)]
+    new = [(k, 2, f"new{k}") for k in range(40, 60)]
+    spark.createDataFrame(old, schema).write.parquet(target)
+    spark.createDataFrame(new, schema).write.parquet(feed_dir)
+
+    def upsert(fail=False):
+        feed = spark.readStream.schema(schema).parquet(feed_dir)
+        if fail:
+            boom = F.raise_error(F.lit("injected job failure"))
+            feed = feed.withColumn(
+                "v", F.when(F.col("k") == 45, boom).otherwise(F.col("v"))
+            )
+        streams.foreach_batch_merge_lww(
+            feed, target, ["k"], ["ord"], checkpoint=str(tmp_path / "ckpt")
+        )
+
+    def snapshot():
+        return sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+    if fault == "job":
+        with pytest.raises(Exception, match="injected job failure"):
+            upsert(fail=True)
+        assert snapshot() == old
+    else:
+        with crash_mid_swap(), pytest.raises(Exception, match="injected crash"):
+            upsert()
+    assert spark.streams.active == []
+    upsert()
+    assert snapshot() == sorted(old[:40] + new)
+    leftovers = [
+        e for e in os.listdir(tmp_path) if e.startswith(("snap__v", "snap__old"))
+    ]
+    assert leftovers == []
+
+
 @pytest.mark.parametrize(
     "sink",
     [
