@@ -79,8 +79,6 @@ _WINDOW = (
     "events_markov_prediction_eval",
 )
 
-_WINDOW_ROWS_ONLY: frozenset[str] = frozenset()
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out = {name: QUERIES[name] for name in _WINDOW}

@@ -272,11 +272,17 @@ CROSS JOIN emitted e
         "dn": damping / n,
         "d": damping,
     }
-    # no early exit, so no per-round driver action: a LAZY per-round
+    # no early exit, so no convergence check per round.  A per-round
     # cut bounds the plan (the round's contribs subtree is referenced
     # twice, so un-cut rounds grow the plan exponentially: every-5th-
     # round cuts measured 12.4 s vs 4.5 s per-round-lazy vs 5.3 s
-    # per-round-eager on the 20-round event graph at sf0.1)
+    # per-round-eager on the 20-round event graph at sf0.1).  The lazy
+    # cut still runs jobs while the plan is built: localCheckpoint
+    # executes each round's stages, so building event_type_pagerank
+    # submits 118 jobs.  An eager cut submits 138, and its total time
+    # could not be told apart from the lazy cut's (eager/lazy 0.92-1.16
+    # over six interleaved min-of-3/5 pairs at sf0.1, 4 cores), so the
+    # cut stays lazy.
     for _ in range(max_iter):
         step = spark.sql(round_sql, args=round_args, norm=norm, ranks=ranks)
         ranks = step.localCheckpoint(eager=False)

@@ -36,7 +36,8 @@ write plus one rename.
   keeps its old rows.
 - A crash between the two renames leaves no table and an ``__old``
   sibling.  :func:`_settle` runs before every read-modify-write and
-  every commit: it renames that sibling back and deletes leftovers.
+  every commit, and :func:`run_pipelines` runs it on every table of its
+  run first: it renames that sibling back and deletes leftovers.
 - ``append`` and ``snapshot`` only add files and keep Spark's own job
   commit (a failed job leaves the table's rows as they were); they
   settle the table first.
@@ -457,7 +458,14 @@ def run_pipelines(
 ) -> list[PipelineResult]:
     """The DAG loop of op K (reference ``:273-287``).  The reference
     serializes exports only because of a Cloud SQL admin-API limit; in
-    Spark the per-table jobs pipeline naturally."""
+    Spark the per-table jobs pipeline naturally.
+
+    The run owns every spec's stage table, so it settles each one
+    (:func:`_settle`) before the first spec runs: a finalize that joins
+    another spec's table then sees it even if an interrupted commit
+    left it half-swapped, rolled back to its old rows."""
+    for s in specs:
+        _settle(spark, warehouse.path(s.stage_table))
     return [run_pipeline(spark, s, warehouse, sink=sink) for s in specs]
 
 

@@ -660,7 +660,7 @@ def agg_approx_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch aggregates (HLL distinct, quantile sketch) — the 100 TB
     path where exact distinct/percentile shuffles are unaffordable.
     Rows-only check (sketch estimates are engine-specific); accuracy is
-    asserted against exact values in tests/test_oracle_advanced.py."""
+    asserted against exact values in tests/test_oracle.py."""
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_orderkey", 0.02).alias("approx_orders"),

@@ -103,6 +103,10 @@ def scaled_state_partitions(spark: SparkSession, *paths: str):
     state store instead of 32, on a 100 TB feed it yields more
     partitions than any session default.  The per-partition target is
     128 MB, inside guide §2.2's 100 MB–1 GB band.
+
+    Assumes the session runs one thing at a time: the setting is
+    session-wide, so a query planned on the same session while a stream
+    runs inside this context plans with the stream's partition count.
     """
     nbytes = sum(_source_bytes(p) for p in paths)
     n = max(1, math.ceil(nbytes / _STATE_TARGET_BYTES))

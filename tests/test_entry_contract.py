@@ -92,35 +92,12 @@ def test_entry_smoke(spark):
 def test_first_fifty_entries_are_all_oracle_paired():
     """The driver hash-verifies only the first 50 queries() entries;
     a rows-only (no-oracle) entry in that window spends a slot on a
-    weaker check (r4 verdict), so any such entry must be DECLARED in
-    ``_WINDOW_ROWS_ONLY`` (r7: the verdict explicitly budgets slots to
-    convert the never-driver-green rows-only residue).  An unpaired
-    window entry not in that set is still a wasted-slot bug."""
+    weaker check (r4 verdict), so every window entry must be
+    oracle-paired."""
     mod = _entry()
     q, o = list(mod.queries()), mod.oracle_sql()
-    allowed = getattr(mod, "_WINDOW_ROWS_ONLY", frozenset())
-    unpaired = [n for n in q[:50] if n not in o and n not in allowed]
-    assert not unpaired, f"undeclared no-oracle entries in the window: {unpaired}"
-    # the declared rows-only slots must actually be in the window and
-    # actually unpaired — a stale declaration hides real waste
-    window = set(q[:50])
-    stale = [n for n in allowed if n not in window or n in o]
-    assert not stale, f"stale _WINDOW_ROWS_ONLY declarations: {stale}"
-
-
-def test_registry_outputs_are_scalar_columns(spark, sf_dir):
-    """The driver's canonicalizer crashes on array/map/struct cells
-    (r4: ``embedding_pca_projected`` TypeError: unhashable type 'list'),
-    killing even the rows-only count for that entry.  Every registered
-    query must therefore emit only scalar columns."""
-    complex_cols = []
-    for name, fn in _entry().queries().items():
-        df = fn(spark, sf_dir)
-        for f in df.schema.fields:
-            t = f.dataType.simpleString()
-            if t.startswith(("array", "map", "struct")):
-                complex_cols.append((name, f.name, t))
-    assert not complex_cols, complex_cols
+    unpaired = [n for n in q[:50] if n not in o]
+    assert not unpaired, f"no-oracle entries in the window: {unpaired}"
 
 
 def test_window_is_exactly_the_first_fifty_and_unique():

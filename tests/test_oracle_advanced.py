@@ -6,9 +6,10 @@ from pyspark.sql import functions as F
 
 from gcp_cloudsql_airflow_bigquery_spark.plans import advanced
 
-from test_oracle import oracle_test, test_registry_keys_align  # noqa: F401
+from test_oracle import oracle_test, rows_only_test, test_registry_keys_align  # noqa: F401
 
 test_advanced_matches_oracle = oracle_test("advanced")
+test_advanced_rows_only_runs = rows_only_test("advanced")
 
 
 def test_approx_sketch_accuracy(spark, duck, sf_dir):

@@ -917,6 +917,36 @@ def test_crash_between_swap_renames_then_merge_keeps_every_row(
     assert _siblings(target) == []
 
 
+def test_run_pipelines_settles_every_table_before_the_first_spec(
+    spark, tmp_path, crash_mid_swap
+):
+    """``dim`` is left half-swapped (no ``dim``, only ``dim__old…``);
+    a run whose fact spec finalizes a join with ``dim_stage`` before the
+    dim spec reloads it sees the old ``dim`` rows."""
+    from gcp_cloudsql_airflow_bigquery_spark.pipeline import load
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    _frame(spark, _OLD).write.parquet(wh.path("dim"))
+    with crash_mid_swap(), pytest.raises(RuntimeError, match="injected crash"):
+        load(spark, _frame(spark, _NEW), PipelineSpec(export_table="dim"), wh)
+    for name, rows in (("fact", [(k, str(k)) for k in range(95, 100)]), ("dim", _NEW)):
+        _frame(spark, rows).write.parquet(str(tmp_path / f"{name}.parquet"))
+    specs = [
+        _parquet_spec(
+            str(tmp_path),
+            "fact",
+            retries=0,
+            stage_final_query="SELECT f.k, d.v FROM fact_stage f"
+            " JOIN dim_stage d ON f.k = d.k",
+            final_table="fact_dim",
+        ),
+        _parquet_spec(str(tmp_path), "dim", retries=0),
+    ]
+    assert [r.rows_written for r in run_pipelines(spark, specs, wh)] == [5, 20]
+    assert _table(spark, wh.path("fact_dim")) == _as_table(_OLD[95:])
+    assert _table(spark, wh.path("dim")) == _as_table(_NEW)
+
+
 def test_failed_version_write_leaves_no_debris(spark, tmp_path):
     """A version write that fails deletes its ``__v`` directory and
     re-raises the job's own error; the table is untouched."""
