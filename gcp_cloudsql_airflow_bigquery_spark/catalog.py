@@ -6,6 +6,11 @@ ours is a thin loader that registers each parquet table as both a
 DataFrame and a temp view so ``spark.sql`` (the ``stage_final_query``
 surface, reference ``dags/cloudsql_to_bigquery.py:11,70``) works
 immediately.
+
+Tables are read through :func:`sources.files.read_parquet`, the
+package's one parquet reader: the schema comes from one footer read on
+the driver, so loading a table runs no Spark job, and all part files of
+a table are assumed to share that schema (Spark's non-merge rule).
 """
 
 from __future__ import annotations
@@ -14,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sources.files import read_parquet
 
 TABLES = (
     "region",
@@ -51,7 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (``events`` through :func:`events_ts`).
     Parquet scan → column pruning and predicate pushdown are free once
     downstream ops are declarative."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return events_ts(df) if name == "events" else df
 
 

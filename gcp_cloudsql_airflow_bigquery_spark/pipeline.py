@@ -209,7 +209,7 @@ def merge_parquet(
     maps to a catalog/view pointer swap or a Delta/Iceberg ``MERGE``."""
     merged = incoming
     if _settle(spark, target_path):
-        existing = spark.read.parquet(target_path)
+        existing = read_parquet(spark, target_path)
         keys = list(merge_keys)
         survivors = existing.join(
             incoming.select(*keys).distinct(), on=keys, how="left_anti"
@@ -291,7 +291,7 @@ def compact_parquet(
     n_files = max(1, -(-total // target_file_bytes))
     if n_before <= n_files:
         return n_before  # already compact: don't rewrite the table
-    _write_versioned(spark, spark.read.parquet(path).coalesce(n_files), path)
+    _write_versioned(spark, read_parquet(spark, path).coalesce(n_files), path)
     p, fs = _hadoop_path(spark, path)
     return sum(
         1
@@ -366,7 +366,7 @@ def finalize(
         if entry in final_names or entry.endswith("_final"):
             continue
         try:
-            spark.read.parquet(warehouse.path(entry)).createOrReplaceTempView(
+            read_parquet(spark, warehouse.path(entry)).createOrReplaceTempView(
                 f"{entry}_stage"
             )
         except Exception:  # noqa: BLE001
@@ -434,7 +434,7 @@ def run_pipeline(
         if sink is not None and spec.write_mode in _MODE_DISPOSITIONS:
             n = sink.read(spark, spec.stage_table).count()
         else:
-            n = spark.read.parquet(out).count()
+            n = read_parquet(spark, out).count()
         return out, n
 
     last_err: Exception | None = None
@@ -700,13 +700,13 @@ def purge_keys(
     deleted: dict[str, int] = {}
     for path, col in targets.items():
         _settle(spark, path)
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         before = df.count()
         kept = df.join(
             F.broadcast(fk), df[col] == F.col("__forget_key"), "left_anti"
         )
         _write_versioned(spark, kept, path)
-        deleted[path] = before - spark.read.parquet(path).count()
+        deleted[path] = before - read_parquet(spark, path).count()
     return deleted
 
 
@@ -718,7 +718,7 @@ def read_snapshot(
     so the scan PRUNES to that day's directory (plan-asserted in
     tests) — the v1 ``{table}_{ds_nodash}`` table-per-day lookup as a
     partition lookup."""
-    return spark.read.parquet(path).filter(
+    return read_parquet(spark, path).filter(
         F.col("snapshot_date") == snapshot_date
     )
 
@@ -838,5 +838,5 @@ def curate_corpus(
     if pack_budget:
         curated = cur.pack_bins(curated, budget=pack_budget)
     curated.write.mode("overwrite").partitionBy("split").parquet(out_path)
-    audit["written"] = spark.read.parquet(out_path).count()
+    audit["written"] = read_parquet(spark, out_path).count()
     return audit

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline import _settle, _write_versioned
+from .sources.files import read_parquet
 
 #: BigQuery writeDisposition → Spark save mode.  WRITE_EMPTY succeeds
 #: only when the target does not already hold data, which is exactly
@@ -106,4 +107,4 @@ class BigQuerySink:
             return (
                 spark.read.format("bigquery").load(f"{self.dataset}.{table}")
             )
-        return spark.read.parquet(self.warehouse.path(table))
+        return read_parquet(spark, self.warehouse.path(table))

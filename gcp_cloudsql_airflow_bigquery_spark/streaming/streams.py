@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 from itertools import count
@@ -45,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import events_ts
+from ..sources.files import read_parquet
 
 EVENT_SCHEMA = StructType(
     [
@@ -409,7 +411,7 @@ def dedup_ingest_stream(
         if not _settle(spark, target_path):  # first batch creates the corpus
             _write_versioned(spark, batch, target_path)
             return
-        existing = spark.read.parquet(target_path)
+        existing = read_parquet(spark, target_path)
         # exact content-hash anti-join FIRST: docs shorter than the
         # shingle width produce no index entries, so a replayed batch
         # would re-append them if only the near-dup check ran — this
@@ -784,7 +786,7 @@ def _event_feed(
     """``(path, batch, stream)`` over the fixture's ``events.parquet``,
     both frames with :func:`catalog.events_ts` applied."""
     path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
+    raw = read_parquet(spark, path)
     # the fixture is a single parquet FILE; FileStreamSource derives
     # basePath from the source path and requires a directory, so force
     # glob handling with a char class that matches exactly this file
@@ -922,8 +924,6 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     append (the snapshot/pruning layout `pipeline.py` reads back),
     bounded 5-group rollup; swap source for Kafka and path for object
     storage unchanged."""
-    import tempfile
-
     path, _, stream = _event_feed(spark, sf_dir)
     landed = (
         stream.filter(F.col("value") >= 10.0)
@@ -935,26 +935,30 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("ts").alias("day"),
         )
     )
-    base = tempfile.mkdtemp(prefix="events_filesink_")
-    out_dir = os.path.join(base, "landed")
-    with scaled_state_partitions(spark, path):
-        run_to_files(
-            landed,
-            out_dir,
-            os.path.join(base, "ckpt"),
-            partition_by=["day"],
+    with tempfile.TemporaryDirectory(
+        prefix="events_filesink_", ignore_cleanup_errors=True
+    ) as base:
+        out_dir = os.path.join(base, "landed")
+        with scaled_state_partitions(spark, path):
+            run_to_files(
+                landed,
+                out_dir,
+                os.path.join(base, "ckpt"),
+                partition_by=["day"],
+            )
+        out = (
+            read_parquet(spark, out_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.count_distinct("day").alias("n_days"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"),
+                    4,
+                ).alias("total_value"),
+            )
         )
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count_distinct("day").alias("n_days"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
-        )
-    )
+        return out.localCheckpoint(eager=True)  # the sink is a temp dir
 
 
 def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1029,7 +1033,7 @@ def foreach_batch_merge_lww(
             .drop("__rn")
         )
         if _settle(spark, target_path):  # else first batch: empty snapshot
-            cur = spark.read.parquet(target_path).select(
+            cur = read_parquet(spark, target_path).select(
                 *keys, F.struct(*ords).alias("__cur_ord")
             )
             best = (
@@ -1069,8 +1073,6 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The event-time LWW condition makes the snapshot micro-batch-slicing
     independent, so the oracle is the plain batch argmax over
     (seed window ∪ Jan-16 feed)."""
-    import tempfile
-
     path, raw, stream = _event_feed(spark, sf_dir)
     cut_lo = "2024-01-16"
     cut_hi = "2024-01-17"
@@ -1093,30 +1095,32 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    base = tempfile.mkdtemp(prefix="events_upsert_")
-    target = os.path.join(base, "snapshot")
-    seed.write.mode("overwrite").parquet(target)
-
     feed = stream.filter(
         (F.col("ts") >= F.lit(cut_lo).cast("timestamp"))
         & (F.col("ts") < F.lit(cut_hi).cast("timestamp"))
     ).select(*snap_cols)
-    with scaled_state_partitions(spark, path):
-        foreach_batch_merge_lww(
-            feed,
-            target,
-            ["user_id"],
-            ["ts_us", "event_id"],
-            checkpoint=os.path.join(base, "ckpt"),
-            query_name="events_upsert_streamed",
+    with tempfile.TemporaryDirectory(
+        prefix="events_upsert_", ignore_cleanup_errors=True
+    ) as base:
+        target = os.path.join(base, "snapshot")
+        seed.write.mode("overwrite").parquet(target)
+        with scaled_state_partitions(spark, path):
+            foreach_batch_merge_lww(
+                feed,
+                target,
+                ["user_id"],
+                ["ts_us", "event_id"],
+                checkpoint=os.path.join(base, "ckpt"),
+                query_name="events_upsert_streamed",
+            )
+        out = read_parquet(spark, target).select(
+            "user_id",
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
+            F.col("ts_us").alias("last_ts_us"),
+            F.col("event_id").alias("last_event_id"),
         )
-    return spark.read.parquet(target).select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-        F.col("ts_us").alias("last_ts_us"),
-        F.col("event_id").alias("last_event_id"),
-    )
+        return out.localCheckpoint(eager=True)  # the snapshot is a temp dir
 
 
 def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1263,9 +1267,6 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the split is one narrow codegen pass per micro-batch
     (no shuffle); the summary is a bucket-grain rollup of the
     re-read sinks."""
-    import shutil
-    import tempfile
-
     from ..operators import validate as V
 
     path, _, stream = _event_feed(spark, sf_dir)
@@ -1279,25 +1280,25 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["click", "view", "purchase", "signup", "error"],
         ),
     ]
-    base = tempfile.mkdtemp(prefix="events_quarantine_")
-    clean_path = os.path.join(base, "clean")
-    dlq_path = os.path.join(base, "dlq")
-    with scaled_state_partitions(spark, path):
-        quarantined_ingest(
-            stream, checks, clean_path, dlq_path, os.path.join(base, "ckpt")
+    with tempfile.TemporaryDirectory(
+        prefix="events_quarantine_", ignore_cleanup_errors=True
+    ) as base:
+        clean_path = os.path.join(base, "clean")
+        dlq_path = os.path.join(base, "dlq")
+        with scaled_state_partitions(spark, path):
+            quarantined_ingest(
+                stream, checks, clean_path, dlq_path, os.path.join(base, "ckpt")
+            )
+        clean = read_parquet(spark, clean_path).select(
+            F.lit("clean").alias("bucket")
         )
-    clean = spark.read.parquet(clean_path).select(
-        F.lit("clean").alias("bucket")
-    )
-    dlq = spark.read.parquet(dlq_path).select(
-        F.col("failed_checks").alias("bucket")
-    )
-    out = (
-        clean.unionByName(dlq)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-        .orderBy("bucket")
-    )
-    out = out.localCheckpoint(eager=True)  # sinks are temp dirs
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        dlq = read_parquet(spark, dlq_path).select(
+            F.col("failed_checks").alias("bucket")
+        )
+        out = (
+            clean.unionByName(dlq)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
+            .orderBy("bucket")
+        )
+        return out.localCheckpoint(eager=True)  # the sinks are a temp dir

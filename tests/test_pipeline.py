@@ -984,7 +984,7 @@ _IN_PLACE_WRITE_ALLOWLIST = {
     ("pipeline.py", "write_bucketed"),  # managed saveAsTable
     ("pipeline.py", "curate_corpus"),  # partitioned corpus export
     ("sinks.py", "_write_bigquery"),  # BigQuery commits the load job itself
-    ("streams.py", "events_upsert_streamed"),  # seed into its own mkdtemp
+    ("streams.py", "events_upsert_streamed"),  # seed into its own temp dir
 }
 
 

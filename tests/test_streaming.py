@@ -816,3 +816,25 @@ def test_quarantine_stream_matches_batch_split(spark, sf_dir):
         expect[",".join(fails) if fails else "clean"] += 1
     assert got == dict(expect)
     assert "clean" in got and any(b != "clean" for b in got)  # DLQ fired
+
+
+@pytest.mark.parametrize(
+    "query, prefix",
+    [
+        ("events_upsert_streamed", "events_upsert_"),
+        ("events_filesink_pipeline", "events_filesink_"),
+        ("events_quarantine_streamed", "events_quarantine_"),
+    ],
+)
+def test_streams_over_temp_sinks_leave_no_directory(
+    spark, sf_dir, tmp_path, monkeypatch, query, prefix
+):
+    """A registered stream that lands in a temp directory returns a
+    frame that no longer needs it and removes it: nothing of its prefix
+    is left in ``tempfile.gettempdir()``, and the frame still reads."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = getattr(streams, query)(spark, sf_dir)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith(prefix)]
+    assert out.count() > 0
