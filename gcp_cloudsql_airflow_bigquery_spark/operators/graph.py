@@ -1,8 +1,8 @@
 """Iterative graph operators over a pair/edge DataFrame: connected
 components (the clustering step that turns near-duplicate PAIRS from
 MinHash/Jaccard/SimHash into duplicate GROUPS so a training-data
-pipeline can keep one representative per cluster) and weighted
-PageRank.
+pipeline can keep one representative per cluster), weighted PageRank,
+label propagation and k-core peeling.
 
 Connected components is a hybrid: a few cheap min-label-propagation
 rounds with an exact fixpoint test (tiny dense dup-clusters finish
@@ -12,14 +12,31 @@ representatives, compose the round assignments — whose live-node
 count at least halves per round, so the fallback converges in
 O(log n) rounds regardless of component diameter.  Pure propagation
 is O(diameter) and was measured to silently exhaust a 20-round budget
-on a 120-node near-path component.  Connected components, PageRank
-and label propagation cut lineage per round with ``localCheckpoint``
-so iterated plans stay constant-size; k-core peeling is one lazy plan.
+on a 120-node near-path component.  It cuts lineage every round with
+an eager ``localCheckpoint`` that also observes its convergence test.
+
+Every FIXED-round loop goes through :func:`iterate`: a round is one
+SQL ``SELECT`` over ``{prev}`` that reads the previous state exactly
+once, so a chain of rounds grows the plan linearly, and the rounds
+between two cuts fuse into one ``spark.sql`` statement of chained
+CTEs.  A cut is an eager ``localCheckpoint`` between statements.  A
+lazy one is not cheaper: ``Dataset.localCheckpoint`` runs the round's
+stages while the plan is built either way, and a lazy cut lets
+concurrent tasks recompute the unmaterialized frame.  So the cut
+cadence trades build-time jobs (a cut every round) against the
+analysis and re-execution cost of one long statement (no cut); each
+caller's ``cut_every`` is measured (CHANGES.md records the sweep).  A
+round total (PageRank's dangling mass, HITS's L1 norm) is a
+``SUM(...) OVER ()`` on the round's own rows, so it does not read the
+state a second time; that window is one task, so it is used only on
+graphs whose node set is bounded (event types, states).  PageRank's
+default, unbounded path keeps its broadcast 1-row total, which reads
+the round's contributions twice, and cuts every round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -34,6 +51,42 @@ def _checkpoint_observed(df: DataFrame, *exprs):
     it with the values of ``exprs``, observed on that same job."""
     ob = Observation()
     return df.observe(ob, *exprs).localCheckpoint(eager=True), ob.get
+
+
+def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
+    """The state after ``rounds`` fixed rounds of ``round_sql``.
+
+    ``round_sql`` (or ``round_sql(i)`` for round ``i``, 0-based, where
+    rounds alternate) is a ``SELECT`` of the next state from
+    ``{prev}``, reading it exactly once; ``{name}`` placeholders bind
+    the constant ``frames`` and ``:name`` markers the ``args``.  Up to
+    ``cut_every`` rounds chain as CTEs of one ``spark.sql`` statement,
+    which binds each frame once; an eager ``localCheckpoint`` sits
+    between statements and none after the last, and ``cut_every=None``
+    builds one uncut statement (no Spark job).  ``rounds=0`` returns
+    ``state``.
+
+    Loops left out:
+    - connected components: has a convergence test and reads its state twice
+    - ``tokenizer.bpe_train``: picks each round's merge on the driver
+    - the Lloyd and PQ codebook trainings: keep their model on the driver
+    - ``similarity.mmr_rerank``: its state is a growing union
+    - ``events.event_type_reachability``: reads its state three times
+    """
+    sql = round_sql if callable(round_sql) else lambda i: round_sql
+    step = cut_every or max(rounds, 1)
+    for start in range(0, rounds, step):
+        if start:
+            state = state.localCheckpoint(eager=True)
+        n = min(step, rounds - start)
+        ctes = ",\n".join(
+            f"s{j + 1} AS (\n{sql(start + j).replace('{prev}', f's{j}' if j else '{prev}')}\n)"
+            for j in range(n)
+        )
+        state = state.sparkSession.sql(
+            f"WITH {ctes}\nSELECT * FROM s{n}", args=args, prev=state, **frames
+        )
+    return state
 
 
 def connected_components(
@@ -174,18 +227,24 @@ def pagerank(
 ) -> DataFrame:
     """Weighted PageRank: (node, rank), ranks summing to 1.
 
-    Power iteration as DataFrame ops: each round joins ranks to the
-    out-normalized edge list, sums contributions per destination (one
-    shuffle, map-side combined), adds the teleport term plus the
+    Power iteration through :func:`iterate`: each round joins ranks to
+    the out-normalized edge list, sums contributions per destination
+    (one shuffle, map-side combined) and adds the teleport term plus the
     redistributed mass of dangling nodes (computed as total minus
-    emitted mass — no extra anti-join), and cuts lineage with
-    ``localCheckpoint`` so the iterated plan stays constant-size.
-    It runs exactly ``max_iter`` rounds (no convergence test), so the
-    result replays as fixed-round SQL.  The dangling-mass scalar is a
-    broadcast 1-row cross join over the SAME contribution aggregate
-    (ReuseExchange dedups the shuffle); at 100 TB the per-round cost is
-    one edge-list join + one aggregation, the same shape GraphX's
-    Pregel emits.
+    emitted mass — no extra anti-join).  It runs exactly ``max_iter``
+    rounds (no convergence test), so the result replays as fixed-round
+    SQL.  At 100 TB the per-round cost is one edge-list join + one
+    aggregation, the same shape GraphX's Pregel emits.
+
+    ``broadcast_ranks`` is OPT-IN (default False — scale policy: node
+    sets are unbounded unless the caller KNOWS otherwise).  With it
+    (bounded node sets: types, labels, entities) the rank table
+    broadcasts, the join is map-side, the dst-grouped aggregation
+    reuses the standing partitioning of the edge list, the emitted
+    total is a one-task window, and 4 rounds fuse per statement.  On
+    the default path ranks shuffle by src each round (node-sized), the
+    emitted total is a broadcast 1-row cross join over the same
+    contributions, and every round is cut.
     """
     e = edges.select(
         F.col(src).alias("src"),
@@ -213,80 +272,30 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    # r11 (VERDICT r10 #4): the round is built as ONE ``spark.sql``
-    # statement over the frames instead of ~15 chained DataFrame calls.
-    # The computation is unchanged — same joins, same hints, same
-    # expression tree, verified by before/after physical-plan diff
-    # (plans/r11/event_type_pagerank_*) — but plan CONSTRUCTION cost
-    # drops ~30% (the r10 probe's measured py4j share of the ~300 ms/
-    # round driver floor; analysis/optimization is the irreducible
-    # rest).  Per-round semantics, kept identical to the DF form:
-    #
-    # - ``broadcast_ranks`` is OPT-IN (default False — scale policy:
-    #   node sets are unbounded unless the caller KNOWS otherwise).
-    #   With it (bounded node sets: types, labels, entities) the rank
-    #   table broadcasts, the join is map-side, and the dst-grouped agg
-    #   reuses norm's standing partitioning — no edge-sized exchange
-    #   per round.  On the default path ranks shuffle by src each round
-    #   (node-sized — still far cheaper than the edge list), the Pregel
-    #   trade; Catalyst/AQE may still pick a broadcast on its own under
-    #   the threshold.  The explicit hint matters for bounded sets
-    #   because the checkpointed ranks frame has no size stats and
-    #   would otherwise sort-merge.
-    # - dangling mass = 1 - emitted; the 1-row total rides a broadcast
-    #   cross join so the base term stays inside the plan (no driver
-    #   action), and ReuseExchange evaluates the contribution shuffle
-    #   once (the CTE is referenced twice, exactly like the DF object
-    #   was).
-    spark = edges.sparkSession
-    rank_hint = "/*+ BROADCAST({ranks}) */ " if broadcast_ranks else ""
-    step_hint = (
-        "/*+ BROADCAST(c), BROADCAST(e) */"
-        if broadcast_ranks
-        else "/*+ BROADCAST(e) */"
+    # bounded: a one-task window total; default: a broadcast 1-row total
+    # that reads the contributions twice, so every round is cut
+    emitted, total = (
+        ("SUM(c.contrib) OVER ()", "") if broadcast_ranks else
+        ("e.emitted", "\nCROSS JOIN (SELECT SUM(contrib) AS emitted FROM contribs) e")
     )
-    round_sql = f"""
-WITH contribs AS (
-  SELECT {rank_hint}{{norm}}.dst AS dst,
-         SUM({{norm}}.p * r.rank) AS contrib
-  FROM {{norm}} JOIN {{ranks}} r ON {{norm}}.src = r.node
-  GROUP BY {{norm}}.dst
-),
-emitted AS (
-  SELECT COALESCE(SUM(contrib), :zero) AS emitted FROM contribs
-)
-SELECT {step_hint} r.node,
-       :teleport + :dn * (:one - e.emitted)
+    round_sql = f"""WITH contribs AS (
+  SELECT {"/*+ BROADCAST(r) */ " if broadcast_ranks else ""}n.dst, SUM(n.p * r.rank) AS contrib
+  FROM {{norm}} n JOIN {{prev}} r ON n.src = r.node GROUP BY n.dst)
+SELECT /*+ BROADCAST({"c" if broadcast_ranks else "e"}) */ v.node,
+       :teleport + :dn * (:one - COALESCE({emitted}, :zero))
          + :d * COALESCE(c.contrib, :zero) AS rank
-FROM {{ranks}} r
-LEFT JOIN contribs c ON r.node = c.dst
-CROSS JOIN emitted e
-"""
+FROM {{nodes}} v LEFT JOIN contribs c ON v.node = c.dst{total}"""
     # named-parameter binding keeps the literals EXACT Python doubles
-    # (no decimal-text round trip), matching the DF form's F.lit()s
-    round_args = {
-        "zero": 0.0,
-        "one": 1.0,
-        "teleport": (1.0 - damping) / n,
-        "dn": damping / n,
-        "d": damping,
-    }
-    # no early exit, so no convergence check per round.  A per-round
-    # cut bounds the plan (the round's contribs subtree is referenced
-    # twice, so un-cut rounds grow the plan exponentially: every-5th-
-    # round cuts measured 12.4 s vs 4.5 s per-round-lazy vs 5.3 s
-    # per-round-eager on the 20-round event graph at sf0.1).  The lazy
-    # cut still runs jobs while the plan is built: localCheckpoint
-    # executes each round's stages, so building event_type_pagerank
-    # submits 118 jobs.  An eager cut submits 138, and its total time
-    # could not be told apart from the lazy cut's (eager/lazy 0.92-1.16
-    # over six interleaved min-of-3/5 pairs at sf0.1, 4 cores), so the
-    # cut stays lazy.
-    for _ in range(max_iter):
-        step = spark.sql(round_sql, args=round_args, norm=norm, ranks=ranks)
-        ranks = step.localCheckpoint(eager=False)
-    return ranks
+    # (no decimal-text round trip)
+    return iterate(
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        round_sql,
+        max_iter,
+        cut_every=4 if broadcast_ranks else 1,
+        args=dict(zero=0.0, one=1.0, teleport=(1.0 - damping) / n, dn=damping / n, d=damping),
+        norm=norm,
+        nodes=nodes,
+    )
 
 
 def triangle_count(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
@@ -379,26 +388,20 @@ def label_propagation(
         .repartition(F.col("v"))
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+    hint = "/*+ BROADCAST(l) */ " if broadcast_labels else ""
+    labels = iterate(
+        sym.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node")),
+        f"""SELECT node, label FROM (
+  SELECT v AS node, label,
+         ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, label) AS rn
+  FROM (SELECT {hint}e.v, l.label, SUM(e.w) AS s
+        FROM {{sym}} e JOIN {{prev}} l ON e.u = l.node
+        GROUP BY e.v, l.label)
+) WHERE rn = 1""",
+        rounds,
+        cut_every=2,
+        sym=sym,
     )
-    for _ in range(rounds):
-        lab = F.broadcast(labels) if broadcast_labels else labels
-        votes = (
-            sym.join(lab.withColumnRenamed("node", "u"), "u")
-            .groupBy("v", "label")
-            .agg(F.sum("w").alias("s"))
-        )
-        wn = Window.partitionBy("v").orderBy(F.col("s").desc(), F.col("label"))
-        labels = (
-            votes.withColumn("rn", F.row_number().over(wn))
-            .filter(F.col("rn") == 1)
-            .select(F.col("v").alias("node"), "label")
-            .localCheckpoint(eager=True)
-        )
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -424,8 +427,8 @@ def k_core(
     surviving edge after ``rounds`` peels, with their degree inside
     the surviving subgraph.
 
-    Scale shape: one lazy plan, built as a single SQL statement, so
-    construction runs no Spark job.  Peeling keeps the edge set
+    Scale shape: one lazy plan, the rounds fused by :func:`iterate`
+    with no cut, so construction runs no Spark job.  Peeling keeps the edge set
     symmetric, so deg(x) is the number of rows with ``u = x`` and also
     the number with ``v = x``: a round is ``COUNT(*) OVER (PARTITION
     BY u)`` and ``... BY v`` over the same edges, keeping rows where
@@ -433,20 +436,28 @@ def k_core(
     round's first window runs on the partitioning the previous round
     left and a round costs ONE edge-sized exchange; the final degree
     count groups on that same column."""
-    steps = [f"""e0 AS (SELECT DISTINCT u, v FROM (
+    spark = edges.sparkSession
+    e0 = spark.sql(
+        f"""SELECT DISTINCT u, v FROM (
   SELECT `{src}` AS u, `{dst}` AS v FROM {{edges}}
   UNION ALL SELECT `{dst}`, `{src}` FROM {{edges}}
-) WHERE u <> v)"""]
-    first, second = "u", "v"
-    for i in range(1, rounds + 1):
-        steps.append(f"""e{i} AS (SELECT u, v FROM (
-  SELECT u, v, d1, COUNT(*) OVER (PARTITION BY {second}) AS d2 FROM (
-    SELECT u, v, COUNT(*) OVER (PARTITION BY {first}) AS d1 FROM e{i - 1})
-) WHERE d1 >= :k AND d2 >= :k)""")
-        # the next round (or the final count) starts on this partitioning
-        first, second = second, first
-    q = "WITH " + ",\n".join(steps) + (
-        f"\nSELECT {first} AS node, COUNT(*) AS core_degree"
-        f" FROM e{rounds} GROUP BY {first}"
+) WHERE u <> v""",
+        edges=edges,
     )
-    return edges.sparkSession.sql(q, args={"k": k}, edges=edges)
+    # round i's first window runs on the partitioning round i-1 left
+    order = ("u", "v")
+    peeled = iterate(
+        e0,
+        lambda i: f"""SELECT u, v FROM (
+  SELECT u, v, d1, COUNT(*) OVER (PARTITION BY {order[1 - i % 2]}) AS d2 FROM (
+    SELECT u, v, COUNT(*) OVER (PARTITION BY {order[i % 2]}) AS d1 FROM {{prev}})
+) WHERE d1 >= :k AND d2 >= :k""",
+        rounds,
+        cut_every=None,
+        args={"k": k},
+    )
+    last = order[rounds % 2]
+    return spark.sql(
+        f"SELECT {last} AS node, COUNT(*) AS core_degree FROM {{prev}} GROUP BY {last}",
+        prev=peeled,
+    )

@@ -864,10 +864,11 @@ def mmr_rerank(
     scale-safe: each of the ``k`` unrolled greedy steps is a join of
     the pool against the ≤step-sized selected set per query, grouped
     back per candidate, so cost is queries × pool × k tiny rows and
-    NEVER touches the corpus.  Each pick is lineage-cut with a lazy
+    NEVER touches the corpus.  Each pick is lineage-cut with an eager
     ``localCheckpoint`` so the iterated plan stays constant-size (the
-    graph.py convention).  Queries with fewer than ``k`` candidates
-    simply stop early (argmax of an empty remainder yields no row).
+    graph.py cut: a lazy one runs the same stages while the plan is
+    built).  Queries with fewer than ``k`` candidates simply stop
+    early (argmax of an empty remainder yields no row).
     Scores are rounded(6) before the argmax and ties break on
     cand_id, so a SQL replay picks identically."""
     # r10: materialize the bounded candidate pool ONCE — without the
@@ -889,7 +890,7 @@ def mmr_rerank(
             F.round("rel", 6).alias("mmr_score"),
             F.lit(1).alias("pick"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     for step in range(2, k + 1):
         s = selected.select(
@@ -929,7 +930,7 @@ def mmr_rerank(
                 F.col("mmr").alias("mmr_score"),
                 F.lit(step).alias("pick"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
         selected = selected.unionByName(pick)
     return selected.select("query_id", "pick", "cand_id", "mmr_score")

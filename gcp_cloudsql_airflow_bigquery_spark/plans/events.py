@@ -2765,17 +2765,16 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     states = P.select(F.col("from_type").alias("state")).distinct()
     k = states.count()  # model-sized driver action (|types|)
-    pi = states.select("state", F.lit(1.0 / k).alias("pi"))
-    for _ in range(_MARKOV_ROUNDS):
-        pi = (
-            P.join(pi, P.from_type == pi.state)
-            .select(
-                F.col("to_type").alias("state"),
-                (F.col("pi") * F.col("p")).cast("decimal(28,15)").alias("term"),
-            )
-            .groupBy("state")
-            .agg(F.sum("term").cast("double").alias("pi"))
-        )
+    pi = graph.iterate(
+        states.select("state", F.lit(1.0 / k).alias("pi")),
+        """SELECT p.to_type AS state,
+       CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(28,15))) AS DOUBLE) AS pi
+FROM {P} p JOIN {prev} pi ON p.from_type = pi.state
+GROUP BY p.to_type""",
+        _MARKOV_ROUNDS,
+        cut_every=4,
+        P=P,
+    )
     return pi.select(
         F.col("state").alias("event_type"),
         F.round("pi", 6).alias("stationary"),
@@ -3583,7 +3582,7 @@ def event_type_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed LEAD shuffle over the fact scan; the
     graph is a |types|² frame (localCheckpointed once), so all 16
-    half-steps are model-sized joins."""
+    half-steps are model-sized joins, fused by ``graph.iterate``."""
     e = _events(spark, sf_dir)
     edges = (
         _with_next(e, "event_type", "next_type")
@@ -3601,42 +3600,33 @@ def event_type_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # r11 (VERDICT r10 #4, same mechanism as graph.pagerank): each
-    # half-step is ONE spark.sql statement over the frames instead of
-    # ~12 chained DataFrame calls — the computation (joins, decimal
-    # casts, the ROUND(12) pin, the no-hint 1-row cross join) is
-    # unchanged and the physical plan identical modulo expr ids
-    # (plans/r11/event_type_hits_*); only the py4j share of the
-    # per-half-step driver floor is cut (~30% of construct, the r10
-    # probe's measured split).  Each half-step still eagerly
-    # localCheckpoints: it references its raw frame TWICE (per-node
-    # join + total) — without the cut the plan doubles twice per
-    # round (4^rounds analysis blowup); the frame is |types|-sized,
-    # so the eager cut is free.  Column names go in through .format:
-    # spark.sql would quote a str argument as a literal.
-    half_sql = """
-WITH raws AS (
-  SELECT e.{to_col} AS k, SUM(CAST(s.{score} * e.n AS DECIMAL(28,12))) AS raw
-  FROM {{edges}} e JOIN {{scores}} s ON e.{from_col} = s.node
-  GROUP BY e.{to_col}
-),
-tot AS (SELECT CAST(SUM(raw) AS DOUBLE) AS tot FROM raws)
-SELECT n.node,
+    # a half-step's L1 norm is a window over its own rows, so it reads
+    # the previous scores once (graph.iterate's contract); column names
+    # go in through .format, as spark.sql would quote a str argument
+    half_sql = """SELECT n.node,
        ROUND(CAST(COALESCE(r.raw, CAST(0 AS DECIMAL(28,12))) AS DOUBLE)
-             / t.tot, 12) AS {out}
+             / CAST(SUM(r.raw) OVER () AS DOUBLE), 12) AS {out}
 FROM {{nodes}} n
-LEFT JOIN raws r ON n.node = r.k
-CROSS JOIN tot t
-"""
-    auth_sql = half_sql.format(from_col="src", to_col="dst", score="hub", out="auth")
-    hub_sql = half_sql.format(from_col="dst", to_col="src", score="auth", out="hub")
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(_HITS_ROUNDS):
-        auth = spark.sql(auth_sql, edges=edges, nodes=nodes, scores=hub)
-        auth = auth.localCheckpoint(eager=True)
-        hub = spark.sql(hub_sql, edges=edges, nodes=nodes, scores=auth)
-        hub = hub.localCheckpoint(eager=True)
+LEFT JOIN (
+  SELECT e.{to_col} AS k, SUM(CAST(s.{score} * e.n AS DECIMAL(28,12))) AS raw
+  FROM {{edges}} e JOIN {{prev}} s ON e.{from_col} = s.node
+  GROUP BY e.{to_col}
+) r ON n.node = r.k"""
+    halves = (
+        half_sql.format(from_col="src", to_col="dst", score="hub", out="auth"),
+        half_sql.format(from_col="dst", to_col="src", score="auth", out="hub"),
+    )
+    # the last hub half-step is its own statement: the final join reads
+    # the authorities it starts from a second time
+    auth = graph.iterate(
+        nodes.select("node", F.lit(1.0).alias("hub")),
+        lambda i: halves[i % 2],
+        2 * _HITS_ROUNDS - 1,
+        cut_every=4,
+        edges=edges,
+        nodes=nodes,
+    )
+    hub = spark.sql(halves[1], prev=auth, edges=edges, nodes=nodes)
     return (
         hub.join(auth, "node")
         .select(

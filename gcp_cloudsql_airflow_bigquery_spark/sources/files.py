@@ -10,10 +10,10 @@
   :func:`read_parquet` the package's one parquet reader (every table
   read goes through it; ``readStream`` sources are the only other
   parquet reads).  It takes the schema from ONE footer, read on the
-  driver: the first data file Spark's own non-merge inference would
-  read.  So every part file of a table is assumed to share one schema,
-  which is Spark's non-merge rule (``mergeSchema`` is used nowhere in
-  the package).  No Spark job runs to build the frame, and nothing is
+  driver: the file Spark's own non-merge inference would read (a root
+  summary file, else the first data file).  So every part file of a
+  table is assumed to share one schema, which is Spark's non-merge rule
+  (``mergeSchema`` is used nowhere in the package).  No Spark job runs to build the frame, and nothing is
   cached between calls.
 - ORC: Spark-native columnar alternative for interchange with
   Hive/Trino-era warehouses (built into the distribution, same
@@ -65,10 +65,11 @@ def read_ndjson(
 
 
 def _is_hidden(path: str) -> bool:
-    """Spark's listing rule for names it skips: ``_`` (unless a
+    """Spark's rule for names that are not data files: ``_`` (unless a
     ``k=v`` partition name) or ``.`` prefixes, ``._COPYING_`` files.
-    The summary files it keeps (``_metadata``, ``_common_metadata``)
-    are skipped too: nothing here writes them."""
+    This covers the summary files (``_common_metadata``, ``_metadata``),
+    which Spark lists but reads only for the schema; ``_schema_file``
+    looks for them by name."""
     name = path.rsplit("/", 1)[-1]
     return (
         (name.startswith("_") and "=" not in name)
@@ -77,24 +78,37 @@ def _is_hidden(path: str) -> bool:
     )
 
 
-def _first_data_file(fs, statuses):
-    """The ``FileStatus`` of the data file Spark's non-merge schema
-    inference reads: the least path string among the non-hidden leaf
-    files under ``statuses`` (``ParquetUtils.splitFiles`` sorts by
-    path).  A depth-first walk finds it listing only the directories on
-    its way: ordered by path plus ``/`` for a directory, no path under a
-    later entry sorts before one under an earlier entry.  ``None`` when
-    there is no data file; a hidden root is skipped too, which only
-    sends the caller to Spark's plain read."""
-    entries = []
+_SUMMARIES = ("/_common_metadata", "/_metadata")
+
+
+def _schema_file(fs, statuses, depth=0):
+    """The ``FileStatus`` whose footer Spark's non-merge schema
+    inference reads (``ParquetUtils.inferSchema``): a root
+    ``_common_metadata``, else a root ``_metadata``, else the data file
+    of least path string among the non-hidden leaf files under
+    ``statuses`` (``ParquetUtils.splitFiles`` sorts by path).  A root is
+    a directory ``statuses`` names, so its summary files come from the
+    listing the walk makes anyway; Spark would also take a summary file
+    from a subdirectory, where parquet writers put none.  A depth-first
+    walk finds the data file listing only the directories on its way:
+    ordered by path plus ``/`` for a directory, no path under a later
+    entry sorts before one under an earlier entry.  ``None`` when there
+    is no such file; a hidden root is skipped too, which only sends the
+    caller to Spark's plain read."""
+    entries, summaries = [], {}
     for status in statuses or ():
         path = status.getPath().toString()
-        if not _is_hidden(path):
+        if depth == 1 and path.endswith(_SUMMARIES):
+            summaries[path[path.rindex("/"):]] = status
+        elif not _is_hidden(path):
             entries.append((path + "/" * status.isDirectory(), status))
+    for name in _SUMMARIES:
+        if name in summaries:
+            return summaries[name]
     for key, status in sorted(entries, key=lambda e: e[0]):
         if not key.endswith("/"):
             return status
-        found = _first_data_file(fs, fs.listStatus(status.getPath()))
+        found = _schema_file(fs, fs.listStatus(status.getPath()), depth + 1)
         if found is not None:
             return found
     return None
@@ -103,13 +117,13 @@ def _first_data_file(fs, statuses):
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job.
 
-    The schema is read on the driver from one footer, of the file and
-    through the conversion that Spark's inference job uses
+    The schema is read on the driver from one footer, of the file
+    (``_schema_file``) and through the conversion that Spark's inference job uses
     (``ParquetFooterReader.readFooter`` with ``SKIP_ROW_GROUPS``, then
     ``ParquetFileFormat.readSchemaFromFooter`` under the session's
     ``ParquetToSparkSchemaConverter``), and handed to the reader, which
     still lists the files and appends the partition columns.  With no
-    data file under ``path`` (missing, empty, only hidden files) the
+    such file under ``path`` (missing, empty, only hidden files) the
     plain read runs, so Spark raises its own error.  Classes are named
     in full (``JavaClass``): walking ``spark._jvm`` costs one py4j round
     trip per package segment."""
@@ -122,7 +136,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     conf = state.newHadoopConf()
     root = jclass("org.apache.hadoop.fs.Path")(path)
     fs = root.getFileSystem(conf)
-    first = _first_data_file(fs, fs.globStatus(root))
+    first = _schema_file(fs, fs.globStatus(root))
     if first is None:
         return spark.read.parquet(path)
     parquet = "org.apache.spark.sql.execution.datasources.parquet."

@@ -181,6 +181,35 @@ def test_read_parquet_takes_the_schema_of_the_file_spark_infers_from(
     assert read_parquet(spark, str(table)).columns == ["x", "y", "k"]
 
 
+@pytest.mark.parametrize(
+    "summaries, columns",
+    [
+        (("_common_metadata",), ["a", "b"]),
+        (("_metadata",), ["a", "b", "c"]),
+        (("_common_metadata", "_metadata"), ["a", "b"]),
+    ],
+)
+def test_read_parquet_takes_the_schema_of_a_root_summary_file(
+    spark, tmp_path, summaries, columns
+):
+    """A root ``_common_metadata`` comes before a root ``_metadata``, and
+    either before the data files, as in Spark's non-merge inference;
+    here each file has a different schema."""
+    table = tmp_path / "t"
+    table.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(table / "part-0.parquet"))
+    schemas = {
+        "_common_metadata": pa.schema([("a", pa.int64()), ("b", pa.string())]),
+        "_metadata": pa.schema(
+            [("a", pa.int64()), ("b", pa.string()), ("c", pa.float64())]
+        ),
+    }
+    for name in summaries:
+        pq.write_metadata(schemas[name], str(table / name))
+    _assert_reads_like_spark(spark, str(table))
+    assert read_parquet(spark, str(table)).columns == columns
+
+
 def test_read_parquet_raises_sparks_own_error(spark, tmp_path):
     """A path with no data file under it (missing, empty, or holding
     only hidden files) raises the error ``spark.read.parquet`` raises."""

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from gcp_cloudsql_airflow_bigquery_spark.operators import (
     curation,
+    graph,
     privacy,
     profiling,
 )
@@ -191,6 +192,92 @@ def test_event_type_pagerank_runs(spark, sf_dir):
     rows = QUERIES["event_type_pagerank"](spark, sf_dir).collect()
     assert len(rows) == 5  # five event types
     assert abs(sum(r.rank for r in rows) - 1.0) < 1e-3
+
+
+# --- graph.iterate: the fixed-round driver -------------------------------
+
+def _plan_nodes(df):
+    """Node count of the optimized logical plan."""
+    n, stack = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        n += 1
+        for i in range(node.children().size()):
+            stack.append(node.children().apply(i))
+    return n
+
+
+def _small_graph(spark):
+    return spark.createDataFrame(
+        [(0, 1, 2), (0, 2, 1), (1, 2, 1), (2, 0, 1), (1, 3, 1), (3, 4, 1)],
+        "a long, b long, n long",
+    )
+
+
+_LOOPS = {
+    "pagerank": lambda spark, sf: graph.pagerank(
+        _small_graph(spark), src="a", dst="b", weight="n", broadcast_ranks=True
+    ),
+    "label_propagation": lambda spark, sf: graph.label_propagation(
+        _small_graph(spark), weight="n", broadcast_labels=True
+    ),
+    "k_core": lambda spark, sf: graph.k_core(_small_graph(spark), k=2),
+    "event_type_hits": None,
+    "brand_als_factors": None,
+    "events_markov_stationary": None,
+}
+
+
+@pytest.mark.parametrize("loop", list(_LOOPS))
+def test_iterate_round_templates_read_their_state_once(spark, sf_dir, monkeypatch, loop):
+    """Every round template a caller hands ``graph.iterate`` reads
+    ``{prev}`` once: uncut, 8 rounds plan at most about 2.5x the nodes
+    of 4 (a template reading it twice would make that about 16x)."""
+    from gcp_cloudsql_airflow_bigquery_spark.plans import QUERIES
+
+    calls, real = [], graph.iterate
+
+    def spy(state, round_sql, rounds, **kw):
+        calls.append((state, round_sql, kw))
+        return real(state, round_sql, rounds, **kw)
+
+    monkeypatch.setattr(graph, "iterate", spy)
+    (_LOOPS[loop] or QUERIES[loop])(spark, sf_dir)
+    assert calls, loop
+    for state, round_sql, kw in calls:
+        kw = {**kw, "cut_every": None}
+        n4 = _plan_nodes(real(state, round_sql, 4, **kw))
+        n8 = _plan_nodes(real(state, round_sql, 8, **kw))
+        assert n8 <= 2.5 * n4, (loop, n4, n8)
+
+
+def test_iterate_contract(spark):
+    """``rounds=0`` returns the initial state; an uncut build submits no
+    Spark job; every cut cadence gives the same state; and the plan-size
+    check above does catch a template that reads ``{prev}`` twice."""
+    state = spark.range(3).select(F.col("id").alias("x"))
+    step = "SELECT x + :d AS x FROM {prev}"
+    assert graph.iterate(state, step, 0, cut_every=None) is state
+
+    sc = spark.sparkContext
+    sc.setJobGroup("iterate_build", "iterate construction")
+    try:
+        graph.iterate(state, step, 6, cut_every=None, args={"d": 1})
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("iterate_build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    for cut_every in (None, 1, 2, 5, 7):
+        got = graph.iterate(state, step, 5, cut_every=cut_every, args={"d": 1})
+        assert sorted(r.x for r in got.collect()) == [5, 6, 7], cut_every
+
+    twice = "SELECT a.x FROM {prev} a JOIN {prev} b ON a.x = b.x"
+    n4, n8 = (
+        _plan_nodes(graph.iterate(state, twice, r, cut_every=None)) for r in (4, 8)
+    )
+    assert n8 > 10 * n4
 
 
 # --- pack_bins property test ---------------------------------------------
