@@ -19,8 +19,10 @@ Every FIXED-round loop goes through :func:`iterate`: a round is one
 SQL ``SELECT`` over ``{prev}`` that reads the previous state exactly
 once, so a chain of rounds grows the plan linearly, and the rounds
 between two cuts fuse into one ``spark.sql`` statement of chained
-CTEs.  A cut is an eager ``localCheckpoint`` between statements.  A
-lazy one is not cheaper: ``Dataset.localCheckpoint`` runs the round's
+CTEs.  A cut is an eager ``localCheckpoint`` after each statement,
+the last one included: a caller may read the result more than once,
+and an uncut tail measured slower even where it reads it once.  A
+lazy cut is not cheaper: ``Dataset.localCheckpoint`` runs the round's
 stages while the plan is built either way, and a lazy cut lets
 concurrent tasks recompute the unmaterialized frame.  So the cut
 cadence trades build-time jobs (a cut every round) against the
@@ -61,9 +63,9 @@ def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
     ``{prev}``, reading it exactly once; ``{name}`` placeholders bind
     the constant ``frames`` and ``:name`` markers the ``args``.  Up to
     ``cut_every`` rounds chain as CTEs of one ``spark.sql`` statement,
-    which binds each frame once; an eager ``localCheckpoint`` sits
-    between statements and none after the last, and ``cut_every=None``
-    builds one uncut statement (no Spark job).  ``rounds=0`` returns
+    which binds each frame once, and an eager ``localCheckpoint`` cuts
+    each statement, the last one included; ``cut_every=None`` builds
+    one uncut statement (no Spark job).  ``rounds=0`` returns
     ``state``.
 
     Loops left out:
@@ -76,8 +78,6 @@ def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
     sql = round_sql if callable(round_sql) else lambda i: round_sql
     step = cut_every or max(rounds, 1)
     for start in range(0, rounds, step):
-        if start:
-            state = state.localCheckpoint(eager=True)
         n = min(step, rounds - start)
         ctes = ",\n".join(
             f"s{j + 1} AS (\n{sql(start + j).replace('{prev}', f's{j}' if j else '{prev}')}\n)"
@@ -86,6 +86,8 @@ def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
         state = state.sparkSession.sql(
             f"WITH {ctes}\nSELECT * FROM s{n}", args=args, prev=state, **frames
         )
+        if cut_every:
+            state = state.localCheckpoint(eager=True)
     return state
 
 
@@ -292,7 +294,9 @@ FROM {{nodes}} v LEFT JOIN contribs c ON v.node = c.dst{total}"""
         round_sql,
         max_iter,
         cut_every=4 if broadcast_ranks else 1,
-        args=dict(zero=0.0, one=1.0, teleport=(1.0 - damping) / n, dn=damping / n, d=damping),
+        args=dict(
+            zero=0.0, one=1.0, teleport=(1.0 - damping) / n, dn=damping / n, d=damping
+        ),
         norm=norm,
         nodes=nodes,
     )
@@ -428,8 +432,8 @@ def k_core(
     the surviving subgraph.
 
     Scale shape: one lazy plan, the rounds fused by :func:`iterate`
-    with no cut, so construction runs no Spark job.  Peeling keeps the edge set
-    symmetric, so deg(x) is the number of rows with ``u = x`` and also
+    with no cut, so construction runs no Spark job.  Peeling keeps the
+    edge set symmetric, so deg(x) is the number of rows with ``u = x`` and also
     the number with ``v = x``: a round is ``COUNT(*) OVER (PARTITION
     BY u)`` and ``... BY v`` over the same edges, keeping rows where
     both are ``>= k``.  The window order alternates per round, so each

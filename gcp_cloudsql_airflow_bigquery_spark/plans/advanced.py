@@ -3848,8 +3848,8 @@ def brand_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.lit(0.5)
         ).alias("q2"),
     )
-    # the last brand solve is its own statement: scoring reads the
-    # customer factors it starts from a second time
+    # the last brand solve is its own statement, after the driver's
+    # cut: scoring reads the customer factors it starts from again
     pfac = graph.iterate(
         q,
         lambda i: _ALS_HALVES[i % 2],
@@ -3859,28 +3859,22 @@ def brand_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratings=ratings,
     )
     q = spark.sql(_ALS_HALVES[1], args={"lam": _ALS_LAMBDA}, prev=pfac, ratings=ratings)
-    scored = (
+    # grouping by the brand's own factors reads the last solve once
+    err = F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2"))
+    return (
         ratings.join(pfac, "custkey")
         .join(q, "brand")
-        .select(
-            "brand",
-            (
-                (F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2")))
-                * (F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2")))
-            )
-            .cast("decimal(28,12)")
-            .alias("se"),
-        )
-    )
-    return (
-        scored.groupBy("brand")
+        .groupBy("brand", "q1", "q2")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_raters"),
             F.round(
-                F.sqrt(F.sum("se").cast("double") / F.count(F.lit(1))), 6
+                F.sqrt(
+                    F.sum((err * err).cast("decimal(28,12)")).cast("double")
+                    / F.count(F.lit(1))
+                ),
+                6,
             ).alias("rmse"),
         )
-        .join(q, "brand")
         .select(
             "brand",
             "n_raters",

@@ -3616,8 +3616,8 @@ LEFT JOIN (
         half_sql.format(from_col="src", to_col="dst", score="hub", out="auth"),
         half_sql.format(from_col="dst", to_col="src", score="auth", out="hub"),
     )
-    # the last hub half-step is its own statement: the final join reads
-    # the authorities it starts from a second time
+    # the last hub half-step is its own statement, after the driver's
+    # cut: the final join reads the authorities it starts from again
     auth = graph.iterate(
         nodes.select("node", F.lit(1.0).alias("hub")),
         lambda i: halves[i % 2],

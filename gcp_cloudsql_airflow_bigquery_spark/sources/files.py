@@ -13,8 +13,8 @@
   driver: the file Spark's own non-merge inference would read (a root
   summary file, else the first data file).  So every part file of a
   table is assumed to share one schema, which is Spark's non-merge rule
-  (``mergeSchema`` is used nowhere in the package).  No Spark job runs to build the frame, and nothing is
-  cached between calls.
+  (``mergeSchema`` is used nowhere in the package).  No Spark job runs
+  to build the frame, and nothing is cached between calls.
 - ORC: Spark-native columnar alternative for interchange with
   Hive/Trino-era warehouses (built into the distribution, same
   predicate-pushdown + column-pruning story as parquet).
@@ -118,8 +118,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job.
 
     The schema is read on the driver from one footer, of the file
-    (``_schema_file``) and through the conversion that Spark's inference job uses
-    (``ParquetFooterReader.readFooter`` with ``SKIP_ROW_GROUPS``, then
+    (``_schema_file``) and through the conversion that Spark's inference
+    job uses (``ParquetFooterReader.readFooter`` with ``SKIP_ROW_GROUPS``, then
     ``ParquetFileFormat.readSchemaFromFooter`` under the session's
     ``ParquetToSparkSchemaConverter``), and handed to the reader, which
     still lists the files and appends the partition columns.  With no
@@ -136,20 +136,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     conf = state.newHadoopConf()
     root = jclass("org.apache.hadoop.fs.Path")(path)
     fs = root.getFileSystem(conf)
-    first = _schema_file(fs, fs.globStatus(root))
-    if first is None:
+    source = _schema_file(fs, fs.globStatus(root))
+    if source is None:
         return spark.read.parquet(path)
     parquet = "org.apache.spark.sql.execution.datasources.parquet."
     footer = jclass(parquet + "ParquetFooterReader").readFooter(
         jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
-            first, conf
+            source, conf
         ),
         jclass(
             "org.apache.parquet.format.converter.ParquetMetadataConverter"
         ).SKIP_ROW_GROUPS,
     )
     schema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(
-        jclass("org.apache.parquet.hadoop.Footer")(first.getPath(), footer),
+        jclass("org.apache.parquet.hadoop.Footer")(source.getPath(), footer),
         jclass(parquet + "ParquetToSparkSchemaConverter")(state.conf()),
     )
     schema = StructType.fromJson(json.loads(schema.json()))

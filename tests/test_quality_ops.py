@@ -253,8 +253,9 @@ def test_iterate_round_templates_read_their_state_once(spark, sf_dir, monkeypatc
 
 def test_iterate_contract(spark):
     """``rounds=0`` returns the initial state; an uncut build submits no
-    Spark job; every cut cadence gives the same state; and the plan-size
-    check above does catch a template that reads ``{prev}`` twice."""
+    Spark job; every cut cadence gives the same state, cut after its
+    last statement too; and the plan-size check above does catch a
+    template that reads ``{prev}`` twice."""
     state = spark.range(3).select(F.col("id").alias("x"))
     step = "SELECT x + :d AS x FROM {prev}"
     assert graph.iterate(state, step, 0, cut_every=None) is state
@@ -272,6 +273,7 @@ def test_iterate_contract(spark):
     for cut_every in (None, 1, 2, 5, 7):
         got = graph.iterate(state, step, 5, cut_every=cut_every, args={"d": 1})
         assert sorted(r.x for r in got.collect()) == [5, 6, 7], cut_every
+        assert (_plan_nodes(got) == 1) == (cut_every is not None), cut_every
 
     twice = "SELECT a.x FROM {prev} a JOIN {prev} b ON a.x = b.x"
     n4, n8 = (
