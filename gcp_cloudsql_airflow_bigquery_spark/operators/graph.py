@@ -22,18 +22,19 @@ between two cuts fuse into one ``spark.sql`` statement of chained
 CTEs.  A cut is an eager ``localCheckpoint`` after each statement,
 the last one included: a caller may read the result more than once,
 and an uncut tail measured slower even where it reads it once.  A
-lazy cut is not cheaper: ``Dataset.localCheckpoint`` runs the round's
-stages while the plan is built either way, and a lazy cut lets
-concurrent tasks recompute the unmaterialized frame.  So the cut
-cadence trades build-time jobs (a cut every round) against the
-analysis and re-execution cost of one long statement (no cut); each
-caller's ``cut_every`` is measured (CHANGES.md records the sweep).  A
-round total (PageRank's dangling mass, HITS's L1 norm) is a
-``SUM(...) OVER ()`` on the round's own rows, so it does not read the
-state a second time; that window is one task, so it is used only on
-graphs whose node set is bounded (event types, states).  PageRank's
-default, unbounded path keeps its broadcast 1-row total, which reads
-the round's contributions twice, and cuts every round.
+lazy cut saves only the cut's own job: ``Dataset.localCheckpoint``
+runs the round's stages while the plan is built either way, and a
+lazy cut lets concurrent tasks recompute the unmaterialized frame.
+So the cut cadence trades build-time jobs (a cut every round) against
+the analysis and re-execution cost of one long statement (no cut).
+The bounded-graph callers share :data:`CUT_EVERY` (the cadence sweep
+in CHANGES.md could not tell their best cadences apart), and
+``k_core`` builds uncut.  HITS's round total (its L1 norm) is a ``SUM(...) OVER
+()`` on the round's own rows, so it does not read the state a second
+time; that window is one task, so it is used only on a graph whose
+node set is bounded (event types).  PageRank's dangling mass is a
+broadcast 1-row total on every path, which reads the round's
+contributions twice, so PageRank cuts every round.
 """
 
 from __future__ import annotations
@@ -46,6 +47,9 @@ from pyspark.sql import functions as F
 #: star-contraction fallback, and the fallback's round budget
 _PROP_ROUNDS = 4
 _MAX_ITER = 20
+
+#: :func:`iterate`'s cut cadence for the loops over bounded graphs
+CUT_EVERY = 4
 
 
 def _checkpoint_observed(df: DataFrame, *exprs):
@@ -60,7 +64,8 @@ def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
 
     ``round_sql`` (or ``round_sql(i)`` for round ``i``, 0-based, where
     rounds alternate) is a ``SELECT`` of the next state from
-    ``{prev}``, reading it exactly once; ``{name}`` placeholders bind
+    ``{prev}``, reading it exactly once unless every round is cut
+    (``cut_every=1``); ``{name}`` placeholders bind
     the constant ``frames`` and ``:name`` markers the ``args``.  Up to
     ``cut_every`` rounds chain as CTEs of one ``spark.sql`` statement,
     which binds each frame once, and an eager ``localCheckpoint`` cuts
@@ -74,6 +79,8 @@ def iterate(state, round_sql, rounds, *, cut_every, args=None, **frames):
     - the Lloyd and PQ codebook trainings: keep their model on the driver
     - ``similarity.mmr_rerank``: its state is a growing union
     - ``events.event_type_reachability``: reads its state three times
+    - ``advanced.brand_als_factors``: its SQL half-step measured slower
+      than its DataFrame one (CHANGES.md)
     """
     sql = round_sql if callable(round_sql) else lambda i: round_sql
     step = cut_every or max(rounds, 1)
@@ -241,12 +248,11 @@ def pagerank(
     ``broadcast_ranks`` is OPT-IN (default False — scale policy: node
     sets are unbounded unless the caller KNOWS otherwise).  With it
     (bounded node sets: types, labels, entities) the rank table
-    broadcasts, the join is map-side, the dst-grouped aggregation
-    reuses the standing partitioning of the edge list, the emitted
-    total is a one-task window, and 4 rounds fuse per statement.  On
-    the default path ranks shuffle by src each round (node-sized), the
-    emitted total is a broadcast 1-row cross join over the same
-    contributions, and every round is cut.
+    broadcasts, the join is map-side, and the dst-grouped aggregation
+    reuses the standing partitioning of the edge list; on the default
+    path ranks shuffle by src each round (node-sized).  On both paths
+    the emitted total is a broadcast 1-row cross join over the round's
+    contributions, which reads them twice, so every round is cut.
     """
     e = edges.select(
         F.col(src).alias("src"),
@@ -274,26 +280,23 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    # bounded: a one-task window total; default: a broadcast 1-row total
-    # that reads the contributions twice, so every round is cut
-    emitted, total = (
-        ("SUM(c.contrib) OVER ()", "") if broadcast_ranks else
-        ("e.emitted", "\nCROSS JOIN (SELECT SUM(contrib) AS emitted FROM contribs) e")
-    )
+    rank_hint = "/*+ BROADCAST(r) */ " if broadcast_ranks else ""
+    step_hint = "BROADCAST(c), BROADCAST(e)" if broadcast_ranks else "BROADCAST(e)"
     round_sql = f"""WITH contribs AS (
-  SELECT {"/*+ BROADCAST(r) */ " if broadcast_ranks else ""}n.dst, SUM(n.p * r.rank) AS contrib
+  SELECT {rank_hint}n.dst, SUM(n.p * r.rank) AS contrib
   FROM {{norm}} n JOIN {{prev}} r ON n.src = r.node GROUP BY n.dst)
-SELECT /*+ BROADCAST({"c" if broadcast_ranks else "e"}) */ v.node,
-       :teleport + :dn * (:one - COALESCE({emitted}, :zero))
+SELECT /*+ {step_hint} */ v.node,
+       :teleport + :dn * (:one - COALESCE(e.emitted, :zero))
          + :d * COALESCE(c.contrib, :zero) AS rank
-FROM {{nodes}} v LEFT JOIN contribs c ON v.node = c.dst{total}"""
+FROM {{nodes}} v LEFT JOIN contribs c ON v.node = c.dst
+CROSS JOIN (SELECT SUM(contrib) AS emitted FROM contribs) e"""
     # named-parameter binding keeps the literals EXACT Python doubles
     # (no decimal-text round trip)
     return iterate(
         nodes.withColumn("rank", F.lit(1.0 / n)),
         round_sql,
         max_iter,
-        cut_every=4 if broadcast_ranks else 1,
+        cut_every=1,
         args=dict(
             zero=0.0, one=1.0, teleport=(1.0 - damping) / n, dn=damping / n, d=damping
         ),
@@ -403,7 +406,7 @@ def label_propagation(
         GROUP BY e.v, l.label)
 ) WHERE rn = 1""",
         rounds,
-        cut_every=2,
+        cut_every=CUT_EVERY,
         sym=sym,
     )
     return labels.select("node", F.col("label").alias("community"))

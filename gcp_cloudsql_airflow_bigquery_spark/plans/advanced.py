@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_tables
 from ..operators import curation as curation_ops
-from ..operators import graph
 from . import register
 
 _DEC = "decimal(18,6)"
@@ -3769,28 +3768,33 @@ _ALS_ROUNDS = 3
 _ALS_LAMBDA = 0.1
 
 
-# One ALS half-step: the per-``key`` ridge solve of the 2×2 normal
-# equations ``(FᵀF + λI)x = Fᵀr`` in closed form, from the other side's
-# factors ``{prev}``.  Every moment is a DECIMAL-cast term sum
-# (order-independent) and the solved factors are ROUND(12)-pinned, so
-# both engines iterate identical doubles.
-_ALS_HALF = """SELECT {key},
-       ROUND((a22 * b1 - a12 * b2) / (a11 * a22 - a12 * a12), 12) AS {x}1,
-       ROUND((a11 * b2 - a12 * b1) / (a11 * a22 - a12 * a12), 12) AS {x}2
-FROM (
-  SELECT r.{key},
-         CAST(SUM(CAST(f.{f}1 * f.{f}1 AS DECIMAL(28,12))) AS DOUBLE) + :lam AS a11,
-         CAST(SUM(CAST(f.{f}1 * f.{f}2 AS DECIMAL(28,12))) AS DOUBLE) AS a12,
-         CAST(SUM(CAST(f.{f}2 * f.{f}2 AS DECIMAL(28,12))) AS DOUBLE) + :lam AS a22,
-         CAST(SUM(CAST(f.{f}1 * r.r AS DECIMAL(28,12))) AS DOUBLE) AS b1,
-         CAST(SUM(CAST(f.{f}2 * r.r AS DECIMAL(28,12))) AS DOUBLE) AS b2
-  FROM {{ratings}} r JOIN {{prev}} f ON r.{other} = f.{other}
-  GROUP BY r.{key}
-)"""
-_ALS_HALVES = (
-    _ALS_HALF.format(key="custkey", x="p", f="q", other="brand"),
-    _ALS_HALF.format(key="brand", x="q", f="p", other="custkey"),
-)
+def _als_solve(joined: DataFrame, key: str, f1: str, f2: str) -> DataFrame:
+    """One ALS half-step: per-``key`` ridge solve of the 2×2 normal
+    equations ``(FᵀF + λI)x = Fᵀr`` in closed form.  Every moment is a
+    DECIMAL-cast term sum (order-independent) and the solved factors
+    are ROUND(12)-pinned, so both engines iterate identical doubles."""
+    d = F.col
+    terms = joined.select(
+        key,
+        (d(f1) * d(f1)).cast("decimal(28,12)").alias("t11"),
+        (d(f1) * d(f2)).cast("decimal(28,12)").alias("t12"),
+        (d(f2) * d(f2)).cast("decimal(28,12)").alias("t22"),
+        (d(f1) * d("r")).cast("decimal(28,12)").alias("tb1"),
+        (d(f2) * d("r")).cast("decimal(28,12)").alias("tb2"),
+    )
+    m = terms.groupBy(key).agg(
+        (F.sum("t11").cast("double") + _ALS_LAMBDA).alias("a11"),
+        F.sum("t12").cast("double").alias("a12"),
+        (F.sum("t22").cast("double") + _ALS_LAMBDA).alias("a22"),
+        F.sum("tb1").cast("double").alias("b1"),
+        F.sum("tb2").cast("double").alias("b2"),
+    )
+    det = d("a11") * d("a22") - d("a12") * d("a12")
+    return m.select(
+        key,
+        F.round((d("a22") * d("b1") - d("a12") * d("b2")) / det, 12).alias("x1"),
+        F.round((d("a11") * d("b2") - d("a12") * d("b1")) / det, 12).alias("x2"),
+    )
 
 
 def brand_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3811,11 +3815,10 @@ def brand_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the ratings frame (one fact⋈orders⋈part aggregation)
     is lineage-cut once (the PageRank edge-frame economics); each
-    half-step is ONE key-partitioned join+agg, fused by
-    ``graph.iterate`` — user solves shuffle on custkey, brand solves
-    on brand; factor frames are entity-sized, never collected (the
-    2×2 algebra runs IN-PLAN — no driver-side linear algebra, unlike
-    MLlib's ALS blocks at this rank)."""
+    half-step is ONE key-partitioned join+agg — user solves shuffle on
+    custkey, brand solves on brand; factor frames are entity-sized,
+    never collected (the 2×2 algebra runs IN-PLAN — no driver-side
+    linear algebra, unlike MLlib's ALS blocks at this rank)."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -3848,33 +3851,40 @@ def brand_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.lit(0.5)
         ).alias("q2"),
     )
-    # the last brand solve is its own statement, after the driver's
-    # cut: scoring reads the customer factors it starts from again
-    pfac = graph.iterate(
-        q,
-        lambda i: _ALS_HALVES[i % 2],
-        2 * _ALS_ROUNDS - 1,
-        cut_every=2,
-        args={"lam": _ALS_LAMBDA},
-        ratings=ratings,
-    )
-    q = spark.sql(_ALS_HALVES[1], args={"lam": _ALS_LAMBDA}, prev=pfac, ratings=ratings)
-    # grouping by the brand's own factors reads the last solve once
-    err = F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2"))
-    return (
+    pfac = None
+    for _ in range(_ALS_ROUNDS):
+        pfac = _als_solve(
+            ratings.join(q, "brand"), "custkey", "q1", "q2"
+        ).select(
+            "custkey", F.col("x1").alias("p1"), F.col("x2").alias("p2")
+        ).localCheckpoint(eager=True)
+        q = _als_solve(
+            ratings.join(pfac, "custkey"), "brand", "p1", "p2"
+        ).select(
+            "brand", F.col("x1").alias("q1"), F.col("x2").alias("q2")
+        ).localCheckpoint(eager=True)
+    scored = (
         ratings.join(pfac, "custkey")
         .join(q, "brand")
-        .groupBy("brand", "q1", "q2")
+        .select(
+            "brand",
+            (
+                (F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2")))
+                * (F.col("r") - (F.col("p1") * F.col("q1") + F.col("p2") * F.col("q2")))
+            )
+            .cast("decimal(28,12)")
+            .alias("se"),
+        )
+    )
+    return (
+        scored.groupBy("brand")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_raters"),
             F.round(
-                F.sqrt(
-                    F.sum((err * err).cast("decimal(28,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ),
-                6,
+                F.sqrt(F.sum("se").cast("double") / F.count(F.lit(1))), 6
             ).alias("rmse"),
         )
+        .join(q, "brand")
         .select(
             "brand",
             "n_raters",

@@ -2772,7 +2772,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM {P} p JOIN {prev} pi ON p.from_type = pi.state
 GROUP BY p.to_type""",
         _MARKOV_ROUNDS,
-        cut_every=4,
+        cut_every=graph.CUT_EVERY,
         P=P,
     )
     return pi.select(
@@ -3622,7 +3622,7 @@ LEFT JOIN (
         nodes.select("node", F.lit(1.0).alias("hub")),
         lambda i: halves[i % 2],
         2 * _HITS_ROUNDS - 1,
-        cut_every=4,
+        cut_every=graph.CUT_EVERY,
         edges=edges,
         nodes=nodes,
     )

@@ -281,12 +281,10 @@ _GLOBAL_WINDOW_ALLOWLIST = {
     "events_ljung_box",
     "events_periodogram_daily",
     "customer_logrank_test",
-    # a fused fixed-round loop's round total (graph.iterate): the window
-    # input is a post-aggregation frame over the bounded event-type
-    # vocabulary (~8 nodes at any SF), never the corpus
-    #   event_type_pagerank — dangling mass, SUM(contrib) OVER ()
-    "event_type_pagerank",
-    #   event_type_hits — each half-step's L1 norm, SUM(raw) OVER ()
+    # event_type_hits — each half-step's L1 norm, SUM(raw) OVER (), a
+    # fused round total (graph.iterate): the window input is a
+    # post-aggregation frame over the bounded event-type vocabulary
+    # (~8 nodes at any SF), never the corpus
     "event_type_hits",
 }
 
